@@ -6,18 +6,31 @@ the same service layer (api.CorrelationAPI) plus direct access to the
 declared query inventory. Every command prints one JSON document to
 stdout.
 
+The table commands are derived from ``http_api.OPERATIONS``: one per
+HTTP operation, named after its path (``/index/pq_attach`` →
+``index-pq-attach``; ``/scd2/merge`` is ``scd2-merge-into``), with one
+flag per wire parameter and the same parsers, defaults and error map
+as the listener. ``--data PATH`` registers the dataset the command
+reads; ``--fill-gaps`` (lagged/rolling/xcorr/acf) materializes the
+missing periods of the time grain and forward-fills them before
+correlating, like ``fill_gaps=1`` over HTTP. Exit status: 0 ok, 2 user error (unknown dataset or
+variable, bad parameter), 3 any other failure — always one JSON line.
+
 Commands:
   correlate --data PATH --x COL --y COL [--method pearson|spearman|kendall|bicor]
             [--group-by COL] [--format parquet|csv|json]
   matrix    --data PATH [--vars a,b,c] [--method ...]
   lagged    --data PATH --time COL --value COL [--lag N] [--grain day]
+            [--fill-gaps]
   partial   --data PATH --x COL --y COL --control COL[,COL2,...]
             [--group-by COL]   (comma-separated controls -> higher-order)
   xcorr     --data PATH --time COL --x COL --y COL [--max-lag N] [--grain day]
+            [--fill-gaps]
   acf       --data PATH --time COL --value COL [--max-lag N] [--grain day]
+            [--fill-gaps]
             (returns acf lags + pacf + significance band / Ljung-Box)
   rolling   --data PATH --time COL --value COL [--window N] [--lag N]
-            [--grain day]
+            [--grain day] [--fill-gaps]
   similar   --data PATH --id COL --vector COL (--probes 1,2 |
             --query-vector f,f,... [repeatable]) [--k N]
             [--method exact|ivf] [--n-cells N] [--n-probe N]
@@ -81,6 +94,24 @@ import argparse
 import json
 import sys
 
+from .http_api import OPERATIONS, _call, _error
+
+# CLI spellings that differ from the table's HTTP names
+_COMMANDS = {"scd2_merge": "scd2-merge-into"}
+_FLAGS = {
+    ("distribution", "method"): "pct_method",
+    ("correlation_matrix", "variables"): "vars",
+    ("mixed_matrix", "variables"): "vars",
+    ("index_probe", "probe_ids"): "probes",
+}
+# dataset parameters the CLI fills by registering a file:
+# wire name -> (path flag, format flag, registered name)
+_DATASETS = {
+    "dataset": ("data", "format", "ds"),
+    "child": ("data", "format", "ds"),
+    "parent": ("parent_data", "parent_format", "parent"),
+}
+
 
 def _spark():
     from .session import get_spark
@@ -90,562 +121,72 @@ def _spark():
     return spark
 
 
-def _api(args):
-    from .api import CorrelationAPI
+def _flag(name: str) -> str:
+    return "--" + name.replace("_", "-")
 
-    api = CorrelationAPI(_spark())
-    api.register_dataset("ds", args.data, fmt=args.format)
-    return api
+
+def _split(raw: str) -> list[str]:
+    return [x.strip() for x in raw.split(",") if x.strip()]
+
+
+def _add_operation(sub, op) -> None:
+    command = op.path[1:].replace("/", "-").replace("_", "-")
+    sp = sub.add_parser(_COMMANDS.get(op.name, command), help=op.summary)
+    sp.set_defaults(op=op)
+    for wire, p in op.params.items():
+        if wire in _DATASETS:
+            path, fmt, _ = _DATASETS[wire]
+            sp.add_argument(_flag(path), dest=path, required=True,
+                            help="dataset path")
+            sp.add_argument(_flag(fmt), dest=fmt, default="parquet",
+                            choices=["parquet", "csv", "json"])
+            continue
+        flag = _flag(_FLAGS.get((op.name, wire), wire))
+        if p.type == "bool":
+            sp.add_argument(flag, dest=wire, action="store_true", default=None)
+        else:
+            sp.add_argument(
+                flag, dest=wire,
+                required=wire in op.required and not p.has_default,
+                type=_split if p.type.startswith("list") else None,
+            )
+    if op.name == "similar":
+        # raw embeddings: the CLI twin of POST /similar
+        sp.add_argument("--query-vector", action="append", dest="query_vectors",
+                        help="raw probe embedding as comma-separated floats "
+                        "(repeatable); alternative to --probes")
+
+
+def _run_operation(op, args) -> int:
+    try:
+        from .api import CorrelationAPI
+
+        api = CorrelationAPI(_spark())
+        values = vars(args).copy()
+        for wire in op.params:
+            if wire in _DATASETS:
+                path, fmt, name = _DATASETS[wire]
+                api.register_dataset(name, values[path], fmt=values[fmt])
+                values[wire] = name
+        extra = {}
+        if values.get("query_vectors"):
+            extra["query_vectors"] = [
+                [float(x) for x in qv.split(",")] for qv in values["query_vectors"]
+            ]
+        res = _call(api, op, values, **extra)
+    except Exception as e:  # noqa: BLE001 - CLI boundary: one JSON line
+        status, payload = _error(e)
+        print(json.dumps(payload))
+        return 3 if status == 500 else 2
+    print(json.dumps(res, default=str))
+    return 0
 
 
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(prog="correlationapi_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
-
-    def add_data(sp):
-        sp.add_argument("--data", required=True, help="dataset path")
-        sp.add_argument("--format", default="parquet", choices=["parquet", "csv", "json"])
-
-    c = sub.add_parser("correlate", help="pairwise correlation")
-    add_data(c)
-    c.add_argument("--x", required=True)
-    c.add_argument("--y", required=True)
-    c.add_argument("--method", default="pearson",
-                   choices=["pearson", "spearman", "kendall", "bicor"])
-    c.add_argument("--group-by", default=None)
-
-    an = sub.add_parser(
-        "association",
-        help="categorical/mixed association: cramer | theil | mi | eta",
-    )
-    add_data(an)
-    an.add_argument("--a", required=True, help="first variable (factor for eta)")
-    an.add_argument("--b", required=True, help="second variable (numeric for eta)")
-    an.add_argument("--method", default="cramer",
-                    choices=["cramer", "theil", "mi", "eta"])
-
-    ds = sub.add_parser(
-        "distribution",
-        help="distribution profile: mean/stddev/skewness/kurtosis[/gini]",
-    )
-    add_data(ds)
-    ds.add_argument("--var", required=True)
-    ds.add_argument("--group-by", default=None)
-    ds.add_argument("--gini", action="store_true",
-                    help="also compute the Gini coefficient (non-negative vars)")
-    ds.add_argument("--percentiles", default=None,
-                    help="comma-separated probabilities in [0,1]")
-    ds.add_argument("--pct-method", default="exact",
-                    choices=["exact", "sketch"],
-                    help="percentile engine: exact sort or KLL sketch")
-    ds.add_argument("--normality", action="store_true",
-                    help="also run the Jarque-Bera normality test")
-
-    cp = sub.add_parser(
-        "compare",
-        help="two-sample distribution comparison: KS + Mann-Whitney",
-    )
-    add_data(cp)
-    cp.add_argument("--var", required=True)
-    cp.add_argument("--group-by", required=True)
-    cp.add_argument("--a", required=True, help="first group value")
-    cp.add_argument("--b", required=True, help="second group value")
-
-    av = sub.add_parser(
-        "anova",
-        help="k-sample comparison across ALL factor levels: "
-        "one-way ANOVA F (--center mean) or Brown-Forsythe W "
-        "(--center median)",
-    )
-    add_data(av)
-    av.add_argument("--var", required=True)
-    av.add_argument("--group-by", required=True)
-    av.add_argument("--center", default="mean", choices=["mean", "median"])
-
-    bk = sub.add_parser(
-        "basket",
-        help="market-basket association rules: support/confidence/lift "
-        "per co-occurring item pair",
-    )
-    add_data(bk)
-    bk.add_argument("--basket", required=True, help="basket id column")
-    bk.add_argument("--item", required=True, help="item column")
-    bk.add_argument("--min-count", type=int, default=10)
-    bk.add_argument("--limit", type=int, default=50)
-
-    cpt = sub.add_parser(
-        "changepoint",
-        help="CUSUM changepoint curve + estimated level-shift period",
-    )
-    add_data(cpt)
-    cpt.add_argument("--var", required=True)
-    cpt.add_argument("--time", required=True)
-    cpt.add_argument("--grain", default="day")
-
-    fcst = sub.add_parser(
-        "forecast",
-        help="forecasting per group: Holt level+trend (--method holt) "
-        "or seasonal-naive WAPE/MAE backtest (--method naive)",
-    )
-    add_data(fcst)
-    fcst.add_argument("--var", required=True)
-    fcst.add_argument("--time", required=True)
-    fcst.add_argument("--group-by", default=None)
-    fcst.add_argument("--grain", default="day",
-                      choices=["hour", "day", "week", "month"])
-    fcst.add_argument("--method", default="holt",
-                      choices=["holt", "holtwinters", "naive"])
-    fcst.add_argument("--season", type=int, default=7)
-    fcst.add_argument("--alpha", type=float, default=0.3)
-    fcst.add_argument("--beta", type=float, default=0.1)
-    fcst.add_argument("--gamma", type=float, default=0.2,
-                      help="seasonal smoothing (holtwinters)")
-
-    tr = sub.add_parser(
-        "trend",
-        help="per-group OLS trend of period totals (slope/intercept/R2)",
-    )
-    add_data(tr)
-    tr.add_argument("--var", required=True)
-    tr.add_argument("--time", required=True)
-    tr.add_argument("--group-by", default=None)
-    tr.add_argument("--grain", default="day")
-
-    tk = sub.add_parser(
-        "tukey",
-        help="Tukey-Kramer HSD pairwise post-hoc after anova",
-    )
-    add_data(tk)
-    tk.add_argument("--var", required=True)
-    tk.add_argument("--group-by", required=True)
-
-    dc = sub.add_parser(
-        "decompose",
-        help="classical additive decomposition: per-phase seasonal "
-        "index + centered-MA trend mean",
-    )
-    add_data(dc)
-    dc.add_argument("--var", required=True)
-    dc.add_argument("--time", required=True)
-    dc.add_argument("--grain", default="day",
-                    choices=["hour", "day", "week", "month"])
-    dc.add_argument("--period", type=int, default=7)
-
-    wq = sub.add_parser(
-        "weighted-quantile",
-        help="weighted percentiles via exact integer running-weight "
-        "cutoffs",
-    )
-    add_data(wq)
-    wq.add_argument("--var", required=True)
-    wq.add_argument("--weight", required=True)
-    wq.add_argument("--group-by", default=None)
-    wq.add_argument("--quantiles", default="0.25,0.5,0.75")
-
-    gp = sub.add_parser(
-        "gopher",
-        help="Gopher-rule quality report over a (id, text) table",
-    )
-    add_data(gp)
-    gp.add_argument("--id", dest="id_col", default="doc_id")
-    gp.add_argument("--text", dest="text_col", default="text")
-    gp.add_argument("--limit", type=int, default=100)
-
-    st = sub.add_parser(
-        "stationary",
-        help="stationary distribution of the per-user event chain",
-    )
-    add_data(st)
-    st.add_argument("--user", required=True)
-    st.add_argument("--event", required=True)
-    st.add_argument("--time", required=True)
-    st.add_argument("--order", required=True)
-    st.add_argument("--n-iter", type=int, default=50)
-
-    pc = sub.add_parser(
-        "pca",
-        help="PCA spectrum of an embedding column (top-k eigenvalues "
-        "+ explained variance)",
-    )
-    add_data(pc)
-    pc.add_argument("--id", required=True, dest="id_col")
-    pc.add_argument("--vector", required=True)
-    pc.add_argument("--k", type=int, default=8)
-
-    it = sub.add_parser(
-        "integrity",
-        help="referential-integrity audit of one FK edge "
-        "(child --data vs --parent-data)",
-    )
-    add_data(it)
-    it.add_argument("--fk", required=True, help="child FK column")
-    it.add_argument("--parent-data", required=True,
-                    help="parent dataset path")
-    it.add_argument("--pk", required=True, help="parent key column")
-    it.add_argument("--parent-format", default="parquet",
-                    choices=["parquet", "csv", "json"])
-
-    sv2 = sub.add_parser(
-        "survival",
-        help="Kaplan-Meier conversion curve (+ optional log-rank A/B)",
-    )
-    add_data(sv2)
-    sv2.add_argument("--start", required=True)
-    sv2.add_argument("--end", required=True)
-    sv2.add_argument("--group-by", default=None)
-    sv2.add_argument("--a", default=None)
-    sv2.add_argument("--b", default=None)
-
-    dr = sub.add_parser(
-        "drift",
-        help="per-period distribution drift: KS + PSI vs full-period reference",
-    )
-    add_data(dr)
-    dr.add_argument("--var", required=True)
-    dr.add_argument("--time", required=True)
-    dr.add_argument("--grain", default="day",
-                    choices=["hour", "day", "week", "month"])
-
-    pr = sub.add_parser(
-        "psi-repin",
-        help="pin a new versioned PSI reference over [--start, --end) "
-        "(round 11: rotate a stream's drift baseline without replay)",
-    )
-    add_data(pr)
-    pr.add_argument("--time", required=True)
-    pr.add_argument("--value", required=True)
-    pr.add_argument("--path", required=True, help="reference store dir")
-    pr.add_argument("--end", required=True, help="window end (exclusive)")
-    pr.add_argument("--start", default=None, help="window start (inclusive)")
-
-    ps = sub.add_parser(
-        "psi-status", help="latest pinned PSI reference (version + bins)"
-    )
-    ps.add_argument("--path", required=True)
-
-    pd = sub.add_parser(
-        "psi-drift",
-        help="per-day-window PSI vs the latest pinned reference",
-    )
-    add_data(pd)
-    pd.add_argument("--time", required=True)
-    pd.add_argument("--value", required=True)
-    pd.add_argument("--path", required=True)
-
-    m = sub.add_parser("matrix", help="all-pairs correlation matrix")
-    add_data(m)
-    m.add_argument("--vars", default=None, help="comma-separated; default: all numeric")
-    m.add_argument("--method", default="pearson",
-                   choices=["pearson", "spearman", "kendall", "gram"])
-
-    mm = sub.add_parser(
-        "mixed-matrix",
-        help="mixed-type association matrix (pearson / cramers_v / eta per pair)",
-    )
-    add_data(mm)
-    mm.add_argument("--vars", default=None,
-                    help="comma-separated; default: all columns")
-
-    lg = sub.add_parser("lagged", help="lagged autocorrelation of a time series")
-    add_data(lg)
-    lg.add_argument("--time", required=True)
-    lg.add_argument("--value", required=True)
-    lg.add_argument("--lag", type=int, default=1)
-    lg.add_argument("--grain", default="day")
-
-    pc = sub.add_parser("partial", help="partial correlation corr(x, y | control)")
-    add_data(pc)
-    pc.add_argument("--x", required=True)
-    pc.add_argument("--y", required=True)
-    pc.add_argument("--control", required=True)
-    pc.add_argument("--group-by", default=None)
-
-    xc = sub.add_parser("xcorr", help="lead-lag cross-correlation of two series")
-    add_data(xc)
-    xc.add_argument("--time", required=True)
-    xc.add_argument("--x", required=True)
-    xc.add_argument("--y", required=True)
-    xc.add_argument("--max-lag", type=int, default=3)
-    xc.add_argument("--grain", default="day")
-
-    ac = sub.add_parser(
-        "acf", help="autocorrelation function + PACF + significance"
-    )
-    add_data(ac)
-    ac.add_argument("--time", required=True)
-    ac.add_argument("--value", required=True)
-    ac.add_argument("--max-lag", type=int, default=10)
-    ac.add_argument("--grain", default="day")
-
-    rl = sub.add_parser("rolling", help="rolling lag-k autocorrelation")
-    add_data(rl)
-    rl.add_argument("--time", required=True)
-    rl.add_argument("--value", required=True)
-    rl.add_argument("--window", type=int, default=14)
-    rl.add_argument("--lag", type=int, default=1)
-    rl.add_argument("--grain", default="day")
-
-    sm = sub.add_parser(
-        "similar", help="top-k cosine neighbors of probe rows (exact | ivf)"
-    )
-    add_data(sm)
-    sm.add_argument("--id", required=True, help="integer id column")
-    sm.add_argument("--vector", required=True, help="array<float> column")
-    sm.add_argument("--probes", help="comma-separated probe ids")
-    sm.add_argument("--query-vector", action="append", dest="query_vectors",
-                    help="raw probe embedding as comma-separated floats "
-                    "(repeatable); alternative to --probes")
-    sm.add_argument("--k", type=int, default=5)
-    sm.add_argument("--method", default="exact",
-                    choices=["exact", "ivf", "pq", "ivfpq"])
-    sm.add_argument("--n-cells", type=int, default=16)
-    sm.add_argument("--n-probe", type=int, default=6)
-
-    ib = sub.add_parser(
-        "index-build", help="train + persist an IVF ANN index (round 10)"
-    )
-    add_data(ib)
-    ib.add_argument("--id", required=True, help="integer id column")
-    ib.add_argument("--vector", required=True, help="array<float> column")
-    ib.add_argument("--path", required=True, help="index directory")
-    ib.add_argument("--n-cells", type=int, default=16)
-    ib.add_argument("--train-fraction", type=float, default=1.0)
-    ib.add_argument("--where", default=None,
-                    help="SQL predicate selecting the build slice")
-
-    ia = sub.add_parser(
-        "index-append",
-        help="append rows to a persisted IVF index — assign-only, no "
-        "re-train, existing cell files untouched",
-    )
-    add_data(ia)
-    ia.add_argument("--id", required=True)
-    ia.add_argument("--vector", required=True)
-    ia.add_argument("--path", required=True)
-    ia.add_argument("--where", default=None,
-                    help="SQL predicate selecting the delta rows")
-
-    ist = sub.add_parser(
-        "index-status",
-        help="cell-balance drift gauge of a persisted IVF index",
-    )
-    ist.add_argument("--path", required=True)
-
-    ipr = sub.add_parser(
-        "index-probe", help="top-k over a persisted IVF index"
-    )
-    ipr.add_argument("--path", required=True)
-    ipr.add_argument("--probes", required=True,
-                     help="comma-separated corpus row ids")
-    ipr.add_argument("--k", type=int, default=5)
-    ipr.add_argument("--n-probe", type=int, default=6)
-    ipr.add_argument("--method", default="ivf",
-                     choices=["ivf", "pq", "ivfpq"],
-                     help="ivf = exact cosine refine; pq/ivfpq = score "
-                     "the attached store's 6-bit code column (round 14; "
-                     "needs index-pq-attach)")
-    ipr.add_argument("--refine", type=int, default=None,
-                     help="pq/ivfpq only: exactly re-rank the ADC "
-                     "top-R candidates per probe (round 15, FAISS "
-                     "IVFPQR) — neighbors then carry exact l2")
-
-    ipq = sub.add_parser(
-        "index-pq-attach",
-        help="attach product quantization: train the codebook from the "
-        "stored corpus, rewrite it with the 6-bit code column, publish "
-        "in one atomic pointer swap (index-probe --method pq/ivfpq "
-        "then scores stored codes with no per-call training)",
-    )
-    ipq.add_argument("--path", required=True)
-
-    idl = sub.add_parser(
-        "index-delete",
-        help="tombstone ids out of a persisted IVF index (round 11) — "
-        "probes stop answering them; index-compact reclaims the bytes",
-    )
-    idl.add_argument("--path", required=True)
-    idl.add_argument("--ids", required=True,
-                     help="comma-separated corpus row ids to delete")
-
-    idc = sub.add_parser(
-        "index-compact",
-        help="rewrite tombstone-bearing cells live-only and clear the "
-        "tombstone set",
-    )
-    idc.add_argument("--path", required=True)
-
-    irv = sub.add_parser(
-        "index-recover",
-        help="reclaim the index's retired/orphan objects now (round 14: "
-        "nothing needs a roll-forward; recovered=false when nothing to "
-        "reclaim)",
-    )
-    irv.add_argument("--path", required=True)
-
-    s2r = sub.add_parser(
-        "scd2-recover",
-        help="heal a pre-pointer interrupted SCD2 commit and reclaim "
-        "retired/orphan bucket objects (idempotent; recovered=false "
-        "when nothing to do)",
-    )
-    s2r.add_argument("--path", required=True)
-
-    s2m = sub.add_parser(
-        "scd2-merge-into",
-        help="merge a staged CDC batch into an EXISTING bucketed SCD2 "
-        "store (touches only the batch's buckets; one atomic "
-        "layout-pointer swap publishes them)",
-    )
-    add_data(s2m)
-    s2m.add_argument("--user", required=True)
-    s2m.add_argument("--event", required=True)
-    s2m.add_argument("--time", required=True)
-    s2m.add_argument("--order", required=True)
-    s2m.add_argument("--path", required=True)
-    s2m.add_argument(
-        "--n-buckets", type=int, default=None,
-        help="only for pre-metadata stores; newer stores carry their "
-        "bucketing modulus in the store's layout pointer",
-    )
-
-    s2s = sub.add_parser(
-        "scd2-snapshot",
-        help="point-in-time read of an SCD2 store: the dimension as it "
-        "was valid at --ts (bucket-pruned when --users is given)",
-    )
-    s2s.add_argument("--path", required=True)
-    s2s.add_argument("--ts", required=True,
-                     help="timestamp, e.g. '2024-01-15 00:00:00'")
-    s2s.add_argument("--users", default=None,
-                     help="comma-separated business keys to prune to")
-    s2s.add_argument("--limit", type=int, default=1000)
-
-    irc = sub.add_parser(
-        "index-recluster",
-        help="re-train the coarse quantizer and rebuild the cell layout "
-        "when max/avg cell size exceeds --threshold (0 forces); staged "
-        "as unreferenced versioned objects, committed by one atomic "
-        "pointer swap — readable AND consistent throughout",
-    )
-    irc.add_argument("--path", required=True)
-    irc.add_argument("--threshold", type=float, default=3.0)
-    irc.add_argument("--n-cells", type=int, default=None)
-    irc.add_argument("--train-fraction", type=float, default=1.0)
-
-    dd = sub.add_parser(
-        "dedup", help="duplicate report over an (id, text) table"
-    )
-    add_data(dd)
-    dd.add_argument("--id", required=True, help="integer id column")
-    dd.add_argument("--text", required=True, help="text column")
-    dd.add_argument("--method", default="exact",
-                    choices=["exact", "keep_best", "ngram", "minhash"])
-    dd.add_argument("--threshold", type=float, default=0.5,
-                    help="ngram Jaccard threshold")
-    dd.add_argument("--limit", type=int, default=1000,
-                    help="max listed duplicates (totals stay exact)")
-
-    asn = sub.add_parser(
-        "assign", help="nearest-centroid cosine assignment over an (id, vector) table"
-    )
-    add_data(asn)
-    asn.add_argument("--id", required=True, help="integer id column")
-    asn.add_argument("--vector", required=True, help="embedding array column")
-    asn.add_argument("--centroids", required=True,
-                     help="comma-separated centroid row ids")
-    asn.add_argument("--limit", type=int, default=1000,
-                     help="max listed assignments (totals stay exact)")
-
-    kg = sub.add_parser(
-        "knn-graph",
-        help="mutual k-NN cosine graph over an (id, vector) table",
-    )
-    add_data(kg)
-    kg.add_argument("--id", required=True, help="integer id column")
-    kg.add_argument("--vector", required=True, help="embedding array column")
-    kg.add_argument("--k", type=int, default=5)
-    kg.add_argument("--limit", type=int, default=100,
-                    help="max listed edges (totals stay exact)")
-
-    tr = sub.add_parser(
-        "transitions", help="Markov transition matrix over per-user event chains"
-    )
-    add_data(tr)
-    tr.add_argument("--user", required=True, help="chain key column")
-    tr.add_argument("--event", required=True, help="event type column")
-    tr.add_argument("--time", required=True, help="timestamp column")
-    tr.add_argument("--order", required=True, help="tie-break column")
-
-    at = sub.add_parser(
-        "attribution", help="last-touch attribution of target events"
-    )
-    add_data(at)
-    at.add_argument("--user", required=True, help="chain key column")
-    at.add_argument("--event", required=True, help="event type column")
-    at.add_argument("--time", required=True, help="timestamp column")
-    at.add_argument("--order", required=True, help="tie-break column")
-    at.add_argument("--target", required=True, help="conversion event type")
-
-    atm = sub.add_parser(
-        "attribution-multi",
-        help="multi-touch (linear/position/time-decay) attribution",
-    )
-    add_data(atm)
-    atm.add_argument("--user", required=True, help="chain key column")
-    atm.add_argument("--event", required=True, help="event type column")
-    atm.add_argument("--time", required=True, help="timestamp column")
-    atm.add_argument("--order", required=True, help="tie-break column")
-    atm.add_argument("--target", required=True, help="conversion event type")
-    atm.add_argument("--horizon-days", type=int, default=30,
-                     help="time-decay cap in whole days")
-
-    bp = sub.add_parser(
-        "bpe", help="train a BPE merges table on a text corpus"
-    )
-    add_data(bp)
-    bp.add_argument("--id", required=True, help="document id column")
-    bp.add_argument("--text", required=True, help="text column")
-    bp.add_argument("--n-merges", type=int, default=24)
-    bp.add_argument("--vocab-cap", type=int, default=5000)
-
-    pr = sub.add_parser(
-        "pagerank", help="weighted PageRank over an edge table"
-    )
-    add_data(pr)
-    pr.add_argument("--src", required=True, help="edge source column")
-    pr.add_argument("--dst", required=True, help="edge destination column")
-    pr.add_argument("--weight", help="edge weight column (default unweighted)")
-    pr.add_argument("--damping", type=float, default=0.85)
-    pr.add_argument("--n-iter", type=int, default=20)
-    pr.add_argument("--limit", type=int, default=100,
-                    help="max listed nodes (totals stay exact)")
-
-    km = sub.add_parser(
-        "kmeans", help="iterative spherical k-means over an (id, vector) table"
-    )
-    add_data(km)
-    km.add_argument("--id", required=True, help="integer id column")
-    km.add_argument("--vector", required=True, help="embedding array column")
-    km.add_argument("--k", type=int, default=8, help="number of clusters")
-    km.add_argument("--n-iter", type=int, default=10,
-                    help="max Lloyd iterations")
-    km.add_argument("--tol", type=float, default=1e-4,
-                    help="normalized-centroid shift convergence threshold")
-    km.add_argument("--centroids", action="store_true",
-                    help="include the final k x d centroid means")
-
-    pk = sub.add_parser(
-        "pack", help="concat-and-chunk packing layout over an (id, text) table"
-    )
-    add_data(pk)
-    pk.add_argument("--id", required=True, help="integer id column")
-    pk.add_argument("--text", required=True, help="text column")
-    pk.add_argument("--capacity", type=int, default=2048,
-                    help="tokens per training chunk")
-    pk.add_argument("--limit", type=int, default=1000,
-                    help="max listed documents (totals stay exact)")
-    pk.add_argument("--tokenizer", choices=("ws", "bpeish"), default="ws",
-                    help="token counter: whitespace or BPE-ish regex")
+    for op in OPERATIONS:
+        _add_operation(sub, op)
 
     q = sub.add_parser("query", help="run a declared inventory key")
     q.add_argument("--key", required=True)
@@ -663,6 +204,8 @@ def main(argv: list[str] | None = None) -> int:
                          "unset = read-only server)")
 
     args = p.parse_args(argv)
+    if hasattr(args, "op"):
+        return _run_operation(args.op, args)
 
     if args.cmd == "serve":
         from .http_api import serve
@@ -694,233 +237,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"key": args.key, "n_shown": len(rows), "rows": rows},
                          default=str))
         return 0
-
-    if args.cmd in (
-        "index-status", "index-probe", "index-delete", "index-compact",
-        "index-recluster", "index-recover", "index-pq-attach",
-        "psi-status", "scd2-recover", "scd2-snapshot",
-    ):
-        from .api import CorrelationAPI
-
-        api = CorrelationAPI(_spark())
-        try:
-            if args.cmd == "index-status":
-                res = api.index_status(args.path)
-            elif args.cmd == "psi-status":
-                res = api.psi_status(args.path)
-            elif args.cmd == "index-delete":
-                res = api.index_delete(
-                    args.path,
-                    [int(x) for x in args.ids.split(",") if x.strip()],
-                )
-            elif args.cmd == "index-compact":
-                res = api.index_compact(args.path)
-            elif args.cmd == "index-recover":
-                res = api.index_recover(args.path)
-            elif args.cmd == "scd2-recover":
-                res = api.scd2_recover_store(args.path)
-            elif args.cmd == "scd2-snapshot":
-                # ids stay strings (advice r13: int() here broke
-                # string-keyed stores) — scd2_snapshot_at coerces from
-                # the store's own persisted key_type
-                users = (
-                    [x.strip() for x in args.users.split(",") if x.strip()]
-                    if args.users else None
-                )
-                res = api.scd2_snapshot(
-                    args.path, args.ts, users=users, limit=args.limit
-                )
-            elif args.cmd == "index-recluster":
-                res = api.index_recluster(
-                    args.path, threshold=args.threshold,
-                    n_cells=args.n_cells,
-                    train_fraction=args.train_fraction,
-                )
-            elif args.cmd == "index-pq-attach":
-                res = api.index_pq_attach(args.path)
-            else:
-                res = api.index_probe(
-                    args.path,
-                    [int(x) for x in args.probes.split(",") if x.strip()],
-                    k=args.k, n_probe=args.n_probe, method=args.method,
-                    refine=args.refine,
-                )
-        except (KeyError, TypeError, ValueError) as e:
-            print(json.dumps({"error": str(e)}))
-            return 2
-        print(json.dumps(res, default=str))
-        return 0
-
-    try:
-        api = _api(args)
-        if args.cmd == "correlate":
-            res = api.correlate("ds", args.x, args.y, method=args.method,
-                                group_by=args.group_by)
-        elif args.cmd == "matrix":
-            variables = args.vars.split(",") if args.vars else None
-            res = api.correlation_matrix("ds", variables, method=args.method)
-        elif args.cmd == "mixed-matrix":
-            variables = args.vars.split(",") if args.vars else None
-            res = api.mixed_matrix("ds", variables)
-        elif args.cmd == "drift":
-            res = api.drift("ds", args.var, args.time, grain=args.grain)
-        elif args.cmd == "psi-repin":
-            res = api.psi_repin("ds", args.time, args.value, args.path,
-                                end=args.end, start=args.start)
-        elif args.cmd == "psi-drift":
-            res = api.psi_drift("ds", args.time, args.value, args.path)
-        elif args.cmd == "survival":
-            res = api.survival("ds", args.start, args.end,
-                               group_by=args.group_by,
-                               group_a=args.a, group_b=args.b)
-        elif args.cmd == "compare":
-            res = api.compare("ds", args.var, args.group_by, args.a, args.b)
-        elif args.cmd == "anova":
-            res = api.anova("ds", args.var, args.group_by,
-                            center=args.center)
-        elif args.cmd == "basket":
-            res = api.basket("ds", args.basket, args.item,
-                             min_count=args.min_count, limit=args.limit)
-        elif args.cmd == "changepoint":
-            res = api.changepoint("ds", args.var, args.time,
-                                  grain=args.grain)
-        elif args.cmd == "forecast":
-            res = api.forecast("ds", args.var, args.time,
-                               group_by=args.group_by, grain=args.grain,
-                               method=args.method, season=args.season,
-                               alpha=args.alpha, beta=args.beta,
-                               gamma=args.gamma)
-        elif args.cmd == "trend":
-            res = api.trend("ds", args.var, args.time,
-                            group_by=args.group_by, grain=args.grain)
-        elif args.cmd == "tukey":
-            res = api.tukey("ds", args.var, args.group_by)
-        elif args.cmd == "decompose":
-            res = api.decompose("ds", args.var, args.time,
-                                grain=args.grain, period=args.period)
-        elif args.cmd == "weighted-quantile":
-            res = api.weighted_quantile("ds", args.var, args.weight,
-                                        group_by=args.group_by,
-                                        quantiles=args.quantiles)
-        elif args.cmd == "gopher":
-            res = api.gopher("ds", id_col=args.id_col,
-                             text_col=args.text_col, limit=args.limit)
-        elif args.cmd == "stationary":
-            res = api.stationary("ds", args.user, args.event, args.time,
-                                 args.order, n_iter=args.n_iter)
-        elif args.cmd == "pca":
-            res = api.pca("ds", args.id_col, args.vector, k=args.k)
-        elif args.cmd == "integrity":
-            api.register_dataset("parent", args.parent_data,
-                                 fmt=args.parent_format)
-            res = api.integrity("ds", args.fk, "parent", args.pk)
-        elif args.cmd == "association":
-            res = api.association("ds", args.a, args.b, method=args.method)
-        elif args.cmd == "distribution":
-            pcts = (
-                [float(x) for x in args.percentiles.split(",") if x]
-                if args.percentiles else None
-            )
-            res = api.distribution("ds", args.var, group_by=args.group_by,
-                                   gini=args.gini, percentiles=pcts,
-                                   method=args.pct_method,
-                                   normality=args.normality)
-        elif args.cmd == "partial":
-            from .api import parse_control_arg
-
-            res = api.partial_correlation("ds", args.x, args.y,
-                                          parse_control_arg(args.control),
-                                          group_by=args.group_by)
-        elif args.cmd == "xcorr":
-            res = api.cross_correlation("ds", args.time, args.x, args.y,
-                                        max_lag=args.max_lag, grain=args.grain)
-        elif args.cmd == "acf":
-            res = api.acf("ds", args.time, args.value,
-                          max_lag=args.max_lag, grain=args.grain)
-        elif args.cmd == "rolling":
-            res = api.rolling_correlation("ds", args.time, args.value,
-                                          window=args.window, lag=args.lag,
-                                          grain=args.grain)
-        elif args.cmd == "similar":
-            probe_ids = (
-                [int(p) for p in args.probes.split(",") if p.strip()]
-                if args.probes else None
-            )
-            qvecs = (
-                [[float(x) for x in qv.split(",")] for qv in args.query_vectors]
-                if args.query_vectors else None
-            )
-            res = api.similar("ds", args.id, args.vector, probe_ids,
-                              k=args.k, method=args.method,
-                              n_cells=args.n_cells, n_probe=args.n_probe,
-                              query_vectors=qvecs)
-        elif args.cmd == "index-build":
-            res = api.index_build("ds", args.id, args.vector, args.path,
-                                  n_cells=args.n_cells,
-                                  train_fraction=args.train_fraction,
-                                  where=args.where)
-        elif args.cmd == "index-append":
-            res = api.index_append("ds", args.id, args.vector, args.path,
-                                   where=args.where)
-        elif args.cmd == "scd2-merge-into":
-            res = api.scd2_merge(
-                "ds", args.user, args.event, args.time, args.order,
-                args.path, n_buckets=args.n_buckets,
-            )
-        elif args.cmd == "dedup":
-            res = api.dedup("ds", args.id, args.text, method=args.method,
-                            threshold=args.threshold, limit=args.limit)
-        elif args.cmd == "assign":
-            res = api.assign(
-                "ds", args.id, args.vector,
-                centroid_ids=[int(x) for x in args.centroids.split(",") if x],
-                limit=args.limit,
-            )
-        elif args.cmd == "knn-graph":
-            res = api.knn_graph("ds", args.id, args.vector,
-                                k=args.k, limit=args.limit)
-        elif args.cmd == "transitions":
-            res = api.transitions("ds", args.user, args.event,
-                                  args.time, args.order)
-        elif args.cmd == "attribution":
-            res = api.attribution("ds", args.user, args.event,
-                                  args.time, args.order, args.target)
-        elif args.cmd == "bpe":
-            res = api.bpe_train("ds", args.id, args.text,
-                                n_merges=args.n_merges,
-                                vocab_cap=args.vocab_cap)
-        elif args.cmd == "attribution-multi":
-            res = api.attribution_multi(
-                "ds", args.user, args.event, args.time, args.order,
-                args.target, horizon_days=args.horizon_days)
-        elif args.cmd == "pagerank":
-            res = api.pagerank("ds", args.src, args.dst,
-                               weight=args.weight, damping=args.damping,
-                               n_iter=args.n_iter, limit=args.limit)
-        elif args.cmd == "kmeans":
-            res = api.kmeans(
-                "ds", args.id, args.vector, k=args.k,
-                n_iter=args.n_iter, tol=args.tol,
-                include_centroids=args.centroids,
-            )
-        elif args.cmd == "pack":
-            res = api.pack("ds", args.id, args.text,
-                           capacity=args.capacity, limit=args.limit,
-                           tokenizer=args.tokenizer)
-        else:
-            res = api.lagged_correlation("ds", args.time, args.value,
-                                         lag=args.lag, grain=args.grain)
-    except (KeyError, TypeError, ValueError) as e:
-        # user errors (unknown/non-numeric variable, bad method/grain)
-        print(json.dumps({"error": str(e)}))
-        return 2
-    except Exception as e:  # noqa: BLE001 - CLI boundary
-        # engine-level failures (missing path -> AnalysisException, etc.)
-        # still exit with ONE JSON line, not a Py4J traceback
-        print(json.dumps({"error": f"{type(e).__name__}: {str(e)[:300]}"}))
-        return 3
-    print(json.dumps(res))
-    return 0
 
 
 if __name__ == "__main__":

@@ -130,14 +130,30 @@ container, and none is needed for a JSON-for-JSON contract:
        (round 6: the LLM operators are parameterized service calls, not
        only canned keys)
 
-Error mapping at the HTTP boundary: KeyError → 404 (unknown dataset /
+Dispatch: one table, ``OPERATIONS``, names each operation's HTTP
+method and path, its CorrelationAPI method, the wire parameters it
+requires (in the method's positional order) and accepts, whether it
+mutates state, and a one-line summary. Routing, the mutation guard and
+the CLI (``__main__``) are all derived from it. The table holds no
+defaults and no types: only the parameters a caller supplied are
+passed (a JSON null counts as not supplied), so the CorrelationAPI
+signature is the one place defaults live, and each parameter's parser
+follows from that signature — integers accept ints, integral floats
+and base-10 digit strings (never bools); booleans accept 1/true/yes
+and 0/false/no in any case; lists accept a JSON array or a
+comma-separated string. A bad value is a 400 that names the parameter.
+
+Error mapping at the HTTP boundary (shared with the CLI, which exits 2
+for 404/400 and 3 for 500): KeyError → 404 (unknown dataset /
 variable), ValueError|TypeError → 400 (bad method / grain / non-numeric
-column), anything else → 500 with the exception class name. Every
-response body is one JSON document.
+column, bad parameter, unreadable Content-Length or body), anything
+else → 500 with the exception class name. Every response body is one
+JSON document.
 
 Mutation guard (round 12): the routes that change server or on-disk
 state — dataset registration, /index/{build,append,delete,compact,
-recluster,pq_attach}, /psi/repin — are gated behind a shared token. With no
+recluster,recover,pq_attach}, /psi/repin, /scd2/merge and /scd2/recover
+— are gated behind a shared token. With no
 token configured the server is READ-ONLY: those routes answer 403 and
 name the knob to turn. With ``auth_token`` set (``serve --auth-token``
 or the CORRELATIONAPI_AUTH_TOKEN env var), a mutating request must
@@ -145,8 +161,8 @@ carry it in ``Authorization: Bearer <token>`` (or ``X-Auth-Token``);
 a missing or wrong token answers 401 + WWW-Authenticate. Read routes
 stay open — they expose only registered datasets, and the compare is
 constant-time (hmac.compare_digest). POST alone is NOT the mutation
-signal: /matrix, /mixed_matrix, /similar and /index/probe are pure
-reads that ride POST for their body payloads.
+signal: /matrix, /mixed_matrix, /similar, /index/probe and
+/scd2/snapshot are pure reads that ride POST for their body payloads.
 
 Scale note: the handler threads share ONE SparkSession — Spark sessions
 are thread-safe and each request is a short driver-side job submission;
@@ -157,29 +173,281 @@ queries from blocking /health.
 from __future__ import annotations
 
 import hmac
+import inspect
 import json
 import os
 import re
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from typing import Any, Mapping
+from typing import Any, Callable, Mapping, NamedTuple
 from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession
 
-from .api import CorrelationAPI
+from .api import CorrelationAPI, parse_control_arg
 
 _DATASET_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)$")
 _VARIABLES_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)/variables$")
+_DIGITS = re.compile(r"[+-]?[0-9]+")
+_TRUE, _FALSE = ("1", "true", "yes"), ("0", "false", "no")
 
+
+# ------------------------------------------------------------ value parsers
+# Each takes (raw value, wire name) and raises ValueError naming the
+# parameter. HTTP query strings and CLI flags arrive as str, JSON bodies
+# as any JSON type; the CLI splits list flags on commas before parsing.
+
+
+def _as_is(value: Any, name: str) -> Any:
+    return value
+
+
+def _int(value: Any, name: str) -> int:
+    if not (type(value) is int  # bool is an int subclass: refused
+            or (type(value) is float and value.is_integer())
+            or (isinstance(value, str) and _DIGITS.fullmatch(value.strip()))):
+        raise ValueError(f"{name} must be an integer, got {value!r}")
+    return int(value)
+
+
+def _float(value: Any, name: str) -> float:
+    if not isinstance(value, bool):
+        try:
+            return float(value)
+        except (TypeError, ValueError):
+            pass
+    raise ValueError(f"{name} must be a number, got {value!r}")
+
+
+def _bool(value: Any, name: str) -> bool:
+    text = str(value).strip().lower()
+    if text in _TRUE or text in _FALSE:
+        return text in _TRUE
+    raise ValueError(f"{name} must be 1/true/yes or 0/false/no, got {value!r}")
+
+
+def _list(item: Callable[[Any, str], Any]) -> Callable[[Any, str], list]:
+    def parse(value: Any, name: str) -> list:
+        if isinstance(value, str):
+            value = [v.strip() for v in value.split(",") if v.strip()]
+        if not isinstance(value, list):
+            raise ValueError(f"{name} must be a list, got {value!r}")
+        return [item(v, f"{name}[{i}]") for i, v in enumerate(value)]
+    return parse
+
+
+def _json_array(value: Any, name: str) -> list:
+    # a scalar string "12" would iterate per-CHARACTER into [1, 2] and
+    # silently answer for the wrong users; ids pass through UNTYPED
+    # (advice r13: int(u) made string-keyed stores unqueryable and
+    # truncated 1.9 to user 1) — scd2_snapshot_at coerces them from the
+    # store's own persisted key_type and rejects non-integral numerics
+    if not isinstance(value, list):
+        raise ValueError(f'"{name}" must be a JSON array of ids')
+    return value
+
+
+# parser by the CorrelationAPI parameter's type: its default's type, or
+# its annotation when the default is None or absent
+_PARSERS = {
+    "str": _as_is, "int": _int, "float": _float, "bool": _bool,
+    "list[int]": _list(_int), "list[float]": _list(_float),
+    "list[str]": _list(_as_is),
+}
+# wire formats a type cannot express, by CorrelationAPI parameter name
+_WIRE_FORMATS = {
+    "control": lambda value, name: parse_control_arg(value),
+    "users": _json_array,
+}
+
+
+class Param(NamedTuple):
+    kwarg: str         # the CorrelationAPI parameter it fills
+    type: str          # resolved from the signature, e.g. "list[int]"
+    parse: Callable[[Any, str], Any]
+    has_default: bool  # False: the API cannot be called without it
+
+
+class Op(NamedTuple):
+    verb: str                  # HTTP method
+    path: str
+    name: str                  # CorrelationAPI method
+    required: tuple[str, ...]  # wire names, in the method's positional order
+    params: dict[str, Param]   # every wire name -> its parameter
+    mutates: bool
+    summary: str
+
+
+def _param(p: inspect.Parameter) -> Param:
+    empty = p.default is inspect.Parameter.empty
+    kind = (p.annotation.strip("'").removesuffix(" | None")
+            if empty or p.default is None else type(p.default).__name__)
+    return Param(p.name, kind, _WIRE_FORMATS.get(p.name) or _PARSERS[kind],
+                 not empty)
+
+
+def _op(route: str, name: str, required: str, optional: str = "",
+        summary: str = "", mutates: bool = False) -> Op:
+    """``optional`` is space-separated wire names; ``wire=kwarg`` renames."""
+    verb, path = route.split()
+    sig = inspect.signature(getattr(CorrelationAPI, name)).parameters
+    positional = [p for p in sig if p != "self"]
+    wires = dict(zip(required.split(), positional))
+    wires.update(w.split("=") if "=" in w else (w, w) for w in optional.split())
+    params = {w: _param(sig[kwarg]) for w, kwarg in wires.items()}
+    return Op(verb, path, name, tuple(required.split()), params, mutates,
+              summary)
+
+
+OPERATIONS = (
+    _op("GET /correlate", "correlate", "dataset x y", "method group_by",
+        "pairwise correlation: pearson | spearman | kendall | bicor"),
+    _op("GET /association", "association", "dataset a b", "method",
+        "categorical/mixed association: cramer | theil | mi | eta"),
+    _op("GET /distribution", "distribution", "dataset var",
+        "group_by gini percentiles method normality",
+        "distribution profile: moments [+ gini, percentiles, Jarque-Bera]"),
+    _op("GET /compare", "compare", "dataset var group_by a b", "",
+        "two-sample distribution comparison: KS + Mann-Whitney"),
+    _op("GET /anova", "anova", "dataset var group_by", "center",
+        "k-sample ANOVA F (center=mean) or Brown-Forsythe W (median)"),
+    _op("GET /tukey", "tukey", "dataset var group_by", "",
+        "Tukey-Kramer HSD pairwise post-hoc after anova"),
+    _op("GET /integrity", "integrity", "child fk parent pk", "",
+        "referential-integrity audit of one FK edge"),
+    _op("GET /basket", "basket", "dataset basket item", "min_count limit",
+        "market-basket rules: support/confidence/lift per item pair"),
+    _op("GET /changepoint", "changepoint", "dataset var time", "grain",
+        "CUSUM changepoint curve + estimated level-shift period"),
+    _op("GET /forecast", "forecast", "dataset var time",
+        "group_by grain method season alpha beta gamma",
+        "per-group Holt / Holt-Winters forecast or seasonal-naive backtest"),
+    _op("GET /trend", "trend", "dataset var time", "group_by grain",
+        "per-group OLS trend of period totals (slope/intercept/R2)"),
+    _op("GET /decompose", "decompose", "dataset var time", "grain period",
+        "classical additive decomposition: seasonal index + trend mean"),
+    _op("GET /weighted_quantile", "weighted_quantile", "dataset var weight",
+        "group_by quantiles",
+        "weighted percentiles via exact integer running-weight cutoffs"),
+    _op("GET /gopher", "gopher", "dataset", "id=id_col text=text_col limit",
+        "Gopher-rule quality report over an (id, text) table"),
+    _op("GET /knn_graph", "knn_graph", "dataset id vector", "k limit",
+        "mutual k-NN cosine graph over an (id, vector) table"),
+    _op("GET /pca", "pca", "dataset id vector", "k",
+        "PCA spectrum of an embedding column"),
+    _op("GET /drift", "drift", "dataset var time", "grain",
+        "per-period distribution drift vs the full-period reference"),
+    _op("POST /mixed_matrix", "mixed_matrix", "dataset", "variables",
+        "mixed-type association matrix (pearson / cramers_v / eta)"),
+    _op("GET /survival", "survival", "dataset start end",
+        "group_by a=group_a b=group_b",
+        "Kaplan-Meier conversion curve (+ optional log-rank A/B)"),
+    _op("POST /matrix", "correlation_matrix", "dataset", "variables method",
+        "all-pairs correlation matrix"),
+    _op("GET /lagged", "lagged_correlation", "dataset time value",
+        "lag grain fill_gaps", "lagged autocorrelation of a time series"),
+    _op("GET /rolling", "rolling_correlation", "dataset time value",
+        "window lag grain fill_gaps", "rolling lag-k autocorrelation"),
+    _op("GET /xcorr", "cross_correlation", "dataset time x y",
+        "max_lag grain fill_gaps", "lead-lag cross-correlation of two series"),
+    _op("GET /acf", "acf", "dataset time value", "max_lag grain fill_gaps",
+        "autocorrelation function + PACF + significance"),
+    _op("GET /partial", "partial_correlation", "dataset x y control",
+        "group_by", "partial correlation corr(x, y | control[,...])"),
+    _op("GET /similar", "similar", "dataset id vector probes",
+        "k method n_cells n_probe",
+        "top-k neighbors of probe rows (exact | ivf | pq | ivfpq)"),
+    _op("POST /index/build", "index_build", "dataset id vector path",
+        "n_cells train_fraction where", "train + persist an IVF ANN index",
+        mutates=True),
+    _op("POST /index/append", "index_append", "dataset id vector path",
+        "where", "assign-only append to a persisted IVF index",
+        mutates=True),
+    _op("GET /index/status", "index_status", "path", "",
+        "cell-balance drift gauge + pq_attached of an IVF index"),
+    _op("POST /index/probe", "index_probe", "path probe_ids",
+        "k n_probe method refine", "top-k over a persisted IVF index"),
+    _op("POST /index/pq_attach", "index_pq_attach", "path", "",
+        "attach product quantization (stored 6-bit code column)",
+        mutates=True),
+    _op("POST /index/delete", "index_delete", "path ids", "",
+        "tombstone ids out of a persisted IVF index", mutates=True),
+    _op("POST /index/compact", "index_compact", "path", "",
+        "rewrite tombstone-bearing cells live-only", mutates=True),
+    _op("POST /index/recluster", "index_recluster", "path",
+        "threshold n_cells train_fraction",
+        "re-train the quantizer when max/avg cell size > threshold",
+        mutates=True),
+    _op("POST /index/recover", "index_recover", "path", "",
+        "reclaim the index's retired/orphan store objects", mutates=True),
+    _op("POST /psi/repin", "psi_repin", "dataset time value path end",
+        "start", "pin a new versioned PSI drift reference", mutates=True),
+    _op("GET /psi/status", "psi_status", "path", "",
+        "latest pinned PSI reference (version + bins)"),
+    _op("GET /psi/drift", "psi_drift", "dataset time value path", "",
+        "per-day-window PSI vs the latest pinned reference"),
+    _op("POST /scd2/merge", "scd2_merge",
+        "dataset user event time order path", "n_buckets",
+        "merge a staged CDC batch into an existing SCD2 store",
+        mutates=True),
+    _op("POST /scd2/recover", "scd2_recover_store", "path", "",
+        "heal an interrupted SCD2 commit; reclaim garbage", mutates=True),
+    _op("POST /scd2/snapshot", "scd2_snapshot", "path ts", "users limit",
+        "point-in-time SCD2 dimension read"),
+    _op("GET /dedup", "dedup", "dataset id text", "method threshold limit",
+        "duplicate report over an (id, text) table"),
+    _op("GET /assign", "assign", "dataset id vector centroids", "limit",
+        "nearest-centroid cosine assignment + per-cell counts"),
+    _op("GET /kmeans", "kmeans", "dataset id vector",
+        "k n_iter tol centroids=include_centroids",
+        "iterative spherical k-means over an (id, vector) table"),
+    _op("GET /transitions", "transitions", "dataset user event time order",
+        "", "Markov transition matrix over per-user event chains"),
+    _op("GET /stationary", "stationary", "dataset user event time order",
+        "n_iter", "stationary distribution of the per-user event chain"),
+    _op("GET /attribution", "attribution",
+        "dataset user event time order target", "",
+        "last-touch attribution of target events"),
+    _op("GET /attribution_multi", "attribution_multi",
+        "dataset user event time order target", "horizon_days",
+        "multi-touch (linear/position/time-decay) attribution"),
+    _op("GET /bpe", "bpe_train", "dataset id text", "n_merges vocab_cap",
+        "train a BPE merges table on a text corpus"),
+    _op("GET /pagerank", "pagerank", "dataset src dst",
+        "weight damping n_iter limit", "weighted PageRank over an edge table"),
+    _op("GET /pack", "pack", "dataset id text", "capacity limit tokenizer",
+        "concat-and-chunk packing layout over an (id, text) table"),
+)
+_BY_ROUTE = {(op.verb, op.path): op for op in OPERATIONS}
+# every route path, for the docs-traceability check
+ROUTES = sorted({"/health", "/datasets"} | {op.path for op in OPERATIONS})
 # Routes that mutate server or on-disk state. Everything else —
 # including the POST-carrying pure reads (/matrix, /mixed_matrix,
-# /similar, /index/probe) — stays open.
-_MUTATING_PATHS = frozenset({
-    "/index/build", "/index/append", "/index/delete",
-    "/index/compact", "/index/recluster", "/index/recover",
-    "/index/pq_attach",
-    "/psi/repin", "/scd2/merge", "/scd2/recover",
-})
+# /similar, /index/probe, /scd2/snapshot) — stays open.
+_MUTATING_PATHS = frozenset(op.path for op in OPERATIONS if op.mutates)
+
+
+def _call(api: CorrelationAPI, op: Op, values: Mapping[str, Any],
+          **extra: Any) -> Any:
+    """Call op's API method with the parameters present in ``values``."""
+    kwargs = {p.kwarg: p.parse(values[w], w) for w, p in op.params.items()
+              if values.get(w) is not None}
+    return getattr(api, op.name)(**kwargs, **extra)
+
+
+def _require(values: Mapping[str, Any], names: tuple[str, ...],
+             missing: str) -> None:
+    for name in names:
+        if values.get(name) is None:
+            raise ValueError(missing.format(name))
+
+
+def _error(e: Exception) -> tuple[int, dict[str, str]]:
+    """The one error map for the listener and the CLI."""
+    if isinstance(e, KeyError):
+        return 404, {"error": str(e)}
+    if isinstance(e, (ValueError, TypeError)):
+        return 400, {"error": str(e)}
+    return 500, {"error": f"{type(e).__name__}: {str(e)[:300]}"}
 
 
 def _is_mutation(method: str, path: str) -> bool:
@@ -238,482 +506,31 @@ def _route(api: CorrelationAPI, method: str, path: str,
         return 200, api.variables(m.group(1))
     m = _DATASET_RE.match(path)
     if method == "POST" and m:
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
+        _require(body, ("path",), 'body must contain "{}"')
         return 201, api.register_dataset(
             m.group(1), body["path"], fmt=body.get("format", "parquet")
         )
-    if method == "GET" and path == "/correlate":
-        for req in ("dataset", "x", "y"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.correlate(
-            query["dataset"], query["x"], query["y"],
-            method=query.get("method", "pearson"),
-            group_by=query.get("group_by"),
-        )
-    if method == "GET" and path == "/association":
-        for req in ("dataset", "a", "b"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.association(
-            query["dataset"], query["a"], query["b"],
-            method=query.get("method", "cramer"),
-        )
-    if method == "GET" and path == "/compare":
-        for req in ("dataset", "var", "group_by", "a", "b"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.compare(
-            query["dataset"], query["var"], query["group_by"],
-            query["a"], query["b"],
-        )
-    if method == "GET" and path == "/anova":
-        for req in ("dataset", "var", "group_by"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.anova(
-            query["dataset"], query["var"], query["group_by"],
-            center=query.get("center", "mean"),
-        )
-    if method == "GET" and path == "/tukey":
-        for req in ("dataset", "var", "group_by"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.tukey(
-            query["dataset"], query["var"], query["group_by"],
-        )
-    if method == "GET" and path == "/integrity":
-        for req in ("child", "fk", "parent", "pk"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.integrity(
-            query["child"], query["fk"], query["parent"], query["pk"],
-        )
-    if method == "GET" and path == "/basket":
-        for req in ("dataset", "basket", "item"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.basket(
-            query["dataset"], query["basket"], query["item"],
-            min_count=int(query.get("min_count", "10")),
-            limit=int(query.get("limit", "50")),
-        )
-    if method == "GET" and path == "/changepoint":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.changepoint(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/forecast":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.forecast(
-            query["dataset"], query["var"], query["time"],
-            group_by=query.get("group_by"),
-            grain=query.get("grain", "day"),
-            method=query.get("method", "holt"),
-            season=int(query.get("season", "7")),
-            alpha=float(query.get("alpha", "0.3")),
-            beta=float(query.get("beta", "0.1")),
-            gamma=float(query.get("gamma", "0.2")),
-        )
-    if method == "GET" and path == "/trend":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.trend(
-            query["dataset"], query["var"], query["time"],
-            group_by=query.get("group_by"),
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/decompose":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.decompose(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-            period=int(query.get("period", "7")),
-        )
-    if method == "GET" and path == "/weighted_quantile":
-        for req in ("dataset", "var", "weight"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.weighted_quantile(
-            query["dataset"], query["var"], query["weight"],
-            group_by=query.get("group_by"),
-            quantiles=query.get("quantiles", "0.25,0.5,0.75"),
-        )
-    if method == "GET" and path == "/gopher":
-        if "dataset" not in query:
-            raise ValueError("missing query parameter 'dataset'")
-        return 200, api.gopher(
-            query["dataset"],
-            id_col=query.get("id", "doc_id"),
-            text_col=query.get("text", "text"),
-            limit=int(query.get("limit", "100")),
-        )
-    if method == "GET" and path == "/pca":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pca(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", "8")),
-        )
-    if method == "GET" and path == "/survival":
-        for req in ("dataset", "start", "end"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.survival(
-            query["dataset"], query["start"], query["end"],
-            group_by=query.get("group_by"),
-            group_a=query.get("a"), group_b=query.get("b"),
-        )
-    if method == "GET" and path == "/drift":
-        for req in ("dataset", "var", "time"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.drift(
-            query["dataset"], query["var"], query["time"],
-            grain=query.get("grain", "day"),
-        )
-    if method == "GET" and path == "/distribution":
-        for req in ("dataset", "var"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.distribution(
-            query["dataset"], query["var"],
-            group_by=query.get("group_by"),
-            gini=query.get("gini", "") in ("1", "true", "yes"),
-            percentiles=(
-                [float(x) for x in query["percentiles"].split(",") if x]
-                if "percentiles" in query else None
-            ),
-            method=query.get("method", "exact"),
-            normality=query.get("normality", "") in ("1", "true", "yes"),
-        )
-    if method == "POST" and path == "/matrix":
-        if "dataset" not in body:
-            raise ValueError('body must contain "dataset"')
-        return 200, api.correlation_matrix(
-            body["dataset"], body.get("variables"),
-            method=body.get("method", "pearson"),
-        )
-    if method == "POST" and path == "/mixed_matrix":
-        if "dataset" not in body:
-            raise ValueError('body must contain "dataset"')
-        return 200, api.mixed_matrix(body["dataset"], body.get("variables"))
-    if method == "GET" and path == "/lagged":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.lagged_correlation(
-            query["dataset"], query["time"], query["value"],
-            lag=int(query.get("lag", 1)), grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/rolling":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.rolling_correlation(
-            query["dataset"], query["time"], query["value"],
-            window=int(query.get("window", 14)),
-            lag=int(query.get("lag", 1)), grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/partial":
-        for req in ("dataset", "x", "y", "control"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        from .api import parse_control_arg
-
-        return 200, api.partial_correlation(
-            query["dataset"], query["x"], query["y"],
-            parse_control_arg(query["control"]),
-            group_by=query.get("group_by"),
-        )
-    if method == "GET" and path == "/acf":
-        for req in ("dataset", "time", "value"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.acf(
-            query["dataset"], query["time"], query["value"],
-            max_lag=int(query.get("max_lag", 10)),
-            grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    if method == "GET" and path == "/similar":
-        for req in ("dataset", "id", "vector", "probes"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        try:
-            probe_ids = [int(p) for p in query["probes"].split(",") if p.strip()]
-        except ValueError:
-            raise ValueError("probes must be comma-separated integers") from None
-        return 200, api.similar(
-            query["dataset"], query["id"], query["vector"], probe_ids,
-            k=int(query.get("k", 5)),
-            method=query.get("method", "exact"),
-            n_cells=int(query.get("n_cells", 16)),
-            n_probe=int(query.get("n_probe", 6)),
-        )
     if method == "POST" and path == "/similar":
-        # raw query vectors don't fit a query string: POST body
-        # {"dataset","id","vector","query_vectors":[[...],...],
-        #  "k","method","n_cells","n_probe"}
-        for req in ("dataset", "id", "vector", "query_vectors"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.similar(
-            body["dataset"], body["id"], body["vector"],
-            k=int(body.get("k", 5)),
-            method=body.get("method", "exact"),
-            n_cells=int(body.get("n_cells", 16)),
-            n_probe=int(body.get("n_probe", 6)),
-            query_vectors=body["query_vectors"],
-        )
-    if method == "POST" and path == "/index/build":
-        for req in ("dataset", "id", "vector", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        res = api.index_build(
-            body["dataset"], body["id"], body["vector"], body["path"],
-            n_cells=int(body.get("n_cells", 16)),
-            train_fraction=float(body.get("train_fraction", 1.0)),
-            where=body.get("where"),
-        )
+        # raw query vectors don't fit a query string: the GET operation's
+        # parameters plus an untyped "query_vectors" list in the body
+        _require(body, ("dataset", "id", "vector", "query_vectors"),
+                 'body must contain "{}"')
+        return 200, _call(api, _BY_ROUTE["GET", "/similar"], body,
+                          query_vectors=body["query_vectors"])
+    op = _BY_ROUTE.get((method, path))
+    if op is None:
+        return 404, {"error": f"no route: {method} {path}"}
+    if method == "GET":
+        values, missing = query, "missing query parameter {!r}"
+    else:
+        values, missing = body, 'body must contain "{}"'
+    _require(values, op.required, missing)
+    res = _call(api, op, values)
+    if op.name == "index_build":
         # 201 on first build, 200 when an existing index was replaced
         # in place (advice r10)
         return (200 if res.get("rebuilt") else 201), res
-    if method == "POST" and path == "/index/append":
-        for req in ("dataset", "id", "vector", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_append(
-            body["dataset"], body["id"], body["vector"], body["path"],
-            where=body.get("where"),
-        )
-    if method == "GET" and path == "/index/status":
-        if "path" not in query:
-            raise ValueError("missing query parameter 'path'")
-        return 200, api.index_status(query["path"])
-    if method == "POST" and path == "/index/probe":
-        for req in ("path", "probe_ids"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_probe(
-            body["path"], [int(p) for p in body["probe_ids"]],
-            k=int(body.get("k", 5)), n_probe=int(body.get("n_probe", 6)),
-            method=str(body.get("method", "ivf")),
-            refine=(
-                None if body.get("refine") is None
-                else int(body["refine"])
-            ),
-        )
-    if method == "POST" and path == "/index/delete":
-        for req in ("path", "ids"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 200, api.index_delete(
-            body["path"], [int(i) for i in body["ids"]]
-        )
-    if method == "POST" and path == "/index/compact":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_compact(body["path"])
-    if method == "POST" and path == "/index/pq_attach":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_pq_attach(body["path"])
-    if method == "POST" and path == "/index/recover":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_recover(body["path"])
-    if method == "POST" and path == "/scd2/merge":
-        for req in ("dataset", "user", "event", "time", "order", "path"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        nb = body.get("n_buckets")
-        return 200, api.scd2_merge(
-            body["dataset"], body["user"], body["event"], body["time"],
-            body["order"], body["path"],
-            n_buckets=None if nb is None else int(nb),
-        )
-    if method == "POST" and path == "/scd2/snapshot":
-        # a pure read despite the body-carrying POST (the /matrix
-        # convention) — deliberately NOT in _MUTATING_PATHS
-        for req in ("path", "ts"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        users = body.get("users")
-        if users is not None and not isinstance(users, list):
-            # a scalar string "12" would iterate per-CHARACTER into
-            # [1, 2] and silently answer for the wrong users
-            raise ValueError('"users" must be a JSON array of ids')
-        # ids pass through UNTYPED (advice r13: int(u) here made
-        # string-keyed stores unqueryable and silently truncated 1.9
-        # to user 1) — scd2_snapshot_at coerces them from the store's
-        # own persisted key_type and rejects non-integral numerics
-        return 200, api.scd2_snapshot(
-            body["path"], body["ts"],
-            users=users,
-            limit=int(body.get("limit", 1000)),
-        )
-    if method == "POST" and path == "/scd2/recover":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.scd2_recover_store(body["path"])
-    if method == "POST" and path == "/index/recluster":
-        if "path" not in body:
-            raise ValueError('body must contain "path"')
-        return 200, api.index_recluster(
-            body["path"],
-            threshold=float(body.get("threshold", 3.0)),
-            n_cells=(
-                int(body["n_cells"]) if "n_cells" in body else None
-            ),
-            train_fraction=float(body.get("train_fraction", 1.0)),
-        )
-    if method == "POST" and path == "/psi/repin":
-        for req in ("dataset", "time", "value", "path", "end"):
-            if req not in body:
-                raise ValueError(f'body must contain "{req}"')
-        return 201, api.psi_repin(
-            body["dataset"], body["time"], body["value"], body["path"],
-            end=body["end"], start=body.get("start"),
-        )
-    if method == "GET" and path == "/psi/status":
-        if "path" not in query:
-            raise ValueError("missing query parameter 'path'")
-        return 200, api.psi_status(query["path"])
-    if method == "GET" and path == "/psi/drift":
-        for req in ("dataset", "time", "value", "path"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.psi_drift(
-            query["dataset"], query["time"], query["value"], query["path"]
-        )
-    if method == "GET" and path == "/dedup":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.dedup(
-            query["dataset"], query["id"], query["text"],
-            method=query.get("method", "exact"),
-            threshold=float(query.get("threshold", 0.5)),
-            limit=int(query.get("limit", 1000)),
-        )
-    if method == "GET" and path == "/assign":
-        for req in ("dataset", "id", "vector", "centroids"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.assign(
-            query["dataset"], query["id"], query["vector"],
-            centroid_ids=[int(x) for x in query["centroids"].split(",") if x],
-            limit=int(query.get("limit", 1000)),
-        )
-    if method == "GET" and path == "/knn_graph":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.knn_graph(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", 5)),
-            limit=int(query.get("limit", 100)),
-        )
-    if method == "GET" and path == "/transitions":
-        for req in ("dataset", "user", "event", "time", "order"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.transitions(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"],
-        )
-    if method == "GET" and path == "/stationary":
-        for req in ("dataset", "user", "event", "time", "order"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.stationary(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"],
-            n_iter=int(query.get("n_iter", "50")),
-        )
-    if method == "GET" and path == "/attribution":
-        for req in ("dataset", "user", "event", "time", "order", "target"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.attribution(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"], query["target"],
-        )
-    if method == "GET" and path == "/attribution_multi":
-        for req in ("dataset", "user", "event", "time", "order", "target"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.attribution_multi(
-            query["dataset"], query["user"], query["event"],
-            query["time"], query["order"], query["target"],
-            horizon_days=int(query.get("horizon_days", 30)),
-        )
-    if method == "GET" and path == "/bpe":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.bpe_train(
-            query["dataset"], query["id"], query["text"],
-            n_merges=int(query.get("n_merges", 24)),
-            vocab_cap=int(query.get("vocab_cap", 5000)),
-        )
-    if method == "GET" and path == "/pagerank":
-        for req in ("dataset", "src", "dst"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pagerank(
-            query["dataset"], query["src"], query["dst"],
-            weight=query.get("weight"),
-            damping=float(query.get("damping", 0.85)),
-            n_iter=int(query.get("n_iter", 20)),
-            limit=int(query.get("limit", 100)),
-        )
-    if method == "GET" and path == "/kmeans":
-        for req in ("dataset", "id", "vector"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.kmeans(
-            query["dataset"], query["id"], query["vector"],
-            k=int(query.get("k", 8)),
-            n_iter=int(query.get("n_iter", 10)),
-            tol=float(query.get("tol", 1e-4)),
-            include_centroids=query.get("centroids", "0")
-            in ("1", "true", "yes"),
-        )
-    if method == "GET" and path == "/pack":
-        for req in ("dataset", "id", "text"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.pack(
-            query["dataset"], query["id"], query["text"],
-            capacity=int(query.get("capacity", 2048)),
-            limit=int(query.get("limit", 1000)),
-            tokenizer=query.get("tokenizer", "ws"),
-        )
-    if method == "GET" and path == "/xcorr":
-        for req in ("dataset", "time", "x", "y"):
-            if req not in query:
-                raise ValueError(f"missing query parameter {req!r}")
-        return 200, api.cross_correlation(
-            query["dataset"], query["time"], query["x"], query["y"],
-            max_lag=int(query.get("max_lag", 3)),
-            grain=query.get("grain", "day"),
-            fill_gaps=query.get("fill_gaps", "").lower() in ("1", "true"),
-        )
-    return 404, {"error": f"no route: {method} {path}"}
+    return (201 if op.name == "psi_repin" else 200), res
 
 
 def make_server(
@@ -740,6 +557,22 @@ def make_server(
             self.end_headers()
             self.wfile.write(raw)
 
+        def _body(self) -> dict[str, Any]:
+            length = self.headers.get("Content-Length") or "0"
+            # digits only: int("abc") raises, and rfile.read(-1) would
+            # block until the client hangs up
+            if not length.isdigit():
+                raise ValueError(f"bad Content-Length: {length!r}")
+            if not int(length):
+                return {}
+            try:
+                body = json.loads(self.rfile.read(int(length)))
+            except ValueError:
+                raise ValueError("request body is not JSON") from None
+            if not isinstance(body, dict):
+                raise ValueError("request body must be a JSON object")
+            return body
+
         def _handle(self, method: str) -> None:
             parsed = urlparse(self.path)
             refused = _authorize(method, parsed.path, self.headers, auth_token)
@@ -747,24 +580,11 @@ def make_server(
                 self._respond(*refused)
                 return
             query = {k: v[0] for k, v in parse_qs(parsed.query).items()}
-            body: dict[str, Any] = {}
-            length = int(self.headers.get("Content-Length") or 0)
-            if length:
-                try:
-                    body = json.loads(self.rfile.read(length))
-                except json.JSONDecodeError:
-                    self._respond(400, {"error": "request body is not JSON"})
-                    return
             try:
-                status, payload = _route(api, method, parsed.path, query, body)
-            except KeyError as e:
-                self._respond(404, {"error": str(e)})
-            except (ValueError, TypeError) as e:
-                self._respond(400, {"error": str(e)})
+                result = _route(api, method, parsed.path, query, self._body())
             except Exception as e:  # noqa: BLE001 - service boundary
-                self._respond(500, {"error": f"{type(e).__name__}: {str(e)[:300]}"})
-            else:
-                self._respond(status, payload)
+                result = _error(e)
+            self._respond(*result)
 
         def do_GET(self) -> None:  # noqa: N802 (http.server API)
             self._handle("GET")

@@ -78,11 +78,6 @@ def oracle_revenue_sum(
     )
 
 
-def oracle_money_sum(col: str) -> str:
-    """DuckDB fragment for rule 1 (plain 2 dp column sum)."""
-    return f"round(sum({col}), 2)"
-
-
 def money_sum(col: str | Column) -> Column:
     """Spark side of rule 1."""
     c = F.col(col) if isinstance(col, str) else col
