@@ -42,6 +42,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .io import read_parquet_any
+from .ordering import materialize, pinned
 from .session import ensure_conf
 
 _NUMERIC = (
@@ -358,10 +359,17 @@ class CorrelationAPI:
         df = self._get(dataset)
         return [f.name for f in df.schema.fields if isinstance(f.dataType, _NUMERIC)]
 
-    def _get(self, dataset: str) -> DataFrame:
+    def _get(self, dataset: str, *columns: str | None) -> DataFrame:
+        """The registered frame; KeyError (HTTP 404) for an unknown
+        dataset or for any named column it lacks (a None column is an
+        optional one the caller left out)."""
         if dataset not in self._datasets:
             raise KeyError(f"unknown dataset: {dataset!r}; registered: {self.list_datasets()}")
-        return self._datasets[dataset]
+        df = self._datasets[dataset]
+        for c in columns:
+            if c is not None and c not in df.columns:
+                raise KeyError(f"unknown variable: {c!r}")
+        return df
 
     # -- statistics ----------------------------------------------------------
 
@@ -545,14 +553,12 @@ class CorrelationAPI:
             & ~F.isnan("_x") & ~F.isnan("_y")
         )
         # the size-routing count plus the compute jobs all scan this
-        # filtered frame — persist so the common under-cap case pays one
+        # filtered frame — pin it so the common under-cap case pays one
         # source scan, not two (and the distributed path, which consumes
-        # it many times, reads the cache)
-        data = data.persist()
-        try:
+        # it many times, reads the pinned blocks)
+        with pinned():
+            data = materialize(data)
             return self._kendall_routed(data, dataset, var_x, var_y, group_by)
-        finally:
-            data.unpersist()
 
     def _kendall_routed(
         self,
@@ -715,10 +721,7 @@ class CorrelationAPI:
         driver work as a 100-row one."""
         import math
 
-        df = self._get(dataset)
-        if var_a not in df.columns or var_b not in df.columns:
-            missing = [v for v in (var_a, var_b) if v not in df.columns]
-            raise KeyError(f"unknown variable(s): {missing}")
+        df = self._get(dataset, var_a, var_b)
         base = {"dataset": dataset, "a": var_a, "b": var_b, "method": method}
 
         if method == "eta":
@@ -992,10 +995,8 @@ class CorrelationAPI:
         reduction — never a global sort."""
         from .operators.stats import two_sample_stats
 
-        df = self._get(dataset)
+        df = self._get(dataset, group_by)
         x = self._num(df, var)
-        if group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         g = F.col(group_by).cast("string")
         data = df.select(
             F.when(g == group_a, "A").when(g == group_b, "B").alias("g"),
@@ -1084,10 +1085,8 @@ class CorrelationAPI:
 
         if center not in ("mean", "median"):
             raise ValueError(f"unknown center: {center!r}")
-        df = self._get(dataset)
+        df = self._get(dataset, group_by)
         x = self._num(df, var)
-        if group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         data = df.select(
             F.col(group_by).cast("string").alias("grp"),
             F.round(x * 1000000, 0).cast("long").alias("v"),
@@ -1101,8 +1100,8 @@ class CorrelationAPI:
             data = data.join(F.broadcast(med), "grp").select(
                 "grp", F.abs(2 * F.col("v") - F.col("m2")).alias("v")
             )
-        g = group_moments(data, "v").cache()
-        try:
+        with pinned():
+            g = materialize(group_moments(data, "v"))
             r = f_oneway(g).collect()[0]
             if r.df_between < 1 or r.df_within < 1:
                 raise ValueError(
@@ -1121,8 +1120,6 @@ class CorrelationAPI:
                 }
                 for m in g.collect()
             }
-        finally:
-            g.unpersist()
         stat = "w_stat" if center == "median" else "f_stat"
         return {
             "dataset": dataset, "var": var, "group_by": group_by,
@@ -1148,10 +1145,8 @@ class CorrelationAPI:
         (k, df_within) downstream."""
         from .operators.stats import group_moments, tukey_pairs
 
-        df = self._get(dataset)
+        df = self._get(dataset, group_by)
         x = self._num(df, var)
-        if group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         data = df.select(
             F.col(group_by).cast("string").alias("grp"),
             F.round(x * 1000000, 0).cast("long").alias("v"),
@@ -1190,12 +1185,8 @@ class CorrelationAPI:
         the orphan share."""
         from .operators.analytics import fk_edge_audit
 
-        c = self._get(child)
-        p = self._get(parent)
-        if fk not in c.columns:
-            raise KeyError(f"unknown variable: {fk!r}")
-        if pk not in p.columns:
-            raise KeyError(f"unknown variable: {pk!r}")
+        c = self._get(child, fk)
+        p = self._get(parent, pk)
         r = fk_edge_audit(c, fk, p, pk, f"{child}->{parent}").collect()[0]
         present = r.n_child - r.n_null_fk
         return {
@@ -1223,10 +1214,7 @@ class CorrelationAPI:
         lift (ties broken by the pair key for determinism)."""
         from .operators.analytics import basket_rules
 
-        df = self._get(dataset)
-        for col in (basket, item):
-            if col not in df.columns:
-                raise KeyError(f"unknown variable: {col!r}")
+        df = self._get(dataset, basket, item)
         baskets = df.select(
             F.col(basket).alias("ok"),
             F.col(item).cast("string").alias("b"),
@@ -1268,10 +1256,8 @@ class CorrelationAPI:
         to exact integer micro-units first (1e-6 lattice)."""
         from .operators.stats import cusum_frame
 
-        df = self._get(dataset)
+        df = self._get(dataset, time)
         x = self._num(df, var)
-        if time not in df.columns:
-            raise KeyError(f"unknown variable: {time!r}")
         data = df.select(
             F.date_trunc(grain, F.col(time).cast("timestamp")).alias("d"),
             F.round(x * 1000000, 0).cast("long").alias("micro"),
@@ -1308,17 +1294,13 @@ class CorrelationAPI:
         this service is the parametric line fit."""
         from .operators.stats import ols_trend
 
-        df = self._get(dataset)
+        df = self._get(dataset, time, group_by)
         x = self._num(df, var)
-        if time not in df.columns:
-            raise KeyError(f"unknown variable: {time!r}")
         g = (
             F.col(group_by).cast("string")
-            if group_by is not None and group_by in df.columns
+            if group_by is not None
             else F.lit("_all")
         )
-        if group_by is not None and group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         daily = (
             df.select(
                 g.alias("grp"),
@@ -1368,10 +1350,8 @@ class CorrelationAPI:
             raise ValueError(f"unknown grain: {grain!r}")
         if period < 3 or period % 2 == 0:
             raise ValueError("period must be odd and >= 3")
-        df = self._get(dataset)
+        df = self._get(dataset, time)
         x = self._num(df, var)
-        if time not in df.columns:
-            raise KeyError(f"unknown variable: {time!r}")
         daily = (
             df.select(
                 F.col(time).cast("timestamp").alias("_t"),
@@ -1420,7 +1400,7 @@ class CorrelationAPI:
 
         from .operators.aggregates import weighted_quantiles
 
-        df = self._get(dataset)
+        df = self._get(dataset, group_by)
         x = self._num(df, var)
         w = self._num(df, weight)
         qs: list[tuple[str, int, int]] = []
@@ -1436,11 +1416,9 @@ class CorrelationAPI:
             raise ValueError("no quantiles requested")
         g = (
             F.col(group_by).cast("string")
-            if group_by is not None and group_by in df.columns
+            if group_by is not None
             else F.lit("_all")
         )
-        if group_by is not None and group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         base_all = df.select(
             g.alias("g"),
             F.round(x * 1000000, 0).cast("long").alias("v"),
@@ -1572,17 +1550,13 @@ class CorrelationAPI:
             )
         if grain not in ("hour", "day", "week", "month"):
             raise ValueError(f"unknown grain: {grain!r}")
-        df = self._get(dataset)
+        df = self._get(dataset, time, group_by)
         x = self._num(df, var)
-        if time not in df.columns:
-            raise KeyError(f"unknown variable: {time!r}")
         g = (
             F.col(group_by).cast("string")
-            if group_by is not None and group_by in df.columns
+            if group_by is not None
             else F.lit("_all")
         )
-        if group_by is not None and group_by not in df.columns:
-            raise KeyError(f"unknown variable: {group_by!r}")
         daily = (
             df.select(
                 g.alias("grp"),
@@ -1727,9 +1701,7 @@ class CorrelationAPI:
         sum — no global sort, no data-sized window."""
         from .operators.stats import chi2_drift_frame, drift_frame
 
-        df = self._get(dataset)
-        if time_col not in df.columns:
-            raise KeyError(f"unknown variable: {time_col!r}")
+        df = self._get(dataset, time_col)
         if grain not in ("hour", "day", "week", "month"):
             raise ValueError(f"unsupported grain: {grain!r}")
         if var in df.columns and isinstance(
@@ -1786,10 +1758,7 @@ class CorrelationAPI:
     # discipline applied to drift baselines.
 
     def _psi_events(self, dataset: str, time_col: str, value_col: str):
-        df = self._get(dataset)
-        for c in (time_col, value_col):
-            if c not in df.columns:
-                raise KeyError(f"unknown variable: {c!r}")
+        df = self._get(dataset, time_col, value_col)
         return df.select(
             F.col(time_col).alias("ts"),
             F.col(value_col).cast("double").alias("value"),
@@ -1871,13 +1840,11 @@ class CorrelationAPI:
         every job is a map-side-combinable reduction, never a sort or
         an n² join. String/bool columns classify as categorical,
         numerics as numeric; other types are rejected."""
-        df = self._get(dataset)
+        df = self._get(dataset, *(variables or ()))
         explicit = variables is not None
         cols = variables if explicit else df.columns
         num_cols, cat_cols, kept = [], [], []
         for c in cols:
-            if c not in df.columns:
-                raise KeyError(f"unknown variable: {c!r}")
             dt = df.schema[c].dataType
             if isinstance(dt, _NUMERIC):
                 num_cols.append(c)
@@ -1957,10 +1924,7 @@ class CorrelationAPI:
         sums) — no global sort."""
         from .operators.analytics import km_curve, logrank_test
 
-        df = self._get(dataset)
-        for c in (start, end):
-            if c not in df.columns:
-                raise KeyError(f"unknown variable: {c!r}")
+        df = self._get(dataset, start, end, group_by or None)
         horizon = df.agg(F.max(F.col(end)).alias("tmax"))
         ev = F.col(end).isNotNull() & (F.col(end) >= F.col(start))
         dur = F.when(
@@ -1993,8 +1957,6 @@ class CorrelationAPI:
                 raise ValueError(
                     "group_by needs group_a and group_b values"
                 )
-            if group_by not in df.columns:
-                raise KeyError(f"unknown variable: {group_by!r}")
             g = F.col(group_by).cast("string")
             gdur = base.filter(g.isin(group_a, group_b)).select(
                 F.when(g == group_a, "A").otherwise("B").alias("g"),
@@ -2100,14 +2062,12 @@ class CorrelationAPI:
         for c in cols[1:]:
             nan_any = nan_any | F.isnan(c)
         data = data.filter(~nan_any)
-        # persist BEFORE the routing count: the under-cap case then pays
-        # one source scan (count + worker both read the cache), and the
-        # distributed per-pair path consumes the cache k(k-1)/2 times
-        data = data.persist()
-        try:
+        # pin BEFORE the routing count: the under-cap case then pays one
+        # source scan (count + worker both read the pin), and the
+        # distributed per-pair path consumes it k(k-1)/2 times
+        with pinned():
+            data = materialize(data)
             return self._kendall_matrix_routed(data, dataset, cols)
-        finally:
-            data.unpersist()
 
     def _kendall_matrix_routed(
         self, data: DataFrame, dataset: str, cols: list[str]
@@ -2181,11 +2141,9 @@ class CorrelationAPI:
         against a series with silent holes misaligns every subsequent lag
         (see operators.stats.resample_daily). Spine/join/fill all run on
         the tiny grain-level series."""
-        df = self._get(dataset)
+        df = self._get(dataset, time_col)
         if grain not in _GRAINS:
             raise ValueError(f"unknown grain: {grain!r} (one of {_GRAINS})")
-        if time_col not in df.columns:
-            raise KeyError(f"unknown variable: {time_col!r}")
         aliases = [a for _, a in values]
         series = df.groupBy(
             F.date_trunc(grain, F.col(time_col)).alias("_t")
@@ -2715,11 +2673,7 @@ class CorrelationAPI:
                 pq_adc_topk,
             )
 
-            df = self._get(dataset)
-            if id_col not in df.columns or vector_col not in df.columns:
-                raise KeyError(
-                    f"unknown column: need {id_col!r} and {vector_col!r}"
-                )
+            df = self._get(dataset, id_col, vector_col)
             raw = df.select(
                 F.col(id_col).cast("long").alias("vec_id"),
                 F.col(vector_col).alias("embedding"),
@@ -3169,10 +3123,7 @@ class CorrelationAPI:
         it just published)."""
         from .operators.analytics import scd2_merge_into
 
-        df = self._get(dataset)
-        for c in (user_col, event_col, time_col, order_col):
-            if c not in df.columns:
-                raise KeyError(f"column {c!r} not in dataset {dataset!r}")
+        df = self._get(dataset, user_col, event_col, time_col, order_col)
         delta = df.select(
             F.col(user_col).alias("user_id"),
             F.col(event_col).alias("event_type"),
@@ -3259,12 +3210,7 @@ class CorrelationAPI:
         ids into NULLs), and exclusion of NULL-id/NULL-text rows (no
         identity / no content to process — callers surface the count
         as n_excluded)."""
-        df = self._get(dataset)
-        if id_col not in df.columns or text_col not in df.columns:
-            raise KeyError(
-                f"unknown column: need {id_col!r} and {text_col!r} "
-                f"in {df.columns}"
-            )
+        df = self._get(dataset, id_col, text_col)
         id_type = df.schema[id_col].dataType
         if not isinstance(
             id_type, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
@@ -3342,8 +3288,8 @@ class CorrelationAPI:
             if len(centroid_ids) <= 32
             else nearest_centroid_assign_np
         )
-        assigned = assign_fn(corpus, centroid_ids).persist()
-        try:
+        with pinned():
+            assigned = materialize(assign_fn(corpus, centroid_ids))
             cells = {
                 int(r.cell): int(r.n)
                 for r in assigned.groupBy("cell")
@@ -3361,8 +3307,6 @@ class CorrelationAPI:
                 .limit(limit)
                 .collect()
             )
-        finally:
-            assigned.unpersist()
         return {
             "dataset": dataset, "id": id_col, "vector": vector_col,
             "centroid_ids": [int(c) for c in centroid_ids],
@@ -3647,21 +3591,18 @@ class CorrelationAPI:
 
         if limit < 1:
             raise ValueError("limit must be >= 1")
-        df = self._get(dataset)
-        for c in (src, dst) + ((weight,) if weight else ()):
-            if c not in df.columns:
-                raise KeyError(f"unknown variable: {c!r}")
-        ranks = _pagerank(
-            df, src=src, dst=dst, weight=weight,
-            damping=damping, n_iter=n_iter,
-        ).persist()
-        try:
+        df = self._get(dataset, src, dst, weight or None)
+        # graph.pagerank's result is already an eager pin; the scope
+        # releases it and every per-round pin before returning
+        with pinned():
+            ranks = _pagerank(
+                df, src=src, dst=dst, weight=weight,
+                damping=damping, n_iter=n_iter,
+            )
             n_nodes = ranks.count()
             rows = (
                 ranks.orderBy(F.desc("rank"), "node").limit(limit).collect()
             )
-        finally:
-            ranks.unpersist()
         return {
             "dataset": dataset, "src": src, "dst": dst,
             "weight": weight, "damping": damping, "n_iter": n_iter,
@@ -3730,11 +3671,11 @@ class CorrelationAPI:
             raise ValueError(
                 f"unknown method: {method!r} (exact|keep_best|ngram|minhash)"
             )
-        # persist across the two actions (review r06: count + listing
-        # re-ran the whole shingle/LSH/window plan twice — the _kendall
-        # persist pattern halves every /dedup call)
-        result = result.persist()
-        try:
+        # pin across the two actions (review r06: count + listing re-ran
+        # the whole shingle/LSH/window plan twice — the _kendall pin
+        # pattern halves every /dedup call)
+        with pinned():
+            result = materialize(result)
             total = result.count()
             if method in ("exact", "keep_best"):
                 rows = result.orderBy("doc_id").limit(limit).collect()
@@ -3749,8 +3690,6 @@ class CorrelationAPI:
                     for r in rows
                 ]
             n_excluded = docs_all.count() - docs.count()
-        finally:
-            result.unpersist()
         return {
             "dataset": dataset, "id": id_col, "text": text_col,
             "method": method,
@@ -3805,8 +3744,10 @@ class CorrelationAPI:
         )
         docs_all, docs = self._docs_view(dataset, id_col, text_col)
         # capacity >= 1 is enforced by pack_chunks_layout itself
-        layout = pack_chunks_layout(docs, capacity, n_tok=n_tok).persist()
-        try:
+        with pinned():
+            layout = materialize(
+                pack_chunks_layout(docs, capacity, n_tok=n_tok)
+            )
             agg = layout.agg(
                 F.count("*").alias("n_docs"),
                 F.sum("n_tok").alias("n_tokens"),
@@ -3817,8 +3758,6 @@ class CorrelationAPI:
             # docs_all - layout rows = NULL-id/NULL-text rows plus (round
             # 7, bpeish only) zero-token docs the layout excludes
             n_excluded = docs_all.count() - int(agg.n_docs)
-        finally:
-            layout.unpersist()
         n_tokens = int(agg.n_tokens or 0)
         n_chunks = int(agg.last_chunk) + 1 if agg.n_docs else 0
         return {

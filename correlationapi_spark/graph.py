@@ -18,14 +18,16 @@ any corpus size; the per-round cost is bounded by |E|, never corpus².
 Driver-side involvement is ONE convergence check per round (an
 intentionally tiny `.limit(1).count()` on the changed-label set) — the
 standard shape for iterative fixpoint algorithms; all data movement stays
-distributed. `localCheckpoint` truncates the lineage each round so the
-plan does not grow with the iteration count.
+distributed. An eager ``ordering.materialize`` pin truncates the lineage
+each round so the plan does not grow with the iteration count.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .ordering import materialize
 
 
 def connected_components(
@@ -48,13 +50,13 @@ def connected_components(
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     # cache the (static) symmetric edge list: it is re-joined every round
-    sym = sym.distinct().localCheckpoint(eager=True)
+    sym = materialize(sym.distinct(), eager=True)
 
-    labels = (
+    labels = materialize(
         sym.select(F.col("s").alias("node"))
         .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
+        .withColumn("label", F.col("node")),
+        eager=True,
     )
 
     from pyspark.sql import Observation
@@ -70,7 +72,7 @@ def connected_components(
         # the same action, halving the per-round job count. Labels are
         # integers, so the observed count is exact and deterministic.
         obs = Observation()
-        labels = (
+        labels = materialize(
             labels.union(prop)
             .groupBy("node")
             .agg(F.min("label").alias("label"))
@@ -81,8 +83,8 @@ def connected_components(
                     F.when(F.col("label") != F.col("_old"), F.lit(1))
                 ).alias("ch"),
             )
-            .select("node", "label")
-            .localCheckpoint(eager=True)
+            .select("node", "label"),
+            eager=True,
         )
         if int(obs.get["ch"] or 0) == 0:
             return labels.select("node", F.col("label").alias("component"))
@@ -144,22 +146,21 @@ def pagerank(
         else F.lit(1.0)
     )
     e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d"), w.alias("w"))
-    nodes = (
+    nodes = materialize(
         e.select(F.col("s").alias("node"))
         .union(e.select(F.col("d").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n = nodes.count()
     outw = e.groupBy("s").agg(F.sum("w").alias("ow"))
-    ew = (
-        e.join(outw, "s")
-        .select("s", "d", (F.col("w") / F.col("ow")).alias("p"))
-        .localCheckpoint(eager=True)
+    ew = materialize(
+        e.join(outw, "s").select(
+            "s", "d", (F.col("w") / F.col("ow")).alias("p")
+        ),
+        eager=True,
     )
-    src_nodes = outw.select(F.col("s").alias("node")).localCheckpoint(
-        eager=True
-    )
+    src_nodes = materialize(outw.select(F.col("s").alias("node")), eager=True)
     # dangling flag stamped ONCE (round 15): every iteration needs the
     # rank mass of out-edge-less nodes, and the old per-round
     # anti-join + aggregate was a whole extra job per iteration. The
@@ -167,15 +168,14 @@ def pagerank(
     # then comes out of the checkpoint job itself (observed metric).
     from pyspark.sql import Observation
 
-    flagged = (
+    flagged = materialize(
         nodes.join(
             src_nodes.withColumn("_has_out", F.lit(True)), "node", "left"
-        )
-        .select(
+        ).select(
             "node",
             F.coalesce(F.col("_has_out"), F.lit(False)).alias("_has_out"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        eager=True,
     )
     ranks = flagged.withColumn("r", F.lit(1.0 / n))
     # iteration-0 mass: one aggregate over the uniform init (the only
@@ -193,7 +193,7 @@ def pagerank(
             .agg(F.sum(F.col("r") * F.col("p")).alias("inflow"))
         )
         obs = Observation()
-        ranks = (
+        ranks = materialize(
             flagged.join(contrib, flagged["node"] == contrib["d"], "left")
             .select(
                 "node",
@@ -207,8 +207,8 @@ def pagerank(
             .observe(
                 obs,
                 F.sum(F.when(~F.col("_has_out"), F.col("r"))).alias("m"),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            eager=True,
         )
         dang = obs.get["m"] or 0.0
     return ranks.select("node", F.col("r").alias("rank"))

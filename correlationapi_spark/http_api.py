@@ -184,6 +184,7 @@ from urllib.parse import parse_qs, urlparse
 from pyspark.sql import SparkSession
 
 from .api import CorrelationAPI, parse_control_arg
+from .ordering import pinned
 
 _DATASET_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)$")
 _VARIABLES_RE = re.compile(r"^/datasets/([A-Za-z0-9_.-]+)/variables$")
@@ -428,10 +429,12 @@ _MUTATING_PATHS = frozenset(op.path for op in OPERATIONS if op.mutates)
 
 def _call(api: CorrelationAPI, op: Op, values: Mapping[str, Any],
           **extra: Any) -> Any:
-    """Call op's API method with the parameters present in ``values``."""
+    """Call op's API method with the parameters present in ``values``;
+    every pin the call makes is released when it returns."""
     kwargs = {p.kwarg: p.parse(values[w], w) for w, p in op.params.items()
               if values.get(w) is not None}
-    return getattr(api, op.name)(**kwargs, **extra)
+    with pinned():
+        return getattr(api, op.name)(**kwargs, **extra)
 
 
 def _require(values: Mapping[str, Any], names: tuple[str, ...],

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_tables
+from ..ordering import materialize
 from ..registry import query
 
 
@@ -370,8 +371,6 @@ def ngram_jaccard_pairs(
     # noise of each other (fresh-plan min-of-4 at sf0.1: 1.49–1.64 s
     # plain vs 1.54–1.59 s pinned), so the pin is a scale choice, not
     # a bench tune. Row-identical output (deterministic subtree).
-    from ..ordering import materialize
-
     inv = materialize(inv)
     if max_shingle_df is not None:
         # one aggregate on the postings finds the hot keys (few by

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_tables
+from ..ordering import materialize
 from ..registry import query
 from ..storeio import (
     StoreIO,
@@ -221,15 +222,17 @@ def ivf_index(
     )
     model = km.fit(train)
     # probes and the candidate join both consume the assignment — pin it
-    # (lazy localCheckpoint, the ordering.py pattern) so the normalize +
-    # transform subtree runs once at action time, not once per consumer
-    assigned = model.transform(env).select(
-        "vec_id",
-        "v",
-        "na",
-        "cell",
-        dot(F.col("v"), F.col("v")).alias("_vn2"),
-    ).localCheckpoint(eager=False)
+    # (lazy ordering.materialize) so the normalize + transform subtree
+    # runs once at action time, not once per consumer
+    assigned = materialize(
+        model.transform(env).select(
+            "vec_id",
+            "v",
+            "na",
+            "cell",
+            dot(F.col("v"), F.col("v")).alias("_vn2"),
+        )
+    )
     cents = _one_slice_df(
         corpus.sparkSession,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -729,8 +732,8 @@ def _bloom_suspects(
     # materialize NOW, then release the broadcast deterministically —
     # a lazy return would pin one dead m/8-byte broadcast per append
     # on every executor for the session lifetime (review r11)
-    out = poss.mapInPandas(check, schema="vec_id long").localCheckpoint(
-        eager=True
+    out = materialize(
+        poss.mapInPandas(check, schema="vec_id long"), eager=True
     )
     bc.destroy()
     return out
@@ -816,11 +819,14 @@ def _bloom_screen_and_build(
                 }
             )
 
-    fused = poss.mapInPandas(
-        screen,
-        schema="vec_id long, bits binary, ns long, n long, "
-               "dups array<long>",
-    ).localCheckpoint(eager=True)
+    fused = materialize(
+        poss.mapInPandas(
+            screen,
+            schema="vec_id long, bits binary, ns long, n long, "
+                   "dups array<long>",
+        ),
+        eager=True,
+    )
     bc.destroy()
     suspects = fused.filter(F.col("vec_id").isNotNull()).select("vec_id")
     delta_bits = np.zeros(nbytes, dtype=np.uint8)
@@ -1143,7 +1149,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
         # eager pin: the assignment feeds the collision check, the
         # possible re-admit rewrite, AND the write — one broadcast-k
         # pass total
-        assigned = ivf_assign(cents, new_vectors).localCheckpoint(eager=True)
+        assigned = materialize(ivf_assign(cents, new_vectors), eager=True)
         delta_ids = assigned.select("vec_id")
         # intra-delta duplicate ids are refused like live clashes
         # (round 12): ivf_assign now keeps every row — the old window
@@ -1454,9 +1460,9 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
             spark, [(i,) for i in sorted({int(i) for i in ids})],
             "vec_id long",
         )
-        live_wanted = wanted.join(
-            live_ids, "vec_id", "left_semi"
-        ).localCheckpoint(eager=True)
+        live_wanted = materialize(
+            wanted.join(live_ids, "vec_id", "left_semi"), eager=True
+        )
         n_live = live_wanted.count()
         if n_live:
             existing = objs.get("tombstones")
@@ -2705,8 +2711,6 @@ def mutual_knn_edges(corpus: DataFrame, k: int) -> DataFrame:
     # dot-product theta-join ran TWICE — the flipped projection was
     # only cheap in intent. One pin makes the quadratic stage really
     # run once; the reversed direction reads the pinned blocks.
-    from ..ordering import materialize
-
     half = materialize(
         a.join(b, F.col("src") < F.col("dst"))
         .select("src", "dst", F.round(cos, 6).alias("cosine"))
@@ -3598,11 +3602,17 @@ def pq_probe_stored(
                 [], "probe_id long, vec_id long, l2 double, rank int"
             )
         vids = sorted({int(r.vec_id) for r in crows})
-        vmap = {
-            int(r.vec_id): [float(x) for x in r.v]
-            for r in raw.filter(F.col("vec_id").isin(vids))
-            .select("vec_id", "v").collect()
-        }
+        vmap = _candidate_vectors(raw, vids)
+        # every candidate came out of this corpus object's code scan: a
+        # missing raw vector means the object changed under the probe
+        # (pmap cannot miss — it holds every row the probe ids came from)
+        lost = [v for v in vids if v not in vmap]
+        if lost:
+            raise ValueError(
+                f"index at {path!r} is torn: refine candidate vec_id "
+                f"{lost[0]} has no raw vector in the corpus object "
+                f"{objs['corpus']!r} ({len(lost)} of {len(vids)} missing)"
+            )
         pmap = {
             int(r.vec_id): [float(x) for x in r.v] for r in probe_rows
         }
@@ -3658,6 +3668,16 @@ def pq_probe_stored(
             F.col("rn").cast("int").alias("rank"),
         )
     )
+
+
+def _candidate_vectors(raw: DataFrame, vids: list) -> dict:
+    """{vec_id: raw vector} for the refine candidates ``vids`` — one
+    pushed-down vec_id IN scan of ``raw`` (vec_id, v), collected."""
+    return {
+        int(r.vec_id): [float(x) for x in r.v]
+        for r in raw.filter(F.col("vec_id").isin(vids))
+        .select("vec_id", "v").collect()
+    }
 
 
 def _seq_l2(a, b) -> float:

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_tables
+from ..ordering import materialize
 from ..registry import query
 
 def _toks():
@@ -125,8 +126,6 @@ def q_text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # read the same executor-local blocks. Measured 0.85 s → 0.73 s
     # warm at sf0.1; at 100 TB it trades a second full corpus scan +
     # re-tokenize for one token-table write. Row-identical output.
-    from ..ordering import materialize
-
     tok = materialize(
         t["documents"].select(
             "doc_id", "source", F.explode(_toks()).alias("term")
@@ -911,8 +910,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # copy hides inside the running-sum's own checkpoint). One lazy
     # localCheckpoint computes the vocabulary once; ``tot`` reads the
     # pinned blocks. Row-identical output.
-    from ..ordering import materialize
-
     freq = materialize(tok.groupBy("term").agg(F.count("*").alias("c")))
     tot = freq.agg(
         F.sum("c").cast("bigint").alias("total_tokens"),
@@ -1333,8 +1330,6 @@ def q_text_keyword(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once; both aggregates read the same executor-local blocks. At
     # 100 TB this trades a second full corpus scan + re-tokenize for one
     # token-table write. Row-identical output (deterministic subtree).
-    from ..ordering import materialize
-
     tok = materialize(
         t["documents"].select("doc_id", F.explode(_toks()).alias("term"))
     )
@@ -1430,8 +1425,6 @@ def q_text_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # corpus once (the q_text_tfidf/q_dedup_ngram diamond rule); at
     # crawl scale that is the difference between one and two full
     # re-segmentation passes. Row-identical output.
-    from ..ordering import materialize
-
     seg = materialize(
         segs.withColumn(
             "seg_tokens", F.size(F.split(F.col("seg"), " ")).cast("bigint")

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..io import load_tables
+from ..ordering import materialize
 from ..registry import query
 from ..storeio import (
     StoreIO,
@@ -1246,8 +1247,6 @@ def multi_touch_attribution(
     # computes the chain window ONCE; both filters then read the same
     # executor-local blocks. Row-identical output (the subtree is
     # deterministic); only the needed columns are pinned.
-    from ..ordering import materialize
-
     seq = materialize(
         ev.select(user_col, type_col, time_col, order_col).withColumn(
             "j",
@@ -1718,8 +1717,6 @@ def basket_rules(baskets: DataFrame, min_count: int = 10) -> DataFrame:
     # basket build — for q_basket_lift a lineitem⋈part + distinct per
     # consumer. One pin computes the baskets once; pinning nb keeps
     # the small marginal aggregate from running twice on top of it.
-    from ..ordering import materialize
-
     baskets = materialize(baskets)
     nb = materialize(
         baskets.groupBy("b").agg(F.count("*").alias("cb"))
@@ -2035,8 +2032,6 @@ def triangle_stats(e: DataFrame) -> DataFrame:
     # (plans/r16/q_graph_triangles_before.txt) carries ~36 scan nodes
     # for what is ONE edge list. Pinned, the wedge join's three
     # consumers read the same oriented blocks. Row-identical output.
-    from ..ordering import materialize
-
     e = materialize(e)
     deg = materialize(
         e.select(F.col("u").alias("node"))
@@ -2141,8 +2136,6 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.4 — the q_graph_triangles family rule): the inverted-index
     # self-join's two sides and the two broadcast degree lookups each
     # re-ran the distinct shuffle. Row-identical output.
-    from ..ordering import materialize
-
     e = materialize(
         t["lineitem"].select(
             F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
@@ -2328,8 +2321,6 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # deg's two more — seven evaluations of the most expensive subtree
     # in the plan (the round-16 registry scan measured 1.01 s solo at
     # sf0.01, ~24 lineitem scan nodes). Row-identical output.
-    from ..ordering import materialize
-
     e = materialize(
         a.join(b, "l_orderkey")
         .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
@@ -2385,21 +2376,23 @@ def markov_stationary(
     # pin the (tiny, |states|²-row) matrix once: every round's flow
     # join consumes it, and without the checkpoint each round would
     # re-run the fact-scan window that derived it
-    tm = tm.localCheckpoint(eager=True)
-    states = (
+    tm = materialize(tm, eager=True)
+    states = materialize(
         tm.select(F.col("s").alias("state"))
         .unionAll(tm.select(F.col("d").alias("state")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
     n_states = states.count()
-    pi = states.select(
-        "state", (F.lit(1.0) / n_states).alias("pi")
-    ).localCheckpoint(eager=True)
+    pi = materialize(
+        states.select("state", (F.lit(1.0) / n_states).alias("pi")),
+        eager=True,
+    )
     sources = tm.select(F.col("s").alias("state")).distinct()
-    dangling = states.join(sources, "state", "left_anti").select(
-        "state"
-    ).localCheckpoint(eager=True)
+    dangling = materialize(
+        states.join(sources, "state", "left_anti").select("state"),
+        eager=True,
+    )
     # driver-pull budget: the dangling mass rides IN-PLAN as a 1-row
     # cross join (never collected) and the residual is pulled only
     # every CHECK_EVERY rounds — a 50-round convergence costs ~10
@@ -2437,10 +2430,10 @@ def markov_stationary(
             # un-normalized loop burned all 50 rounds on a chain that
             # mixes in 10)
             z = raw.agg(F.sum("pi_raw").alias("z"))
-            pi = (
-                raw.crossJoin(F.broadcast(z))
-                .select("state", (F.col("pi_raw") / F.col("z")).alias("pi"))
-                .localCheckpoint(eager=False)
+            pi = materialize(
+                raw.crossJoin(F.broadcast(z)).select(
+                    "state", (F.col("pi_raw") / F.col("z")).alias("pi")
+                )
             )
         resid = (
             pi.join(
@@ -2592,25 +2585,26 @@ def kcore(edges: DataFrame, k: int, max_rounds: int = 60) -> DataFrame:
     whole frontier, not one node).
 
     Output: (node, core_degree) for the surviving k-core."""
-    edges = edges.localCheckpoint(eager=True)
+    edges = materialize(edges, eager=True)
     for _ in range(max_rounds):
-        deg = (
+        deg = materialize(
             edges.select(F.col("u").alias("node"))
             .unionAll(edges.select(F.col("v").alias("node")))
             .groupBy("node")
-            .agg(F.count("*").alias("d"))
-        ).localCheckpoint(eager=True)
+            .agg(F.count("*").alias("d")),
+            eager=True,
+        )
         weak = deg.filter(F.col("d") < k).select("node")
         n_weak = weak.count()
         if n_weak == 0:
             return deg.select("node", F.col("d").alias("core_degree"))
-        edges = (
+        edges = materialize(
             edges.join(
                 weak.withColumnRenamed("node", "u"), "u", "left_anti"
             )
             .join(weak.withColumnRenamed("node", "v"), "v", "left_anti")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
+            .select("u", "v"),
+            eager=True,
         )
     # max_rounds exhausted: return the current degree view (callers at
     # fixture scale never reach this; at cluster scale raise the cap)
@@ -3078,8 +3072,6 @@ def _scd2_apply(
     # consumer. One lazy localCheckpoint computes the delta once (it
     # is small by the CDC contract); every consumer reads the same
     # executor-local blocks. Row-identical output.
-    from ..ordering import materialize
-
     delta = materialize(delta)
     bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
     obs = lambda df: df.select(  # noqa: E731 — tiny local projection

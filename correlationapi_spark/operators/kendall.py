@@ -35,7 +35,7 @@ group therefore SPANS partitions instead of landing in one window task
 
 Job budget (round 6 — was 7+ jobs, measured 33 s at 2M rows): exactly
 FIVE actions per invocation. (1) one unioned collect of the per-group
-counts AND all three tie-sum families off a persisted (grp, x, y, c)
+counts AND all three tie-sum families off a pinned (grp, x, y, c)
 value table; (2) the numbering's pinned range exchange; (3) the y
 approxQuantile; (4) the contingency collect, which now also carries
 per-cell min/max y so the single-valued-bucket probe rides it instead of
@@ -60,7 +60,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..ordering import global_row_number
+from ..ordering import global_row_number, materialize
 
 #: Fan-out reference: G and B grow as sqrt(total/this), which bounds the
 #: driver-side contingency collect to ~total/this cells (ADVICE r05: a
@@ -135,7 +135,7 @@ def _counts_and_ties(
     (Σc(c−1), Σc(c−1)(2c+5), Σc(c−1)(c−2)) over the value-group sizes of
     x, y, and (x, y) — in ONE action.
 
-    One full-data aggregation builds the persisted (grp, x, y, c) value
+    One full-data aggregation builds the pinned (grp, x, y, c) value
     table; the x/y/(x,y) polynomials and the group sizes are all derived
     from it (the derived shuffles carry only distinct values) and
     collected through a single tagged union, so the whole tie side costs
@@ -148,8 +148,8 @@ def _counts_and_ties(
     digits ≫ any physical n²) or nulls, which is promoted to a loud
     ArithmeticError below. The other two sums feed only the float
     variance and accumulate as double."""
-    base = (
-        data.groupBy("_grp", "_x", "_y").agg(F.count("*").alias("c")).persist()
+    base = materialize(
+        data.groupBy("_grp", "_x", "_y").agg(F.count("*").alias("c"))
     )
 
     def polys(df: DataFrame, side: str) -> DataFrame:
@@ -168,10 +168,7 @@ def _counts_and_ties(
         )
         .unionByName(polys(base, "xy"))
     )
-    try:
-        rows = unioned.collect()
-    finally:
-        base.unpersist()
+    rows = unioned.collect()
     ns: dict[str | None, int] = {}
     sides: dict[str, dict] = {"x": {}, "y": {}, "xy": {}}
     for r in rows:
@@ -299,19 +296,10 @@ def kendall_tau_by_group(
         cells = cells.withColumn("_b", F.lit(0))
 
     # three actions consume cells (contingency, then the unioned D2+D3
-    # pass reads it twice) — persist so the numbering join + bucket
-    # projection run once (only the checkpointed ranged RDD below them
-    # is otherwise reused)
-    cells = cells.persist()
-    try:
-        return _count_and_assemble(cells, ns, nb, tx, ty, txy)
-    finally:
-        cells.unpersist()
-
-
-def _count_and_assemble(cells, ns, nb, tx, ty, txy):
-    """D1/D2/D3 counting over the persisted cells + per-group assembly —
-    split out so the caller can guarantee unpersist on any failure."""
+    # pass reads it twice) — pin it so the numbering join + bucket
+    # projection run once (only the pinned ranged RDD below them is
+    # otherwise reused)
+    cells = materialize(cells)
     # Contingency collect: counts feed D1; per-cell min/max y ride the
     # SAME job so the single-valued-bucket probe (which buckets can be
     # skipped in the D3 shuffle) no longer costs its own pass — a bucket
@@ -389,7 +377,7 @@ def _count_and_assemble(cells, ns, nb, tx, ty, txy):
             .applyInPandas(per_bucket, out_schema)
         )
     # ONE action for both pandas passes (round-6 job budget): the D2 and
-    # D3 stages run inside a single unioned collect off the persisted
+    # D3 stages run inside a single unioned collect off the pinned
     # cells.
     d23: dict[str | None, int] = {grp: 0 for grp in ns}
     for r in counted.collect():

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from ..io import SCHEMAS, load_tables
 from ..numerics import money_sum
+from ..ordering import materialize
 from ..registry import query
 
 
@@ -325,10 +326,11 @@ def q_scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     expectation over range(1000) — no file access, so the check proves
     the PARSER's behavior, not the file layout.
 
-    The parsed frame is cached before the corrupt-column filters:
-    Spark refuses to resolve a query that projects ONLY the corrupt
-    column from a lazy CSV relation (internal raw-record pushdown), and
-    the cache also keeps the file from being re-parsed per aggregate.
+    The parsed frame is pinned (ordering.materialize) before the
+    corrupt-column filters: Spark refuses to resolve a query that
+    projects ONLY the corrupt column from a lazy CSV relation (internal
+    raw-record pushdown), and the pin also keeps the file from being
+    re-parsed per aggregate.
 
     Scale shape: CSV scan is splittable; the quarantine split is one
     partial/final aggregate."""
@@ -340,13 +342,12 @@ def q_scan_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         f.write("id,v\n")
         for i in range(1000):
             f.write(f"{i},notanint\n" if i % 7 == 3 else f"{i},{i * 3}\n")
-    df = (
+    df = materialize(
         spark.read.schema("id BIGINT, v BIGINT, _corrupt_record STRING")
         .option("header", "true")
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(fp)
-        .cache()
     )
     corrupt = F.col("_corrupt_record").isNotNull()
     return df.agg(

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..io import load_tables
 from ..numerics import exact_money_sum, oracle_revenue_sum, revenue_cents
+from ..ordering import materialize
 from ..registry import query
 
 def _guarded_corr(x, y):
@@ -2370,7 +2371,7 @@ def drift_frame(
     psi AND js computes the bin table once).
 
     Returns (d, [ks_d], [psi], [kl], [js], n_period) ordered by d."""
-    from ..ordering import global_running_sum, materialize
+    from ..ordering import global_running_sum
 
     cells = materialize(
         data.groupBy("d", "v").agg(F.count("*").alias("c"))
@@ -4127,8 +4128,6 @@ def bicor_frame(x: DataFrame) -> DataFrame:
     # broadcast join. The median→MAD two-pass itself is inherent to
     # the statistic; the pin just stops pass two from repeating pass
     # one's work. Row-identical output.
-    from ..ordering import materialize
-
     dev = materialize(
         x.join(F.broadcast(med), "g").select(
             "g",

@@ -35,13 +35,38 @@ re-evaluation impossible (an executor loss fails the job deterministically
 instead of silently renumbering). The materialized volume is the same data
 the shuffle already wrote, so the cost is one extra read/write of the
 ranked relation at action time — and nothing at plan-build time.
+
+Pins: one primitive, one scope. ``materialize(df, eager=...)`` is the
+only way the engine pins a subtree (the package's only
+``localCheckpoint``), and ``pinned()`` is the only way a pin is
+released: on exit it unpersists every pin ``materialize`` made inside
+it, on success and on error. Operators pin and never release; the
+caller that owns a request opens the scope (``http_api._call`` wraps
+every HTTP and CLI operation, so a long-running service holds no pins
+between requests). Outside any scope — registry keys, bench.py, the
+oracle — a pin is recorded nowhere and lives until Spark's
+ContextCleaner drops it with its last reference, exactly as a bare
+``localCheckpoint`` would. The active scope lives in a ContextVar, and
+each thread starts with an empty context, so every
+ThreadingHTTPServer handler thread has its own scope and one request
+can never release another request's pins. A scope records RDD ids, not
+DataFrames: an iteration round a loop has already superseded stays
+collectable mid-request.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from contextvars import ContextVar
+from typing import Iterator
+
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+# RDD ids pinned in the innermost open pinned() scope (None: no scope)
+_SCOPE: ContextVar[list[int] | None] = ContextVar("pin_scope", default=None)
 
 
 def global_row_number(
@@ -63,7 +88,7 @@ def global_row_number(
     # dependency whose map output is computed once — not from eagerness;
     # eager=True would run the full range-shuffle job as a side effect of
     # merely BUILDING the DataFrame (plan-only callers would pay it).
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = materialize(ranged)
     w_in = Window.partitionBy("_pid").orderBy(*order)
     numbered = ranged.withColumn("_rn_in", F.row_number().over(w_in))
     totals = numbered.groupBy("_pid").agg(F.count("*").alias("_ptot"))
@@ -109,7 +134,7 @@ def global_running_sums(
     ranged = df.repartitionByRange(*order).withColumn(
         "_pid", F.spark_partition_id()
     )
-    ranged = ranged.localCheckpoint(eager=False)
+    ranged = materialize(ranged)
     w_in = (
         Window.partitionBy("_pid")
         .orderBy(*order)
@@ -146,7 +171,7 @@ def global_running_sums(
     )
 
 
-def materialize(df: DataFrame) -> DataFrame:
+def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
     """Pin a multi-consumer subtree so it is computed exactly ONCE — the
     engine-side equivalent of TPC-H Q15's ``CREATE VIEW revenue``.
 
@@ -161,8 +186,12 @@ def materialize(df: DataFrame) -> DataFrame:
     possibly different shuffle-sampling, see module docstring)
     impossible.
 
-    Lazy (``eager=False``) so declaring a query stays action-free; the
-    pin materializes at first action, executor-local MEMORY_AND_DISK.
+    Lazy by default so declaring a query stays action-free; the pin
+    materializes at first action, executor-local MEMORY_AND_DISK.
+    ``eager=True`` computes it now — the iterative loops (graph.py) need
+    each round's state before they decide whether to run the next.
+    Inside a ``pinned()`` scope the pin is released when the scope
+    exits (module docstring).
     On a real cluster the same call is the right shape — blocks live on
     executors, not the driver — with the caveat that executor loss fails
     the job deterministically instead of recomputing; for cross-job /
@@ -172,4 +201,29 @@ def materialize(df: DataFrame) -> DataFrame:
     bytes read with and without this pin on q_tpch_q15's shape — see
     SCALING.md "Materialized reuse".
     """
-    return df.localCheckpoint(eager=False)
+    out = df.localCheckpoint(eager=eager)
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append(out._jdf.queryExecution().analyzed().rdd().id())
+    return out
+
+
+@contextmanager
+def pinned() -> Iterator[None]:
+    """Release, on exit, every pin ``materialize`` made inside the
+    block in this thread (nested scopes release only their own). A
+    DataFrame over a released pin can no longer be evaluated, so the
+    block must finish its actions before it ends."""
+    ids: list[int] = []
+    token = _SCOPE.set(ids)
+    try:
+        yield
+    finally:
+        _SCOPE.reset(token)
+        sc = SparkContext._active_spark_context
+        if ids and sc is not None:
+            rdds = sc._jsc.getPersistentRDDs()
+            for rid in ids:
+                rdd = rdds.get(rid)  # None: already cleaned up
+                if rdd is not None:
+                    rdd.unpersist(True)

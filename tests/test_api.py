@@ -2625,6 +2625,38 @@ def test_index_pq_attach_and_probe_api(spark, tmp_path):
         api.index_probe(idx, [1], k=3, method="pq")
 
 
+def test_pq_refine_names_a_missing_raw_vector(spark, tmp_path, monkeypatch):
+    """The driver-side refine looks every ADC candidate's raw vector up
+    by id. When one is missing (the corpus object changed under the
+    probe), the probe says the index is torn and names the id instead
+    of failing with a bare KeyError."""
+    import os
+
+    import correlationapi_spark.llm.similarity as sim
+    from correlationapi_spark.api import CorrelationAPI
+
+    api = CorrelationAPI(spark)
+    api.register_dataset(
+        "emb", os.path.join(SF_SMOKE, "embeddings.parquet")
+    )
+    idx = str(tmp_path / "pqidx")
+    api.index_build("emb", "vec_id", "embedding", idx, n_cells=8)
+    api.index_pq_attach(idx)
+    lost: list = []
+    fetch = sim._candidate_vectors
+
+    def fetch_losing_one(raw, vids):
+        vectors = fetch(raw, vids)
+        lost.append(vids[0])
+        del vectors[vids[0]]
+        return vectors
+
+    monkeypatch.setattr(sim, "_candidate_vectors", fetch_losing_one)
+    with pytest.raises(ValueError, match="torn") as e:
+        sim.pq_probe_stored(spark, idx, [1, 2], k=3, refine=10)
+    assert f"vec_id {lost[0]} has no raw vector" in str(e.value)
+
+
 def test_index_recover_api(spark, tmp_path):
     """review r12: recover on the service surface — mutations heal a
     pending publish on their own, but probe/status are read-only, so
