@@ -51,8 +51,8 @@ Commands:
             [--train-fraction F]   (re-train quantizer when max/avg > R)
   index-recover --path DIR   (reclaim retired/orphan store objects now)
   scd2-merge-into --data PATH --user COL --event COL --time COL --order COL
-            --path DIR [--n-buckets N]   (incremental SCD2 store merge)
-  scd2-recover --path DIR    (heal a pre-pointer commit; reclaim garbage)
+            --path DIR   (incremental SCD2 store merge)
+  scd2-recover --path DIR    (reclaim retired/orphan store objects now)
   scd2-snapshot --path DIR --ts TS [--users 1,2] [--limit N]
             (point-in-time dimension read; bucket-pruned with --users)
   psi-repin --data PATH --time COL --value COL --path DIR --end TS

@@ -2783,13 +2783,13 @@ class CorrelationAPI:
         centroid table). Optional SQL ``where`` selects the build
         slice (e.g. build on history, index_append the rest). Refuses
         to clobber any existing non-empty directory that does not bear
-        the ``_ivf_index`` marker / layout pointer ivf_write stamps —
-        build is the ONLY destructive write on this surface, so it
-        only ever overwrites a layout this engine certified as its own
-        (advice r10: the old "has a corpus/ subdir" heuristic
-        overwrote arbitrary directories, and its os.path checks were
-        silently vacuous for hdfs://-style paths — the marker check
-        runs on the filesystem Spark resolves the path to). A
+        the layout pointer ivf_write commits — build is the ONLY
+        destructive write on this surface, so it only ever overwrites
+        a layout this engine certified as its own (advice r10: the old
+        "has a corpus/ subdir" heuristic overwrote arbitrary
+        directories, and its os.path checks were silently vacuous for
+        hdfs://-style paths — the pointer check runs on the filesystem
+        Spark resolves the path to). A
         directory whose every entry is store-protocol residue (a
         crashed first build that never published a pointer) counts as
         clobberable too — round 14. The response carries ``rebuilt``:
@@ -2800,8 +2800,6 @@ class CorrelationAPI:
         the operator must run index-pq-attach again (r14 verdict item
         5: previously the attachment vanished silently)."""
         from .llm.similarity import (
-            StoreIO,
-            _ivf_layout,
             corpus_view,
             ivf_dir_state,
             ivf_index,
@@ -2818,10 +2816,8 @@ class CorrelationAPI:
         if state == "other":
             raise ValueError(
                 f"refusing to overwrite non-index directory: {path!r} "
-                "(no _ivf_index marker or _layout.json pointer; a "
-                "pre-marker index layout can be certified by one "
-                "index_append — which stamps the marker — or removed "
-                "by hand)"
+                "(no _layout-v*.json pointer; remove it by hand or "
+                "build elsewhere)"
             )
         df = self._get(dataset)
         if where is not None:
@@ -3080,19 +3076,20 @@ class CorrelationAPI:
         recovery degenerates to GC of expired retired objects and
         crashed-stage orphans — every mutation also does this in its
         preamble; this surface exists for operators who want the disk
-        back without mutating, plus the one-time healer for a store a
-        pre-pointer release crashed mid-publish). Idempotent: returns
-        ``recovered: False`` plus the status when there was nothing to
-        reclaim. A crashed writer's leftover mutation lock surfaces as
-        the documented ValueError (HTTP 400) naming the lock file to
+        back without mutating). Idempotent: returns ``recovered:
+        False`` plus the status when there was nothing to reclaim.
+        ``gc_skipped`` lists the superseded pointer files the GC could
+        not reclaim (normally empty; see storeio.pointer_recover). A
+        crashed writer's leftover mutation lock surfaces as the
+        documented ValueError (HTTP 400) naming the lock file to
         clear."""
         from pyspark.errors import AnalysisException
 
-        from .llm.similarity import ivf_recover
+        from .llm.similarity import ivf_recover_report
 
         try:
-            recovered = ivf_recover(self.spark, path)
-            return {**self.index_status(path), "recovered": recovered}
+            report = ivf_recover_report(self.spark, path)
+            return {**self.index_status(path), **report}
         except AnalysisException as e:
             raise self._no_index(path, e) from e
 
@@ -3104,7 +3101,6 @@ class CorrelationAPI:
         time_col: str,
         order_col: str,
         path: str,
-        n_buckets: int | None = None,
     ) -> dict[str, Any]:
         """Merge a staged CDC batch (a registered dataset of
         observations) into an EXISTING bucketed SCD2 store — the
@@ -3113,10 +3109,10 @@ class CorrelationAPI:
         self-contained exhibit that rebuilds its base store). Column
         mapping mirrors the event-log commands: user/event/time/order →
         business key / state / valid-from / lineage tie-break. The
-        bucketing modulus comes from the store's own metadata;
-        ``n_buckets`` exists only for pre-metadata stores (advice r12).
-        Returns the touched/total bucket stats plus ``rows_touched``
-        counted over the touched buckets ONLY, INSIDE the merge's
+        bucketing modulus comes from the store's own layout pointer
+        (advice r12). Returns the touched/total bucket stats plus
+        ``rows_touched`` counted over the touched buckets ONLY, INSIDE
+        the merge's
         critical section (advice r13: the old post-lock re-read could
         be inflated by a concurrent merge landing between release and
         count; the merge itself now reports the number from the slices
@@ -3130,9 +3126,7 @@ class CorrelationAPI:
             F.col(time_col).alias("ts"),
             F.col(order_col).alias("event_id"),
         )
-        _, stats = scd2_merge_into(
-            self.spark, path, delta, n_buckets=n_buckets
-        )
+        _, stats = scd2_merge_into(self.spark, path, delta)
         return {
             "path": path,
             "touched": stats["touched"],
@@ -3141,17 +3135,15 @@ class CorrelationAPI:
         }
 
     def scd2_recover_store(self, path: str) -> dict[str, Any]:
-        """Roll an interrupted SCD2 commit forward (the store twin of
-        index_recover — every merge heals a pending commit via its
-        recover-first call, but an operator watching a torn store had
-        no surface short of a Python shell). Idempotent: ``recovered:
-        False`` when there is nothing to finish."""
-        from .operators.analytics import scd2_recover
+        """Reclaim an SCD2 store's retired and orphan objects now (the
+        store twin of index_recover — every merge does this in its
+        preamble; this surface gives an operator the disk back without
+        merging). Idempotent: ``recovered: False`` when there is
+        nothing to reclaim. ``gc_skipped`` lists the superseded pointer
+        files the GC could not reclaim (normally empty)."""
+        from .operators.analytics import scd2_recover_report
 
-        return {
-            "path": path,
-            "recovered": scd2_recover(path, spark=self.spark),
-        }
+        return {"path": path, **scd2_recover_report(path, self.spark)}
 
     def scd2_snapshot(
         self,
@@ -3178,7 +3170,7 @@ class CorrelationAPI:
             snap = scd2_snapshot_at(self.spark, path, ts, user_ids=users)
         except AnalysisException as e:
             raise ValueError(
-                f"no SCD2 store at {path!r}: {e.getMessage() if hasattr(e, 'getMessage') else e}"
+                f"no SCD2 store at {path!r}: {e}"
             ) from e
         rows = snap.orderBy("user_id", "valid_from").limit(limit).collect()
         return {

@@ -90,20 +90,20 @@ container, and none is needed for a JSON-for-JSON contract:
          below threshold)
   POST /index/recover {"path"}  → reclaim retired/orphan store objects
          now (round 14: nothing needs a roll-forward anymore;
-         recovered=false when there was nothing to reclaim)
+         recovered=false when there was nothing to reclaim; gc_skipped
+         lists superseded pointer files the GC could not reclaim)
   POST /psi/repin {"dataset","time","value","path"[,"start","end","bins"]}
        → pin/rotate a versioned PSI reference over any window
   GET  /psi/status?path=          → the live PSI reference pin
   GET  /psi/drift?dataset=&time=&value=&path=  → per-window PSI vs pin
-  POST /scd2/merge {"dataset","user","event","time","order","path"
-       [,"n_buckets"]}  → merge a staged CDC batch into an EXISTING
-         bucketed SCD2 store (touches only the batch's buckets —
-         round 14: per-bucket versioned objects behind one atomic
-         pointer swap; n_buckets only for pre-metadata stores — newer
-         stores carry their modulus in the layout pointer)
-  POST /scd2/recover {"path"}  → heal a pre-pointer interrupted commit
-         and reclaim retired/orphan bucket objects (idempotent;
-         recovered=false when nothing to do)
+  POST /scd2/merge {"dataset","user","event","time","order","path"}
+       → merge a staged CDC batch into an EXISTING bucketed SCD2 store
+         (touches only the batch's buckets — round 14: per-bucket
+         versioned objects behind one atomic pointer swap; the
+         bucketing modulus comes from the store's layout pointer)
+  POST /scd2/recover {"path"}  → reclaim retired/orphan bucket objects
+         (idempotent; recovered=false when nothing to do; gc_skipped
+         as for /index/recover)
   POST /scd2/snapshot {"path","ts"[,"users","limit"]}  → point-in-time
          dimension read (pure read despite POST; bucket-pruned with
          users)
@@ -387,11 +387,11 @@ OPERATIONS = (
     _op("GET /psi/drift", "psi_drift", "dataset time value path", "",
         "per-day-window PSI vs the latest pinned reference"),
     _op("POST /scd2/merge", "scd2_merge",
-        "dataset user event time order path", "n_buckets",
+        "dataset user event time order path", "",
         "merge a staged CDC batch into an existing SCD2 store",
         mutates=True),
     _op("POST /scd2/recover", "scd2_recover_store", "path", "",
-        "heal an interrupted SCD2 commit; reclaim garbage", mutates=True),
+        "reclaim the SCD2 store's retired/orphan objects", mutates=True),
     _op("POST /scd2/snapshot", "scd2_snapshot", "path ts", "users limit",
         "point-in-time SCD2 dimension read"),
     _op("GET /dedup", "dedup", "dataset id text", "method threshold limit",

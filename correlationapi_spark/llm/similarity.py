@@ -20,9 +20,12 @@ from ..ordering import materialize
 from ..registry import query
 from ..storeio import (
     StoreIO,
+    _pointer_seqs,
     object_dir,
     pointer_gc,
     pointer_read,
+    pointer_recover,
+    pointer_require,
     pointer_write,
     retired_union,
 )
@@ -339,20 +342,19 @@ def ivf_write(
     design). The new object set is written BESIDE any existing one
     (unreferenced until the swap, so the old index stays fully
     readable and consistent through the whole build), then ONE atomic
-    ``_layout.json`` rename commits it; the replaced objects are
-    retired in the pointer and reclaimed at the next mutation's
-    preamble, giving in-flight readers a full mutation cycle of
-    grace. A crash before the swap leaves readers on the old version
+    ``_layout-v*.json`` pointer commit publishes it; the replaced
+    objects are retired in the pointer and reclaimed at the next
+    mutation's preamble, giving in-flight readers a full mutation
+    cycle of grace. A crash before the swap leaves readers on the old version
     with orphan object dirs the next preamble GCs; a crash after the
     swap leaves readers on the new version. There is NO window in
     which a reader sees a torn layout — the de-certify-then-overwrite
     protocol this replaces had one. Tombstones do not survive a
     rebuild (the caller's frame is the complete new corpus).
 
-    api.index_build only ever clobbers a directory bearing the
-    ``_ivf_index`` marker or the layout pointer (advice r10: the old
-    "has a corpus/ subdir" heuristic let /index/build overwrite
-    arbitrary non-index directories)."""
+    api.index_build only ever clobbers a directory bearing a layout
+    pointer (advice r10: the old "has a corpus/ subdir" heuristic let
+    /index/build overwrite arbitrary non-index directories)."""
     import os
 
     spark = assigned.sparkSession
@@ -361,7 +363,7 @@ def ivf_write(
     # writes into a layout neither writer described
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        old = _ivf_preamble(spark, io, path)
+        old = _ivf_preamble(io, path)
         v = old["version"] + 1
         objs = {
             "corpus": object_dir("corpus", v),
@@ -377,24 +379,16 @@ def ivf_write(
         _idstate_build(spark, path, objs)
         if _crash is not None:
             _crash("staged")
-        newly = set(old["objects"].values())
-        if old.get("legacy"):
-            # pre-pointer residue (old trash/stage dirs) retires with
-            # the legacy layout — reclaimed at the next preamble
-            newly |= {".trash-corpus", ".trash-centroids",
-                      ".recluster-stage"}
         pointer_write(
             io, path,
             {
                 "version": v,
                 "objects": objs,
                 "retired": retired_union(
-                    None if old.get("legacy") else old,
-                    newly, objs.values(),
+                    old, old["objects"].values(), objs.values()
                 ),
             },
         )
-        _ivf_touch_marker(spark, path)
         if _crash is not None:
             _crash("swapped")
         # what this rebuild REPLACED, sampled under the lock — the
@@ -436,16 +430,13 @@ def ivf_resolve(spark: SparkSession, path: str) -> dict:
     return {k: os.path.join(path, v) for k, v in objs.items()}
 
 
-# -- persisted-index sidecars: marker, mutation lock, id Bloom, tombstones --
+# -- persisted-index sidecars: mutation lock, id Bloom, tombstones --
 #
 # Everything below operates through Hadoop's FileSystem API resolved FROM
 # the index path itself (advice r10: os.path.isdir silently passes for
-# hdfs:// and s3a:// paths, which made the local-only marker checks a
-# no-op exactly where a destructive overwrite is most expensive), so the
-# existence/atomic-create/delete calls run against the same filesystem
-# Spark will write to.
+# hdfs:// and s3a:// paths), so the existence/atomic-create/delete calls
+# run against the same filesystem Spark will write to.
 
-_IVF_MARKER = "_ivf_index"
 _IVF_LOCK = "_mutate.lock"
 _BLOOM_K = 7  # (1 − e^(−7/16))^7 ≈ 7e-4 FP at the designed 16 bits/id
 
@@ -459,27 +450,17 @@ def _hadoop_fs(spark: SparkSession, path: str):
 
 
 def ivf_is_index(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` bears the ``_ivf_index`` marker or the
-    versioned-layout pointer — either certifies a complete index (the
-    pointer only ever names complete object sets; the marker covers
-    pre-pointer layouts)."""
-    import os
-
-    from ..storeio import POINTER, _pointer_seqs
-
-    io = StoreIO(path, spark)
-    return (
-        io.exists(os.path.join(path, _IVF_MARKER))
-        or bool(_pointer_seqs(io, path))
-        or io.exists(os.path.join(path, POINTER))
-    )
+    """True iff ``path`` bears a layout pointer — it certifies a
+    complete index (the pointer only ever names complete object
+    sets)."""
+    return bool(_pointer_seqs(StoreIO(path, spark), path))
 
 
 def _protocol_residue(name: str) -> bool:
-    """True for directory entries only the store protocols create —
-    orphan object dirs from a crashed stage, lock/tmp files, legacy
-    trash/manifest names. A directory containing ONLY these is a
-    crashed build, not user data."""
+    """True for directory entries only the store protocol creates —
+    orphan object dirs from a crashed stage, lock/tmp files. A
+    directory containing ONLY these is a crashed build, not user
+    data."""
     from ..storeio import OBJECT_RE
 
     return bool(
@@ -487,8 +468,6 @@ def _protocol_residue(name: str) -> bool:
         or name.endswith(".lock")
         or name.endswith(".tmp")
         or name.endswith(".crc")  # Hadoop local-fs checksum siblings
-        or name.startswith(".trash-")
-        or name in ("_recluster.json", ".recluster-stage")
     )
 
 
@@ -512,15 +491,6 @@ def ivf_dir_state(spark: SparkSession, path: str) -> str:
     if all(_protocol_residue(n) for n in names):
         return "incomplete"
     return "other"
-
-
-def _ivf_touch_marker(spark: SparkSession, path: str) -> None:
-    import os
-
-    fs, jvm = _hadoop_fs(spark, path)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(os.path.join(path, _IVF_MARKER)), True
-    ).close()
 
 
 class _ivf_mutation_lock:
@@ -560,91 +530,24 @@ class _ivf_mutation_lock:
         return False
 
 
-def _legacy_layout() -> dict:
-    """Synthesized layout for a pointer-less (pre-round-14) store: the
-    legacy fixed names, version 0. Absent directories resolve to names
-    whose reads raise the reader's own AnalysisException — exactly the
-    404 surface the fixed-name code had. The first destructive
-    mutation upgrades the store to a real pointer."""
-    return {
-        "version": 0,
-        "objects": {
-            "corpus": "corpus",
-            "centroids": "centroids",
-            "idstate": "idstate",
-            "tombstones": "tombstones",
-        },
-        "retired": [],
-        "legacy": True,
-    }
+# The live layout: the pointer, resolved ONCE per operation — readers
+# then only open the named directories (the consistency contract of the
+# versioned-pointer protocol, storeio.py). A path with no pointer raises
+# the reader's AnalysisException, the 404 surface.
+_ivf_layout = pointer_require
 
 
-def _ivf_layout(io: StoreIO, path: str) -> dict:
-    """The live layout: the pointer when present, else the legacy
-    synthesis. Readers call this ONCE per operation and then only open
-    the named directories — the consistency contract of the
-    versioned-pointer protocol (storeio.py)."""
+def _ivf_preamble(io: StoreIO, path: str) -> dict:
+    """Every mutation's first act under the lock: reclaim expired
+    retired objects and crashed-stage orphans (pointer_gc — this is
+    where the previous version's reader grace ends), and return the
+    layout the mutation operates on (an empty version-0 layout for a
+    first build)."""
     lay = pointer_read(io, path)
-    return lay if lay is not None else _legacy_layout()
-
-
-def _ivf_preamble(spark: SparkSession, io: StoreIO, path: str) -> dict:
-    """Every mutation's first act under the lock: finish a PRE-POINTER
-    release's interrupted recluster publish (one-time migration), then
-    reclaim expired retired objects and crashed-stage orphans
-    (pointer_gc — this is where the previous version's reader grace
-    ends), and return the layout the mutation operates on."""
-    _legacy_recluster_rollforward(spark, io, path)
-    lay = pointer_read(io, path)
-    if lay is not None:
-        pointer_gc(io, path, lay)
-        return lay
-    return _legacy_layout()
-
-
-def _legacy_recluster_rollforward(
-    spark: SparkSession, io: StoreIO, path: str
-) -> bool:
-    """Migration healer for a store a PRE-POINTER release crashed
-    mid-recluster-publish: its ``_recluster.json`` manifest landed
-    only after the stage was complete, so roll-FORWARD is always safe
-    — resume the old protocol's idempotent swap (staged dirs over
-    live via trash), drop tombstones (the stage was built from the
-    live view), rebuild the id Bloom over the healed legacy names, and
-    remove the manifest. New-protocol stores never create this state
-    (the pointer swap is the commit); this exists so upgrading a
-    crashed legacy store is one mutation, not a manual rescue."""
-    import json
-    import os
-
-    manifest = os.path.join(path, "_recluster.json")
-    if not io.exists(manifest):
-        return False
-    stage = json.loads(io.read_text(manifest))["stage"]
-    marker = os.path.join(path, _IVF_MARKER)
-    if io.exists(marker):
-        io.remove(marker)
-    io.rmtree(os.path.join(path, "idstate"))
-    for sub in ("corpus", "centroids"):
-        staged = os.path.join(stage, sub)
-        live = os.path.join(path, sub)
-        trash = os.path.join(path, f".trash-{sub}")
-        if io.isdir(staged):
-            if io.isdir(live):
-                io.rmtree(trash)
-                io.rename(live, trash)
-            io.rename(staged, live)
-    io.rmtree(os.path.join(path, "tombstones"))
-    for sub in ("corpus", "centroids"):
-        io.rmtree(os.path.join(path, f".trash-{sub}"))
-    io.rmtree(stage)
-    _idstate_build(
-        spark, path,
-        {"corpus": "corpus", "idstate": "idstate"},
-    )
-    _ivf_touch_marker(spark, path)
-    io.remove(manifest)
-    return True
+    if lay is None:
+        return {"version": 0, "objects": {}, "retired": []}
+    pointer_gc(io, path, lay)
+    return lay
 
 
 def _bloom_m(n: int) -> int:
@@ -850,8 +753,7 @@ _PQ_ANCHORS_FILE = "anchors.json"  # residual anchors json (round 15)
 
 
 class _IdState(NamedTuple):
-    """The (m, k, n, bits) sidecar record — attribute-compatible with
-    the Row the legacy 1-row parquet sidecar yielded."""
+    """The (m, k, n, bits) id-Bloom sidecar record."""
 
     m: int
     k: int
@@ -868,13 +770,11 @@ def _idstate_write(
     bits: bytes,
 ) -> None:
     """Write the id-Bloom sidecar as ONE protocol file inside the
-    idstate object dir (round 15): the old 1-row parquet DATASET paid
-    a full Spark write job (~0.3 s) per append for a few KB of
-    writer-private state; a direct stream write costs one FS call.
-    In-place overwrite stays safe for the same reason it always was —
-    only lock-holding mutation paths read it — and a crash mid-write
-    now degrades to 'no sidecar' at the next read (exact full check,
-    superset-safe) instead of a raw parquet read error."""
+    idstate object dir: a direct stream write costs one FS call, no
+    Spark job, for a few KB of writer-private state. In-place
+    overwrite is safe because only lock-holding mutation paths read
+    it, and a crash mid-write degrades to 'no sidecar' at the next
+    read (exact full check, superset-safe)."""
     import json
     import os
 
@@ -894,8 +794,8 @@ def _idstate_build(spark: SparkSession, path: str, objs: dict) -> None:
     """Recompute the id Bloom from the given corpus OBJECT's id column
     into the given idstate object — the shared epilogue of every
     operation that leaves the corpus as the sole id authority (build,
-    compact, recluster, pre-sidecar append migration). Object names
-    come from the layout the caller is building or mutating; the
+    compact, recluster, an append over a torn/absent sidecar). Object
+    names come from the layout the caller is building or mutating; the
     in-place overwrite is safe because idstate is writer-private state
     (only lock-holding mutation paths ever read it)."""
     import os
@@ -909,84 +809,50 @@ def _idstate_build(spark: SparkSession, path: str, objs: dict) -> None:
 
 
 def _idstate_read(spark: SparkSession, path: str, objs: dict | None = None):
-    """The (m, k, n, bits) sidecar row, or None for a pre-round-11
-    layout (ivf_append then migrates: exact full-scan check once,
-    sidecar written on the way out). ``objs`` defaults to resolving
-    the live pointer (test/tool convenience); mutation paths pass the
-    layout they hold. Reads the round-15 protocol FILE first (one FS
-    call, no Spark job); a store whose sidecar predates it falls back
-    to the legacy 1-row parquet dataset. Torn/absent file = None,
-    which every caller treats as 'run the exact check and rebuild'."""
+    """The (m, k, n, bits) sidecar record, or None when the sidecar
+    file is torn or absent — every caller treats None as 'run the
+    exact check and rebuild' (ivf_append: exact full-scan clash check
+    once, sidecar rewritten on the way out). ``objs`` defaults to
+    resolving the live pointer (test/tool convenience); mutation paths
+    pass the layout they hold. One FS read, no Spark job."""
     import json
     import os
-
-    from pyspark.errors import AnalysisException
 
     io = StoreIO(path, spark)
     if objs is None:
         objs = _ivf_layout(io, path)["objects"]
-    sidecar = os.path.join(path, objs["idstate"], _IDSTATE_FILE)
     try:
-        raw = io.read_bytes(sidecar)
-    except OSError:
-        if io.exists(sidecar):
-            # present but unreadable (torn write, checksum mismatch):
-            # the round-15 file is authoritative for its object — 'no
-            # sidecar' (exact check + rebuild), never the parquet read
-            return None
-        raw = None  # genuinely absent — legacy parquet below
-    if raw is not None:
-        # a PRESENT round-15 sidecar is authoritative: parse it or
-        # treat the store as sidecar-less (torn write → exact check +
-        # rebuild). Never fall through to the parquet read here — the
-        # object dir holds the non-parquet file itself, so that read
-        # would raise an uncaught footer error (round-15 review), and
-        # any legacy rows beside it are older than the file anyway.
-        try:
-            nl = raw.index(b"\n")
-            h = json.loads(raw[:nl].decode("utf-8"))
-            st = _IdState(
-                int(h["m"]), int(h["k"]), int(h["n"]), raw[nl + 1:]
-            )
-            if len(st.bits) != st.m // 8:
-                return None  # truncated bitmap = torn write
-            return st
-        except (ValueError, KeyError):
-            return None
-    try:
-        rows = spark.read.parquet(
-            os.path.join(path, objs["idstate"])
-        ).collect()
-    except AnalysisException:
-        return None
-    return rows[0] if rows else None  # empty dir = interrupted write
+        raw = io.read_bytes(
+            os.path.join(path, objs["idstate"], _IDSTATE_FILE)
+        )
+        nl = raw.index(b"\n")
+        h = json.loads(raw[:nl].decode("utf-8"))
+        st = _IdState(int(h["m"]), int(h["k"]), int(h["n"]), raw[nl + 1:])
+    except (OSError, ValueError, KeyError):
+        return None  # absent, unreadable or torn header
+    if len(st.bits) != st.m // 8:
+        return None  # truncated bitmap = torn write
+    return st
 
 
 def _tombstones(
     spark: SparkSession, path: str, objs: dict | None = None
 ) -> DataFrame | None:
     """Distinct tombstoned vec_ids of the given layout, or None when
-    none exist (no tombstones object in the pointer, or the legacy
-    name is absent). ``objs`` defaults to resolving the live pointer;
-    mutation paths pass the layout they already hold so every read in
-    a critical section comes from ONE version."""
+    the pointer names no tombstones object. ``objs`` defaults to
+    resolving the live pointer; mutation paths pass the layout they
+    already hold so every read in a critical section comes from ONE
+    version."""
     import os
-
-    from pyspark.errors import AnalysisException
 
     if objs is None:
         objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
     t = objs.get("tombstones")
     if t is None:
         return None
-    try:
-        return (
-            spark.read.parquet(os.path.join(path, t))
-            .select("vec_id")
-            .distinct()
-        )
-    except AnalysisException:
-        return None
+    return (
+        spark.read.parquet(os.path.join(path, t)).select("vec_id").distinct()
+    )
 
 
 def ivf_live(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
@@ -1137,7 +1003,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        lay = _ivf_preamble(spark, io, path)
+        lay = _ivf_preamble(io, path)
         objs = lay["objects"]
         # centroids read + assignment INSIDE the lock, after the
         # preamble (review r12): reading them before the lock let a
@@ -1162,7 +1028,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
         # count/count_distinct aggregate job is gone. The refusal still
         # happens BEFORE the tombstone re-admit compaction and before
         # any write — same externally observable order as before. Only
-        # the pre-sidecar migration branch (no Bloom to screen against)
+        # the torn/absent-sidecar branch (no Bloom to screen against)
         # keeps the plain one-pass aggregate.
         state = _idstate_read(spark, path, objs)
         if state is not None:
@@ -1221,8 +1087,8 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
                 )
             )
         if state is None:
-            # pre-sidecar layout: one-time migration — exact full check
-            # now, Bloom built over the whole id column on the way out
+            # torn/absent sidecar: exact full check now, Bloom rebuilt
+            # over the whole id column on the way out
             suspects = delta_ids
             any_suspect = True
         else:
@@ -1255,16 +1121,15 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
             )
         corpus_dir = os.path.join(path, objs["corpus"])
         if state is None:
-            # pre-sidecar migration: append, then derive the sidecar
-            # from the (now complete) corpus id column. Retry safety
-            # needs no Bloom ordering here — with no sidecar, a retry
-            # re-runs the exact full check above.
+            # torn/absent sidecar: append, then derive the sidecar from
+            # the (now complete) corpus id column. Retry safety needs
+            # no Bloom ordering here — with no sidecar, a retry re-runs
+            # the exact full check above.
             _corpus_drop_sentinel(spark, corpus_dir)
             assigned.write.mode("append").partitionBy("cell").parquet(
                 corpus_dir
             )
             _idstate_build(spark, path, objs)
-            _ivf_touch_marker(spark, path)
             return
         # Sidecar BEFORE corpus rows (review r11): the Bloom is
         # superset-safe — a crash between the two writes costs a
@@ -1307,7 +1172,6 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
         assigned.write.mode("append").partitionBy("cell").parquet(
             corpus_dir
         )
-        _ivf_touch_marker(spark, path)
 
 
 def _corpus_has_cells(spark: SparkSession, corpus_path: str) -> bool:
@@ -1404,13 +1268,12 @@ def _ivf_compact_locked(
         ).parquet(cdir)
     _idstate_build(spark, path, new_objs)
     retired = retired_union(
-        None if lay.get("legacy") else lay,
+        lay,
         {objs[k] for k in ("corpus", "idstate", "tombstones") if k in objs},
         new_objs.values(),
     )
     new_lay = {"version": v, "objects": new_objs, "retired": retired}
     pointer_write(io, path, new_lay)
-    _ivf_touch_marker(spark, path)
     n = spark.read.parquet(cdir).count()
     return new_lay, {"tombstones_cleared": n_tomb, "n_vectors": n}
 
@@ -1451,7 +1314,7 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        lay = _ivf_preamble(spark, io, path)
+        lay = _ivf_preamble(io, path)
         objs = lay["objects"]
         live_ids = ivf_live(spark, path)[0].select("vec_id")
         # driver-side dedupe (review r11): [5, 5] must report
@@ -1466,15 +1329,11 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
         n_live = live_wanted.count()
         if n_live:
             existing = objs.get("tombstones")
-            target = existing or (
-                "tombstones"
-                if lay.get("legacy")
-                else object_dir("tombstones", lay["version"] + 1)
-            )
+            target = existing or object_dir("tombstones", lay["version"] + 1)
             live_wanted.coalesce(1).write.mode("append").parquet(
                 os.path.join(path, target)
             )
-            if existing is None and not lay.get("legacy"):
+            if existing is None:
                 # rows first, pointer second: the new object is
                 # invisible until the atomic bump references it, and a
                 # crash in between leaves an orphan the next preamble
@@ -1504,7 +1363,7 @@ def ivf_compact(spark: SparkSession, path: str) -> dict:
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        lay = _ivf_preamble(spark, io, path)
+        lay = _ivf_preamble(io, path)
         _, stats = _ivf_compact_locked(spark, io, path, lay)
         return stats
 
@@ -1536,22 +1395,13 @@ def ivf_imbalance(spark: SparkSession, path: str, recluster_above: float = 3.0) 
 
 
 def _ivf_404_probe(spark: SparkSession, path: str) -> None:
-    """Existence probe BEFORE a mutation takes the lock: a bogus path
+    """Existence probe BEFORE a mutation takes the lock: a bogus or
+    pointer-less path — or a pointer whose corpus object is missing —
     must raise the reader's AnalysisException (the 404 surface), not
-    manufacture directories as a side effect of locking. A pending
-    LEGACY recluster manifest counts as existing (after a pre-pointer
-    crash mid-swap the corpus may sit in .trash-corpus — the preamble's
-    migration roll-forward heals exactly that state, so probing the
-    corpus schema here would turn a one-call recovery into a false
-    'no IVF index' on every mutation surface). Pointer-born stores
-    never need the exception: their corpus object is readable at every
-    crash point by construction."""
+    manufacture directories as a side effect of locking."""
     import os
 
-    io = StoreIO(path, spark)
-    if io.exists(os.path.join(path, "_recluster.json")):
-        return
-    objs = _ivf_layout(io, path)["objects"]
+    objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
     spark.read.parquet(os.path.join(path, objs["corpus"])).schema
 
 
@@ -1559,30 +1409,26 @@ def ivf_recover(spark: SparkSession, path: str) -> bool:
     """Reclaim a persisted index's garbage NOW instead of waiting for
     the next mutation's preamble: expired retired objects (the
     previous version's reader grace) and crashed-stage orphans. Under
-    the versioned-pointer layout (round 14) NO state needs a
-    roll-forward — a crash before the swap leaves readers on the old
-    version, a crash after it leaves them on the new one — so
-    "recovery" degenerates to garbage collection, plus the one-time
-    migration healer for a store a PRE-POINTER release crashed
-    mid-recluster-publish (_legacy_recluster_rollforward). Returns
-    True when anything was healed or reclaimed. Call it only when no
-    long-running reader may still hold the retired version's files
-    (the same discipline as a table format's snapshot expiry)."""
-    import os
+    the versioned-pointer layout NO state needs a roll-forward — a
+    crash before the swap leaves readers on the old version, a crash
+    after it leaves them on the new one — so "recovery" is garbage
+    collection. Returns True when anything was reclaimed. Call it only
+    when no long-running reader may still hold the retired version's
+    files (the same discipline as a table format's snapshot
+    expiry)."""
+    return ivf_recover_report(spark, path)["recovered"]
 
-    io = StoreIO(path, spark)
-    # pre-lock fast path: a path with neither pointer nor legacy
-    # manifest has nothing to recover — return without manufacturing
-    # lock files on bogus paths
-    if pointer_read(io, path) is None and not io.exists(
-        os.path.join(path, "_recluster.json")
-    ):
-        return False
+
+def ivf_recover_report(spark: SparkSession, path: str) -> dict:
+    """ivf_recover's full result: ``{"recovered": bool, "gc_skipped":
+    [superseded pointer files the GC could not reclaim]}`` (see
+    storeio.pointer_recover)."""
+    # pre-lock fast path: a path with no pointer has nothing to recover
+    # — return without manufacturing lock files on bogus paths
+    if pointer_read(StoreIO(path, spark), path) is None:
+        return {"recovered": False, "gc_skipped": []}
     with _ivf_mutation_lock(spark, path):
-        healed = _legacy_recluster_rollforward(spark, io, path)
-        lay = pointer_read(io, path)
-        removed = pointer_gc(io, path, lay, grace=0.0)
-    return healed or bool(removed)
+        return pointer_recover(StoreIO(path, spark), path)
 
 
 def ivf_recluster(
@@ -1608,7 +1454,7 @@ def ivf_recluster(
     as version-N+1 objects beside the live set (the index stays fully
     readable and probe-consistent through training and staging — the
     new objects are unreferenced until the swap), then ONE atomic
-    ``_layout.json`` rename commits all three and retires the old
+    pointer commit publishes all three and retires the old
     objects together with the tombstones entry (recluster implies
     compact, and retiring both in the same swap kills the resurrection
     hazard by construction). A crash before the swap leaves readers on
@@ -1638,7 +1484,7 @@ def ivf_recluster(
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        lay = _ivf_preamble(spark, io, path)
+        lay = _ivf_preamble(io, path)
         objs = lay["objects"]
         before = ivf_imbalance(spark, path, recluster_above=threshold)
         b = before.collect()[0]
@@ -1672,47 +1518,34 @@ def ivf_recluster(
             # row's cell, so the anchors are recomputed for the NEW
             # cells (one decimal-exact groupBy, bounded driver state)
             # and every row re-encodes against its new anchor with the
-            # stored book. Raw-code attachments (pre-round-15, no
-            # anchors object) keep the old carry-codes-through path —
-            # their codes really are cell-independent.
+            # stored book.
             new_objs["pqbooks"] = objs["pqbooks"]
-            books = _pq_books_read(spark, path, objs)
-            if "pqanchors" in objs:
-                new_anchors = _pq_cell_anchors(to_write, vec_col="v")
-                new_objs["pqanchors"] = object_dir("pqanchors", v)
-                to_write = _pq_codes(to_write, books, anchors=new_anchors)
-            else:
-                new_anchors = None
-                to_write = _pq_codes(to_write, books)
+            new_objs["pqanchors"] = object_dir("pqanchors", v)
+            new_anchors = _pq_cell_anchors(to_write, vec_col="v")
+            to_write = _pq_codes(
+                to_write, _pq_books_read(spark, path, objs),
+                anchors=new_anchors,
+            )
+            _pq_anchors_write(spark, path, new_objs, new_anchors)
         to_write.write.mode(
             "overwrite"
         ).partitionBy("cell").parquet(os.path.join(path, new_objs["corpus"]))
         cents.write.mode("overwrite").parquet(
             os.path.join(path, new_objs["centroids"])
         )
-        if "pqanchors" in new_objs and new_objs["pqanchors"] != objs.get(
-            "pqanchors"
-        ):
-            _pq_anchors_write(spark, path, new_objs, new_anchors)
         _idstate_build(spark, path, new_objs)
         if _crash is not None:
             _crash("staged")
-        newly = set(objs.values())
-        if lay.get("legacy"):
-            newly |= {".trash-corpus", ".trash-centroids",
-                      ".recluster-stage"}
         pointer_write(
             io, path,
             {
                 "version": v,
                 "objects": new_objs,
                 "retired": retired_union(
-                    None if lay.get("legacy") else lay,
-                    newly, new_objs.values(),
+                    lay, objs.values(), new_objs.values()
                 ),
             },
         )
-        _ivf_touch_marker(spark, path)
         if _crash is not None:
             _crash("swapped")
         a = ivf_imbalance(spark, path).collect()[0]
@@ -3073,8 +2906,8 @@ def _pq_anchor_table(anchors: dict) -> "tuple[list, int]":
 def _pq_codes(
     df: DataFrame,
     books: list,
+    anchors: dict,
     vec_col: str = "v",
-    anchors: "dict | None" = None,
 ) -> DataFrame:
     """Stamp a ``pq_code`` column onto ``df`` (the persisted-index
     encode — r13 verdict item 2): the same Arrow-batched numpy kernel
@@ -3098,8 +2931,8 @@ def _pq_codes(
     d = PQ_M * PQ_SUB_D
     cols = df.columns
     vpos = cols.index(vec_col)
-    cpos = cols.index("cell") if anchors is not None else -1
-    atable = _pq_anchor_table(anchors)[0] if anchors is not None else None
+    cpos = cols.index("cell")
+    atable = _pq_anchor_table(anchors)[0]
     out_schema = ", ".join(
         f"{f.name} {f.dataType.simpleString()}" for f in df.schema.fields
     ) + ", pq_code long"
@@ -3109,7 +2942,7 @@ def _pq_codes(
         import pyarrow as pa
 
         C = [np.asarray(b, dtype=np.float64) for b in books]
-        A = None if atable is None else np.asarray(atable, dtype=np.float64)
+        A = np.asarray(atable, dtype=np.float64)
         for batch in it:
             n = batch.num_rows
             if not n:
@@ -3121,15 +2954,14 @@ def _pq_codes(
                     f"{len(flat)} values for {n} rows"
                 )
             X = np.asarray(flat, dtype=np.float64).reshape(n, d)
-            if A is not None:
-                cells = np.asarray(
-                    batch.column(cpos).to_numpy(zero_copy_only=False),
-                    dtype=np.int64,
-                )
-                idx = np.where(
-                    (cells >= 0) & (cells < len(A) - 1), cells, len(A) - 1
-                )
-                X = X - A[idx]
+            cells = np.asarray(
+                batch.column(cpos).to_numpy(zero_copy_only=False),
+                dtype=np.int64,
+            )
+            idx = np.where(
+                (cells >= 0) & (cells < len(A) - 1), cells, len(A) - 1
+            )
+            X = X - A[idx]
             code = np.zeros(n, dtype=np.int64)
             for s in range(PQ_M):
                 Xs = X[:, s * PQ_SUB_D:(s + 1) * PQ_SUB_D]
@@ -3148,54 +2980,40 @@ def _pq_codes(
     return df.mapInArrow(encode, schema=out_schema)
 
 
-def _pq_books_json(books: list, residual: bool = True) -> str:
+def _pq_books_json(books: list) -> str:
     import json
 
     return json.dumps({
         "m": PQ_M, "k": PQ_K, "sub_d": PQ_SUB_D, "bits": PQ_BITS,
-        "residual": residual, "books": books,
+        "residual": True, "books": books,
     })
 
 
 def _pq_meta_read(spark: SparkSession, path: str, objs: dict) -> dict:
-    """The trained codebook metadata from the pqbooks pointer object
-    (one json row; 4096 doubles — driver/broadcast-bounded by
-    construction). ``residual`` is False for stores attached by a
-    pre-round-15 release (raw-vector codes) — the probe honors the
-    stored flag, so old attachments keep answering until re-attached."""
+    """The trained codebook metadata: the protocol file inside the
+    pqbooks pointer object (one FS read, no Spark job per probe; 4096
+    doubles — driver/broadcast-bounded by construction). Unlike the
+    idstate sidecar there is no safe degrade: the codebook is required
+    to decode, so a missing or unreadable file is a torn store and
+    raises a clear error."""
     import json
     import os
 
-    # round 15: the codebook is a protocol FILE inside the pqbooks
-    # object (one FS read, no Spark job per probe); attachments from
-    # the 1-row-parquet era fall back to the dataset read
-    io = StoreIO(path, spark)
     books_file = os.path.join(path, objs["pqbooks"], _PQ_BOOKS_FILE)
     try:
-        meta = json.loads(io.read_bytes(books_file).decode("utf-8"))
+        meta = json.loads(
+            StoreIO(path, spark).read_bytes(books_file).decode("utf-8")
+        )
     except (OSError, ValueError) as e:
-        # the _idstate_read rule (round-16 advice): a PRESENT round-15
-        # protocol file is authoritative for its object — raise a clear
-        # error instead of falling through to a parquet read of a dir
-        # whose only file IS the non-parquet json (opaque footer
-        # error). Only a genuinely absent file means a legacy (1-row
-        # parquet) attachment. Unlike the idstate sidecar there is no
-        # safe degrade here: the codebook is required to decode.
-        if io.exists(books_file):
-            raise ValueError(
-                f"corrupt pqbooks protocol file {books_file!r} — "
-                "re-attach with pq_attach to rebuild the codebook"
-            ) from e
-        row = spark.read.parquet(
-            os.path.join(path, objs["pqbooks"])
-        ).collect()[0]
-        meta = json.loads(row.books)
+        raise ValueError(
+            f"missing or corrupt pqbooks protocol file {books_file!r} — "
+            "re-attach with pq_attach to rebuild the codebook"
+        ) from e
     if (meta["m"], meta["k"], meta["sub_d"]) != (PQ_M, PQ_K, PQ_SUB_D):
         raise ValueError(
             "pq books were trained with different PQ geometry: "
             f"{meta['m']}x{meta['k']} sub_d={meta['sub_d']}"
         )
-    meta["residual"] = bool(meta.get("residual", False))
     return meta
 
 
@@ -3204,41 +3022,31 @@ def _pq_books_read(spark: SparkSession, path: str, objs: dict) -> list:
     return _pq_meta_read(spark, path, objs)["books"]
 
 
-def _pq_anchors_read(
-    spark: SparkSession, path: str, objs: dict
-) -> "dict | None":
-    """{cell: [d floats]} from the pqanchors pointer object, or None
-    for a raw-code (pre-round-15) attachment. n_cells × d doubles —
-    the centroid table's broadcast ceiling."""
+def _pq_anchors_read(spark: SparkSession, path: str, objs: dict) -> dict:
+    """{cell: [d floats]} — the residual anchors, a protocol file
+    inside the pqanchors pointer object (json doubles round-trip
+    bit-exactly via repr/parse; n_cells × d doubles — the centroid
+    table's broadcast ceiling). A PQ attachment without a readable
+    anchors file is a torn store and raises a clear error."""
     import json
     import os
 
     if "pqanchors" not in objs:
-        return None
-    # round 15: protocol file first (no Spark job — json doubles
-    # round-trip bit-exactly via repr/parse), legacy parquet fallback
-    io = StoreIO(path, spark)
+        raise ValueError(
+            f"index at {path!r} has PQ books but no pqanchors object — "
+            "the layout is torn; re-attach with pq_attach"
+        )
     anchors_file = os.path.join(path, objs["pqanchors"], _PQ_ANCHORS_FILE)
     try:
         cells = json.loads(
-            io.read_bytes(anchors_file).decode("utf-8")
+            StoreIO(path, spark).read_bytes(anchors_file).decode("utf-8")
         )["cells"]
-        return {int(c): [float(x) for x in av] for c, av in cells}
     except (OSError, ValueError, KeyError) as e:
-        # same authority rule as _pq_meta_read (round-16 advice): a
-        # present-but-unreadable protocol file must not fall through to
-        # a parquet read of its own non-parquet bytes
-        if io.exists(anchors_file):
-            raise ValueError(
-                f"corrupt pqanchors protocol file {anchors_file!r} — "
-                "re-attach with pq_attach to rebuild the anchors"
-            ) from e
-    return {
-        int(r.cell): [float(x) for x in r.av]
-        for r in spark.read.parquet(
-            os.path.join(path, objs["pqanchors"])
-        ).collect()
-    }
+        raise ValueError(
+            f"missing or corrupt pqanchors protocol file {anchors_file!r}"
+            " — re-attach with pq_attach to rebuild the anchors"
+        ) from e
+    return {int(c): [float(x) for x in av] for c, av in cells}
 
 
 def _pq_anchors_write(
@@ -3319,7 +3127,7 @@ def pq_attach(
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        lay = _ivf_preamble(spark, io, path)
+        lay = _ivf_preamble(io, path)
         objs = lay["objects"]
         corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
         live = corpus
@@ -3368,7 +3176,7 @@ def pq_attach(
         )
         _pq_anchors_write(spark, path, new_objs, anchors)
         retired = retired_union(
-            None if lay.get("legacy") else lay,
+            lay,
             {objs["corpus"]}
             | {objs[k] for k in ("pqbooks", "pqanchors") if k in objs},
             new_objs.values(),
@@ -3377,7 +3185,6 @@ def pq_attach(
             io, path,
             {"version": v, "objects": new_objs, "retired": retired},
         )
-        _ivf_touch_marker(spark, path)
         return {"n_codes": n_corpus, "version": v}
 
 
@@ -3410,9 +3217,9 @@ def pq_probe_stored(
     hard cap refused library callers outright). Deleted ids neither
     probe nor answer (the live view masks tombstones).
 
-    RESIDUAL scoring (round 15 — r14 verdict item 1): a store attached
-    with residual codes (the books json's ``residual`` flag; every
-    round-15 attach) is scored through the FAISS IVFPQ decomposition
+    RESIDUAL scoring (round 15 — r14 verdict item 1): the stored codes
+    quantize v − anchor[cell] and are scored through the FAISS IVFPQ
+    decomposition
     of ‖q − (a_c + r̂)‖² = ‖q − a_c‖² + Σ_s (T2[c][s][code_s] +
     T3[s][code_s]) where T2[c][s][j] = ‖b_sj‖² + 2·⟨a_c,s, b_sj⟩ is
     probe-INDEPENDENT (one table per cell, shared by every probe in a
@@ -3423,8 +3230,7 @@ def pq_probe_stored(
     broadcast bound survives large cell counts. All three tables are
     computed driver-side in the replay-pinned pure-python fold order;
     the executor only gathers and adds in subspace order, so the
-    python replay is bit-exact. Pre-round-15 attachments (no flag)
-    keep the raw-code LUT path until re-attached.
+    python replay is bit-exact.
 
     ``refine=R`` (round 15 — the FAISS IVFPQR composition, and what
     actually moves recall on weakly clustered data): ADC selects the
@@ -3460,16 +3266,8 @@ def pq_probe_stored(
             f"no PQ attachment on the index at {path!r} — run "
             "pq_attach first"
         )
-    meta = _pq_meta_read(spark, path, objs)
-    books = meta["books"]
-    anchors = (
-        _pq_anchors_read(spark, path, objs) if meta["residual"] else None
-    )
-    if meta["residual"] and anchors is None:
-        raise ValueError(
-            f"index at {path!r} has residual PQ books but no pqanchors "
-            "object — the layout is torn or from a newer writer"
-        )
+    books = _pq_books_read(spark, path, objs)
+    anchors = _pq_anchors_read(spark, path, objs)
     corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
     if "pq_code" not in corpus.columns:
         raise ValueError(
@@ -3510,12 +3308,10 @@ def pq_probe_stored(
     # must keep refine-many rows when a refine stage follows, or the
     # exact re-rank would only ever see each batch's top-k
     sel_k = k if refine is None else max(int(refine), k)
-    atable = n_slots = t2 = None
-    if anchors is not None:
-        atable, n_slots = _pq_anchor_table(anchors)
-        # probe-independent residual term: one [M][K] table per cell
-        # slot, computed once per call and shared by every probe batch
-        t2 = [_pq_t2_for_anchor(atable[c], books) for c in range(n_slots)]
+    atable, n_slots = _pq_anchor_table(anchors)
+    # probe-independent residual term: one [M][K] table per cell slot,
+    # computed once per call and shared by every probe batch
+    t2 = [_pq_t2_for_anchor(atable[c], books) for c in range(n_slots)]
     parts = []
     all_cells: set = set()
     for lo in range(0, len(probe_rows), _PQ_MAX_PROBES):
@@ -3534,24 +3330,12 @@ def pq_probe_stored(
             union_cells = sorted({c for cs in pcells for c in cs})
             all_cells.update(union_cells)
             scan = coded.filter(F.col("cell").isin(union_cells))
-        if anchors is None:
-            lut = [
-                _pq_lut_one([float(x) for x in r.v], books)
-                for r in chunk
-            ]
-            parts.append(_pq_adc_scan(scan, pids, lut, pcells, sel_k))
-        else:
-            pvs = [[float(x) for x in r.v] for r in chunk]
-            lut3 = [_pq_lut3_one(pv, books) for pv in pvs]
-            t1 = [
-                [_seq_l2(pv, atable[c]) for c in range(n_slots)]
-                for pv in pvs
-            ]
-            parts.append(
-                _pq_adc_scan_residual(
-                    scan, pids, t1, t2, lut3, pcells, sel_k
-                )
-            )
+        pvs = [[float(x) for x in r.v] for r in chunk]
+        lut3 = [_pq_lut3_one(pv, books) for pv in pvs]
+        t1 = [[_seq_l2(pv, atable[c]) for c in range(n_slots)] for pv in pvs]
+        parts.append(
+            _pq_adc_scan_residual(scan, pids, t1, t2, lut3, pcells, sel_k)
+        )
     scored = parts[0]
     for df in parts[1:]:
         scored = scored.unionByName(df)

@@ -23,6 +23,8 @@ from ..storeio import (
     object_dir,
     pointer_gc,
     pointer_read,
+    pointer_recover,
+    pointer_require,
     pointer_write,
     retired_union,
 )
@@ -2754,9 +2756,6 @@ def _scd2_store_dir() -> str:
     return _roundtrip_dir("scd2")
 
 
-_SCD2_META = "_scd2_meta.json"  # legacy (pre-pointer) metadata file
-
-
 def _scd2_mutation_lock(spark: SparkSession, path: str):
     """Per-store single-writer guard for the SCD2 mutation surfaces —
     the same atomic-create lock protocol every sibling persisted store
@@ -2787,43 +2786,24 @@ def _bucket_logical(b: int) -> str:
     return f"b{int(b):05d}"
 
 
-def _scd2_layout(io: StoreIO, path: str) -> dict:
-    """The live SCD2 layout: the versioned pointer when present, else
-    a synthesis of the legacy fixed-name layout (``bucket=N``
-    partition directories + ``_scd2_meta.json``). On top of the
-    storeio contract the pointer carries the store facts a later
-    merge must not trust the caller for (advice r12): ``n_buckets``
-    (the bucketing modulus), ``key_type`` (the business-key type the
-    delta must cast to), and the dimension's ``schema`` json (so an
-    empty store still reads with the right columns). ``buckets`` maps
-    bucket id (string) → physical directory name; legacy ``bucket=N``
-    names are adopted verbatim and replaced object-by-object as
-    merges touch them."""
-    import json
-    import os
+# The live SCD2 layout: the versioned pointer (storeio.py). On top of
+# the storeio contract it carries the store facts a later merge must not
+# trust the caller for (advice r12): ``n_buckets`` (the bucketing
+# modulus), ``key_type`` (the business-key type the delta must cast to)
+# and the dimension's ``schema`` json (so an empty selection still reads
+# with the right columns). ``buckets`` maps bucket id (string) → object
+# directory. A path with no pointer raises the reader's
+# AnalysisException.
+_scd2_layout = pointer_require
 
-    lay = pointer_read(io, path)
-    if lay is not None:
-        return lay
-    buckets: dict = {}
-    if io.isdir(path):
-        for d in io.list_names(path):
-            if d.startswith("bucket="):
-                buckets[d.split("=", 1)[1]] = d
-    meta = None
-    mp = os.path.join(path, _SCD2_META)
-    if io.exists(mp):
-        meta = json.loads(io.read_text(mp))
-    return {
-        "version": 0,
-        "objects": {},
-        "buckets": buckets,
-        "n_buckets": None if meta is None else int(meta["n_buckets"]),
-        "key_type": None if meta is None else meta["key_type"],
-        "schema": None,
-        "retired": [],
-        "legacy": True,
-    }
+
+def _scd2_schema(lay: dict):
+    """The dimension's StructType, as the layout pointer records it."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(lay["schema"]))
 
 
 def _scd2_read(
@@ -2833,15 +2813,10 @@ def _scd2_read(
     named per-bucket object directories, PATH-LEVEL pruned to
     ``buckets`` when given — the 100 TB read shape: unaffected buckets
     are never even LISTED, which is strictly stronger than partition
-    pruning (the pre-pointer layout's PartitionFilters still listed
-    every bucket directory to discover partitions). The bucket id is
-    not a data column; it is recomputable as pmod(xxhash64(user_id),
-    n_buckets) and lives only in the pointer's map. An empty selection
-    returns an empty frame with the store schema from the pointer; a
-    legacy store with no readable dirs falls back to the whole-path
-    read so a bogus path still raises the reader's own
-    AnalysisException (the 404 surface)."""
-    import json
+    pruning. The bucket id is not a data column; it is recomputable as
+    pmod(xxhash64(user_id), n_buckets) and lives only in the pointer's
+    map. An empty selection returns an empty frame with the store
+    schema from the pointer."""
     import os
 
     sel = lay["buckets"]
@@ -2851,20 +2826,7 @@ def _scd2_read(
     dirs = [os.path.join(path, v) for v in sorted(sel.values())]
     if dirs:
         return spark.read.parquet(*dirs)
-    if lay.get("schema"):
-        from pyspark.sql.types import StructType
-
-        return spark.createDataFrame(
-            [], StructType.fromJson(json.loads(lay["schema"]))
-        )
-    if lay["buckets"]:
-        # a pruned selection that matched nothing on a schema-less
-        # (legacy) layout: read one live dir for its schema, keep 0 rows
-        any_dir = os.path.join(path, sorted(lay["buckets"].values())[0])
-        df = spark.read.parquet(any_dir)
-        return df.filter(F.lit(False))
-    # absent/empty legacy store: the whole-path read is the 404 surface
-    return spark.read.parquet(path)
+    return spark.createDataFrame([], _scd2_schema(lay))
 
 
 def _scd2_stage_publish(
@@ -2935,7 +2897,7 @@ def scd2_merge(
     round-11 journaled per-bucket rename protocol): the store is a
     versioned-pointer layout (storeio.py). The base build stages every
     bucket as unreferenced version-1 objects and commits them with ONE
-    atomic ``_layout.json`` rename; the delta merge then stages only
+    atomic pointer commit; the delta merge then stages only
     the affected buckets' rewritten slices as version-2 objects and
     commits with a second pointer swap that names new objects for
     touched buckets and the existing ones for the rest. A reader
@@ -2952,7 +2914,6 @@ def scd2_merge(
     "swapped"); ``_store_path`` pins the store directory so tests can
     crash one merge and rerun against the same store."""
     import json
-    import os
 
     path = _store_path or _scd2_store_dir()
     # NULL business keys have no correct merge (advice r10): Spark's
@@ -2968,12 +2929,13 @@ def scd2_merge(
         )
     with _scd2_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        # finish any LEGACY interrupted commit before reading, then GC
-        # expired retired objects / crashed stages — inside the lock so
-        # neither can race a concurrent writer (advice r12)
-        _scd2_recover_unlocked(path, spark)
-        old = _scd2_layout(io, path)
-        if not old.get("legacy"):
+        # GC expired retired objects / crashed stages inside the lock so
+        # it cannot race a concurrent writer (advice r12); a path with
+        # no pointer is a first build
+        old = pointer_read(io, path)
+        if old is None:
+            old = {"version": 0, "buckets": {}}
+        else:
             pointer_gc(io, path, old)
         bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
         obs = lambda df: df.select(  # noqa: E731 — tiny local projection
@@ -3001,16 +2963,13 @@ def scd2_merge(
             "schema": json.dumps(base.schema.jsonValue()),
             # prior unreclaimed retirees carry forward (storeio rule)
             "retired": retired_union(
-                None if old.get("legacy") else old,
-                old["buckets"].values(),
-                new_buckets.values(),
+                old, old["buckets"].values(), new_buckets.values()
             ),
         }
         pointer_write(io, path, lay)
         total = len(new_buckets)
         out, affected, rows_touched = _scd2_apply(
-            spark, io, path, lay, events.filter(delta_pred), n_buckets,
-            _crash=_crash,
+            spark, io, path, lay, events.filter(delta_pred), _crash=_crash
         )
     return out, {"touched": len(affected), "total": total,
                  "buckets": affected, "rows_touched": rows_touched}
@@ -3022,7 +2981,6 @@ def _scd2_apply(
     path: str,
     lay: dict,
     delta: DataFrame,
-    n_buckets: int,
     _crash=None,
 ) -> tuple[DataFrame, list, int]:
     """The partition-pruned merge phase shared by scd2_merge (which
@@ -3032,16 +2990,13 @@ def _scd2_apply(
     version-N+1 objects, commit with one pointer swap. The affected-
     bucket read is PATH-level pruned (only the touched buckets' object
     dirs are passed to the reader — untouched buckets are never
-    listed). Returns (read-back dimension, affected bucket ids,
+    listed); the bucketing modulus is the pointer's ``n_buckets``.
+    Returns (read-back dimension, affected bucket ids,
     rows_touched) where rows_touched counts the rewritten slices'
     rows from their parquet footers INSIDE the critical section
     (advice r13: the old count re-read the store after the lock was
     released, so a concurrent merge could inflate the number).
     Callers hold the per-store mutation lock."""
-    import json
-    import os
-
-    stored = _scd2_read(spark, path, lay)
     # Cast the delta to the store's column types BEFORE anything that
     # depends on the key bytes (advice r12): xxhash64 hashes int and
     # long differently, so computing the affected-bucket set on the
@@ -3049,8 +3004,10 @@ def _scd2_apply(
     # after unionByName's coercion would stage rows into buckets
     # outside `affected` — which the pointer update would then skip.
     # A lossy cast (overflow, unparseable string) yields NULL: refuse
-    # rather than mis-bucket.
-    types = {f.name: f.dataType for f in stored.schema.fields}
+    # rather than mis-bucket. The types come from the pointer's schema:
+    # opening every bucket directory just for it would list them all
+    # (one Spark listing job once a store has more than 32 buckets).
+    types = {f.name: f.dataType for f in _scd2_schema(lay).fields}
     delta = delta.select(
         # _raw_null distinguishes "key was NULL on entry" from "key
         # nulled by a lossy cast" so ONE probe job serves both contract
@@ -3073,6 +3030,7 @@ def _scd2_apply(
     # is small by the CDC contract); every consumer reads the same
     # executor-local blocks. Row-identical output.
     delta = materialize(delta)
+    n_buckets = lay["n_buckets"]
     bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
     obs = lambda df: df.select(  # noqa: E731 — tiny local projection
         "user_id",
@@ -3154,20 +3112,12 @@ def _scd2_apply(
     newly = {buckets[str(b)] for b in affected if str(b) in buckets}
     buckets.update(new_objs)
     new_lay = {
+        **lay,
         "version": v,
-        "objects": {},
         "buckets": buckets,
-        "n_buckets": n_buckets,
-        "key_type": lay.get("key_type")
-        or types["user_id"].simpleString(),
-        "schema": lay.get("schema")
-        or json.dumps(stored.schema.jsonValue()),
         # prior unreclaimed retirees carry forward — a build+merge in
-        # one lock would otherwise orphan the build's retirees (and
-        # adopted legacy bucket= names would never be reclaimed)
-        "retired": retired_union(
-            None if lay.get("legacy") else lay, newly, buckets.values()
-        ),
+        # one lock would otherwise orphan the build's retirees
+        "retired": retired_union(lay, newly, buckets.values()),
     }
     pointer_write(io, path, new_lay)
     if _crash is not None:
@@ -3183,7 +3133,6 @@ def scd2_merge_into(
     spark: SparkSession,
     path: str,
     delta: DataFrame,
-    n_buckets: int | None = None,
     _crash=None,
 ) -> tuple[DataFrame, dict]:
     """MERGE a staged CDC batch into an EXISTING bucketed SCD2 store —
@@ -3193,18 +3142,14 @@ def scd2_merge_into(
     buckets' rows + |delta|), never O(store): only the affected
     buckets' object directories are read (path-level pruning), only
     their rewritten slices are staged, and the publish is ONE atomic
-    pointer swap (round 14 — the per-bucket rename journal and its
-    torn-reader window are gone; see scd2_merge).
+    pointer swap (see scd2_merge).
 
     Contract mirrors scd2_merge: per affected user the staged rows
     are strictly newer than every stored observation (CDC append);
     users new to the store fold into fresh intervals (their buckets —
     possibly previously absent — publish through the same swap). The
-    bucketing modulus comes from the store's own layout pointer (or
-    the legacy _scd2_meta.json — advice r12: the old caller-supplied
-    modulus was guarded only one-sidedly). Passing ``n_buckets`` is
-    only needed for pre-metadata stores, and it must agree with the
-    store's records when both exist. Mutations serialize under the
+    bucketing modulus comes from the store's own layout pointer, never
+    from the caller (advice r12). Mutations serialize under the
     per-store lock; stats carry the affected bucket ids and the
     in-lock ``rows_touched`` count."""
     # NULL business keys are refused inside _scd2_apply — the raw-null
@@ -3212,160 +3157,43 @@ def scd2_merge_into(
     # longer costs its own job (round 16)
     with _scd2_mutation_lock(spark, path):
         io = StoreIO(path, spark)
-        _scd2_recover_unlocked(path, spark)
-        lay = _scd2_layout(io, path)
-        if not lay.get("legacy"):
-            pointer_gc(io, path, lay)
-        existing = sorted(int(b) for b in lay["buckets"])
-        if not existing:
+        lay = pointer_read(io, path)
+        if lay is None or not lay["buckets"]:
             raise ValueError(
                 f"scd2_merge_into: no SCD2 store at {path!r} (no bucket "
                 "objects) — build one with scd2_merge first"
             )
-        store_n = lay.get("n_buckets")
-        if store_n is not None:
-            if n_buckets is not None and n_buckets != store_n:
-                raise ValueError(
-                    f"scd2_merge_into: store at {path!r} was built with "
-                    f"n_buckets={store_n} but n_buckets={n_buckets} was "
-                    "passed — omit it; the modulus comes from the "
-                    "store's own metadata"
-                )
-            n_buckets = store_n
-        elif n_buckets is None:
-            raise ValueError(
-                f"scd2_merge_into: store at {path!r} records no "
-                "bucketing modulus (built before the metadata era) — "
-                "pass n_buckets matching the store's"
-            )
-        if max(existing) >= n_buckets:
-            raise ValueError(
-                f"scd2_merge_into: store at {path!r} has bucket="
-                f"{max(existing)} but n_buckets={n_buckets} — the "
-                "bucketing modulus must match the store's"
-            )
+        pointer_gc(io, path, lay)
+        total = len(lay["buckets"])
         out, affected, rows_touched = _scd2_apply(
-            spark, io, path, lay, delta, n_buckets, _crash=_crash
+            spark, io, path, lay, delta, _crash=_crash
         )
     return out, {
         "touched": len(affected),
-        "total": len(existing),
+        "total": total,
         "buckets": affected,
         "rows_touched": rows_touched,
     }
 
 
-# Back-compat alias: the SCD2 store's filesystem primitives moved to
-# the shared storeio.StoreIO in round 14 (both persisted stores ride
-# the same versioned-pointer layer).
-_Scd2IO = StoreIO
+def scd2_recover(path: str, spark: SparkSession) -> bool:
+    """Reclaim an SCD2 store's garbage now: the pointer layout's
+    retired objects and crashed-stage orphans — no state ever needs a
+    roll-forward, so recovery IS garbage collection (the ivf_recover
+    contract). Returns True when anything was reclaimed. Takes the
+    per-store mutation lock so recovery cannot race a live merge
+    (advice r12); the merge paths run pointer_gc inside the lock they
+    already hold."""
+    return scd2_recover_report(path, spark)["recovered"]
 
 
-def _scd2_commit(
-    path: str, stage: str, affected: list, _crash=None,
-    spark: "SparkSession | None" = None,
-) -> None:
-    """LEGACY protocol (pre-round-14), kept only so
-    _scd2_recover_unlocked can roll forward a commit an older release
-    crashed mid-publish: journaled per-bucket renames driven by a
-    _commit.json manifest written after the stage completed. New
-    writers never call this — the versioned-pointer swap replaced it
-    (see scd2_merge)."""
-    import json
-    import os
-
-    io = StoreIO(path, spark)
-    manifest = os.path.join(path, "_commit.json")
-    io.write_atomic(
-        manifest, json.dumps({"stage": stage, "buckets": affected})
-    )
-    if _crash is not None:
-        _crash("manifest")
-    for b in affected:
-        live = os.path.join(path, f"bucket={b}")
-        trash = os.path.join(path, f".trash-bucket={b}")
-        staged = os.path.join(stage, f"bucket={b}")
-        if io.isdir(staged):
-            if io.isdir(live):
-                if io.isdir(trash):
-                    io.rmtree(trash)  # stale trash is redundant with
-                    # staged by the manifest ordering — clear it so the
-                    # Hadoop rename can't nest live INTO it
-                io.rename(live, trash)
-                if _crash is not None:
-                    _crash(("moved_old", b))
-            io.rename(staged, live)
-        if _crash is not None:
-            _crash(("published", b))
-    for b in affected:
-        io.rmtree(os.path.join(path, f".trash-bucket={b}"))
-    io.rmtree(stage)
-    io.remove(manifest)
-
-
-def scd2_recover(path: str, spark: "SparkSession | None" = None) -> bool:
-    """Heal/reclaim an SCD2 store now: roll a LEGACY release's
-    interrupted _commit.json publish forward (the staged data was
-    complete by the time the manifest existed, so resume-the-swap is
-    always correct), then garbage-collect the pointer layout's expired
-    retired objects and crashed-stage orphans — under the round-14
-    protocol no pointer-born state ever needs a roll-forward, so
-    recovery IS garbage collection (the ivf_recover contract). Returns
-    True when anything was healed or reclaimed.
-
-    This is the SURFACE entry (CLI scd2-recover, POST /scd2/recover,
-    api.scd2_recover_store): it takes the per-store mutation lock so
-    recovery cannot race a live merge (advice r12). The merge paths
-    run _scd2_recover_unlocked + pointer_gc inside the lock they
-    already hold. A genuinely sessionless caller (bare process, local
-    path) proceeds unlocked — the lock needs a SparkSession to resolve
-    the filesystem, and that caller is by definition the only process
-    with the store in hand."""
-    from pyspark.sql import SparkSession
-
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        io = StoreIO(path, None)
-        healed = _scd2_recover_unlocked(path, None)
-        removed = pointer_gc(io, path, pointer_read(io, path), grace=0.0)
-        return healed or bool(removed)
+def scd2_recover_report(path: str, spark: SparkSession) -> dict:
+    """scd2_recover's full result: ``{"recovered": bool, "gc_skipped":
+    [superseded pointer files the GC could not reclaim]}`` — the
+    surface entry (CLI scd2-recover, POST /scd2/recover,
+    api.scd2_recover_store); see storeio.pointer_recover."""
     with _scd2_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        healed = _scd2_recover_unlocked(path, spark)
-        removed = pointer_gc(io, path, pointer_read(io, path), grace=0.0)
-    return healed or bool(removed)
-
-
-def _scd2_recover_unlocked(
-    path: str, spark: "SparkSession | None"
-) -> bool:
-    """Roll a LEGACY (pre-pointer) interrupted _scd2_commit forward.
-    Pointer-born stores never create this state; the file's presence
-    on an upgraded store means a pre-round-14 writer crashed before
-    the upgrade."""
-    import json
-    import os
-
-    io = StoreIO(path, spark)
-    manifest = os.path.join(path, "_commit.json")
-    if not io.exists(manifest):
-        return False
-    j = json.loads(io.read_text(manifest))
-    for b in j["buckets"]:
-        live = os.path.join(path, f"bucket={b}")
-        staged = os.path.join(j["stage"], f"bucket={b}")
-        if io.isdir(staged):
-            if io.isdir(live):
-                trash = os.path.join(path, f".trash-bucket={b}")
-                if io.isdir(trash):
-                    io.rmtree(trash)  # same nesting guard as commit
-                io.rename(live, trash)
-            io.rename(staged, live)
-    for b in j["buckets"]:
-        io.rmtree(os.path.join(path, f".trash-bucket={b}"))
-    io.rmtree(j["stage"])
-    io.remove(manifest)
-    return True
+        return pointer_recover(StoreIO(path, spark), path)
 
 
 def scd2_snapshot_at(
@@ -3384,14 +3212,9 @@ def scd2_snapshot_at(
     ONCE and reads only the directories that pointer names, so a
     snapshot racing a concurrent merge sees the complete pre- or
     post-merge store — cross-bucket consistency the per-bucket rename
-    protocol could not give (its swap was atomic per bucket only; the
-    r13 ADVICE race — a pending commit appearing between the check and
-    the scan — is gone because there is no multi-step publish to race;
+    protocol could not give (its swap was atomic per bucket only;
     retired objects further outlive the swap by a full mutation cycle
-    of reader grace). A LEGACY store mid-crash (_commit.json present)
-    still REFUSES with a clear error naming the mutating surface that
-    heals it — serving a half-published dimension would be worse than
-    failing.
+    of reader grace).
 
     Scale shape: with ``user_ids`` the bucket ids are computed from
     the store's persisted modulus via the same JVM xxhash64 the writer
@@ -3399,21 +3222,10 @@ def scd2_snapshot_at(
     buckets' object directories are opened (path-level pruning:
     untouched buckets are never listed, strictly stronger than the old
     partition-column filter). Without user_ids the snapshot is a
-    full-store predicate scan by design. A pre-metadata legacy store
-    degrades gracefully: the user_id filter still applies, only the
-    pruning is lost. For integer-keyed stores, non-integral numeric
-    ids are REJECTED rather than silently truncated (advice r13: an
-    int cast would read 1.9 as user 1)."""
-    import os
-
-    io = StoreIO(path, spark)
-    if io.exists(os.path.join(path, "_commit.json")):
-        raise ValueError(
-            f"scd2_snapshot_at: store at {path!r} has a pending "
-            "interrupted pre-pointer commit — run scd2_recover (CLI "
-            "scd2-recover / POST /scd2/recover, a mutating operation) "
-            "before reading"
-        )
+    full-store predicate scan by design. A path with no store raises
+    the reader's AnalysisException. For integer-keyed stores,
+    non-integral numeric ids are REJECTED rather than silently
+    truncated (advice r13: an int cast would read 1.9 as user 1)."""
     import datetime as _dt
 
     if isinstance(ts, (_dt.datetime, _dt.date)):
@@ -3428,14 +3240,14 @@ def scd2_snapshot_at(
     # (one spark.range(1) row, no data scan)
     if spark.range(1).select(tcol.alias("t")).head()["t"] is None:
         raise ValueError(f"scd2_snapshot_at: unparseable timestamp {ts!r}")
-    lay = _scd2_layout(io, path)
+    lay = _scd2_layout(StoreIO(path, spark), path)
     sel_buckets = None
     if user_ids is not None:
         if not user_ids:
             raise ValueError(
                 "scd2_snapshot_at: user_ids must be non-empty when given"
             )
-        key_t = lay.get("key_type")
+        key_t = lay["key_type"]
         if key_t in ("tinyint", "smallint", "int", "bigint"):
             coerced = []
             for u in user_ids:
@@ -3456,23 +3268,19 @@ def scd2_snapshot_at(
             user_ids = coerced
         elif key_t == "string":
             user_ids = [str(u) for u in user_ids]
-        n = lay.get("n_buckets")
-        if n is not None and key_t is not None:
-            lits = [F.lit(u).cast(key_t) for u in user_ids]
-            sel_buckets = sorted(
-                set(
-                    spark.range(1)
-                    .select(
-                        F.array(
-                            *[
-                                F.pmod(F.xxhash64(c), F.lit(int(n)))
-                                for c in lits
-                            ]
-                        ).alias("bs")
-                    )
-                    .head()["bs"]
+        n = int(lay["n_buckets"])
+        lits = [F.lit(u).cast(key_t) for u in user_ids]
+        sel_buckets = sorted(
+            set(
+                spark.range(1)
+                .select(
+                    F.array(
+                        *[F.pmod(F.xxhash64(c), F.lit(n)) for c in lits]
+                    ).alias("bs")
                 )
+                .head()["bs"]
             )
+        )
     stored = _scd2_read(spark, path, lay, buckets=sel_buckets)
     snap = stored.filter(
         (F.col("valid_from") <= tcol)

@@ -2700,3 +2700,125 @@ def test_index_recover_api(spark, tmp_path):
 
     with pytest.raises(KeyError, match="no IVF index"):
         api.index_recover(str(tmp_path / "nope"))
+
+
+def _scd2_events_split(spark):
+    """(base, delta) event-log frames for an SCD2 store: history before
+    a cut, and the strictly-newer rows of a sparse user cohort."""
+    import pyspark.sql.functions as F
+
+    from correlationapi_spark.io import load_tables
+
+    ev = load_tables(spark, SF_SMOKE)["events"]
+    cut = F.lit("2024-01-25 00:00:00").cast("timestamp")
+    delta = ev.filter((F.col("ts") >= cut) & (F.col("user_id") % 19 == 0))
+    return ev.filter(F.col("ts") < cut), delta.select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+
+
+def _pointer_files(path):
+    return sorted(
+        n for n in os.listdir(path)
+        if n.startswith("_layout-v") and n.endswith(".json")
+    )
+
+
+def test_recover_reports_gc_skipped_pointer_files(spark, tmp_path,
+                                                  monkeypatch):
+    """A superseded pointer file whose stat fails is kept by the GC
+    (its age cannot be checked against the reader grace); both recover
+    surfaces name it in ``gc_skipped`` instead of leaving it to pile up
+    silently, and a recover with a working stat reclaims it."""
+    import pyspark.sql.functions as F
+
+    from correlationapi_spark.operators.analytics import scd2_merge
+    from correlationapi_spark.storeio import StoreIO
+
+    api = CorrelationAPI(spark)
+    api.register_dataset(
+        "emb", os.path.join(SF_SMOKE, "embeddings.parquet")
+    )
+    idx = str(tmp_path / "idx")
+    api.index_build("emb", "vec_id", "embedding", idx, n_cells=4)
+    api.index_delete(idx, [1])  # first tombstone: a pointer bump
+    api.index_compact(idx)      # a pointer swap: three pointer files
+
+    base, delta = _scd2_events_split(spark)
+    store = str(tmp_path / "scd2")
+    scd2_merge(spark, base, F.lit(False), _store_path=store)  # two
+    api.register_dataset("delta", delta)
+    api.scd2_merge("delta", "user_id", "event_type", "ts", "event_id",
+                   store)  # a third pointer file
+
+    real_mtime = StoreIO.mtime
+    for path, recover in ((idx, api.index_recover),
+                          (store, api.scd2_recover_store)):
+        ptrs = _pointer_files(path)
+        assert len(ptrs) == 3, ptrs
+        stuck = ptrs[0]
+
+        def flaky_mtime(self, p, stuck=stuck):
+            if os.path.basename(p) == stuck:
+                raise OSError(f"cannot stat: {p}")
+            return real_mtime(self, p)
+
+        monkeypatch.setattr(StoreIO, "mtime", flaky_mtime)
+        res = recover(path)
+        assert res["gc_skipped"] == [stuck]
+        assert _pointer_files(path) == ptrs
+        monkeypatch.setattr(StoreIO, "mtime", real_mtime)
+        res = recover(path)
+        assert res["gc_skipped"] == []
+        assert _pointer_files(path) == ptrs[1:]
+
+
+def test_stores_hold_only_the_one_format(spark, tmp_path):
+    """After a full lifecycle through the service surface, each store
+    directory holds only the one on-disk format: ``_layout-v*.json``
+    pointer files, version-named object directories and the Hadoop
+    ``.crc`` siblings of those files — no marker, manifest, trash,
+    stage or metadata file of any other layout."""
+    import pyspark.sql.functions as F
+
+    from correlationapi_spark.operators.analytics import scd2_merge
+    from correlationapi_spark.storeio import OBJECT_RE, POINTER_RE
+
+    def stray(path):
+        def allowed(n):
+            return bool(POINTER_RE.match(n) or OBJECT_RE.match(n))
+
+        return sorted(
+            n for n in os.listdir(path)
+            if not allowed(n)
+            and not (n.startswith(".") and n.endswith(".crc")
+                     and allowed(n[1:-len(".crc")]))
+        )
+
+    api = CorrelationAPI(spark)
+    api.register_dataset(
+        "emb", os.path.join(SF_SMOKE, "embeddings.parquet")
+    )
+    idx = str(tmp_path / "idx")
+    api.index_build("emb", "vec_id", "embedding", idx, n_cells=4,
+                    where="vec_id % 5 != 0")
+    api.index_append("emb", "vec_id", "embedding", idx,
+                     where="vec_id % 5 = 0")
+    api.index_delete(idx, [1, 2])
+    api.index_compact(idx)
+    api.index_pq_attach(idx)
+    assert api.index_recluster(idx, threshold=0.0)["reclustered"] is True
+    api.index_recover(idx)
+    assert stray(idx) == []
+
+    base, delta = _scd2_events_split(spark)
+    store = str(tmp_path / "scd2")
+    scd2_merge(spark, base, F.lit(False), _store_path=store)
+    api.register_dataset("delta", delta)
+    res = api.scd2_merge("delta", "user_id", "event_type", "ts",
+                         "event_id", store)
+    assert res["touched"] >= 1
+    snap = api.scd2_snapshot(store, "2024-01-28 00:00:00")
+    assert snap["n_rows"] >= 1
+    api.scd2_recover_store(store)
+    assert stray(store) == []

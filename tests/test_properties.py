@@ -1650,8 +1650,6 @@ def test_scd2_merge_into_existing_store(spark, tmp_path):
     # guards
     with pytest.raises(ValueError, match="no SCD2 store"):
         scd2_merge_into(spark, str(tmp_path / "nowhere"), delta)
-    with pytest.raises(ValueError, match="modulus"):
-        scd2_merge_into(spark, p, delta, n_buckets=2)
     null_delta = spark.createDataFrame(
         [(None, "x", "2024-02-03 00:00:00", 900003)],
         "user_id long, event_type string, ts string, event_id long",
@@ -1809,9 +1807,6 @@ def test_scd2_persisted_modulus_and_key_cast(spark, tmp_path):
         .filter("count > 1").count()
     )
     assert dupes == 0
-    # a CONFLICTING explicit modulus refuses instead of corrupting
-    with pytest.raises(ValueError, match="metadata"):
-        scd2_merge_into(spark, p, delta, n_buckets=32)
 
     # 2. key-type mismatch: the same delta arriving with an int key
     #    must merge identically (cast precedes the affected set), and
@@ -1842,31 +1837,6 @@ def test_scd2_persisted_modulus_and_key_cast(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="does not fit"):
         scd2_merge_into(spark, p3, too_big)
-
-    # 4. legacy store (pre-pointer bucket=N layout, no metadata):
-    #    n_buckets is required; passing it merges AND upgrades the
-    #    store to the pointer layout (round 14 migration)
-    import os
-
-    from correlationapi_spark.storeio import StoreIO, pointer_read
-
-    p4 = str(tmp_path / "legacy")
-    legacy_base = scd2_intervals(obs(base_all)).withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("user_id")), F.lit(8))
-    )
-    legacy_base.write.mode("overwrite").partitionBy("bucket").parquet(p4)
-    with pytest.raises(ValueError, match="metadata era"):
-        scd2_merge_into(spark, p4, delta)
-    merged4, stats4 = scd2_merge_into(spark, p4, delta, n_buckets=8)
-    assert sorted(map(tuple, merged4.select(*want.columns).collect())) == \
-        sorted(map(tuple, want.collect()))
-    lay4 = pointer_read(StoreIO(p4, spark), p4)
-    assert lay4 is not None and lay4["n_buckets"] == 8  # upgraded
-    # untouched legacy bucket dirs were adopted verbatim; touched ones
-    # were replaced by versioned objects and retired
-    adopted = [v for v in lay4["buckets"].values()
-               if v.startswith("bucket=")]
-    assert adopted and stats4["touched"] < stats4["total"]
 
 
 def test_scd2_mutation_lock_serializes(spark, tmp_path):
@@ -1944,49 +1914,10 @@ def test_scd2_snapshot_at_point_in_time(spark, tmp_path):
     )
     assert pruned == [r for r in want if r[0] in some]
 
-    # pre-metadata store: strip the persisted modulus/key facts from
-    # the pointer — pruning degrades, the answer must not change
-    import os
-
-    from correlationapi_spark.storeio import (
-        StoreIO,
-        pointer_read,
-        pointer_write,
-    )
-
-    io = StoreIO(p, spark)
-    lay = pointer_read(io, p)
-    pointer_write(
-        io, p, {**lay, "n_buckets": None, "key_type": None}
-    )
-    legacy = sorted(
-        map(
-            tuple,
-            scd2_snapshot_at(spark, p, ts, user_ids=some).collect(),
-        )
-    )
-    assert legacy == pruned
-    pointer_write(io, p, lay)  # restore for the checks below
-
     with pytest.raises(ValueError, match="unparseable"):
         scd2_snapshot_at(spark, p, "not-a-time")
     with pytest.raises(ValueError, match="non-empty"):
         scd2_snapshot_at(spark, p, ts, user_ids=[])
-
-    # a pending interrupted commit REFUSES the read instead of rolling
-    # it forward (r13 review: the snapshot is the unauthenticated pure
-    # read — mutating the store from here collided with the writer
-    # lock and bypassed the auth gate on /scd2/recover) or serving a
-    # half-published dimension
-    import json
-
-    with open(os.path.join(p, "_commit.json"), "w") as f:
-        json.dump({"stage": p + ".stage", "buckets": []}, f)
-    with pytest.raises(ValueError, match="pending interrupted"):
-        scd2_snapshot_at(spark, p, ts)
-    os.remove(os.path.join(p, "_commit.json"))
-    assert sorted(map(tuple, scd2_snapshot_at(spark, p, ts).collect())) \
-        == want
 
 
 def test_ngram_dfcap_recall_contract_on_skewed_corpus(spark):
@@ -2075,7 +2006,7 @@ def test_ngram_dfcap_recall_contract_on_skewed_corpus(spark):
     assert n_cand_capped * 100 < n_cand_all
 
 
-def test_pointer_commit_is_versioned_and_never_pointerless(tmp_path):
+def test_pointer_commit_is_versioned_and_never_pointerless(spark, tmp_path):
     """advice r14 (high): the old single-file pointer was replaced via
     delete-then-rename on the Hadoop branch — a lock-free reader racing
     the window resolved NO pointer (silently falling back to the legacy
@@ -2087,7 +2018,6 @@ def test_pointer_commit_is_versioned_and_never_pointerless(tmp_path):
     before the rename) is invisible to readers and swept by GC; and a
     vanished/unreadable newest candidate falls back to its predecessor
     instead of raising."""
-    import json
     import os
 
     from correlationapi_spark.storeio import (
@@ -2100,7 +2030,7 @@ def test_pointer_commit_is_versioned_and_never_pointerless(tmp_path):
 
     p = str(tmp_path / "store")
     os.makedirs(os.path.join(p, "corpus-v000001"))
-    io = StoreIO(p)
+    io = StoreIO(p, spark)
     pointer_write(io, p, {
         "version": 1, "objects": {"corpus": "corpus-v000001"},
         "retired": [],
@@ -2160,16 +2090,9 @@ def test_pointer_commit_is_versioned_and_never_pointerless(tmp_path):
     left = sorted(n for n in os.listdir(p) if n.startswith("_layout-v"))
     assert len(left) == 2 and not any(n.endswith(".tmp") for n in left)
     assert pointer_read(io, p)["version"] == 5
-    # the legacy single-file pointer upgrades: readable as fallback,
-    # retired by GC once a versioned pointer exists
-    with open(os.path.join(p, "_layout.json"), "w") as f:
-        json.dump({"version": 0, "objects": {}, "retired": []}, f)
-    assert pointer_read(io, p)["version"] == 5  # versioned wins
-    pointer_gc(io, p, pointer_read(io, p), grace=0.0)
-    assert not os.path.exists(os.path.join(p, "_layout.json"))
 
 
-def test_gc_grace_floor_and_retired_trimming(tmp_path, monkeypatch):
+def test_gc_grace_floor_and_retired_trimming(spark, tmp_path, monkeypatch):
     """r14 verdict item 4 + advice r14 (medium), at the protocol level:
     (a) a retiree younger than GC_GRACE_SECONDS survives ANY number of
     immediate successive mutations' preamble GCs — the reader grace is
@@ -2190,7 +2113,7 @@ def test_gc_grace_floor_and_retired_trimming(tmp_path, monkeypatch):
 
     p = str(tmp_path / "store")
     os.makedirs(os.path.join(p, "corpus-v000001"))
-    io = StoreIO(p)
+    io = StoreIO(p, spark)
     lay = {"version": 1, "objects": {"corpus": "corpus-v000001"},
            "retired": []}
     pointer_write(io, p, lay)
@@ -2235,7 +2158,7 @@ def test_gc_grace_floor_and_retired_trimming(tmp_path, monkeypatch):
         assert not os.path.isdir(os.path.join(p, f"corpus-v{old:06d}"))
 
 
-def test_pointer_file_gc_respects_grace(tmp_path):
+def test_pointer_file_gc_respects_grace(spark, tmp_path):
     """Round-15 review: superseded POINTER FILES get the same
     wall-clock grace as retired objects. A lock-free reader that
     listed {vN-1, vN} must still find one of them readable after any
@@ -2253,7 +2176,7 @@ def test_pointer_file_gc_respects_grace(tmp_path):
 
     p = str(tmp_path / "store")
     os.makedirs(os.path.join(p, "corpus-v000001"))
-    io = StoreIO(p)
+    io = StoreIO(p, spark)
     lay = {"version": 1, "objects": {"corpus": "corpus-v000001"},
            "retired": []}
     pointer_write(io, p, lay)

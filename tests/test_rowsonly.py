@@ -2985,37 +2985,28 @@ def test_ivf_mutation_lock_single_writer(spark, tmp_path):
 
 
 def test_ivf_append_migrates_pre_sidecar_layout(spark, tmp_path):
-    """Back-compat: an index persisted by the round-10 writer (no
-    idstate, no marker) still appends — exact full-scan clash check
-    once, Bloom sidecar + marker written on the way out."""
+    """A store whose id-Bloom sidecar (state.bin) is absent still
+    appends — exact full-scan clash check once, sidecar rebuilt on the
+    way out, and the rebuilt Bloom refuses a duplicate append."""
     import os
-    import shutil
 
     from correlationapi_spark.llm.similarity import (
-        _IVF_MARKER,
+        _IDSTATE_FILE,
         _idstate_read,
         corpus_view,
         ivf_append,
         ivf_is_index,
         ivf_live,
+        ivf_resolve,
     )
     from correlationapi_spark.io import load_tables
 
     path = str(tmp_path / "ivf")
     emb = _build_small_index(spark, path, F.col("vec_id") % 5 != 0)
-    # reconstruct the r10 layout: fixed names, no sidecars, no marker,
-    # no layout pointer (round 14: the builder is pointer-born, so the
-    # strip now includes de-versioning the object names)
-    from correlationapi_spark.llm.similarity import ivf_resolve
-
-    objs = ivf_resolve(spark, path)
-    os.rename(objs["corpus"], os.path.join(path, "corpus"))
-    os.rename(objs["centroids"], os.path.join(path, "centroids"))
-    shutil.rmtree(objs["idstate"])
-    os.remove(os.path.join(path, _IVF_MARKER))
-    for n in os.listdir(path):  # pointer files + checksum siblings
-        if n.startswith("_layout") or n.endswith(".crc"):
-            os.remove(os.path.join(path, n))
+    idstate = ivf_resolve(spark, path)["idstate"]
+    for n in os.listdir(idstate):  # state.bin + its checksum sibling
+        if _IDSTATE_FILE in n:
+            os.remove(os.path.join(idstate, n))
     assert _idstate_read(spark, path) is None
 
     delta = corpus_view(
@@ -3026,7 +3017,7 @@ def test_ivf_append_migrates_pre_sidecar_layout(spark, tmp_path):
     assert ivf_is_index(spark, path)
     n = ivf_live(spark, path)[0].count()
     assert n == emb.count() + delta.count()
-    # and the migrated Bloom works: duplicate append refused
+    # and the rebuilt Bloom works: duplicate append refused
     with pytest.raises(ValueError, match="append-only"):
         ivf_append(spark, path, delta)
 
@@ -3617,62 +3608,6 @@ def test_ivf_recluster_crash_never_resurrects_deleted_ids(spark, tmp_path):
     seen = _ivf_reader_snapshot(spark, path)
     assert not (seen & set(victims))
     assert _tombstones(spark, path) is None
-
-
-def test_ivf_legacy_crashed_publish_migrates(spark, tmp_path):
-    """One-time migration healer: a store a PRE-POINTER release
-    crashed mid-recluster-publish (corpus already moved to
-    .trash-corpus, staged layout complete, _recluster.json present —
-    the old protocol's mid-swap state) must be healed by the next
-    mutation's preamble roll-forward, then upgraded like any legacy
-    store. Hand-builds the crashed state, since this release can no
-    longer produce it."""
-    import json
-    import os
-    import shutil
-
-    from correlationapi_spark.llm.similarity import (
-        _IVF_MARKER,
-        ivf_delete,
-        ivf_is_index,
-        ivf_live,
-        ivf_resolve,
-    )
-
-    path = _synthetic_index(spark, tmp_path, n_base=60, n_delta=150, n_cells=4)
-    n = ivf_live(spark, path)[0].count()
-
-    # de-version to the legacy fixed-name layout
-    objs = ivf_resolve(spark, path)
-    os.rename(objs["corpus"], os.path.join(path, "corpus"))
-    os.rename(objs["centroids"], os.path.join(path, "centroids"))
-    shutil.rmtree(objs["idstate"])
-    for f in os.listdir(path):  # pointer files + checksum siblings
-        if f.startswith("_layout") or f.endswith(".crc"):
-            os.remove(os.path.join(path, f))
-
-    # simulate the old protocol's crash at ("moved_old", "corpus"):
-    # live corpus moved to trash, staged (complete) layout pending,
-    # marker + idstate de-certified, manifest present
-    stage = os.path.join(path, ".recluster-stage")
-    os.makedirs(stage)
-    os.rename(os.path.join(path, "corpus"), os.path.join(stage, "corpus"))
-    shutil.copytree(
-        os.path.join(path, "centroids"), os.path.join(stage, "centroids")
-    )
-    os.makedirs(os.path.join(path, ".trash-corpus"))
-    if os.path.exists(os.path.join(path, _IVF_MARKER)):
-        os.remove(os.path.join(path, _IVF_MARKER))
-    with open(os.path.join(path, "_recluster.json"), "w") as f:
-        json.dump({"stage": stage}, f)
-    assert not ivf_is_index(spark, path)  # honestly uncertified
-
-    # a DELETE (not ivf_recover) heals the store, then applies itself
-    assert ivf_delete(spark, path, [10000]) == 1
-    assert ivf_is_index(spark, path)
-    assert ivf_live(spark, path)[0].count() == n - 1
-    assert not os.path.exists(os.path.join(path, "_recluster.json"))
-    assert not os.path.exists(stage)
 
 
 def test_ivf_rebuild_supersedes_crashed_recluster_stage(spark, tmp_path):

@@ -8,10 +8,9 @@ through 5 values, strictly increasing per-user timestamps — no RNG
 state, same args → same events), persists the bucketed SCD2 dimension
 from all but a staged late batch, then measures:
 
-1. the MERGE path: `scd2_merge` of the staged batch — the journaled
-   partition-pruned rewrite (stage + manifest + per-bucket renames);
-   records wall time and the touched/total bucket counts the scale
-   story rests on;
+1. the MERGE path: `scd2_merge` of the staged batch — the
+   bucket-pruned rewrite published by one pointer swap; records wall
+   time and the touched/total bucket counts the scale story rests on;
 2. the REBUILD baseline: `scd2_intervals` over ALL events written
    fresh — what a naive pipeline pays per day;
 3. equivalence: the merged store must row-equal the full rebuild
@@ -118,32 +117,20 @@ def main() -> None:
     t_total = time.time() - t0
 
     # the INCREMENTAL cost a daily pipeline pays: build the base store
-    # once, then time only scd2_merge_into of the staged batch
+    # once (scd2_merge with an empty staged batch), then time only
+    # scd2_merge_into of the staged batch
     store2 = os.path.join(out_dir, "store2")
-    base_pred = ~F.coalesce(delta_pred, F.lit(False))
+    base = ev.filter(~F.coalesce(delta_pred, F.lit(False)))
     t0 = time.time()
-    scd2_intervals(
-        ev.filter(base_pred).select(
-            "user_id",
-            F.col("event_type").alias("state"),
-            F.col("ts").alias("valid_from"),
-            "event_id",
-        )
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("user_id")), F.lit(32))
-    ).write.mode("overwrite").partitionBy("bucket").parquet(store2)
+    scd2_merge(spark, base, F.lit(False), n_buckets=32, _store_path=store2)
     t_base_build = time.time() - t0
 
     # the merge's work (affected-bucket read, fold, stage write,
-    # journaled publish) is EAGER inside the call; the returned frame
+    # pointer publish) is EAGER inside the call; the returned frame
     # is a lazy read-back of the whole store, so counting it inside the
     # window would bill a full-store scan to the merge
     t0 = time.time()
-    # store2 is hand-built (no _scd2_meta.json), so the modulus must be
-    # passed explicitly — the legacy-store path
-    out2, stats2 = scd2_merge_into(
-        spark, store2, ev.filter(delta_pred), n_buckets=32
-    )
+    out2, stats2 = scd2_merge_into(spark, store2, ev.filter(delta_pred))
     t_merge_only = time.time() - t0
     out2.count()
 
@@ -155,20 +142,9 @@ def main() -> None:
     # users × their history)
     fine = 512
     store3 = os.path.join(out_dir, "store3")
-    scd2_intervals(
-        ev.filter(base_pred).select(
-            "user_id",
-            F.col("event_type").alias("state"),
-            F.col("ts").alias("valid_from"),
-            "event_id",
-        )
-    ).withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col("user_id")), F.lit(fine))
-    ).write.mode("overwrite").partitionBy("bucket").parquet(store3)
+    scd2_merge(spark, base, F.lit(False), n_buckets=fine, _store_path=store3)
     t0 = time.time()
-    out3, stats3 = scd2_merge_into(
-        spark, store3, ev.filter(delta_pred), n_buckets=fine
-    )
+    out3, stats3 = scd2_merge_into(spark, store3, ev.filter(delta_pred))
     t_merge_fine = time.time() - t0
 
     # 2. rebuild baseline: the full-history fold written fresh
