@@ -2857,8 +2857,8 @@ class CorrelationAPI:
         where: str | None = None,
     ) -> dict[str, Any]:
         """Assign ONLY the given rows (optional SQL ``where`` over the
-        dataset) against the persisted centroids and append their cell
-        files — no re-train, existing partitions untouched. Returns the
+        dataset) against the persisted centroids and add them to the
+        index's append delta — no re-train, the base untouched. Returns the
         post-append drift gauge so callers see the recluster signal in
         the same round trip."""
         from pyspark.errors import AnalysisException
@@ -3024,10 +3024,12 @@ class CorrelationAPI:
         return {**self.index_status(path), "deleted": n}
 
     def index_compact(self, path: str) -> dict[str, Any]:
-        """Physically drop tombstoned rows (only the cells that hold
-        them are rewritten), clear the tombstone set, and rebuild the
-        id Bloom right-sized — the reclamation end of the
-        delete/compact lifecycle."""
+        """Physically drop tombstoned rows, clear the tombstone set,
+        and rebuild the id Bloom right-sized — the reclamation end of
+        the delete/compact lifecycle. Only the append delta is
+        rewritten when every deleted id was appended since the last
+        base rewrite; a deleted base id rewrites the whole live corpus.
+        ``base_rewritten`` says which one this compact paid."""
         from pyspark.errors import AnalysisException
 
         from .llm.similarity import ivf_compact
@@ -3169,9 +3171,8 @@ class CorrelationAPI:
         try:
             snap = scd2_snapshot_at(self.spark, path, ts, user_ids=users)
         except AnalysisException as e:
-            raise ValueError(
-                f"no SCD2 store at {path!r}: {e}"
-            ) from e
+            # a missing store is a 404, as on the index routes
+            raise KeyError(f"no SCD2 store at {path!r}: {e}") from e
         rows = snap.orderBy("user_id", "valid_from").limit(limit).collect()
         return {
             "path": path,

@@ -349,8 +349,9 @@ def ivf_write(
     with orphan object dirs the next preamble GCs; a crash after the
     swap leaves readers on the new version. There is NO window in
     which a reader sees a torn layout — the de-certify-then-overwrite
-    protocol this replaces had one. Tombstones do not survive a
-    rebuild (the caller's frame is the complete new corpus).
+    protocol this replaces had one. Neither tombstones nor the append
+    delta survive a rebuild (the caller's frame is the complete new
+    corpus; both retire in the swap).
 
     api.index_build only ever clobbers a directory bearing a layout
     pointer (advice r10: the old "has a corpus/ subdir" heuristic let
@@ -400,27 +401,55 @@ def ivf_write(
 
 def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Open a persisted IVF index: returns ``(assigned, cents)`` in the
-    exact shape ivf_probe consumes. The corpus side stays a
-    cell-partitioned parquet scan — ivf_probe's equi-join on ``cell``
-    against the ≤ n_probe·|probes|-row probe-cells side prunes the
-    scan to the probed cells (dynamic partition pruning; canaried in
-    tests/test_plans.py::test_ivf_written_index_roundtrip). The layout
-    pointer is resolved ONCE, so both frames come from the same
-    version even when a destructive mutation swaps mid-call."""
+    exact shape ivf_probe consumes. The corpus side is the base ∪ delta
+    union of _corpus — each half a cell-partitioned parquet scan that
+    ivf_probe's equi-join on ``cell`` against the ≤ n_probe·|probes|-row
+    probe-cells side prunes to the probed cells (dynamic partition
+    pruning on both scans; canaried in
+    tests/test_plans.py::test_ivf_written_index_roundtrip and
+    test_ivf_delta_probe_prunes_both_scans). The layout pointer is
+    resolved ONCE, so every frame comes from the same version even
+    when a destructive mutation swaps mid-call."""
     import os
 
     io = StoreIO(path, spark)
     objs = _ivf_layout(io, path)["objects"]
     return (
-        spark.read.parquet(os.path.join(path, objs["corpus"])),
+        _corpus(spark, path, objs),
         spark.read.parquet(os.path.join(path, objs["centroids"])),
+    )
+
+
+def _corpus(spark: SparkSession, path: str, objs: dict) -> DataFrame:
+    """Every stored corpus row of the layout ``objs``: the BASE object
+    (``corpus`` — written only by build, full compact, recluster and
+    pq_attach) unioned with the append DELTA object (``delta``) when
+    the layout has one. The two share the cell-partitioned schema and
+    hold disjoint ids (re-admitting an id compacts first). Spark
+    refuses two partitioned roots in one read.parquet call, so the
+    halves are two scans under unionByName; static and dynamic
+    partition filters reach both. The delta is read with the base's
+    schema, which it shares by construction, so opening it costs no
+    second schema-inference job. Every corpus reader goes through
+    here."""
+    import os
+
+    base = spark.read.parquet(os.path.join(path, objs["corpus"]))
+    if "delta" not in objs:
+        return base
+    return base.unionByName(
+        spark.read.schema(base.schema).parquet(
+            os.path.join(path, objs["delta"])
+        )
     )
 
 
 def ivf_resolve(spark: SparkSession, path: str) -> dict:
     """logical-name → ABSOLUTE physical directory for the live object
     set of a persisted IVF index ({"corpus": …, "centroids": …,
-    "idstate": …[, "tombstones": …]}) — the accessor tests and tools
+    "idstate": …[, "delta": …][, "tombstones": …]}; "corpus" is the
+    base object only — ivf_read gives base ∪ delta rows) — the
+    accessor tests and tools
     use instead of assuming fixed subdirectory names, which stopped
     being fixed when the versioned-pointer layout landed (round 14)."""
     import os
@@ -791,18 +820,15 @@ def _idstate_write(
 
 
 def _idstate_build(spark: SparkSession, path: str, objs: dict) -> None:
-    """Recompute the id Bloom from the given corpus OBJECT's id column
-    into the given idstate object — the shared epilogue of every
-    operation that leaves the corpus as the sole id authority (build,
-    compact, recluster, an append over a torn/absent sidecar). Object
-    names come from the layout the caller is building or mutating; the
-    in-place overwrite is safe because idstate is writer-private state
-    (only lock-holding mutation paths ever read it)."""
-    import os
-
-    ids = spark.read.parquet(
-        os.path.join(path, objs["corpus"])
-    ).select("vec_id")
+    """Recompute the id Bloom from the id column of the given layout's
+    corpus (base ∪ delta) into the given idstate object — the shared
+    epilogue of every operation that leaves the corpus as the sole id
+    authority (build, compact, recluster, an append over a torn/absent
+    sidecar). Object names come from the layout the caller is building
+    or mutating; the in-place overwrite is safe because idstate is
+    writer-private state (only lock-holding mutation paths ever read
+    it)."""
+    ids = _corpus(spark, path, objs).select("vec_id")
     n = ids.count()  # parquet metadata count — no data pages read
     m = _bloom_m(n)
     _idstate_write(spark, path, objs, m, n, _bloom_build(ids, m))
@@ -855,24 +881,31 @@ def _tombstones(
     )
 
 
+def _live(spark: SparkSession, path: str, objs: dict) -> DataFrame:
+    """_corpus with delete masking: anti-joined against the (broadcast,
+    small-by-contract) tombstone set of the same layout."""
+    corpus = _corpus(spark, path, objs)
+    tomb = _tombstones(spark, path, objs)
+    if tomb is None:
+        return corpus
+    return corpus.join(F.broadcast(tomb), "vec_id", "left_anti")
+
+
 def ivf_live(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
-    """ivf_read with delete masking: the corpus anti-joined against the
-    (broadcast, small-by-contract) tombstone set. Every read surface
+    """ivf_read with delete masking (_live). Every read surface
     (index_status/index_probe, the CLI/HTTP routes) consumes THIS view;
     ivf_read stays the raw-layout accessor. A tombstone set that has
     grown past broadcast size is the signal to ivf_compact. The layout
     pointer is resolved ONCE for corpus + centroids + tombstones, so
-    the three frames always come from one consistent version."""
+    the frames always come from one consistent version."""
     import os
 
     io = StoreIO(path, spark)
     objs = _ivf_layout(io, path)["objects"]
-    corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
-    cents = spark.read.parquet(os.path.join(path, objs["centroids"]))
-    tomb = _tombstones(spark, path, objs)
-    if tomb is not None:
-        corpus = corpus.join(F.broadcast(tomb), "vec_id", "left_anti")
-    return corpus, cents
+    return (
+        _live(spark, path, objs),
+        spark.read.parquet(os.path.join(path, objs["centroids"])),
+    )
 
 
 def _cells_array(cents: DataFrame) -> DataFrame:
@@ -966,11 +999,16 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
     """Incremental IVF maintenance (round 10 — the r9 verdict's ask made
     a first-class engine instead of a convention): ivf_assign ONLY the
     appended (vec_id, v) vectors against the PERSISTED centroids and
-    append their rows into the cell-partitioned layout. No re-train, no
-    rewrite — existing cell directories are untouched (pinned by
-    tests/test_rowsonly.py::test_ivf_append_equals_same_quantizer_rebuild),
+    add their rows to the layout's cell-partitioned DELTA object. No
+    re-train, no rewrite — the base corpus object is untouched (pinned
+    by tests/test_rowsonly.py::test_ivf_append_equals_same_quantizer_rebuild),
     so appending a day's vectors to a billion-vector index costs one
-    map-side assignment + an append write of the new rows only.
+    map-side assignment + an append write of the new rows only. The
+    first append after a base rewrite creates the delta object (rows
+    first, then one pointer bump — the tombstones pattern of
+    ivf_delete); later appends add files to it. Keeping appends out of
+    the base is what lets ivf_compact carry the base by name when
+    every deleted id was appended since the last rewrite.
 
     APPEND-ONLY contract: an id that already LIVES in the index is
     REFUSED (ValueError) — silently appending it would duplicate the
@@ -984,16 +1022,18 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
     tools/ivf_bench.py records append cost flat as the corpus grows.
 
     A TOMBSTONED id does not count as indexed: appending it re-admits
-    the id (ivf_delete's contract). Round 14: re-admission runs a full
-    ivf_compact first — the versioned-pointer layout has no in-place
-    cell rewrite (that WAS the torn-read window the pointer protocol
-    closes), so the re-admit price is one atomic compaction of the
-    live view, after which the id is absent from corpus, tombstones
-    AND Bloom and the append proceeds clean. Steady-state appends
-    (all-new ids, no tombstone overlap) never pay it. The whole
-    check+compact+write critical section runs under the single-writer
-    mutation lock (advice r10: concurrent appends could both pass the
-    clash check, then both write).
+    the id (ivf_delete's contract). Re-admission runs ivf_compact first
+    — the versioned-pointer layout has no in-place row rewrite (that
+    WAS the torn-read window the pointer protocol closes) — after which
+    the id is absent from base, delta, tombstones AND Bloom and the
+    append proceeds clean; the compact costs O(delta) when every
+    tombstone lives in the delta and O(live corpus) when one lives in
+    the base (see _ivf_compact_locked). It also keeps ids disjoint
+    across base and delta, which the compact's check relies on.
+    Steady-state appends (all-new ids, no tombstone overlap) never pay
+    it. The whole check+compact+write critical section runs under the
+    single-writer mutation lock (advice r10: concurrent appends could
+    both pass the clash check, then both write).
 
     The quality drift appends leave behind (centroids no longer
     centroids of their cells) is what ivf_imbalance gauges — recluster
@@ -1100,7 +1140,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
             # the old take(1) was a whole extra job on the append path).
             any_suspect = n_sus > 0
         if any_suspect:
-            live_ids = ivf_live(spark, path)[0].select("vec_id")
+            live_ids = _live(spark, path, objs).select("vec_id")
             clash_rows = (
                 live_ids.join(suspects, "vec_id", "left_semi")
                 .limit(6)
@@ -1109,8 +1149,8 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
             if clash_rows:
                 raise _clash_error(clash_rows)
         if "pqbooks" in objs:
-            # PQ-attached store: the delta's codes ride IN its corpus
-            # rows (same write, atomically complete — see _pq_codes),
+            # PQ-attached store: the delta's codes ride IN its rows
+            # (same write, atomically complete — see _pq_codes),
             # encoded with the STORED book against the STORED anchors
             # (residual coding — round 15): no retraining, no anchor
             # recompute, O(delta)
@@ -1119,59 +1159,48 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
                 _pq_books_read(spark, path, objs),
                 anchors=_pq_anchors_read(spark, path, objs),
             )
-        corpus_dir = os.path.join(path, objs["corpus"])
-        if state is None:
-            # torn/absent sidecar: append, then derive the sidecar from
-            # the (now complete) corpus id column. Retry safety needs
-            # no Bloom ordering here — with no sidecar, a retry re-runs
-            # the exact full check above.
-            _corpus_drop_sentinel(spark, corpus_dir)
-            assigned.write.mode("append").partitionBy("cell").parquet(
-                corpus_dir
-            )
-            _idstate_build(spark, path, objs)
-            return
-        # Sidecar BEFORE corpus rows (review r11): the Bloom is
-        # superset-safe — a crash between the two writes costs a
-        # retry only false positives (exact-check fallback), whereas
-        # the old corpus-first order let a crashed-then-retried append
-        # slip a stale zero-suspect Bloom and duplicate every id
-        # silently.
-        m, n = int(state.m), int(state.n) + int(n_delta)
-        if n * 16 > m:
-            # past the filter's 16-bits/id design capacity: rebuild
-            # right-sized over corpus ∪ delta (the delta is not on
-            # disk yet) — amortized O(corpus) per capacity doubling,
-            # O(delta) in the steady state; FP stays ≤ ~2× the 7e-4
-            # design rate for the filter's whole life
-            ids = spark.read.parquet(corpus_dir).select(
-                "vec_id"
-            ).unionByName(delta_ids)
-            m = _bloom_m(n)
-            bits = _bloom_build(ids, m)
-        else:
-            import numpy as np
+        if state is not None:
+            # Sidecar BEFORE delta rows (review r11): the Bloom is
+            # superset-safe — a crash between the two writes costs a
+            # retry only false positives (exact-check fallback),
+            # whereas the old rows-first order let a crashed-then-
+            # retried append slip a stale zero-suspect Bloom and
+            # duplicate every id silently.
+            m, n = int(state.m), int(state.n) + int(n_delta)
+            if n * 16 > m:
+                # past the filter's 16-bits/id design capacity: rebuild
+                # right-sized over the stored ids ∪ the appended ones
+                # (not on disk yet) — amortized O(corpus) per capacity
+                # doubling, O(delta) in the steady state; FP stays
+                # ≤ ~2× the 7e-4 design rate for the filter's whole life
+                ids = _corpus(spark, path, objs).select(
+                    "vec_id"
+                ).unionByName(delta_ids)
+                m = _bloom_m(n)
+                bits = _bloom_build(ids, m)
+            else:
+                import numpy as np
 
-            # the delta's bitmap was already built by the fused screen
-            # above — no second delta scan
-            bits = (
-                np.frombuffer(bytes(state.bits), dtype=np.uint8)
-                | np.frombuffer(delta_bloom_bits, dtype=np.uint8)
-            ).tobytes()
-        _idstate_write(spark, path, objs, m, n, bits)
-        # a compact that emptied the corpus leaves a zero-row sentinel
-        # file at the corpus object's root; drop it only NOW,
-        # immediately before the partitioned write lands next to it
-        # (review r12: dropping it before the capacity-resize branch
-        # read the corpus id column deterministically failed the
-        # append-after-empty case with UNABLE_TO_INFER_SCHEMA and left
-        # the corpus file-less — the exact state the sentinel exists
-        # to prevent; the sentinel is zero rows, so reading through it
-        # for the resize union is harmless)
-        _corpus_drop_sentinel(spark, corpus_dir)
-        assigned.write.mode("append").partitionBy("cell").parquet(
-            corpus_dir
-        )
+                # the delta's bitmap was already built by the fused
+                # screen above — no second delta scan
+                bits = (
+                    np.frombuffer(bytes(state.bits), dtype=np.uint8)
+                    | np.frombuffer(delta_bloom_bits, dtype=np.uint8)
+                ).tobytes()
+            _idstate_write(spark, path, objs, m, n, bits)
+        if n_delta:
+            # an object with no data file is unreadable
+            # (UNABLE_TO_INFER_SCHEMA), so an empty append creates none
+            objs = _add_to_object(
+                io, path, lay, "delta",
+                lambda d: assigned.write.mode("append")
+                .partitionBy("cell").parquet(d),
+            )
+        if state is None:
+            # torn/absent sidecar: derive it from the (now complete)
+            # id column. Retry safety needs no Bloom ordering here —
+            # with no sidecar, a retry re-runs the exact full check.
+            _idstate_build(spark, path, objs)
 
 
 def _corpus_has_cells(spark: SparkSession, corpus_path: str) -> bool:
@@ -1187,95 +1216,131 @@ def _corpus_has_cells(spark: SparkSession, corpus_path: str) -> bool:
     return False
 
 
-def _corpus_drop_sentinel(spark: SparkSession, corpus_path: str) -> None:
-    """Remove the zero-row sentinel file a compact leaves when the live
-    view is empty: a partitioned append landing next to a
-    root-level data file would make partition discovery fail with
-    'conflicting directory structures'. In a healthy partitioned
-    corpus, data files only live under cell=N/ — root-level part-*
-    files can only be the sentinel. One listStatus; called only on
-    append paths, where a write is about to happen anyway."""
-    fs, jvm = _hadoop_fs(spark, corpus_path)
-    jp = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    if not fs.exists(jp):
-        return
-    for st in fs.listStatus(jp):
-        if st.isFile() and st.getPath().getName().startswith("part-"):
-            fs.delete(st.getPath(), False)
+def _add_to_object(
+    io: StoreIO, path: str, lay: dict, logical: str, write
+) -> dict:
+    """The ADDITIVE mutation of storeio.py: ``write(dir)`` adds files to
+    the layout's ``logical`` object (the append delta, the tombstones),
+    creating the object first when the layout has none. Rows first,
+    pointer second: a new object is invisible until one atomic pointer
+    bump references it, and a crash in between leaves an orphan the
+    next preamble GCs — the write simply didn't happen. Returns the
+    objects of the resulting layout."""
+    import os
+
+    objs = lay["objects"]
+    target = objs.get(logical) or object_dir(logical, lay["version"] + 1)
+    write(os.path.join(path, target))
+    if logical not in objs:
+        objs = {**objs, logical: target}
+        pointer_write(
+            io, path,
+            {
+                "version": lay["version"] + 1,
+                "objects": objs,
+                "retired": retired_union(lay, [], objs.values()),
+            },
+        )
+    return objs
 
 
 def _ivf_compact_locked(
     spark: SparkSession, io: StoreIO, path: str, lay: dict
 ) -> tuple[dict, dict]:
     """The destructive half of ivf_compact (caller holds the lock and
-    has run the preamble): write the LIVE view — corpus anti-joined
-    against the tombstone set — as a complete NEW corpus object, build
-    a right-sized id Bloom over it into a new idstate object, and
-    commit both with one pointer swap that simultaneously drops the
-    tombstones entry (so a deleted id can never be resurrected by a
-    half-published state — the swap is the only visible event).
-    Centroids are untouched and carried by name into the new version.
+    has run the preamble): drop the tombstoned rows, build a
+    right-sized id Bloom into a new idstate object, and commit with one
+    pointer swap that simultaneously drops the tombstones entry (so a
+    deleted id can never be resurrected by a half-published state — the
+    swap is the only visible event). Centroids are carried by name.
 
-    Round 14 trade, stated honestly: the pre-pointer compact rewrote
-    only the cells that held dead rows (dynamic partition overwrite),
-    which was O(affected cells) but tore the cell being rewritten for
-    any racing reader. Atomic reads on raw parquet require the
-    replacement object to be complete, so compact is now O(live
-    corpus) — the cost recluster (which implies compact) always paid —
-    and in exchange NO read surface can ever observe a half-compacted
-    cell. At 100 TB a compact batches many deletes, so the amortized
-    cost per reclaimed row is unchanged; per-cell pruning with atomic
-    publish would need a per-cell file manifest (a table format's
-    commit log), the documented raw-parquet limit. If the live view is
-    empty a zero-row schema-bearing sentinel file keeps the new corpus
-    object readable (advice r11: zero parquet files raise
-    UNABLE_TO_INFER_SCHEMA on every read surface); ivf_append drops
-    the sentinel before its partitioned write lands.
+    Work is O(delta) unless a deleted id lives in the base. One exact
+    O(|tombstones| + |delta|) join counts how many tombstoned ids the
+    delta object holds, which answers whether every one of them is
+    there (ids are disjoint across base and delta: re-admitting an id
+    compacts first).
 
-    Returns (new layout, stats)."""
+    * Yes (or nothing is tombstoned): the base is carried BY NAME —
+      its files are not rewritten; only its id column is read, for the
+      Bloom below — and only the delta's live rows are rewritten into a
+      new delta object, or no delta is kept when none survive.
+    * No: the live view of base ∪ delta is rewritten as a complete new
+      base object and no delta is kept — O(live corpus). Atomic reads
+      on raw parquet need the replacement object to be complete, so a
+      base holding one dead row is rewritten whole; per-cell rewrites
+      with atomic publish would need a per-cell file manifest (a table
+      format's commit log), the documented raw-parquet limit. If the
+      live view is empty a zero-row schema-bearing sentinel file keeps
+      the new base readable (advice r11: zero parquet files raise
+      UNABLE_TO_INFER_SCHEMA on every read surface); appends never
+      write into the base, so the sentinel stays harmless.
+
+    The idstate Bloom is rebuilt over the new base ∪ delta id column
+    either way (Blooms cannot unset the deleted ids). PQ books and
+    anchors carry by name: cells are unchanged and the rewritten rows
+    keep their pq_code column.
+
+    Returns (new layout, stats) — stats carry ``base_rewritten``."""
     import os
 
     objs = lay["objects"]
-    corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
     tomb = _tombstones(spark, path, objs)
-    n_tomb = tomb.count() if tomb is not None else 0
-    live = (
-        corpus
-        if tomb is None
-        else corpus.join(F.broadcast(tomb), "vec_id", "left_anti")
+    delta = (
+        spark.read.parquet(os.path.join(path, objs["delta"]))
+        if "delta" in objs else None
     )
+    n_tomb = n_in_delta = 0
+    if tomb is not None and delta is None:
+        n_tomb = tomb.count()
+    elif tomb is not None:
+        # one job counts the tombstones and how many of them the delta
+        # holds (delta ids are distinct: appends refuse duplicates)
+        n_tomb, n_in_delta = tomb.join(
+            delta.select("vec_id", F.lit(1).alias("_in_delta")),
+            "vec_id", "left",
+        ).agg(F.count("*"), F.count("_in_delta")).first()
+    base_rewritten = n_in_delta < n_tomb
     v = lay["version"] + 1
     new_objs = {
-        "corpus": object_dir("corpus", v),
-        "centroids": objs["centroids"],
-        "idstate": object_dir("idstate", v),
+        k: n for k, n in objs.items() if k not in ("delta", "tombstones")
     }
-    if "pqbooks" in objs:
-        # the live rewrite carries the pq_code column through; the
-        # trained book (and the residual anchors — cells are unchanged
-        # by a compact) is corpus-content state, not layout state:
-        # both carry into the new version by name
-        new_objs["pqbooks"] = objs["pqbooks"]
-        if "pqanchors" in objs:
-            new_objs["pqanchors"] = objs["pqanchors"]
-    cdir = os.path.join(path, new_objs["corpus"])
-    # reads the OLD corpus object, writes the NEW one — no
+    new_objs["idstate"] = object_dir("idstate", v)
+    # each branch reads the OLD objects and writes a NEW one — no
     # read-overwrite hazard, so no checkpoint pin is needed
-    live.write.mode("overwrite").partitionBy("cell").parquet(cdir)
-    if not _corpus_has_cells(spark, cdir):
-        _one_slice_df(spark, [], corpus.schema).write.mode(
-            "append"
-        ).parquet(cdir)
+    if base_rewritten:
+        new_objs["corpus"] = object_dir("corpus", v)
+        cdir = os.path.join(path, new_objs["corpus"])
+        live = _live(spark, path, objs)
+        live.write.mode("overwrite").partitionBy("cell").parquet(cdir)
+        if not _corpus_has_cells(spark, cdir):
+            _one_slice_df(spark, [], live.schema).write.mode(
+                "append"
+            ).parquet(cdir)
+    elif delta is not None:
+        name = object_dir("delta", v)
+        ddir = os.path.join(path, name)
+        live = (
+            delta if tomb is None
+            else delta.join(F.broadcast(tomb), "vec_id", "left_anti")
+        )
+        live.write.mode("overwrite").partitionBy("cell").parquet(ddir)
+        if _corpus_has_cells(spark, ddir):
+            new_objs["delta"] = name
+        else:
+            io.rmtree(ddir)  # no delta row survived: keep no delta
     _idstate_build(spark, path, new_objs)
-    retired = retired_union(
-        lay,
-        {objs[k] for k in ("corpus", "idstate", "tombstones") if k in objs},
-        new_objs.values(),
-    )
-    new_lay = {"version": v, "objects": new_objs, "retired": retired}
+    new_lay = {
+        "version": v,
+        "objects": new_objs,
+        "retired": retired_union(lay, objs.values(), new_objs.values()),
+    }
     pointer_write(io, path, new_lay)
-    n = spark.read.parquet(cdir).count()
-    return new_lay, {"tombstones_cleared": n_tomb, "n_vectors": n}
+    n = _corpus(spark, path, new_objs).count()
+    return new_lay, {
+        "tombstones_cleared": n_tomb,
+        "n_vectors": n,
+        "base_rewritten": base_rewritten,
+    }
 
 
 def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
@@ -1283,7 +1348,10 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
     index CRUD surface): tombstone the given ids. Probe/status read
     through ivf_live, which anti-joins the tombstone set, so deleted
     ids stop answering immediately; the bytes stay on disk until
-    ivf_compact rewrites the live view. Appending a tombstoned id
+    ivf_compact reclaims them — rewriting only the append delta when
+    every deleted id was appended since the last base rewrite, the
+    whole live corpus when one lives in the base (see
+    _ivf_compact_locked). Appending a tombstoned id
     re-admits it (ivf_append compacts first). Returns the number of
     ids that were actually live (a delete of an absent id is a no-op,
     not an error — DELETE semantics, mirroring SQL).
@@ -1297,9 +1365,10 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
     delete batch — some ids masked, others not; parquet job commit is
     per-file atomic, so a single-file delta makes the batch
     all-or-nothing, and the delta is small by contract). NO corpus
-    scan happens here beyond the live-subset semi-join. The Bloom sidecar intentionally keeps deleted ids
-    (Blooms can't unset); they resolve through the exact-check
-    fallback until a compact rebuilds the filter.
+    scan happens here beyond the live-subset semi-join. The Bloom
+    sidecar intentionally keeps deleted ids (Blooms can't unset); they
+    resolve through the exact-check fallback until a compact rebuilds
+    the filter.
 
     Only the LIVE subset of the requested ids is persisted (advice
     r11): a tombstone for a never-indexed id is absent from the Bloom
@@ -1307,16 +1376,13 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
     zero-suspect fast path and the appended vector would be silently
     masked by ivf_live. Tombstones ⊆ ever-indexed ids is the
     invariant every other surface assumes."""
-    import os
-
     if not ids:
         return 0
     _ivf_404_probe(spark, path)
     with _ivf_mutation_lock(spark, path):
         io = StoreIO(path, spark)
         lay = _ivf_preamble(io, path)
-        objs = lay["objects"]
-        live_ids = ivf_live(spark, path)[0].select("vec_id")
+        live_ids = _live(spark, path, lay["objects"]).select("vec_id")
         # driver-side dedupe (review r11): [5, 5] must report
         # deleted=1, matching the single live row it masks
         wanted = _one_slice_df(
@@ -1328,36 +1394,22 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
         )
         n_live = live_wanted.count()
         if n_live:
-            existing = objs.get("tombstones")
-            target = existing or object_dir("tombstones", lay["version"] + 1)
-            live_wanted.coalesce(1).write.mode("append").parquet(
-                os.path.join(path, target)
+            _add_to_object(
+                io, path, lay, "tombstones",
+                lambda d: live_wanted.coalesce(1).write.mode("append")
+                .parquet(d),
             )
-            if existing is None:
-                # rows first, pointer second: the new object is
-                # invisible until the atomic bump references it, and a
-                # crash in between leaves an orphan the next preamble
-                # GCs — the delete simply didn't happen
-                pointer_write(
-                    io, path,
-                    {
-                        "version": lay["version"] + 1,
-                        "objects": {**objs, "tombstones": target},
-                        "retired": retired_union(
-                            lay, [],
-                            list(objs.values()) + [target],
-                        ),
-                    },
-                )
         return n_live
 
 
 def ivf_compact(spark: SparkSession, path: str) -> dict:
-    """Physical reclamation: publish the live view (tombstoned rows
-    dropped) as a new corpus version with a right-sized id Bloom, and
-    retire corpus + idstate + tombstones in ONE atomic pointer swap —
-    see _ivf_compact_locked for the protocol and the O(live) cost
-    statement. No crash-ordering subtleties remain: every pre-swap
+    """Physical reclamation: drop the tombstoned rows, rebuild the id
+    Bloom right-sized, and retire what was replaced (delta or base,
+    idstate, tombstones) in ONE atomic pointer swap — see
+    _ivf_compact_locked for the protocol and the O(delta)-unless-a-
+    base-id-was-deleted cost rule. Returns ``{"tombstones_cleared",
+    "n_vectors", "base_rewritten"}``. No crash-ordering subtleties
+    remain: every pre-swap
     artifact is an unreferenced object dir the next preamble GCs, and
     post-swap readers are fully on the compacted version."""
     _ivf_404_probe(spark, path)
@@ -1396,13 +1448,11 @@ def ivf_imbalance(spark: SparkSession, path: str, recluster_above: float = 3.0) 
 
 def _ivf_404_probe(spark: SparkSession, path: str) -> None:
     """Existence probe BEFORE a mutation takes the lock: a bogus or
-    pointer-less path — or a pointer whose corpus object is missing —
+    pointer-less path — or a pointer whose corpus objects are missing —
     must raise the reader's AnalysisException (the 404 surface), not
     manufacture directories as a side effect of locking."""
-    import os
-
     objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
-    spark.read.parquet(os.path.join(path, objs["corpus"])).schema
+    _corpus(spark, path, objs).schema
 
 
 def ivf_recover(spark: SparkSession, path: str) -> bool:
@@ -1450,14 +1500,15 @@ def ivf_recluster(
     posture — assignment still stamps every row).
 
     Publish protocol (round 14 — r13 verdict item 1): the new corpus,
-    centroids and idstate are trained FROM the live view and written
+    centroids and idstate are trained FROM the live view (base ∪
+    delta, so the append delta folds into the new base) and written
     as version-N+1 objects beside the live set (the index stays fully
     readable and probe-consistent through training and staging — the
     new objects are unreferenced until the swap), then ONE atomic
     pointer commit publishes all three and retires the old
-    objects together with the tombstones entry (recluster implies
-    compact, and retiring both in the same swap kills the resurrection
-    hazard by construction). A crash before the swap leaves readers on
+    objects together with the delta and tombstones entries (recluster
+    implies compact, and retiring them in the same swap kills the
+    resurrection hazard by construction). A crash before the swap leaves readers on
     the old version with orphan objects the next preamble GCs; a crash
     after it leaves readers on the new version. The journaled
     rename/trash/roll-forward machinery this replaces — and its
@@ -3078,19 +3129,21 @@ def pq_attach(
     """Attach product quantization to a persisted IVF index (r13
     verdict item 2 — the FAISS IVF-PQ layout, adapted to raw parquet):
     train the codebook from the stored corpus (hash-pruned
-    deterministic sample — _pq_train_books), re-write the corpus as a
-    new versioned object whose rows carry a ``pq_code`` column, and
+    deterministic sample — _pq_train_books), re-write the corpus (base
+    ∪ append delta, so the delta retires) as a new versioned base
+    object whose rows carry a ``pq_code`` column, and
     publish the trained book as a ``pqbooks`` pointer object — one
     atomic swap, so readers see the store with PQ or without, never
     half. From then on:
 
     * ivf_append encodes ONLY its delta with the stored book against
       the stored anchors (no retraining, no re-encode — the O(delta)
-      append contract holds); the code lands in the same row write as
-      the vector, so no crash ordering can desynchronize codes from
-      corpus.
-    * ivf_compact carries codes AND anchors through its live rewrite
-      (cells unchanged); ivf_recluster keeps the book but must
+      append contract holds); the code lands in the same delta row
+      write as the vector, so no crash ordering can desynchronize codes
+      from corpus.
+    * ivf_compact carries codes AND anchors through its live rewrite of
+      the delta or the base (cells unchanged); ivf_recluster keeps the
+      book but must
       recompute anchors and re-encode — residual codes are
       cell-RELATIVE, and the recluster moved every row's cell (the
       rewrite it was already paying; the re-encode rides in the same
@@ -3129,11 +3182,8 @@ def pq_attach(
         io = StoreIO(path, spark)
         lay = _ivf_preamble(io, path)
         objs = lay["objects"]
-        corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
-        live = corpus
-        tomb = _tombstones(spark, path, objs)
-        if tomb is not None:
-            live = corpus.join(F.broadcast(tomb), "vec_id", "left_anti")
+        corpus = _corpus(spark, path, objs)
+        live = _live(spark, path, objs)
         # ONE corpus-wide count serves the hash-cut threshold AND the
         # response statistic (encode is 1:1, so codes == corpus rows).
         # The trainer's threshold sees the raw-corpus count even though
@@ -3155,8 +3205,9 @@ def pq_attach(
             anchors=anchors,
         )
         v = lay["version"] + 1
+        # the coded base holds the delta's rows too: the delta retires
         new_objs = {
-            **objs,
+            **{k: n for k, n in objs.items() if k != "delta"},
             "corpus": object_dir("corpus", v),
             "pqbooks": object_dir("pqbooks", v),
             "pqanchors": object_dir("pqanchors", v),
@@ -3175,15 +3226,15 @@ def pq_attach(
             _pq_books_json(books).encode("utf-8"),
         )
         _pq_anchors_write(spark, path, new_objs, anchors)
-        retired = retired_union(
-            lay,
-            {objs["corpus"]}
-            | {objs[k] for k in ("pqbooks", "pqanchors") if k in objs},
-            new_objs.values(),
-        )
         pointer_write(
             io, path,
-            {"version": v, "objects": new_objs, "retired": retired},
+            {
+                "version": v,
+                "objects": new_objs,
+                "retired": retired_union(
+                    lay, objs.values(), new_objs.values()
+                ),
+            },
         )
         return {"n_codes": n_corpus, "version": v}
 
@@ -3268,15 +3319,12 @@ def pq_probe_stored(
         )
     books = _pq_books_read(spark, path, objs)
     anchors = _pq_anchors_read(spark, path, objs)
-    corpus = spark.read.parquet(os.path.join(path, objs["corpus"]))
+    corpus = _live(spark, path, objs)
     if "pq_code" not in corpus.columns:
         raise ValueError(
             f"index at {path!r} names pqbooks but its corpus carries "
             "no pq_code column — the layout is from a newer writer"
         )
-    tomb = _tombstones(spark, path, objs)
-    if tomb is not None:
-        corpus = corpus.join(F.broadcast(tomb), "vec_id", "left_anti")
     wanted = sorted({int(i) for i in probe_ids})
     probe_rows = (
         corpus.filter(F.col("vec_id").isin(wanted))
@@ -3394,8 +3442,8 @@ def pq_probe_stored(
         if lost:
             raise ValueError(
                 f"index at {path!r} is torn: refine candidate vec_id "
-                f"{lost[0]} has no raw vector in the corpus object "
-                f"{objs['corpus']!r} ({len(lost)} of {len(vids)} missing)"
+                f"{lost[0]} has no raw vector in the corpus objects "
+                f"({len(lost)} of {len(vids)} missing)"
             )
         pmap = {
             int(r.vec_id): [float(x) for x in r.v] for r in probe_rows
@@ -4034,8 +4082,9 @@ def q_sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout (ivf_index → ivf_write); the 20% delta (vec_id % 5 = 0 —
     the probe ids land in the delta, so the appended rows provably
     participate) goes through ivf_append: one broadcast-k assignment
-    pass over ONLY the new rows, appended into the cell-partitioned
-    parquet. The probe then runs against the read-back index — same
+    pass over ONLY the new rows, written to the index's cell-partitioned
+    delta object. The probe then runs against the read-back base ∪
+    delta (ivf_read) — same
     contract as q_sim_topk_ivf. At 100 TB the append touches new rows
     only; ivf_imbalance gauges when accumulated appends skew the cells
     enough to warrant a re-train (tools/ivf_bench.py records the

@@ -3192,6 +3192,11 @@ def scd2_recover_report(path: str, spark: SparkSession) -> dict:
     [superseded pointer files the GC could not reclaim]}`` — the
     surface entry (CLI scd2-recover, POST /scd2/recover,
     api.scd2_recover_store); see storeio.pointer_recover."""
+    # pre-lock fast path: a path with no pointer has nothing to recover
+    # — return without manufacturing the lock file (and its missing
+    # parent directories) on bogus paths
+    if pointer_read(StoreIO(path, spark), path) is None:
+        return {"recovered": False, "gc_skipped": []}
     with _scd2_mutation_lock(spark, path):
         return pointer_recover(StoreIO(path, spark), path)
 

@@ -23,13 +23,19 @@ directory trees with ONE on-disk format:
   swap of grace).
 * ADDITIVE mutations (IVF append / delete-tombstone, SCD2 none) keep
   adding files to the current version's directories; racing readers may
-  or may not see the new files — both consistent states.
-* DESTRUCTIVE mutations (rebuild, compact, recluster, SCD2 merge) write a
-  complete new object set beside the old one (unreferenced until the
-  swap, so staging IS just writing), swap the pointer, and RETIRE the
-  replaced objects in the pointer's ``retired`` list. Retired objects are
-  garbage-collected at a LATER mutation's preamble (``pointer_gc``), not
-  at swap time, and only once they are older than ``GC_GRACE_SECONDS``
+  or may not see the new files — both consistent states. An IVF append
+  adds to the ``delta`` object, never to the base ``corpus``; the first
+  append after a base rewrite creates the delta (rows first, then one
+  pointer bump), as the first delete creates the tombstones object.
+* DESTRUCTIVE mutations (rebuild, compact, recluster, PQ attach, SCD2
+  merge) write complete new objects beside the old ones (unreferenced
+  until the swap, so staging IS just writing), swap the pointer, and
+  RETIRE the replaced objects in the pointer's ``retired`` list; an
+  object they do not replace is carried by name (an IVF compact whose
+  every tombstone is in the delta writes only a new delta). Retired
+  objects are garbage-collected at a LATER mutation's preamble
+  (``pointer_gc``), not at swap time, and only once they are older than
+  ``GC_GRACE_SECONDS``
   (``pointer_write`` stamps each retirement with a wall-clock time in
   ``retired_at``), so two rapid back-to-back mutations cannot expire a
   slow reader's files. The explicit recover surfaces (ivf_recover /
@@ -246,8 +252,8 @@ def pointer_require(io: StoreIO, path: str) -> dict:
     """``pointer_read`` for the read surfaces: a path with no pointer
     file raises the ``[PATH_NOT_FOUND]`` AnalysisException a Spark read
     of a missing path raises, so every caller's existing 'no store
-    here' mapping (HTTP 404 "no IVF index", 400 "no SCD2 store")
-    answers a bogus path and a pointer-less directory alike."""
+    here' mapping (HTTP 404 "no IVF index" / "no SCD2 store") answers
+    a bogus path and a pointer-less directory alike."""
     lay = pointer_read(io, path)
     if lay is None:
         from pyspark.errors import AnalysisException

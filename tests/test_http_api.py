@@ -962,6 +962,27 @@ def test_scd2_lifecycle_over_http(base_url, spark, tmp_path):
     assert exc.value.code == 400
 
 
+def test_missing_store_is_404_and_recover_creates_nothing(base_url, tmp_path):
+    """A path holding no store answers alike on both stores: 404 on
+    the SCD2 snapshot and the index routes, and the SCD2 recover is a
+    no-op that creates nothing — not even the lock file's missing
+    parent directories."""
+    bogus = str(tmp_path / "a" / "b" / "store")
+    status, res = _post(f"{base_url}/scd2/recover", {"path": bogus})
+    assert status == 200
+    assert res == {"path": bogus, "recovered": False, "gc_skipped": []}
+    assert not os.path.exists(tmp_path / "a")
+    for route, body in (
+        ("/scd2/snapshot", {"path": bogus, "ts": "2024-01-25 00:00:00"}),
+        ("/index/probe", {"path": bogus, "probe_ids": [1]}),
+        ("/index/recover", {"path": bogus}),
+    ):
+        with pytest.raises(urllib.error.HTTPError) as exc:
+            _post(f"{base_url}{route}", body)
+        assert exc.value.code == 404, route
+    assert not os.path.exists(tmp_path / "a")
+
+
 # ---------------------------------------------------------------- auth guard
 
 

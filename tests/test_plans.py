@@ -682,6 +682,68 @@ def test_ivf_written_index_roundtrip(spark, tmp_path):
     assert "dynamicpruning" in plan.lower(), plan[:3000]
 
 
+def test_ivf_delta_probe_prunes_both_scans(spark, tmp_path):
+    """An index with an append delta reads base ∪ delta as two
+    cell-partitioned scans under a union (Spark refuses two partitioned
+    roots in one read); the probe's cell equi-join must reach EACH scan
+    as a dynamic partition-pruning filter, and answer exactly as the
+    in-memory union does."""
+    import pyspark.sql.functions as F
+
+    from correlationapi_spark.llm.similarity import (
+        corpus_view,
+        ivf_append,
+        ivf_assign,
+        ivf_index,
+        ivf_probe,
+        ivf_read,
+        ivf_resolve,
+        ivf_write,
+    )
+
+    emb = corpus_view(
+        spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet"),
+        "vec_id", "embedding",
+    )
+    assigned, cents = ivf_index(emb.filter(F.col("vec_id") % 5 != 0),
+                                n_cells=4)
+    path = str(tmp_path / "ivf_delta")
+    ivf_write(assigned, cents, path)
+    delta = emb.filter(F.col("vec_id") % 5 == 0)
+    ivf_append(spark, path, delta)
+    assert "delta" in ivf_resolve(spark, path)
+
+    def probes_of(c):
+        return c.filter(F.col("vec_id") < 3).select(
+            F.col("vec_id").alias("probe_id"),
+            F.col("v").alias("pv"),
+            F.col("na").alias("pna"),
+        )
+
+    corpus, cents2 = ivf_read(spark, path)
+    probe_df = ivf_probe(corpus, cents2, probes_of(corpus), k=5, n_probe=2)
+    union = assigned.select("vec_id", "v", "na", "_vn2", "cell").unionByName(
+        ivf_assign(cents, delta)
+    )
+    want = ivf_probe(union, cents, probes_of(union), k=5, n_probe=2)
+    assert sorted(map(tuple, probe_df.collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+    import re
+
+    plan = probe_df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    # one cell attribute per corpus scan, each pruned by the probe cells
+    pruned = re.findall(
+        r"dynamicpruningexpression\((cell#\d+) IN dynamicpruning#\d+\)", plan
+    )
+    assert len(set(pruned)) == 2, plan
+
+
 def test_round9_engine_shapes(spark):
     # q_text_keyword: rank<=3 must compile to WindowGroupLimit
     # (bounded per-task heap on the doc-keyed exchange)

@@ -2556,11 +2556,10 @@ def test_ivf_append_equals_same_quantizer_rebuild(spark, tmp_path):
     before = files()
     ivf_append(spark, path, delta)
     after = files()
-    # every pre-existing file survives byte-identical; only new files added
-    assert set(before) <= set(after)
-    for p, sig in before.items():
-        assert after[p] == sig, f"base file rewritten: {p}"
-    assert len(after) > len(before)
+    # every base file survives byte-identical; the appended rows are
+    # new files in the delta object, none in the base
+    assert after == before, "base corpus object touched by the append"
+    assert _object_files(ivf_resolve(spark, path)["delta"])
 
     # append-then-probe == probing the IN-MEMORY one-shot union of the
     # base assignment and the delta assigned against the same frozen
@@ -2808,7 +2807,7 @@ def test_ivf_compact_to_zero_keeps_index_readable(spark, tmp_path):
     parquet files — UNABLE_TO_INFER_SCHEMA on every read surface while
     the _ivf_index marker still vouched for the layout. The purge now
     writes a zero-row schema-bearing sentinel; reads stay green and a
-    later append resumes the partitioned layout."""
+    later append lands in the partitioned delta object beside it."""
     import os
 
     from correlationapi_spark.llm.similarity import (
@@ -2842,14 +2841,15 @@ def test_ivf_compact_to_zero_keeps_index_readable(spark, tmp_path):
     ivf_append(spark, path, emb.select("vec_id", "v"))
     corpus, cents = ivf_live(spark, path)
     assert corpus.count() == len(all_ids)
-    # no root-level sentinel file survives next to cell= dirs
+    # the rows land in the delta object, partitioned; the sentinel
+    # stays alone in the base, never next to cell= dirs
     from correlationapi_spark.llm.similarity import ivf_resolve
 
-    root_files = [
-        f for f in os.listdir(ivf_resolve(spark, path)["corpus"])
-        if f.startswith("part-")
-    ]
-    assert root_files == []
+    objs = ivf_resolve(spark, path)
+    assert not [f for f in os.listdir(objs["delta"])
+                if f.startswith("part-")]
+    assert not [f for f in os.listdir(objs["corpus"])
+                if f.startswith("cell=")]
     probes = corpus.filter(F.col("vec_id") < 3).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
@@ -3691,6 +3691,7 @@ def test_ivf_reader_grace_survives_rapid_mutations(spark, tmp_path):
 
     from correlationapi_spark.llm.similarity import (
         ivf_compact,
+        ivf_delete,
         ivf_live,
         ivf_recover,
         ivf_resolve,
@@ -3698,17 +3699,27 @@ def test_ivf_reader_grace_survives_rapid_mutations(spark, tmp_path):
 
     path = _synthetic_index(spark, tmp_path, n_base=60, n_delta=40,
                             n_cells=4)
+    # a deleted BASE id makes the first compact below swap the base
+    # object (a compact of appended ids only carries it by name)
+    assert ivf_delete(spark, path, [0]) == 1
     # a slow reader resolves the pointer ONCE...
-    reader_corpus = ivf_resolve(spark, path)["corpus"]
-    n = spark.read.parquet(reader_corpus).count()
+    reader = ivf_resolve(spark, path)
+    reader_corpus = reader["corpus"]
+
+    def reader_rows():
+        return spark.read.parquet(reader_corpus).unionByName(
+            spark.read.parquet(reader["delta"])
+        )
+
+    n = reader_rows().count()
     # ...then two destructive mutations swap versions immediately
     ivf_compact(spark, path)
     ivf_compact(spark, path)
     assert ivf_resolve(spark, path)["corpus"] != reader_corpus
     # the reader's version survived both preamble GCs
     assert os.path.isdir(reader_corpus)
-    assert spark.read.parquet(reader_corpus).count() == n
-    assert ivf_live(spark, path)[0].count() == n
+    assert reader_rows().count() == n
+    assert ivf_live(spark, path)[0].count() == n - 1  # minus the deleted
     # the explicit recover reclaims immediately (grace=0 contract)
     assert ivf_recover(spark, path) is True
     assert not os.path.isdir(reader_corpus)
@@ -3747,6 +3758,186 @@ def test_ivf_delete_commits_single_file_batches(spark, tmp_path):
         r.vec_id for r in ivf_live(spark, path)[0].select("vec_id").collect()
     }
     assert live_ids.isdisjoint(set(range(11)))
+
+
+def _object_files(d):
+    """{relative path: (size, mtime_ns)} of every parquet file under d."""
+    import os
+
+    out = {}
+    for root, _, names in os.walk(d):
+        for n in names:
+            if n.endswith(".parquet"):
+                p = os.path.join(root, n)
+                st = os.stat(p)
+                out[os.path.relpath(p, d)] = (st.st_size, st.st_mtime_ns)
+    return out
+
+
+def test_ivf_compact_of_appended_deletes_carries_base_by_name(
+    spark, tmp_path
+):
+    """Appends land in the delta object, so a compact whose every
+    tombstone was appended since the last base rewrite carries the base
+    BY NAME — same pointer entry, byte-identical files (path, size,
+    mtime) — and rewrites only the delta's live rows; once no delta row
+    survives, the layout keeps no delta at all."""
+    from correlationapi_spark.llm.similarity import (
+        ivf_compact,
+        ivf_delete,
+        ivf_live,
+        ivf_read,
+        ivf_resolve,
+    )
+
+    path = _synthetic_index(spark, tmp_path, n_base=60, n_delta=20,
+                            n_cells=4)
+    r0 = ivf_resolve(spark, path)
+    assert "delta" in r0
+    base0 = _object_files(r0["corpus"])
+    assert base0
+    n_base = spark.read.parquet(r0["corpus"]).count()
+    assert n_base == 60 and ivf_read(spark, path)[0].count() == 80
+
+    # half the appended ids: the surviving delta rows are rewritten
+    assert ivf_delete(spark, path, list(range(10000, 10010))) == 10
+    stats = ivf_compact(spark, path)
+    assert stats == {"tombstones_cleared": 10, "n_vectors": 70,
+                     "base_rewritten": False}
+    r1 = ivf_resolve(spark, path)
+    assert r1["corpus"] == r0["corpus"] and r1["delta"] != r0["delta"]
+    assert "tombstones" not in r1
+    assert _object_files(r1["corpus"]) == base0
+    live = {r.vec_id for r in ivf_live(spark, path)[0].collect()}
+    assert live == set(range(60)) | set(range(10010, 10020))
+
+    # the rest: no delta row survives, so no delta object is kept
+    assert ivf_delete(spark, path, list(range(10010, 10020))) == 10
+    stats = ivf_compact(spark, path)
+    assert stats["n_vectors"] == n_base and not stats["base_rewritten"]
+    r2 = ivf_resolve(spark, path)
+    assert r2["corpus"] == r0["corpus"] and "delta" not in r2
+    assert _object_files(r2["corpus"]) == base0
+    assert ivf_live(spark, path)[0].count() == n_base
+
+
+def test_ivf_compact_of_base_delete_rewrites_base(spark, tmp_path):
+    """One deleted base id makes the compact rewrite the whole live
+    base ∪ delta into a new base object (``base_rewritten`` in the
+    /index/compact answer), and the delta retires with the
+    tombstones."""
+    from correlationapi_spark.api import CorrelationAPI
+    from correlationapi_spark.llm.similarity import (
+        ivf_delete,
+        ivf_live,
+        ivf_resolve,
+    )
+
+    path = _synthetic_index(spark, tmp_path, n_base=60, n_delta=20,
+                            n_cells=4)
+    r0 = ivf_resolve(spark, path)
+    assert ivf_delete(spark, path, [3, 10005]) == 2
+    res = CorrelationAPI(spark).index_compact(path)
+    assert res["base_rewritten"] is True
+    assert res["tombstones_cleared"] == 2 and res["n_vectors"] == 78
+    r1 = ivf_resolve(spark, path)
+    assert r1["corpus"] != r0["corpus"]
+    assert "delta" not in r1 and "tombstones" not in r1
+    assert spark.read.parquet(r1["corpus"]).count() == 78
+    live = {r.vec_id for r in ivf_live(spark, path)[0].collect()}
+    assert live == (set(range(60)) | set(range(10000, 10020))) - {3, 10005}
+
+
+def test_pq_append_codes_land_in_delta(spark, tmp_path, monkeypatch):
+    """On a PQ-attached store an append writes its rows WITH their
+    pq_code into the delta object (the base stays untouched), and the
+    stored-code probe reads base ∪ delta: the driver-side and the join
+    refine branches still agree bit for bit, and appended ids probe."""
+    import correlationapi_spark.llm.similarity as sim
+    from correlationapi_spark.llm.similarity import (
+        ivf_append,
+        ivf_resolve,
+        pq_probe_stored,
+    )
+
+    path, emb = _pq_attached_store(
+        spark, tmp_path, base_pred=F.col("vec_id") % 5 != 0
+    )
+    r0 = ivf_resolve(spark, path)
+    base0 = _object_files(r0["corpus"])
+    ivf_append(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
+    r1 = ivf_resolve(spark, path)
+    assert r1["corpus"] == r0["corpus"]
+    assert _object_files(r1["corpus"]) == base0
+    delta = spark.read.parquet(r1["delta"])
+    assert "pq_code" in delta.columns
+    assert delta.filter(F.col("pq_code").isNull()).count() == 0
+    assert delta.count() == emb.filter(F.col("vec_id") % 5 == 0).count()
+
+    probes = [0, 1, 5, 10]  # 0, 5 and 10 live in the delta
+    for kw in ({}, {"n_probe": 4}):
+        driver = pq_probe_stored(
+            spark, path, probes, k=3, refine=10, **kw
+        ).collect()
+        monkeypatch.setattr(sim, "_PQ_REFINE_PUSHDOWN_IDS", 0)
+        join = pq_probe_stored(
+            spark, path, probes, k=3, refine=10, **kw
+        ).collect()
+        monkeypatch.setattr(sim, "_PQ_REFINE_PUSHDOWN_IDS", 65536)
+        assert {r.probe_id for r in driver} == set(probes), kw
+        assert sorted(map(tuple, driver)) == sorted(map(tuple, join)), kw
+
+
+def test_base_rewrites_fold_the_delta_in(spark, tmp_path):
+    """Every base rewrite other than compact — pq_attach,
+    ivf_recluster and a rebuild (index_build) — writes base ∪ delta
+    into the new base and retires the delta object in the same swap."""
+    import os
+
+    from correlationapi_spark.api import CorrelationAPI
+    from correlationapi_spark.llm.similarity import (
+        ivf_append,
+        ivf_live,
+        ivf_recluster,
+        ivf_recover,
+        ivf_resolve,
+        pq_attach,
+    )
+
+    path, emb = _pq_attached_store(
+        spark, tmp_path, base_pred=F.col("vec_id") % 5 != 0
+    )
+    n_all = emb.count()
+    api = CorrelationAPI(spark)
+    api.register_dataset("emb", os.path.join(SF_SMOKE, "embeddings.parquet"))
+
+    def append_rest():
+        ivf_append(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
+        return ivf_resolve(spark, path)["delta"]
+
+    def assert_folded(old_delta):
+        objs = ivf_resolve(spark, path)
+        assert "delta" not in objs
+        assert spark.read.parquet(objs["corpus"]).count() == n_all
+        assert ivf_live(spark, path)[0].count() == n_all
+        assert ivf_recover(spark, path) is True
+        assert not os.path.isdir(old_delta)
+
+    d = append_rest()
+    pq_attach(spark, path)
+    assert_folded(d)
+
+    api.index_build("emb", "vec_id", "embedding", path, n_cells=8,
+                    where="vec_id % 5 != 0")
+    d = append_rest()
+    assert ivf_recluster(spark, path, threshold=0.0)["reclustered"]
+    assert_folded(d)
+
+    api.index_build("emb", "vec_id", "embedding", path, n_cells=8,
+                    where="vec_id % 5 != 0")
+    d = append_rest()
+    api.index_build("emb", "vec_id", "embedding", path, n_cells=8)
+    assert_folded(d)
 
 
 def test_pq_store_memo_invalidates_on_fixture_change(spark, tmp_path):
