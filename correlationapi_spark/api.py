@@ -2883,7 +2883,8 @@ class CorrelationAPI:
         probes will answer here — one pointer read, no extra scan."""
         from pyspark.errors import AnalysisException
 
-        from .llm.similarity import StoreIO, _ivf_layout, ivf_imbalance
+        from .llm.similarity import ivf_imbalance
+        from .storeio import StoreIO, pointer_require
 
         try:
             r = ivf_imbalance(self.spark, path).collect()[0]
@@ -2897,7 +2898,7 @@ class CorrelationAPI:
             "avg_cell": r.avg_cell,
             "imbalance": r.imbalance,
             "recluster": bool(r.recluster),
-            "pq_attached": "pqbooks" in _ivf_layout(
+            "pq_attached": "pqbooks" in pointer_require(
                 StoreIO(path, self.spark), path
             ).get("objects", {}),
         }
@@ -3081,16 +3082,17 @@ class CorrelationAPI:
         back without mutating). Idempotent: returns ``recovered:
         False`` plus the status when there was nothing to reclaim.
         ``gc_skipped`` lists the superseded pointer files the GC could
-        not reclaim (normally empty; see storeio.pointer_recover). A
+        not reclaim (normally empty; see storeio.recover). A
         crashed writer's leftover mutation lock surfaces as the
         documented ValueError (HTTP 400) naming the lock file to
         clear."""
         from pyspark.errors import AnalysisException
 
-        from .llm.similarity import ivf_recover_report
+        from .llm.similarity import _ivf_lock
+        from .storeio import recover
 
         try:
-            report = ivf_recover_report(self.spark, path)
+            report = recover(self.spark, path, _ivf_lock(path))
             return {**self.index_status(path), **report}
         except AnalysisException as e:
             raise self._no_index(path, e) from e
@@ -3143,9 +3145,10 @@ class CorrelationAPI:
         merging). Idempotent: ``recovered: False`` when there is
         nothing to reclaim. ``gc_skipped`` lists the superseded pointer
         files the GC could not reclaim (normally empty)."""
-        from .operators.analytics import scd2_recover_report
+        from .operators.analytics import _scd2_lock
+        from .storeio import recover
 
-        return {"path": path, **scd2_recover_report(path, self.spark)}
+        return {"path": path, **recover(self.spark, path, _scd2_lock(path))}
 
     def scd2_snapshot(
         self,

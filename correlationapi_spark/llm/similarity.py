@@ -9,6 +9,7 @@ would win; that variant lives in udfs.py as the vectorized-UDF exhibit.)
 
 from __future__ import annotations
 
+import contextlib
 from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -21,13 +22,11 @@ from ..registry import query
 from ..storeio import (
     StoreIO,
     _pointer_seqs,
+    commit,
+    mutation,
     object_dir,
-    pointer_gc,
-    pointer_read,
-    pointer_recover,
     pointer_require,
-    pointer_write,
-    retired_union,
+    recover,
 )
 
 
@@ -362,9 +361,7 @@ def ivf_write(
     # the lock covers rebuilds too (review r11): a rebuild racing a
     # concurrent append/delete would interleave corpus and sidecar
     # writes into a layout neither writer described
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        old = _ivf_preamble(io, path)
+    with mutation(spark, path, _ivf_lock(path), build=True) as (io, old):
         v = old["version"] + 1
         objs = {
             "corpus": object_dir("corpus", v),
@@ -380,16 +377,7 @@ def ivf_write(
         _idstate_build(spark, path, objs)
         if _crash is not None:
             _crash("staged")
-        pointer_write(
-            io, path,
-            {
-                "version": v,
-                "objects": objs,
-                "retired": retired_union(
-                    old, old["objects"].values(), objs.values()
-                ),
-            },
-        )
+        commit(io, path, old, objects=objs)
         if _crash is not None:
             _crash("swapped")
         # what this rebuild REPLACED, sampled under the lock — the
@@ -412,8 +400,7 @@ def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     when a destructive mutation swaps mid-call."""
     import os
 
-    io = StoreIO(path, spark)
-    objs = _ivf_layout(io, path)["objects"]
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
     return (
         _corpus(spark, path, objs),
         spark.read.parquet(os.path.join(path, objs["centroids"])),
@@ -454,28 +441,36 @@ def ivf_resolve(spark: SparkSession, path: str) -> dict:
     being fixed when the versioned-pointer layout landed (round 14)."""
     import os
 
-    io = StoreIO(path, spark)
-    objs = _ivf_layout(io, path)["objects"]
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
     return {k: os.path.join(path, v) for k, v in objs.items()}
 
 
-# -- persisted-index sidecars: mutation lock, id Bloom, tombstones --
+# -- persisted-index mutations and sidecars: id Bloom, tombstones --
 #
-# Everything below operates through Hadoop's FileSystem API resolved FROM
-# the index path itself (advice r10: os.path.isdir silently passes for
-# hdfs:// and s3a:// paths), so the existence/atomic-create/delete calls
-# run against the same filesystem Spark will write to.
+# Every mutation runs storeio's protocol (lock, preamble GC, commit,
+# recover) under the index's ``_mutate.lock``; the filesystem calls go
+# through storeio.StoreIO, resolved FROM the index path itself (advice
+# r10: os.path.isdir silently passes for hdfs:// and s3a:// paths).
 
 _IVF_LOCK = "_mutate.lock"
 _BLOOM_K = 7  # (1 − e^(−7/16))^7 ≈ 7e-4 FP at the designed 16 bits/id
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` on the filesystem Spark resolves
-    it to — local, HDFS, or an object store with a configured scheme."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jvm
+def _ivf_lock(path: str) -> str:
+    import os
+
+    return os.path.join(path, _IVF_LOCK)
+
+
+@contextlib.contextmanager
+def _ivf_mutation(spark: SparkSession, path: str):
+    """storeio.mutation of an existing index, plus the corpus-schema
+    read: a pointer whose corpus objects are missing raises the
+    reader's AnalysisException (the 404 surface) instead of taking a
+    delta write."""
+    with mutation(spark, path, _ivf_lock(path)) as (io, lay):
+        _corpus(spark, path, lay["objects"]).schema
+        yield io, lay
 
 
 def ivf_is_index(spark: SparkSession, path: str) -> bool:
@@ -520,63 +515,6 @@ def ivf_dir_state(spark: SparkSession, path: str) -> str:
     if all(_protocol_residue(n) for n in names):
         return "incomplete"
     return "other"
-
-
-class _ivf_mutation_lock:
-    """Single-writer guard for the check-then-write critical sections
-    (build/append/delete/compact — advice r10: two concurrent appends
-    of the same ids both passed the clash scan, then both wrote; a
-    rebuild racing an append could interleave corpus and sidecar
-    writes into a layout neither writer described). Atomic create of
-    ``path/_mutate.lock`` via FileSystem.createNewFile — atomic on
-    local disk and HDFS; object stores without atomic create need an
-    external coordinator, which is the honest limit of a raw-parquet
-    layout. A crashed writer leaves the lock behind: the error message
-    says which file to remove after confirming no mutation is in
-    flight. ``lockfile`` parametrizes the name so other persisted
-    stores (the PSI reference) reuse the same discipline."""
-
-    def __init__(
-        self, spark: SparkSession, path: str, lockfile: str = _IVF_LOCK
-    ):
-        import os
-
-        self._fs, jvm = _hadoop_fs(spark, path)
-        self._lock = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(path, lockfile)
-        )
-
-    def __enter__(self):
-        if not self._fs.createNewFile(self._lock):
-            raise ValueError(
-                "another index mutation is in flight (or a previous "
-                f"writer crashed): remove {self._lock} to clear the lock"
-            )
-        return self
-
-    def __exit__(self, *exc):
-        self._fs.delete(self._lock, False)
-        return False
-
-
-# The live layout: the pointer, resolved ONCE per operation — readers
-# then only open the named directories (the consistency contract of the
-# versioned-pointer protocol, storeio.py). A path with no pointer raises
-# the reader's AnalysisException, the 404 surface.
-_ivf_layout = pointer_require
-
-
-def _ivf_preamble(io: StoreIO, path: str) -> dict:
-    """Every mutation's first act under the lock: reclaim expired
-    retired objects and crashed-stage orphans (pointer_gc — this is
-    where the previous version's reader grace ends), and return the
-    layout the mutation operates on (an empty version-0 layout for a
-    first build)."""
-    lay = pointer_read(io, path)
-    if lay is None:
-        return {"version": 0, "objects": {}, "retired": []}
-    pointer_gc(io, path, lay)
-    return lay
 
 
 def _bloom_m(n: int) -> int:
@@ -809,7 +747,7 @@ def _idstate_write(
 
     io = StoreIO(path, spark)
     if objs is None:
-        objs = _ivf_layout(io, path)["objects"]
+        objs = pointer_require(io, path)["objects"]
     header = json.dumps(
         {"m": int(m), "k": _BLOOM_K, "n": int(n)}
     ).encode("utf-8")
@@ -846,7 +784,7 @@ def _idstate_read(spark: SparkSession, path: str, objs: dict | None = None):
 
     io = StoreIO(path, spark)
     if objs is None:
-        objs = _ivf_layout(io, path)["objects"]
+        objs = pointer_require(io, path)["objects"]
     try:
         raw = io.read_bytes(
             os.path.join(path, objs["idstate"], _IDSTATE_FILE)
@@ -872,7 +810,7 @@ def _tombstones(
     import os
 
     if objs is None:
-        objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
+        objs = pointer_require(StoreIO(path, spark), path)["objects"]
     t = objs.get("tombstones")
     if t is None:
         return None
@@ -901,7 +839,7 @@ def ivf_live(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     import os
 
     io = StoreIO(path, spark)
-    objs = _ivf_layout(io, path)["objects"]
+    objs = pointer_require(io, path)["objects"]
     return (
         _live(spark, path, objs),
         spark.read.parquet(os.path.join(path, objs["centroids"])),
@@ -1040,10 +978,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
     when the hottest cell outgrows the mean, not on a clock."""
     import os
 
-    _ivf_404_probe(spark, path)
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = _ivf_preamble(io, path)
+    with _ivf_mutation(spark, path) as (io, lay):
         objs = lay["objects"]
         # centroids read + assignment INSIDE the lock, after the
         # preamble (review r12): reading them before the lock let a
@@ -1203,17 +1138,12 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
             _idstate_build(spark, path, objs)
 
 
-def _corpus_has_cells(spark: SparkSession, corpus_path: str) -> bool:
+def _corpus_has_cells(io: StoreIO, corpus_path: str) -> bool:
     """True iff any ``cell=`` partition directory remains under the
     corpus — one listStatus, no data read."""
-    fs, jvm = _hadoop_fs(spark, corpus_path)
-    jp = jvm.org.apache.hadoop.fs.Path(corpus_path)
-    if not fs.exists(jp):
-        return False
-    for st in fs.listStatus(jp):
-        if st.isDirectory() and st.getPath().getName().startswith("cell="):
-            return True
-    return False
+    return io.isdir(corpus_path) and any(
+        n.startswith("cell=") for n in io.list_names(corpus_path)
+    )
 
 
 def _add_to_object(
@@ -1232,15 +1162,8 @@ def _add_to_object(
     target = objs.get(logical) or object_dir(logical, lay["version"] + 1)
     write(os.path.join(path, target))
     if logical not in objs:
-        objs = {**objs, logical: target}
-        pointer_write(
-            io, path,
-            {
-                "version": lay["version"] + 1,
-                "objects": objs,
-                "retired": retired_union(lay, [], objs.values()),
-            },
-        )
+        new = commit(io, path, lay, objects={**objs, logical: target})
+        objs = new["objects"]
     return objs
 
 
@@ -1312,7 +1235,7 @@ def _ivf_compact_locked(
         cdir = os.path.join(path, new_objs["corpus"])
         live = _live(spark, path, objs)
         live.write.mode("overwrite").partitionBy("cell").parquet(cdir)
-        if not _corpus_has_cells(spark, cdir):
+        if not _corpus_has_cells(io, cdir):
             _one_slice_df(spark, [], live.schema).write.mode(
                 "append"
             ).parquet(cdir)
@@ -1324,17 +1247,12 @@ def _ivf_compact_locked(
             else delta.join(F.broadcast(tomb), "vec_id", "left_anti")
         )
         live.write.mode("overwrite").partitionBy("cell").parquet(ddir)
-        if _corpus_has_cells(spark, ddir):
+        if _corpus_has_cells(io, ddir):
             new_objs["delta"] = name
         else:
             io.rmtree(ddir)  # no delta row survived: keep no delta
     _idstate_build(spark, path, new_objs)
-    new_lay = {
-        "version": v,
-        "objects": new_objs,
-        "retired": retired_union(lay, objs.values(), new_objs.values()),
-    }
-    pointer_write(io, path, new_lay)
+    new_lay = commit(io, path, lay, objects=new_objs)
     n = _corpus(spark, path, new_objs).count()
     return new_lay, {
         "tombstones_cleared": n_tomb,
@@ -1378,10 +1296,7 @@ def ivf_delete(spark: SparkSession, path: str, ids: list[int]) -> int:
     invariant every other surface assumes."""
     if not ids:
         return 0
-    _ivf_404_probe(spark, path)
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = _ivf_preamble(io, path)
+    with _ivf_mutation(spark, path) as (io, lay):
         live_ids = _live(spark, path, lay["objects"]).select("vec_id")
         # driver-side dedupe (review r11): [5, 5] must report
         # deleted=1, matching the single live row it masks
@@ -1412,10 +1327,7 @@ def ivf_compact(spark: SparkSession, path: str) -> dict:
     remain: every pre-swap
     artifact is an unreferenced object dir the next preamble GCs, and
     post-swap readers are fully on the compacted version."""
-    _ivf_404_probe(spark, path)
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = _ivf_preamble(io, path)
+    with _ivf_mutation(spark, path) as (io, lay):
         _, stats = _ivf_compact_locked(spark, io, path, lay)
         return stats
 
@@ -1446,15 +1358,6 @@ def ivf_imbalance(spark: SparkSession, path: str, recluster_above: float = 3.0) 
     )
 
 
-def _ivf_404_probe(spark: SparkSession, path: str) -> None:
-    """Existence probe BEFORE a mutation takes the lock: a bogus or
-    pointer-less path — or a pointer whose corpus objects are missing —
-    must raise the reader's AnalysisException (the 404 surface), not
-    manufacture directories as a side effect of locking."""
-    objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
-    _corpus(spark, path, objs).schema
-
-
 def ivf_recover(spark: SparkSession, path: str) -> bool:
     """Reclaim a persisted index's garbage NOW instead of waiting for
     the next mutation's preamble: expired retired objects (the
@@ -1465,20 +1368,8 @@ def ivf_recover(spark: SparkSession, path: str) -> bool:
     collection. Returns True when anything was reclaimed. Call it only
     when no long-running reader may still hold the retired version's
     files (the same discipline as a table format's snapshot
-    expiry)."""
-    return ivf_recover_report(spark, path)["recovered"]
-
-
-def ivf_recover_report(spark: SparkSession, path: str) -> dict:
-    """ivf_recover's full result: ``{"recovered": bool, "gc_skipped":
-    [superseded pointer files the GC could not reclaim]}`` (see
-    storeio.pointer_recover)."""
-    # pre-lock fast path: a path with no pointer has nothing to recover
-    # — return without manufacturing lock files on bogus paths
-    if pointer_read(StoreIO(path, spark), path) is None:
-        return {"recovered": False, "gc_skipped": []}
-    with _ivf_mutation_lock(spark, path):
-        return pointer_recover(StoreIO(path, spark), path)
+    expiry). storeio.recover gives the full report."""
+    return recover(spark, path, _ivf_lock(path))["recovered"]
 
 
 def ivf_recluster(
@@ -1532,10 +1423,7 @@ def ivf_recluster(
     imbalance_before/after let the caller see both."""
     import os
 
-    _ivf_404_probe(spark, path)
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = _ivf_preamble(io, path)
+    with _ivf_mutation(spark, path) as (io, lay):
         objs = lay["objects"]
         before = ivf_imbalance(spark, path, recluster_above=threshold)
         b = before.collect()[0]
@@ -1587,16 +1475,7 @@ def ivf_recluster(
         _idstate_build(spark, path, new_objs)
         if _crash is not None:
             _crash("staged")
-        pointer_write(
-            io, path,
-            {
-                "version": v,
-                "objects": new_objs,
-                "retired": retired_union(
-                    lay, objs.values(), new_objs.values()
-                ),
-            },
-        )
+        commit(io, path, lay, objects=new_objs)
         if _crash is not None:
             _crash("swapped")
         a = ivf_imbalance(spark, path).collect()[0]
@@ -3177,10 +3056,7 @@ def pq_attach(
     fewer corpus-wide jobs per attach. Returns {n_codes, version}."""
     import os
 
-    _ivf_404_probe(spark, path)
-    with _ivf_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = _ivf_preamble(io, path)
+    with _ivf_mutation(spark, path) as (io, lay):
         objs = lay["objects"]
         corpus = _corpus(spark, path, objs)
         live = _live(spark, path, objs)
@@ -3214,28 +3090,19 @@ def pq_attach(
         }
         cdir = os.path.join(path, new_objs["corpus"])
         coded.write.mode("overwrite").partitionBy("cell").parquet(cdir)
-        if not _corpus_has_cells(spark, cdir):
+        if not _corpus_has_cells(io, cdir):
             _one_slice_df(spark, [], coded.schema).write.mode(
                 "append"
             ).parquet(cdir)
         # protocol files, not 1-row parquet datasets (round 15): the
         # codebook json and the anchors are driver-bounded sidecar
         # state — a direct stream write each, no Spark write jobs
-        StoreIO(path, spark).write_bytes(
+        io.write_bytes(
             os.path.join(path, new_objs["pqbooks"], _PQ_BOOKS_FILE),
             _pq_books_json(books).encode("utf-8"),
         )
         _pq_anchors_write(spark, path, new_objs, anchors)
-        pointer_write(
-            io, path,
-            {
-                "version": v,
-                "objects": new_objs,
-                "retired": retired_union(
-                    lay, objs.values(), new_objs.values()
-                ),
-            },
-        )
+        commit(io, path, lay, objects=new_objs)
         return {"n_codes": n_corpus, "version": v}
 
 
@@ -3310,7 +3177,7 @@ def pq_probe_stored(
     import os
 
     io = StoreIO(path, spark)
-    lay = _ivf_layout(io, path)
+    lay = pointer_require(io, path)
     objs = lay["objects"]
     if "pqbooks" not in objs:
         raise ValueError(

@@ -20,13 +20,11 @@ from ..ordering import materialize
 from ..registry import query
 from ..storeio import (
     StoreIO,
+    commit,
+    mutation,
     object_dir,
-    pointer_gc,
-    pointer_read,
-    pointer_recover,
     pointer_require,
-    pointer_write,
-    retired_union,
+    recover,
 )
 
 _FUNNEL_ORACLE = """
@@ -2756,27 +2754,12 @@ def _scd2_store_dir() -> str:
     return _roundtrip_dir("scd2")
 
 
-def _scd2_mutation_lock(spark: SparkSession, path: str):
-    """Per-store single-writer guard for the SCD2 mutation surfaces —
-    the same atomic-create lock protocol every sibling persisted store
-    uses (advice r12: ivf_append/delete/compact/recluster and psi_repin
-    all serialize under _ivf_mutation_lock, but scd2_merge_into and
-    scd2_recover — exposed on the ThreadingHTTPServer and CLI — shared
-    a fixed stage directory with no lock, so two concurrent merges
-    into one store could overwrite each other's stage and tear the
-    store). The lock file is a SIBLING of the store
-    (`<store>.mutate.lock`), not inside it: a first build publishes
+def _scd2_lock(path: str) -> str:
+    """The store's lock file (storeio.lock): a SIBLING of the store,
+    ``<store>.mutate.lock``, not inside it — a first build publishes
     the store directory's initial object set, and keeping the lock
     outside means no mutation ever has to special-case it."""
-    import os
-
-    from ..llm.similarity import _ivf_mutation_lock
-
-    p = path.rstrip("/")
-    parent = os.path.dirname(p) or "."
-    return _ivf_mutation_lock(
-        spark, parent, os.path.basename(p) + ".mutate.lock"
-    )
+    return path.rstrip("/") + ".mutate.lock"
 
 
 def _bucket_logical(b: int) -> str:
@@ -2792,9 +2775,7 @@ def _bucket_logical(b: int) -> str:
 # modulus), ``key_type`` (the business-key type the delta must cast to)
 # and the dimension's ``schema`` json (so an empty selection still reads
 # with the right columns). ``buckets`` maps bucket id (string) → object
-# directory. A path with no pointer raises the reader's
-# AnalysisException.
-_scd2_layout = pointer_require
+# directory.
 
 
 def _scd2_schema(lay: dict):
@@ -2927,16 +2908,8 @@ def scd2_merge(
             "scd2_merge requires a non-NULL business key: events with "
             "user_id IS NULL cannot be bucketed or merged"
         )
-    with _scd2_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        # GC expired retired objects / crashed stages inside the lock so
-        # it cannot race a concurrent writer (advice r12); a path with
-        # no pointer is a first build
-        old = pointer_read(io, path)
-        if old is None:
-            old = {"version": 0, "buckets": {}}
-        else:
-            pointer_gc(io, path, old)
+    # a path with no pointer is a first build
+    with mutation(spark, path, _scd2_lock(path), build=True) as (io, old):
         bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
         obs = lambda df: df.select(  # noqa: E731 — tiny local projection
             "user_id",
@@ -2954,19 +2927,13 @@ def scd2_merge(
         new_buckets = _scd2_stage_publish(
             spark, io, path, base.withColumn("bucket", bucket), v
         )
-        lay = {
-            "version": v,
-            "objects": {},
-            "buckets": new_buckets,
-            "n_buckets": n_buckets,
-            "key_type": events.schema["user_id"].dataType.simpleString(),
-            "schema": json.dumps(base.schema.jsonValue()),
-            # prior unreclaimed retirees carry forward (storeio rule)
-            "retired": retired_union(
-                old, old["buckets"].values(), new_buckets.values()
-            ),
-        }
-        pointer_write(io, path, lay)
+        lay = commit(
+            io, path, old,
+            buckets=new_buckets,
+            n_buckets=n_buckets,
+            key_type=events.schema["user_id"].dataType.simpleString(),
+            schema=json.dumps(base.schema.jsonValue()),
+        )
         total = len(new_buckets)
         out, affected, rows_touched = _scd2_apply(
             spark, io, path, lay, events.filter(delta_pred), _crash=_crash
@@ -3108,18 +3075,9 @@ def _scd2_apply(
     new_objs = _scd2_stage_publish(spark, io, path, merged, v)
     if _crash is not None:
         _crash("staged")
-    buckets = dict(lay["buckets"])
-    newly = {buckets[str(b)] for b in affected if str(b) in buckets}
-    buckets.update(new_objs)
-    new_lay = {
-        **lay,
-        "version": v,
-        "buckets": buckets,
-        # prior unreclaimed retirees carry forward — a build+merge in
-        # one lock would otherwise orphan the build's retirees
-        "retired": retired_union(lay, newly, buckets.values()),
-    }
-    pointer_write(io, path, new_lay)
+    # commit carries the build's retirees forward when scd2_merge
+    # commits twice under one lock
+    new_lay = commit(io, path, lay, buckets={**lay["buckets"], **new_objs})
     if _crash is not None:
         _crash("swapped")
     rows_touched = int(touched_obs.get["n"]) if new_objs else 0
@@ -3152,18 +3110,22 @@ def scd2_merge_into(
     from the caller (advice r12). Mutations serialize under the
     per-store lock; stats carry the affected bucket ids and the
     in-lock ``rows_touched`` count."""
+    from pyspark.errors import AnalysisException
+
     # NULL business keys are refused inside _scd2_apply — the raw-null
     # flag rides the cast-null probe there, so the entry check no
     # longer costs its own job (round 16)
-    with _scd2_mutation_lock(spark, path):
-        io = StoreIO(path, spark)
-        lay = pointer_read(io, path)
-        if lay is None or not lay["buckets"]:
-            raise ValueError(
-                f"scd2_merge_into: no SCD2 store at {path!r} (no bucket "
-                "objects) — build one with scd2_merge first"
-            )
-        pointer_gc(io, path, lay)
+    no_store = ValueError(
+        f"scd2_merge_into: no SCD2 store at {path!r} (no bucket "
+        "objects) — build one with scd2_merge first"
+    )
+    try:
+        locked = mutation(spark, path, _scd2_lock(path))
+    except AnalysisException:
+        raise no_store from None
+    with locked as (io, lay):
+        if not lay["buckets"]:
+            raise no_store
         total = len(lay["buckets"])
         out, affected, rows_touched = _scd2_apply(
             spark, io, path, lay, delta, _crash=_crash
@@ -3182,23 +3144,8 @@ def scd2_recover(path: str, spark: SparkSession) -> bool:
     roll-forward, so recovery IS garbage collection (the ivf_recover
     contract). Returns True when anything was reclaimed. Takes the
     per-store mutation lock so recovery cannot race a live merge
-    (advice r12); the merge paths run pointer_gc inside the lock they
-    already hold."""
-    return scd2_recover_report(path, spark)["recovered"]
-
-
-def scd2_recover_report(path: str, spark: SparkSession) -> dict:
-    """scd2_recover's full result: ``{"recovered": bool, "gc_skipped":
-    [superseded pointer files the GC could not reclaim]}`` — the
-    surface entry (CLI scd2-recover, POST /scd2/recover,
-    api.scd2_recover_store); see storeio.pointer_recover."""
-    # pre-lock fast path: a path with no pointer has nothing to recover
-    # — return without manufacturing the lock file (and its missing
-    # parent directories) on bogus paths
-    if pointer_read(StoreIO(path, spark), path) is None:
-        return {"recovered": False, "gc_skipped": []}
-    with _scd2_mutation_lock(spark, path):
-        return pointer_recover(StoreIO(path, spark), path)
+    (advice r12). storeio.recover gives the full report."""
+    return recover(spark, path, _scd2_lock(path))["recovered"]
 
 
 def scd2_snapshot_at(
@@ -3245,7 +3192,7 @@ def scd2_snapshot_at(
     # (one spark.range(1) row, no data scan)
     if spark.range(1).select(tcol.alias("t")).head()["t"] is None:
         raise ValueError(f"scd2_snapshot_at: unparseable timestamp {ts!r}")
-    lay = _scd2_layout(StoreIO(path, spark), path)
+    lay = pointer_require(StoreIO(path, spark), path)
     sel_buckets = None
     if user_ids is not None:
         if not user_ids:

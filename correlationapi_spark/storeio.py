@@ -1,8 +1,10 @@
-"""Shared filesystem + versioned-pointer layout for the persisted stores.
+"""Shared filesystem, versioned-pointer layout and mutation protocol
+for the persisted stores.
 
-Both persisted stores (the IVF vector index in ``llm/similarity.py`` and
-the SCD2 dimension store in ``operators/analytics.py``) are raw-parquet
-directory trees with ONE on-disk format:
+Every persisted store (the IVF vector index in ``llm/similarity.py``,
+the SCD2 dimension store in ``operators/analytics.py``) is a
+raw-parquet directory tree with ONE on-disk format, and every mutation
+of one goes through this module:
 
 * ``path/_layout-v{seq}.json`` pointer files name the live object set —
   one immutable file per committed pointer version, so a reader lists
@@ -13,14 +15,26 @@ directory trees with ONE on-disk format:
 * Object directories are named ``{logical}-v{version:06d}``
   (``object_dir``); everything else a store keeps (the IVF id Bloom,
   the PQ codebook and anchors) is a protocol file inside one of them.
-* The pointer commit is tmp-write + hsync + rename onto a NAME THAT DOES
-  NOT EXIST YET (``pointer_write``) — atomic on POSIX, HDFS and every
-  Hadoop filesystem, because no overwrite is involved. The old pointer
-  stays readable until the new one exists; a crash before the rename
-  leaves only a ``.tmp`` stray the next GC removes. Superseded pointer
-  files are garbage-collected like retired objects (the latest two are
-  kept, giving a lock-free reader that already resolved seq N a full
-  swap of grace).
+* ``lock`` is the single-writer guard: an atomic ``createNewFile`` of
+  the store's lock file (``path/_mutate.lock`` for the IVF index,
+  ``<store>.mutate.lock`` beside an SCD2 store, ``path/_repin.lock``
+  for the PSI reference). Atomic on local disk and HDFS; object stores
+  without atomic create need an external coordinator. A crashed writer
+  leaves the file behind, and the refusal names it.
+* ``mutation`` is every mutation's preamble: it refuses a path with no
+  store BEFORE taking the lock (so a bogus path creates nothing — the
+  lock's ``createNewFile`` would make its missing parents), takes the
+  lock, runs the preamble GC (``pointer_gc``) and yields the live
+  layout; a first build (``build=True``) gets an empty version-0
+  layout instead of the refusal.
+* ``commit`` is the single commit step: tmp-write + hsync + rename onto
+  a pointer NAME THAT DOES NOT EXIST YET (``pointer_write``) — atomic
+  on POSIX, HDFS and every Hadoop filesystem, because no overwrite is
+  involved. The old pointer stays readable until the new one exists; a
+  crash before the rename leaves only a ``.tmp`` stray the next GC
+  removes. Superseded pointer files are garbage-collected like retired
+  objects (the latest two are kept, giving a lock-free reader that
+  already resolved seq N a full swap of grace).
 * ADDITIVE mutations (IVF append / delete-tombstone, SCD2 none) keep
   adding files to the current version's directories; racing readers may
   or may not see the new files — both consistent states. An IVF append
@@ -29,22 +43,27 @@ directory trees with ONE on-disk format:
   pointer bump), as the first delete creates the tombstones object.
 * DESTRUCTIVE mutations (rebuild, compact, recluster, PQ attach, SCD2
   merge) write complete new objects beside the old ones (unreferenced
-  until the swap, so staging IS just writing), swap the pointer, and
-  RETIRE the replaced objects in the pointer's ``retired`` list; an
-  object they do not replace is carried by name (an IVF compact whose
-  every tombstone is in the delta writes only a new delta). Retired
-  objects are garbage-collected at a LATER mutation's preamble
-  (``pointer_gc``), not at swap time, and only once they are older than
+  until the swap, so staging IS just writing), then commit. ``commit``
+  derives the pointer's ``retired`` list: the prior retirees plus every
+  name the old layout kept live that the new one does not. Live names
+  are the ``objects`` map plus any dict-valued extra (the SCD2
+  ``buckets`` map). An object a mutation does not replace is carried
+  by name (an IVF compact whose every tombstone is in the delta writes
+  only a new delta). Carrying the prior retirees forward matters when
+  one lock holder commits twice before any preamble GC runs (an SCD2
+  rebuild followed by its delta merge). Retired objects are
+  garbage-collected at a LATER mutation's preamble (``pointer_gc``),
+  not at swap time, and only once they are older than
   ``GC_GRACE_SECONDS``
   (``pointer_write`` stamps each retirement with a wall-clock time in
   ``retired_at``), so two rapid back-to-back mutations cannot expire a
-  slow reader's files. The explicit recover surfaces (ivf_recover /
-  scd2_recover) run ``pointer_recover`` — GC with ``grace=0.0``, whose
-  contract is "reclaim NOW, caller asserts no reader holds the old
-  version" — and report the superseded pointer files a failed stat kept
+  slow reader's files. ``recover`` (the ivf_recover / scd2_recover
+  surfaces) takes the lock and GCs with ``grace=0.0``, whose contract
+  is "reclaim NOW, caller asserts no reader holds the old version",
+  and reports the superseded pointer files a failed stat kept
   (``gc_skipped``). Reclaimed names are dropped from the in-memory
-  layout's ``retired`` list, so the next pointer swap does not carry
-  them forever. Crash before the swap: readers stay on vN and the orphan
+  layout's ``retired`` list, so the next commit does not carry them
+  forever. Crash before the swap: readers stay on vN and the orphan
   vN+1 objects are unreferenced-pattern dirs the next preamble GC
   removes. Crash after the swap: readers are on vN+1 and the old objects
   are already in ``retired``. No state needs a roll-forward; recovery IS
@@ -53,7 +72,7 @@ directory trees with ONE on-disk format:
   the pointer file (it is a table format's commit log in miniature) —
   the honest raw-parquet limit.
 
-COMMITTED versions are monotonic per store (every pointer write bumps
+COMMITTED versions are monotonic per store (every commit bumps
 ``version``), so a retired name can never collide with a later live one;
 a CRASHED stage's version number is reused by the next mutation, which
 is safe because that mutation's preamble GC deletes the orphan dirs
@@ -62,6 +81,7 @@ under the same lock before staging.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -266,10 +286,9 @@ def pointer_require(io: StoreIO, path: str) -> dict:
 
 
 def pointer_write(io: StoreIO, path: str, layout: dict) -> None:
-    """Atomically publish ``layout`` as the live pointer — the single
-    commit step of every destructive mutation. Caller holds the store's
-    mutation lock and has already written every object ``layout``
-    references.
+    """Atomically publish ``layout`` as the live pointer — ``commit``'s
+    write step. Caller holds the store's lock and has already written
+    every object ``layout`` references.
 
     The pointer commits as a NEW monotonically numbered file (max
     committed sequence + 1), written tmp-then-rename onto a name that
@@ -294,17 +313,14 @@ def pointer_write(io: StoreIO, path: str, layout: dict) -> None:
     )
 
 
-def retired_union(layout: dict | None, newly, live_names) -> list:
-    """The ``retired`` list for a pointer swap: the objects this swap
-    replaces UNION the prior pointer's still-unreclaimed retirees,
-    minus anything the new pointer references. Carrying the prior list
-    forward matters when one lock holder swaps TWICE before any
-    preamble GC runs (e.g. an SCD2 rebuild followed by its delta
-    merge): overwriting ``retired`` would orphan the first swap's
-    retirees until a pattern GC noticed them. Deleting an already-GC'd
-    name later is a harmless no-op, so the union is always safe."""
-    prior = [] if layout is None else layout.get("retired", [])
-    return sorted((set(prior) | set(newly)) - set(live_names))
+def _live_names(layout: dict) -> set:
+    """Every object name ``layout`` references: the ``objects`` map
+    plus the string values of any dict-valued extra, so store-specific
+    object maps (the SCD2 ``buckets``) count without schema coupling."""
+    return {
+        n for v in layout.values() if isinstance(v, dict)
+        for n in v.values() if isinstance(n, str)
+    }
 
 
 def pointer_gc(
@@ -334,13 +350,7 @@ def pointer_gc(
         return []
     if grace is None:
         grace = GC_GRACE_SECONDS
-    live = set(layout.get("objects", {}).values())
-    # SCD2 stores map per-bucket objects under a nested dict; fold any
-    # dict-valued extras' values into the live set so store-specific
-    # object maps (e.g. "buckets") are honored without schema coupling
-    for v in layout.values():
-        if isinstance(v, dict):
-            live |= {x for x in v.values() if isinstance(x, str)}
+    live = _live_names(layout)
     removed = []
     now = time.time()
     stamps = layout.get("retired_at", {})
@@ -371,7 +381,7 @@ def pointer_gc(
             # pass rather than bypass the reader-grace gate (removing an
             # unstattable file would re-open the rapid-double-delete
             # race the grace exists to prevent); the next GC retries,
-            # and pointer_recover reports what is still left
+            # and recover reports what is still left
             continue
         io.remove(fp)
         removed.append(n)
@@ -385,17 +395,88 @@ def pointer_gc(
     return removed
 
 
-def pointer_recover(io: StoreIO, path: str) -> dict:
-    """The explicit recover surfaces' reclaim (caller holds the store's
-    mutation lock): garbage-collect with ``grace=0.0``, then report
-    ``gc_skipped`` — the superseded ``_layout-v*.json`` files still
-    present beyond the kept two. It is normally empty; a name there
-    means its stat failed during this GC (``pointer_gc`` never removes
-    a pointer file it cannot age), so a filesystem whose stat keeps
-    failing shows up here instead of piling pointer files up
-    silently."""
-    removed = pointer_gc(io, path, pointer_read(io, path), grace=0.0)
-    return {
-        "recovered": bool(removed),
-        "gc_skipped": [n for _, n in _pointer_seqs(io, path)[:-2]],
-    }
+@contextlib.contextmanager
+def lock(spark, lock_path: str):
+    """Single-writer guard of one store: atomic ``createNewFile`` of
+    ``lock_path`` on the filesystem Spark resolves it to, removed on
+    exit. A held (or crashed writer's) lock raises ValueError naming
+    the file to remove once no mutation is in flight. Creating the
+    file creates its missing parent directories, which is why
+    ``mutation`` and ``recover`` look for the store first."""
+    io = StoreIO(lock_path, spark)
+    if not io._fs.createNewFile(io._p(lock_path)):
+        raise ValueError(
+            "another store mutation is in flight (or a previous "
+            f"writer crashed): remove {lock_path} to clear the lock"
+        )
+    try:
+        yield
+    finally:
+        io.remove(lock_path)
+
+
+def mutation(spark, path: str, lock_path: str, build: bool = False):
+    """Every store mutation's preamble, as a context manager yielding
+    ``(io, layout)``: refuse a path with no store (``pointer_require``'s
+    AnalysisException) BEFORE the lock, so a bogus path creates
+    nothing; then, under ``lock(spark, lock_path)``, garbage-collect
+    expired retirees and crashed-stage orphans (``pointer_gc`` — where
+    the previous version's reader grace ends) and yield the layout the
+    mutation operates on. ``build=True`` (a rebuild, which may create
+    the store) skips the refusal and yields an empty version-0 layout
+    for a path with no store. The refusal runs when ``mutation`` is
+    CALLED, so a caller can tell it from errors raised inside the
+    ``with`` body."""
+    io = StoreIO(path, spark)
+    if not build:
+        pointer_require(io, path)
+    return _locked_layout(spark, io, path, lock_path)
+
+
+@contextlib.contextmanager
+def _locked_layout(spark, io: StoreIO, path: str, lock_path: str):
+    with lock(spark, lock_path):
+        lay = pointer_read(io, path)
+        if lay is None:
+            lay = {"version": 0, "objects": {}, "retired": []}
+        else:
+            pointer_gc(io, path, lay)
+        yield io, lay
+
+
+def commit(io: StoreIO, path: str, old: dict, **fields) -> dict:
+    """Publish ``old`` with ``fields`` replaced as version
+    ``old["version"] + 1`` — the one commit step of every mutation
+    (caller holds the lock, ``old`` is the layout ``mutation`` yielded
+    or a previous ``commit`` returned, and every object ``fields``
+    names is written). ``retired`` is derived, never composed: the
+    prior retirees plus the old live names, minus the new live names
+    (``old`` is the preamble's GC-trimmed layout, so reclaimed names
+    are not carried forward). Returns the committed layout."""
+    new = {**old, **fields, "version": old["version"] + 1}
+    new["retired"] = sorted(
+        (set(old.get("retired", [])) | _live_names(old)) - _live_names(new)
+    )
+    pointer_write(io, path, new)
+    return new
+
+
+def recover(spark, path: str, lock_path: str) -> dict:
+    """The explicit recover surfaces' reclaim: garbage-collect with
+    ``grace=0.0`` under the store's lock, then report ``{"recovered":
+    bool, "gc_skipped": [...]}`` — the superseded ``_layout-v*.json``
+    files still present beyond the kept two. ``gc_skipped`` is normally
+    empty; a name there means its stat failed during this GC
+    (``pointer_gc`` never removes a pointer file it cannot age), so a
+    filesystem whose stat keeps failing shows up here instead of piling
+    pointer files up silently. A path with no store has nothing to
+    recover and is answered before the lock, creating nothing."""
+    io = StoreIO(path, spark)
+    if pointer_read(io, path) is None:
+        return {"recovered": False, "gc_skipped": []}
+    with lock(spark, lock_path):
+        removed = pointer_gc(io, path, pointer_read(io, path), grace=0.0)
+        return {
+            "recovered": bool(removed),
+            "gc_skipped": [n for _, n in _pointer_seqs(io, path)[:-2]],
+        }

@@ -540,8 +540,11 @@ def psi_repin(
     lock (review r11: two concurrent re-pins would both allocate
     v+1 and psi_pinned would silently merge their bins into a
     chimera baseline — the same race advice r10 flagged on the IVF
-    store, same lock-file discipline)."""
-    from ..llm.similarity import _ivf_mutation_lock
+    store, same lock-file discipline: storeio.lock on
+    ``path/_repin.lock``)."""
+    import os
+
+    from ..storeio import lock
 
     ref = psi_reference_window(ev, start, end)
     if not ref:
@@ -549,7 +552,7 @@ def psi_repin(
             f"empty PSI reference window [{start}, {end}) — refusing "
             "to pin a baseline with no mass"
         )
-    with _ivf_mutation_lock(spark, path, lockfile="_repin.lock"):
+    with lock(spark, os.path.join(path, "_repin.lock")):
         cur = psi_pinned(spark, path)
         version = (cur["version"] + 1) if cur else 1
         # single slice at source, no coalesce(1): folding the default

@@ -2822,3 +2822,28 @@ def test_stores_hold_only_the_one_format(spark, tmp_path):
     assert snap["n_rows"] >= 1
     api.scd2_recover_store(store)
     assert stray(store) == []
+
+
+def test_only_storeio_mutates_stores():
+    """storeio.py owns the store-mutation protocol: no other module in
+    the package takes a lock file, runs the preamble GC or writes a
+    layout pointer itself."""
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "correlationapi_spark",
+    )
+    pattern = re.compile(r"createNewFile|pointer_gc\(|pointer_write\(")
+    allowed = os.path.join(pkg, "storeio.py")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for name in sorted(files):
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == allowed:
+                continue
+            with open(path) as f:
+                for i, line in enumerate(f, 1):
+                    if pattern.search(line):
+                        offenders.append(f"{os.path.relpath(path, pkg)}:{i}")
+    assert not offenders, f"store protocol outside storeio.py: {offenders}"

@@ -647,14 +647,11 @@ def test_cli_scd2_merge_into_and_recover(spark, capsys, tmp_path):
             )
         )
     ).drop("event_id")
-    from correlationapi_spark.operators.analytics import (
-        _scd2_layout,
-        _scd2_read,
-    )
-    from correlationapi_spark.storeio import StoreIO
+    from correlationapi_spark.operators.analytics import _scd2_read
+    from correlationapi_spark.storeio import StoreIO, pointer_require
 
     io = StoreIO(store, spark)
-    got = _scd2_read(spark, store, _scd2_layout(io, store)).select(
+    got = _scd2_read(spark, store, pointer_require(io, store)).select(
         *want.columns
     )
     assert sorted(map(tuple, got.collect())) == sorted(

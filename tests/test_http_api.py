@@ -962,11 +962,20 @@ def test_scd2_lifecycle_over_http(base_url, spark, tmp_path):
     assert exc.value.code == 400
 
 
-def test_missing_store_is_404_and_recover_creates_nothing(base_url, tmp_path):
+def test_missing_store_is_404_and_recover_creates_nothing(
+    base_url, spark, tmp_path
+):
     """A path holding no store answers alike on both stores: 404 on
-    the SCD2 snapshot and the index routes, and the SCD2 recover is a
-    no-op that creates nothing — not even the lock file's missing
-    parent directories."""
+    the SCD2 snapshot and the index routes, the SCD2 merge refuses
+    with its 400, and the SCD2 recover is a no-op — none of them
+    creates anything, not even the lock file's missing parent
+    directories."""
+    delta_path = str(tmp_path / "delta.parquet")
+    spark.sql(
+        "SELECT 1L AS user_id, 'click' AS event_type, "
+        "TIMESTAMP'2024-02-01 00:00:00' AS ts, 1L AS event_id"
+    ).write.parquet(delta_path)
+    _post(f"{base_url}/datasets/nostoredelta", {"path": delta_path})
     bogus = str(tmp_path / "a" / "b" / "store")
     status, res = _post(f"{base_url}/scd2/recover", {"path": bogus})
     assert status == 200
@@ -980,6 +989,15 @@ def test_missing_store_is_404_and_recover_creates_nothing(base_url, tmp_path):
         with pytest.raises(urllib.error.HTTPError) as exc:
             _post(f"{base_url}{route}", body)
         assert exc.value.code == 404, route
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        _post(
+            f"{base_url}/scd2/merge",
+            {"dataset": "nostoredelta", "user": "user_id",
+             "event": "event_type", "time": "ts", "order": "event_id",
+             "path": bogus},
+        )
+    assert exc.value.code == 400
+    assert "no SCD2 store" in json.loads(exc.value.read())["error"]
     assert not os.path.exists(tmp_path / "a")
 
 

@@ -1356,17 +1356,14 @@ def _scd2_store_rows(spark, path, cols):
     """Layout-aware raw read of an SCD2 store for test snapshots
     (round 14: the store is a versioned-pointer object set, not a
     plain partitioned directory)."""
-    from correlationapi_spark.operators.analytics import (
-        _scd2_layout,
-        _scd2_read,
-    )
-    from correlationapi_spark.storeio import StoreIO
+    from correlationapi_spark.operators.analytics import _scd2_read
+    from correlationapi_spark.storeio import StoreIO, pointer_require
 
     io = StoreIO(path, spark)
     return sorted(
         map(
             tuple,
-            _scd2_read(spark, path, _scd2_layout(io, path))
+            _scd2_read(spark, path, pointer_require(io, path))
             .select(*cols)
             .collect(),
         )
@@ -1462,7 +1459,7 @@ def test_scd2_rebuild_carries_retired_forward(spark, tmp_path):
     them) — if the second swap overwrote `retired`, the first swap's
     retirees (the previous store's bucket objects, or adopted legacy
     bucket= dirs, which no pattern-GC ever matches) would leak
-    forever. retired_union carries them forward, so one recover after
+    forever. storeio.commit carries them forward, so one recover after
     a rebuild-over-existing-store reclaims everything stale."""
     import os
 
@@ -1847,11 +1844,11 @@ def test_scd2_mutation_lock_serializes(spark, tmp_path):
     could tear the store. The lock is a SIBLING file so scd2_merge's
     base overwrite cannot delete it mid-hold."""
     from correlationapi_spark.operators.analytics import (
-        _scd2_mutation_lock,
         scd2_merge,
         scd2_merge_into,
         scd2_recover,
     )
+    from correlationapi_spark.storeio import lock
 
     ev = load_tables(spark, SF_SMOKE)["events"]
     cut = F.lit("2024-01-25 00:00:00").cast("timestamp")
@@ -1863,7 +1860,7 @@ def test_scd2_mutation_lock_serializes(spark, tmp_path):
         (F.col("ts") >= cut) & (F.col("user_id") % 19 == 0)
     ).select("user_id", "event_type", "ts", "event_id")
 
-    with _scd2_mutation_lock(spark, p):
+    with lock(spark, p + ".mutate.lock"):
         with pytest.raises(ValueError, match="in flight"):
             scd2_merge_into(spark, p, delta)
         with pytest.raises(ValueError, match="in flight"):
@@ -2022,10 +2019,10 @@ def test_pointer_commit_is_versioned_and_never_pointerless(spark, tmp_path):
 
     from correlationapi_spark.storeio import (
         StoreIO,
+        commit,
         pointer_gc,
         pointer_read,
         pointer_write,
-        retired_union,
     )
 
     p = str(tmp_path / "store")
@@ -2042,11 +2039,7 @@ def test_pointer_commit_is_versioned_and_never_pointerless(spark, tmp_path):
     # "old resolves" and "new resolves" lacks a pointer
     os.makedirs(os.path.join(p, "corpus-v000002"))
     lay = pointer_read(io, p)
-    pointer_write(io, p, {
-        "version": 2, "objects": {"corpus": "corpus-v000002"},
-        "retired": retired_union(lay, ["corpus-v000001"],
-                                 ["corpus-v000002"]),
-    })
+    commit(io, p, lay, objects={"corpus": "corpus-v000002"})
     names = [n for n in os.listdir(p) if n.startswith("_layout-v")]
     assert set(ptr1) < set(names) and len(names) == 2
     assert pointer_read(io, p)["version"] == 2
@@ -2072,19 +2065,12 @@ def test_pointer_commit_is_versioned_and_never_pointerless(spark, tmp_path):
     os.remove(os.path.join(p, newest))
     assert pointer_read(io, p)["version"] == 1
 
-    # GC sweeps the tmp stray and keeps the latest two pointer files
+    # GC sweeps the tmp stray and keeps the latest two pointer files;
+    # the vanished version 2 is committed again, reusing its object
     lay = pointer_read(io, p)
-    for v in (3, 4, 5):
-        os.makedirs(os.path.join(p, f"corpus-v{v:06d}"))
-        lay = {
-            "version": v,
-            "objects": {"corpus": f"corpus-v{v:06d}"},
-            "retired": retired_union(
-                lay, [f"corpus-v{v - 1:06d}"], [f"corpus-v{v:06d}"]
-            ),
-            "retired_at": lay.get("retired_at", {}),
-        }
-        pointer_write(io, p, lay)
+    for v in (2, 3, 4, 5):
+        os.makedirs(os.path.join(p, f"corpus-v{v:06d}"), exist_ok=True)
+        commit(io, p, lay, objects={"corpus": f"corpus-v{v:06d}"})
         lay = pointer_read(io, p)
     pointer_gc(io, p, lay, grace=0.0)
     left = sorted(n for n in os.listdir(p) if n.startswith("_layout-v"))
@@ -2105,10 +2091,10 @@ def test_gc_grace_floor_and_retired_trimming(spark, tmp_path, monkeypatch):
     import correlationapi_spark.storeio as sio
     from correlationapi_spark.storeio import (
         StoreIO,
+        commit,
         pointer_gc,
         pointer_read,
         pointer_write,
-        retired_union,
     )
 
     p = str(tmp_path / "store")
@@ -2123,15 +2109,8 @@ def test_gc_grace_floor_and_retired_trimming(spark, tmp_path, monkeypatch):
         # a destructive mutation: preamble GC, stage, swap
         pointer_gc(io, p, lay)
         os.makedirs(os.path.join(p, f"corpus-v{v:06d}"))
-        new = {
-            "version": v,
-            "objects": {"corpus": f"corpus-v{v:06d}"},
-            "retired": retired_union(
-                lay, [lay["objects"]["corpus"]], [f"corpus-v{v:06d}"]
-            ),
-            "retired_at": lay.get("retired_at", {}),
-        }
-        pointer_write(io, p, new)
+        assert commit(io, p, lay, objects={
+            "corpus": f"corpus-v{v:06d}"})["version"] == v
         return pointer_read(io, p)
 
     # (a) two immediate successive mutations: a reader that resolved v1

@@ -1913,7 +1913,6 @@ def test_pq_adc_recall_vs_exact(spark):
         PQ_SUB_D,
         PQ_TRAIN_N,
         StoreIO,
-        _ivf_layout,
         _pq_anchor_table,
         _pq_anchors_read,
         _pq_lut3_one,
@@ -1923,6 +1922,7 @@ def test_pq_adc_recall_vs_exact(spark):
         _pq_train_local,
         _seq_l2,
     )
+    from correlationapi_spark.storeio import pointer_require
 
     out = REGISTRY["q_sim_topk_pq"].fn(spark, SF_SMOKE).collect()
     assert out
@@ -1936,7 +1936,7 @@ def test_pq_adc_recall_vs_exact(spark):
         for r in load_tables(spark, SF_SMOKE)["embeddings"].collect()
     }
     path = _pq_store_for(spark, SF_SMOKE)
-    objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
     meta = _pq_meta_read(spark, path, objs)
     assert meta["residual"] is True
     books = meta["books"]
@@ -2037,7 +2037,6 @@ def test_pq_stored_probe_after_append_matches_fresh_encode(spark, tmp_path):
     through the stored codes."""
     from correlationapi_spark.llm.similarity import (
         StoreIO,
-        _ivf_layout,
         _pq_anchors_read,
         _pq_codes,
         _pq_meta_read,
@@ -2045,14 +2044,15 @@ def test_pq_stored_probe_after_append_matches_fresh_encode(spark, tmp_path):
         ivf_live,
         pq_probe_stored,
     )
+    from correlationapi_spark.storeio import pointer_require
 
     path, emb = _pq_attached_store(
         spark, tmp_path, F.col("vec_id") % 5 != 0
     )
-    objs0 = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs0 = pointer_require(StoreIO(path, spark), path)["objects"]
     ivf_append(spark, path, emb.filter(F.col("vec_id") % 5 == 0))
 
-    objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
     # the append is additive: book and anchors carried by name
     assert objs["pqbooks"] == objs0["pqbooks"]
     assert objs["pqanchors"] == objs0["pqanchors"]
@@ -2190,7 +2190,6 @@ def test_pq_attachment_survives_maintenance(spark, tmp_path):
     re-attached)."""
     from correlationapi_spark.llm.similarity import (
         StoreIO,
-        _ivf_layout,
         _pq_books_read,
         ivf_compact,
         ivf_delete,
@@ -2200,9 +2199,10 @@ def test_pq_attachment_survives_maintenance(spark, tmp_path):
         ivf_write,
         pq_probe_stored,
     )
+    from correlationapi_spark.storeio import pointer_require
 
     path, emb = _pq_attached_store(spark, tmp_path)
-    objs0 = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs0 = pointer_require(StoreIO(path, spark), path)["objects"]
     books0 = _pq_books_read(spark, path, objs0)
 
     assert ivf_delete(spark, path, [7, 8]) == 2
@@ -2210,7 +2210,7 @@ def test_pq_attachment_survives_maintenance(spark, tmp_path):
     live = ivf_live(spark, path)[0]
     assert "pq_code" in live.columns
     assert live.filter(F.col("pq_code").isNull()).count() == 0
-    objs1 = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs1 = pointer_require(StoreIO(path, spark), path)["objects"]
     assert objs1["pqbooks"] == objs0["pqbooks"]  # book carried by name
     assert _pq_books_read(spark, path, objs1) == books0
 
@@ -2223,7 +2223,7 @@ def test_pq_attachment_survives_maintenance(spark, tmp_path):
     # rebuild drops PQ: the new corpus is new data
     a, c = ivf_index(emb, n_cells=8)
     ivf_write(a, c, path)
-    objs2 = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs2 = pointer_require(StoreIO(path, spark), path)["objects"]
     assert "pqbooks" not in objs2
     assert "pq_code" not in ivf_live(spark, path)[0].columns
     with pytest.raises(ValueError, match="pq_attach"):
@@ -2279,11 +2279,11 @@ def test_ivfpq_candidates_subset_and_consistent(spark):
     from correlationapi_spark.io import load_tables
     from correlationapi_spark.llm.similarity import (
         StoreIO,
-        _ivf_layout,
         _pq_store_for,
         _seq_l2,
         pq_probe_stored,
     )
+    from correlationapi_spark.storeio import pointer_require
 
     fused = REGISTRY["q_sim_topk_ivfpq"].fn(spark, SF_SMOKE).collect()
     assert fused
@@ -2298,7 +2298,7 @@ def test_ivfpq_candidates_subset_and_consistent(spark):
         for r in load_tables(spark, SF_SMOKE)["embeddings"].collect()
     }
     path = _pq_store_for(spark, SF_SMOKE)
-    objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
     cellof = {
         r.vec_id: int(r.cell)
         for r in spark.read.parquet(
@@ -3979,7 +3979,6 @@ def test_pq_attach_is_partitioning_invariant(spark, tmp_path):
     from correlationapi_spark.io import load_tables
     from correlationapi_spark.llm.similarity import (
         StoreIO,
-        _ivf_layout,
         _pq_anchors_read,
         _pq_meta_read,
         corpus_view,
@@ -3987,6 +3986,7 @@ def test_pq_attach_is_partitioning_invariant(spark, tmp_path):
         ivf_write,
         pq_attach,
     )
+    from correlationapi_spark.storeio import pointer_require
 
     emb = corpus_view(
         load_tables(spark, SF_SMOKE)["embeddings"], "vec_id", "embedding"
@@ -3997,7 +3997,7 @@ def test_pq_attach_is_partitioning_invariant(spark, tmp_path):
         path = str(tmp_path / f"pq{i}")
         ivf_write(frame, c, path)
         pq_attach(spark, path)
-        objs = _ivf_layout(StoreIO(path, spark), path)["objects"]
+        objs = pointer_require(StoreIO(path, spark), path)["objects"]
         import os
 
         codes = {

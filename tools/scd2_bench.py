@@ -162,14 +162,11 @@ def main() -> None:
     t_rebuild = time.time() - t0
 
     # 3. equivalence at this grain (row sets, not just counts)
-    from correlationapi_spark.operators.analytics import (
-        _scd2_layout,
-        _scd2_read,
-    )
-    from correlationapi_spark.storeio import StoreIO
+    from correlationapi_spark.operators.analytics import _scd2_read
+    from correlationapi_spark.storeio import StoreIO, pointer_require
 
     stored = _scd2_read(
-        spark, store, _scd2_layout(StoreIO(store, spark), store)
+        spark, store, pointer_require(StoreIO(store, spark), store)
     ).select(
         "user_id", "state", "valid_from", "valid_to", "is_current"
     )
@@ -180,7 +177,7 @@ def main() -> None:
         stored.exceptAll(rebuilt).count() + rebuilt.exceptAll(stored).count()
     )
     stored2 = _scd2_read(
-        spark, store2, _scd2_layout(StoreIO(store2, spark), store2)
+        spark, store2, pointer_require(StoreIO(store2, spark), store2)
     ).select(
         "user_id", "state", "valid_from", "valid_to", "is_current"
     )
