@@ -3114,13 +3114,15 @@ class CorrelationAPI:
         mapping mirrors the event-log commands: user/event/time/order →
         business key / state / valid-from / lineage tie-break. The
         bucketing modulus comes from the store's own layout pointer
-        (advice r12). Returns the touched/total bucket stats plus
-        ``rows_touched`` counted over the touched buckets ONLY, INSIDE
-        the merge's
-        critical section (advice r13: the old post-lock re-read could
-        be inflated by a concurrent merge landing between release and
-        count; the merge itself now reports the number from the slices
-        it just published)."""
+        (advice r12). The batch is appended as one delta object (no
+        bucket is rewritten); once the store holds ``n_buckets``
+        deltas, the next merge folds them into the buckets. Returns
+        ``touched`` (the batch's buckets), ``total`` (occupied bucket
+        objects before the merge) and ``rows_touched``: the post-merge
+        row count of the touched buckets ONLY, counted INSIDE the
+        merge's critical section (advice r13: the old post-lock
+        re-read could be inflated by a concurrent merge landing
+        between release and count)."""
         from .operators.analytics import scd2_merge_into
 
         df = self._get(dataset, user_col, event_col, time_col, order_col)

@@ -98,10 +98,12 @@ container, and none is needed for a JSON-for-JSON contract:
   GET  /psi/drift?dataset=&time=&value=&path=  → per-window PSI vs pin
   POST /scd2/merge {"dataset","user","event","time","order","path"}
        → merge a staged CDC batch into an EXISTING bucketed SCD2 store
-         (touches only the batch's buckets — round 14: per-bucket
-         versioned objects behind one atomic pointer swap; the
-         bucketing modulus comes from the store's layout pointer)
-  POST /scd2/recover {"path"}  → reclaim retired/orphan bucket objects
+         (appends the batch as one delta object behind one atomic
+         pointer commit, rewriting no bucket; once the store holds
+         n_buckets deltas the next merge folds them into the touched
+         buckets; the bucketing modulus comes from the store's layout
+         pointer)
+  POST /scd2/recover {"path"}  → reclaim retired/orphan store objects
          (idempotent; recovered=false when nothing to do; gc_skipped
          as for /index/recover)
   POST /scd2/snapshot {"path","ts"[,"users","limit"]}  → point-in-time

@@ -2736,15 +2736,20 @@ def q_event_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SCD2 MERGE upsert (round 10 — the r9 verdict's Delta-style CDC ask).
 # q_scd2 rebuilds the whole dimension from the full history; a 100 TB
 # pipeline cannot rewrite a 100 TB dimension for a 0.1% delta. The
-# merge path below is the open-format MERGE shape: the dimension is
-# stored hash-bucketed on the business key, a staged CDC batch
-# identifies its affected buckets (a ≤n_buckets bounded collect),
-# ONLY those partitions are read (directory-level pruning), affected
-# users' chains are re-collapsed against the staged rows
-# (scd2_intervals' fold property), untouched users pass through
-# verbatim, and a dynamic-partition-overwrite writes back exactly the
-# affected directories. Touched-partition count ≪ total is canaried
-# in tests/test_plans.py.
+# store is hash-bucketed on the business key and maintained
+# merge-on-read, the Delta Lake / Iceberg / LSM shape: a staged CDC
+# batch (scd2_merge_into) is written ONCE as one new delta object of
+# raw observations and no bucket is rewritten; readers re-collapse the
+# selected buckets ∪ the deltas' rows of those buckets on read
+# (scd2_intervals' fold property makes that the rows a rewrite would
+# write). Once the pointer names n_buckets deltas, the next merge FOLDS:
+# it identifies the buckets the batch or any delta touches (a
+# ≤n_buckets bounded collect), reads ONLY those (directory-level
+# pruning), re-collapses them with every delta and the batch, writes
+# them back as new bucket objects and drops the deltas — so a full
+# scan never opens more than 2·n_buckets objects. scd2_merge, the
+# library exhibit that rebuilds its base, folds its batch at once.
+# Touched-partition count ≪ total is canaried in tests/test_plans.py.
 
 def _scd2_store_dir() -> str:
     # the shared per-call mkdtemp + exit-time cleanup helper (the
@@ -2769,13 +2774,35 @@ def _bucket_logical(b: int) -> str:
     return f"b{int(b):05d}"
 
 
+def _scd2_bucket(n_buckets: int):
+    """The bucket id of a row: pmod(xxhash64(user_id), n_buckets) —
+    the one bucketing rule every writer and reader of the store
+    shares."""
+    return F.pmod(F.xxhash64(F.col("user_id")), F.lit(int(n_buckets)))
+
+
+def _scd2_obs(events: DataFrame) -> DataFrame:
+    """An event-log frame (user_id, event_type, ts, event_id) as the
+    observation chain scd2_intervals collapses."""
+    return events.select(
+        "user_id",
+        F.col("event_type").alias("state"),
+        F.col("ts").alias("valid_from"),
+        "event_id",
+    )
+
+
 # The live SCD2 layout: the versioned pointer (storeio.py). On top of
 # the storeio contract it carries the store facts a later merge must not
 # trust the caller for (advice r12): ``n_buckets`` (the bucketing
 # modulus), ``key_type`` (the business-key type the delta must cast to)
-# and the dimension's ``schema`` json (so an empty selection still reads
-# with the right columns). ``buckets`` maps bucket id (string) → object
-# directory.
+# and the dimension's ``schema`` json (every object is read with it, so
+# no read infers a schema and an empty selection still has the right
+# columns). ``buckets`` maps bucket id (string) → object directory of
+# collapsed dimension rows; ``deltas`` maps the committing version
+# (string) → object directory of one appended batch's raw observations
+# (the schema's first four columns, one file sorted by user_id), empty
+# or absent right after a fold.
 
 
 def _scd2_schema(lay: dict):
@@ -2787,17 +2814,14 @@ def _scd2_schema(lay: dict):
     return StructType.fromJson(json.loads(lay["schema"]))
 
 
-def _scd2_read(
+def _scd2_buckets(
     spark: SparkSession, path: str, lay: dict, buckets=None
 ) -> DataFrame:
-    """Open the dimension rows of the given layout: the union of the
-    named per-bucket object directories, PATH-LEVEL pruned to
-    ``buckets`` when given — the 100 TB read shape: unaffected buckets
-    are never even LISTED, which is strictly stronger than partition
-    pruning. The bucket id is not a data column; it is recomputable as
-    pmod(xxhash64(user_id), n_buckets) and lives only in the pointer's
-    map. An empty selection returns an empty frame with the store
-    schema from the pointer."""
+    """The stored (collapsed) rows of the layout's bucket objects,
+    PATH-LEVEL pruned to ``buckets`` when given — the 100 TB read
+    shape: unaffected buckets are never even LISTED, which is strictly
+    stronger than partition pruning. The bucket id is not a data
+    column; it lives only in the pointer's map."""
     import os
 
     sel = lay["buckets"]
@@ -2805,9 +2829,54 @@ def _scd2_read(
         want = {str(int(b)) for b in buckets}
         sel = {k: v for k, v in sel.items() if k in want}
     dirs = [os.path.join(path, v) for v in sorted(sel.values())]
+    schema = _scd2_schema(lay)
     if dirs:
-        return spark.read.parquet(*dirs)
-    return spark.createDataFrame([], _scd2_schema(lay))
+        return spark.read.schema(schema).parquet(*dirs)
+    return spark.createDataFrame([], schema)
+
+
+def _scd2_deltas(spark: SparkSession, path: str, lay: dict):
+    """The raw observations of every delta object the layout names, or
+    None when it names none."""
+    import os
+
+    from pyspark.sql.types import StructType
+
+    names = sorted((lay.get("deltas") or {}).values())
+    if not names:
+        return None
+    schema = _scd2_schema(lay)
+    cols = ("user_id", "state", "valid_from", "event_id")
+    return spark.read.schema(
+        StructType([schema[c] for c in cols])
+    ).parquet(*[os.path.join(path, n) for n in names])
+
+
+def _scd2_read(
+    spark: SparkSession, path: str, lay: dict, buckets=None, where=None
+) -> DataFrame:
+    """Open the dimension rows of the given layout, pruned to
+    ``buckets`` when given (``_scd2_buckets``). With no delta objects
+    these are the stored rows. Otherwise the answer is scd2_intervals
+    over the selected buckets' stored observations ∪ the delta rows of
+    those buckets (pmod(xxhash64(user_id), n_buckets) recomputed on
+    the deltas, so a user new since the last fold, who may have no
+    bucket object yet, is still found) — by collapse(collapse(A) ++ B)
+    = collapse(A ++ B) exactly the rows a fold writes. ``where`` is a
+    predicate on user_id only, the collapse's partition key, so it
+    filters the rows BEFORE the collapse."""
+    stored = _scd2_buckets(spark, path, lay, buckets)
+    rows = _scd2_deltas(spark, path, lay)
+    if rows is None:
+        return stored if where is None else stored.filter(where)
+    if buckets is not None:
+        rows = rows.filter(
+            _scd2_bucket(lay["n_buckets"]).isin(
+                sorted(int(b) for b in buckets)
+            )
+        )
+    rows = stored.select(*rows.columns).unionByName(rows)
+    return scd2_intervals(rows if where is None else rows.filter(where))
 
 
 def _scd2_stage_publish(
@@ -2878,18 +2947,19 @@ def scd2_merge(
     round-11 journaled per-bucket rename protocol): the store is a
     versioned-pointer layout (storeio.py). The base build stages every
     bucket as unreferenced version-1 objects and commits them with ONE
-    atomic pointer commit; the delta merge then stages only
-    the affected buckets' rewritten slices as version-2 objects and
-    commits with a second pointer swap that names new objects for
-    touched buckets and the existing ones for the rest. A reader
-    racing either swap resolves the pointer once and sees the complete
-    pre- or post-merge store — never the half-published bucket mix the
-    old protocol's own docstring documented. Crash before a swap:
-    readers on the old version, orphan objects GC'd at the next
-    mutation's preamble. Crash after: readers on the new version,
-    replaced objects retired in the pointer (reclaimed at the next
-    preamble — a full mutation cycle of reader grace). On HDFS the
-    pointer rename is atomic; object stores without atomic rename
+    atomic pointer commit; the batch is then FOLDED at once (this
+    exhibit rebuilds its base on every call, so it never appends a
+    delta object): only the affected buckets' rewritten slices are
+    staged as version-2 objects and a second pointer swap names new
+    objects for touched buckets and the existing ones for the rest. A
+    reader racing either swap resolves the pointer once and sees the
+    complete pre- or post-merge store — never the half-published
+    bucket mix the old protocol's own docstring documented. Crash
+    before a swap: readers on the old version, orphan objects GC'd at
+    the next mutation's preamble. Crash after: readers on the new
+    version, replaced objects retired in the pointer (reclaimed at the
+    next preamble — a full mutation cycle of reader grace). On HDFS
+    the pointer rename is atomic; object stores without atomic rename
     need a conditional-put — the honest raw-parquet limit. ``_crash``
     hooks the merge publish's two protocol points ("staged",
     "swapped"); ``_store_path`` pins the store directory so tests can
@@ -2910,33 +2980,30 @@ def scd2_merge(
         )
     # a path with no pointer is a first build
     with mutation(spark, path, _scd2_lock(path), build=True) as (io, old):
-        bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
-        obs = lambda df: df.select(  # noqa: E731 — tiny local projection
-            "user_id",
-            F.col("event_type").alias("state"),
-            F.col("ts").alias("valid_from"),
-            "event_id",
-        )
         # three-valued-logic guard (review r10): a NULL delta_pred row
         # would otherwise vanish from BOTH sides (filter(p) and
         # filter(~p) each reject NULL) — coalesce pins NULL to "not
         # staged", so every event lands in exactly one of base/delta
         delta_pred = F.coalesce(delta_pred, F.lit(False))
-        base = scd2_intervals(obs(events.filter(~delta_pred)))
+        base = scd2_intervals(_scd2_obs(events.filter(~delta_pred)))
         v = old["version"] + 1
         new_buckets = _scd2_stage_publish(
-            spark, io, path, base.withColumn("bucket", bucket), v
+            spark, io, path,
+            base.withColumn("bucket", _scd2_bucket(n_buckets)), v,
         )
+        # a rebuild over an existing store retires its deltas too
         lay = commit(
             io, path, old,
             buckets=new_buckets,
+            deltas={},
             n_buckets=n_buckets,
             key_type=events.schema["user_id"].dataType.simpleString(),
             schema=json.dumps(base.schema.jsonValue()),
         )
         total = len(new_buckets)
         out, affected, rows_touched = _scd2_apply(
-            spark, io, path, lay, events.filter(delta_pred), _crash=_crash
+            spark, io, path, lay, events.filter(delta_pred), fold=True,
+            _crash=_crash,
         )
     return out, {"touched": len(affected), "total": total,
                  "buckets": affected, "rows_touched": rows_touched}
@@ -2948,22 +3015,33 @@ def _scd2_apply(
     path: str,
     lay: dict,
     delta: DataFrame,
+    fold: bool,
     _crash=None,
 ) -> tuple[DataFrame, list, int]:
-    """The partition-pruned merge phase shared by scd2_merge (which
-    builds the base store first) and scd2_merge_into (which merges
-    into an EXISTING store): fold the staged event-log rows into the
-    affected buckets only, stage the rewritten slices as unreferenced
-    version-N+1 objects, commit with one pointer swap. The affected-
-    bucket read is PATH-level pruned (only the touched buckets' object
-    dirs are passed to the reader — untouched buckets are never
-    listed); the bucketing modulus is the pointer's ``n_buckets``.
-    Returns (read-back dimension, affected bucket ids,
-    rows_touched) where rows_touched counts the rewritten slices'
-    rows from their parquet footers INSIDE the critical section
-    (advice r13: the old count re-read the store after the lock was
-    released, so a concurrent merge could inflate the number).
-    Callers hold the per-store mutation lock."""
+    """The merge phase shared by scd2_merge (which builds the base
+    store first and always folds) and scd2_merge_into (which merges
+    into an EXISTING store): cast the staged event-log rows to the
+    store's types, refuse NULL keys, find the batch's affected buckets
+    (the bucketing modulus is the pointer's ``n_buckets``), then either
+
+    * append (``fold`` False): write the batch's observations as ONE
+      new ``delta`` object and commit it into the pointer's ``deltas``
+      map — no bucket is rewritten, so nothing is retired; or
+    * fold: re-collapse, in one pass, the buckets the batch or any
+      delta touches (PATH-level pruned read: untouched buckets are
+      never listed) with every delta and the batch, stage them as
+      unreferenced version-N+1 objects and commit with one pointer
+      swap that also empties ``deltas`` (retiring the rewritten
+      buckets' old objects and every delta).
+
+    Returns (read-back dimension, the batch's affected bucket ids,
+    rows_touched) where rows_touched is the post-merge row count of
+    those buckets, counted INSIDE the critical section (advice r13:
+    the old count re-read the store after the lock was released, so a
+    concurrent merge could inflate the number). Callers hold the
+    per-store mutation lock."""
+    import os
+
     # Cast the delta to the store's column types BEFORE anything that
     # depends on the key bytes (advice r12): xxhash64 hashes int and
     # long differently, so computing the affected-bucket set on the
@@ -2990,34 +3068,46 @@ def _scd2_apply(
         F.col("event_id").cast(types["event_id"]).alias("event_id"),
     )
     # materialize() the cast delta (round 15): the merge consumes it
-    # TWICE (the fused probe/affected aggregate and the re-collapse
-    # union), and each consumer re-ran the caller's full delta subtree
-    # — for the bench/CDC shape that is a filtered fact-table scan per
-    # consumer. One lazy localCheckpoint computes the delta once (it
-    # is small by the CDC contract); every consumer reads the same
-    # executor-local blocks. Row-identical output.
+    # TWICE (the fused probe/affected aggregate and the write), and
+    # each consumer re-ran the caller's full delta subtree — for the
+    # bench/CDC shape that is a filtered fact-table scan per consumer.
+    # One lazy localCheckpoint computes the delta once (it is small by
+    # the CDC contract); every consumer reads the same executor-local
+    # blocks. Row-identical output.
     delta = materialize(delta)
-    n_buckets = lay["n_buckets"]
-    bucket = F.pmod(F.xxhash64(F.col("user_id")), F.lit(n_buckets))
-    obs = lambda df: df.select(  # noqa: E731 — tiny local projection
-        "user_id",
-        F.col("event_type").alias("state"),
-        F.col("ts").alias("valid_from"),
-        "event_id",
-    )
+    bucket = _scd2_bucket(lay["n_buckets"])
     # ONE O(delta) aggregate serves three former jobs (round 16): the
     # entry raw-NULL probe, the lossy-cast NULL probe, and the
     # affected-bucket distinct. The NULL-key checks cannot ride the
     # bucket value alone — Spark's xxhash64 folds a NULL input to the
     # SEED (null-tolerant, not null-propagating), so a NULLed key
     # silently buckets to pmod(42, n) — hence the explicit flags;
-    # _raw_null picks the right contract error. Output is bounded by
+    # _raw_null picks the right contract error. A fold also rewrites
+    # every bucket an earlier delta touched: the deltas' keys ride the
+    # same aggregate with the flags off. Output is bounded by
     # n_buckets, never by data.
+    keys = delta.select(
+        bucket.alias("b"),
+        F.col("user_id").isNull().alias("_null"),
+        "_raw_null",
+        F.lit(True).alias("_batch"),
+    )
+    earlier = _scd2_deltas(spark, path, lay) if fold else None
+    if earlier is not None:
+        keys = keys.unionByName(
+            earlier.select(
+                bucket.alias("b"),
+                F.lit(False).alias("_null"),
+                F.lit(False).alias("_raw_null"),
+                F.lit(False).alias("_batch"),
+            )
+        )
     probe_rows = (
-        delta.groupBy(bucket.alias("b"))
+        keys.groupBy("b")
         .agg(
-            F.max(F.col("user_id").isNull()).alias("any_null"),
+            F.max("_null").alias("any_null"),
             F.max("_raw_null").alias("any_raw"),
+            F.max("_batch").alias("in_batch"),
         )
         .collect()
     )
@@ -3032,55 +3122,83 @@ def _scd2_apply(
             f"key type ({types['user_id'].simpleString()}) produced "
             "NULL — the delta's key type does not fit the store's"
         )
-    delta = delta.drop("_raw_null")
-    affected = sorted(r.b for r in probe_rows)
-    pruned = _scd2_read(spark, path, lay, buckets=affected)
-    # ONE-PASS merge (round 16 — r15 verdict item 1): the old keep/redo
-    # split (left_anti for untouched users, left_semi ∪ delta
-    # re-collapsed for touched ones) read the pruned buckets TWICE
-    # inside the single stage-write job. Re-collapsing the ENTIRE
-    # affected read plus the delta is byte-identical with ONE pruned
-    # scan and no user joins at all, by the two facts scd2_intervals'
-    # own docstring pins:
-    #   - collapse is idempotent: every stored row was produced by
-    #     scd2_intervals (the store's only writer), so per user the
-    #     chain has no consecutive duplicate states and
-    #     valid_to = lead(valid_from) — re-collapsing an untouched
-    #     user's rows keeps every row and recomputes the identical
-    #     valid_to/is_current values;
-    #   - collapse(collapse(A) ++ B) = collapse(A ++ B): a touched
-    #     user's stored prefix plus delta observations re-collapses to
-    #     exactly what the old redo branch computed (same input set,
-    #     same (valid_from, event_id) window sort).
-    # Plan diff: two pruned-object scans + two joins + union → one
-    # scan + one user_id exchange + window (plans/r16/scd2_merge_*).
-    # Byte-equality with the full rebuild stays pinned by the
-    # merge≡rebuild property tests and the q_scd2_merge oracle hash.
-    merged = scd2_intervals(
-        pruned.select("user_id", "state", "valid_from", "event_id")
-        .unionByName(obs(delta))
-    ).withColumn("bucket", bucket)
-    # rows_touched rides the STAGE WRITE as an observed metric
-    # (round 15): every merged row lands in some staged bucket dir and
-    # every staged dir is renamed into a new object, so count(merged)
-    # IS the touched-slice row count — the post-swap footer-count job
-    # it replaces re-read metadata the write already knew. Still
-    # counted inside the critical section (advice r13).
-    from pyspark.sql import Observation
-
-    touched_obs = Observation()
-    merged = merged.observe(touched_obs, F.count(F.lit(1)).alias("n"))
-
+    obs = _scd2_obs(delta.drop("_raw_null"))
+    affected = sorted(r.b for r in probe_rows if r.in_batch)
     v = lay["version"] + 1
-    new_objs = _scd2_stage_publish(spark, io, path, merged, v)
-    if _crash is not None:
-        _crash("staged")
-    # commit carries the build's retirees forward when scd2_merge
-    # commits twice under one lock
-    new_lay = commit(io, path, lay, buckets={**lay["buckets"], **new_objs})
-    if _crash is not None:
-        _crash("swapped")
-    rows_touched = int(touched_obs.get["n"]) if new_objs else 0
+
+    def publish(**fields) -> dict:
+        if _crash is not None:
+            _crash("staged")
+        new_lay = commit(io, path, lay, **fields)
+        if _crash is not None:
+            _crash("swapped")
+        return new_lay
+
+    if not fold and not affected:
+        new_lay, rows_touched = lay, 0  # an empty batch appends nothing
+    elif not fold:
+        # the batch is small by the CDC contract: one file, sorted by
+        # the key every reader filters and partitions on. A new object,
+        # never files added to an existing one — a reader must see a
+        # batch whole or not at all, or it would tear a user's chain.
+        name = object_dir("delta", v)
+        obs.coalesce(1).sortWithinPartitions(
+            "user_id", "valid_from", "event_id"
+        ).write.mode("overwrite").parquet(os.path.join(path, name))
+        new_lay = publish(deltas={**lay.get("deltas", {}), str(v): name})
+        rows_touched = _scd2_read(spark, path, new_lay, affected).count()
+    else:
+        stored = _scd2_buckets(
+            spark, path, lay, buckets=[r.b for r in probe_rows]
+        )
+        # ONE-PASS merge (round 16 — r15 verdict item 1): the old
+        # keep/redo split (left_anti for untouched users, left_semi ∪
+        # delta re-collapsed for touched ones) read the pruned buckets
+        # TWICE inside the single stage-write job. Re-collapsing the
+        # ENTIRE affected read plus the deltas and the batch is
+        # byte-identical with ONE pruned scan and no user joins at all,
+        # by the two facts scd2_intervals' own docstring pins:
+        #   - collapse is idempotent: every stored row was produced by
+        #     scd2_intervals (the store's only writer), so per user the
+        #     chain has no consecutive duplicate states and
+        #     valid_to = lead(valid_from) — re-collapsing an untouched
+        #     user's rows keeps every row and recomputes the identical
+        #     valid_to/is_current values;
+        #   - collapse(collapse(A) ++ B) = collapse(A ++ B): a touched
+        #     user's stored prefix plus newer observations re-collapses
+        #     to exactly what the old redo branch computed (same input
+        #     set, same (valid_from, event_id) window sort).
+        # Every delta row lies in a rewritten bucket (their keys fed
+        # the probe), so the deltas join the union unfiltered.
+        # Plan diff: two pruned-object scans + two joins + union → one
+        # scan + one user_id exchange + window (plans/r16/scd2_merge_*).
+        # Byte-equality with the full rebuild stays pinned by the
+        # merge≡rebuild property tests and the q_scd2_merge oracle hash.
+        rows = stored.select(*obs.columns).unionByName(obs)
+        if earlier is not None:
+            rows = rows.unionByName(earlier)
+        merged = scd2_intervals(rows).withColumn("bucket", bucket)
+        # rows_touched rides the STAGE WRITE as an observed metric
+        # (round 15): every merged row lands in some staged bucket dir,
+        # so the rows of the batch's buckets among them ARE the
+        # touched-slice row count — a post-swap count would re-read
+        # what the write already saw. Still counted inside the critical
+        # section (advice r13).
+        from pyspark.sql import Observation
+
+        touched_obs = Observation()
+        merged = merged.observe(
+            touched_obs,
+            F.count(F.when(F.col("bucket").isin(affected), True))
+            .alias("n"),
+        )
+        new_objs = _scd2_stage_publish(spark, io, path, merged, v)
+        # commit carries the build's retirees forward when scd2_merge
+        # commits twice under one lock
+        new_lay = publish(
+            buckets={**lay["buckets"], **new_objs}, deltas={}
+        )
+        rows_touched = int(touched_obs.get["n"]) if new_objs else 0
     out = _scd2_read(spark, path, new_lay).select(
         "user_id", "state", "valid_from", "valid_to", "is_current"
     )
@@ -3096,19 +3214,26 @@ def scd2_merge_into(
     """MERGE a staged CDC batch into an EXISTING bucketed SCD2 store —
     the incremental maintenance path a daily pipeline actually runs
     (round 12; the SCD2 twin of ivf_append). ``delta`` is an event-log
-    frame (user_id, event_type, ts, event_id). Cost is O(affected
-    buckets' rows + |delta|), never O(store): only the affected
-    buckets' object directories are read (path-level pruning), only
-    their rewritten slices are staged, and the publish is ONE atomic
-    pointer swap (see scd2_merge).
+    frame (user_id, event_type, ts, event_id). The batch is APPENDED:
+    its observations are written once as one new delta object and
+    published with ONE atomic pointer commit; no bucket is rewritten
+    and nothing is retired, so the cost is O(|delta|) plus one count
+    over the merged view of the affected buckets (``rows_touched``).
+    Readers re-collapse buckets ∪ deltas (``_scd2_read``). When the
+    pointer already names ``n_buckets`` deltas the merge FOLDS instead:
+    it rewrites the buckets the batch or any delta touches (reading
+    only those — path-level pruning) and drops every delta, in one
+    pointer swap (see scd2_merge), so a read never opens more than
+    2·n_buckets objects.
 
     Contract mirrors scd2_merge: per affected user the staged rows
     are strictly newer than every stored observation (CDC append);
     users new to the store fold into fresh intervals (their buckets —
-    possibly previously absent — publish through the same swap). The
+    possibly previously absent — get objects at the next fold). The
     bucketing modulus comes from the store's own layout pointer, never
     from the caller (advice r12). Mutations serialize under the
-    per-store lock; stats carry the affected bucket ids and the
+    per-store lock; stats carry the batch's affected bucket ids, the
+    occupied bucket objects before the merge (``total``) and the
     in-lock ``rows_touched`` count."""
     from pyspark.errors import AnalysisException
 
@@ -3127,8 +3252,9 @@ def scd2_merge_into(
         if not lay["buckets"]:
             raise no_store
         total = len(lay["buckets"])
+        fold = len(lay.get("deltas", {})) >= lay["n_buckets"]
         out, affected, rows_touched = _scd2_apply(
-            spark, io, path, lay, delta, _crash=_crash
+            spark, io, path, lay, delta, fold, _crash=_crash
         )
     return out, {
         "touched": len(affected),
@@ -3173,7 +3299,9 @@ def scd2_snapshot_at(
     used — one spark.range(1) row, no data scan — and ONLY those
     buckets' object directories are opened (path-level pruning:
     untouched buckets are never listed, strictly stronger than the old
-    partition-column filter). Without user_ids the snapshot is a
+    partition-column filter), plus the delta objects merged since the
+    last fold, whose rows are filtered to those users before the
+    re-collapse. Without user_ids the snapshot is a
     full-store predicate scan by design. A path with no store raises
     the reader's AnalysisException. For integer-keyed stores,
     non-integral numeric ids are REJECTED rather than silently
@@ -3187,13 +3315,10 @@ def scd2_snapshot_at(
         # THROWS at constant folding (CAST_INVALID_INPUT) — the HTTP
         # surface would 500 on a user typo instead of 400
         tcol = F.try_to_timestamp(F.lit("" if ts is None else str(ts)))
-    # an unparseable ts would otherwise silently snapshot to an empty
-    # dimension — a user error on the HTTP/CLI surfaces must say so
-    # (one spark.range(1) row, no data scan)
-    if spark.range(1).select(tcol.alias("t")).head()["t"] is None:
-        raise ValueError(f"scd2_snapshot_at: unparseable timestamp {ts!r}")
     lay = pointer_require(StoreIO(path, spark), path)
-    sel_buckets = None
+    # one spark.range(1) row, no data scan, answers both the ts parse
+    # and the user ids' buckets
+    probe = [tcol.alias("t")]
     if user_ids is not None:
         if not user_ids:
             raise ValueError(
@@ -3222,27 +3347,27 @@ def scd2_snapshot_at(
             user_ids = [str(u) for u in user_ids]
         n = int(lay["n_buckets"])
         lits = [F.lit(u).cast(key_t) for u in user_ids]
-        sel_buckets = sorted(
-            set(
-                spark.range(1)
-                .select(
-                    F.array(
-                        *[F.pmod(F.xxhash64(c), F.lit(n)) for c in lits]
-                    ).alias("bs")
-                )
-                .head()["bs"]
-            )
+        probe.append(
+            F.array(*[F.pmod(F.xxhash64(c), F.lit(n)) for c in lits])
+            .alias("bs")
         )
-    stored = _scd2_read(spark, path, lay, buckets=sel_buckets)
-    snap = stored.filter(
+    row = spark.range(1).select(*probe).head()
+    # an unparseable ts would otherwise silently snapshot to an empty
+    # dimension — a user error on the HTTP/CLI surfaces must say so
+    if row["t"] is None:
+        raise ValueError(f"scd2_snapshot_at: unparseable timestamp {ts!r}")
+    sel_buckets = where = None
+    if user_ids is not None:
+        sel_buckets = sorted(set(row["bs"]))
+        # user_id is the collapse's partition key: the read filters the
+        # users before re-collapsing buckets ∪ deltas
+        where = F.col("user_id").isin(lits)
+    snap = _scd2_read(
+        spark, path, lay, buckets=sel_buckets, where=where
+    ).filter(
         (F.col("valid_from") <= tcol)
         & (F.col("is_current") | (F.col("valid_to") > tcol))
     )
-    if user_ids is not None:
-        key_dt = stored.schema["user_id"].dataType
-        snap = snap.filter(
-            F.col("user_id").isin([F.lit(u).cast(key_dt) for u in user_ids])
-        )
     return snap.select(
         "user_id", "state", "valid_from", "valid_to", "is_current"
     )

@@ -35,23 +35,30 @@ of one goes through this module:
   removes. Superseded pointer files are garbage-collected like retired
   objects (the latest two are kept, giving a lock-free reader that
   already resolved seq N a full swap of grace).
-* ADDITIVE mutations (IVF append / delete-tombstone, SCD2 none) keep
-  adding files to the current version's directories; racing readers may
-  or may not see the new files — both consistent states. An IVF append
-  adds to the ``delta`` object, never to the base ``corpus``; the first
-  append after a base rewrite creates the delta (rows first, then one
-  pointer bump), as the first delete creates the tombstones object.
+* ADDITIVE mutations (IVF append / delete-tombstone, SCD2 merge
+  append) rewrite no live object. The IVF ones keep adding files to the
+  current version's directories; racing readers may or may not see the
+  new files — both consistent states. An IVF append adds to the
+  ``delta`` object, never to the base ``corpus``; the first append
+  after a base rewrite creates the delta (rows first, then one pointer
+  bump), as the first delete creates the tombstones object. An SCD2
+  merge writes each batch as one NEW ``delta-v*`` object and commits
+  it into the pointer's ``deltas`` map (a reader must see a batch
+  whole: a partly visible one would tear a user's chain); readers
+  re-collapse buckets ∪ deltas.
 * DESTRUCTIVE mutations (rebuild, compact, recluster, PQ attach, SCD2
-  merge) write complete new objects beside the old ones (unreferenced
+  fold) write complete new objects beside the old ones (unreferenced
   until the swap, so staging IS just writing), then commit. ``commit``
   derives the pointer's ``retired`` list: the prior retirees plus every
   name the old layout kept live that the new one does not. Live names
   are the ``objects`` map plus any dict-valued extra (the SCD2
-  ``buckets`` map). An object a mutation does not replace is carried
-  by name (an IVF compact whose every tombstone is in the delta writes
-  only a new delta). Carrying the prior retirees forward matters when
-  one lock holder commits twice before any preamble GC runs (an SCD2
-  rebuild followed by its delta merge). Retired objects are
+  ``buckets`` and ``deltas`` maps). An object a mutation does not
+  replace is carried by name (an IVF compact whose every tombstone is
+  in the delta writes only a new delta; an SCD2 fold rewrites only the
+  buckets its batch or a delta touches, and retires every delta).
+  Carrying the prior retirees forward matters when one lock holder
+  commits twice before any preamble GC runs (an SCD2 rebuild followed
+  by its batch's fold). Retired objects are
   garbage-collected at a LATER mutation's preamble (``pointer_gc``),
   not at swap time, and only once they are older than
   ``GC_GRACE_SECONDS``
@@ -316,7 +323,8 @@ def pointer_write(io: StoreIO, path: str, layout: dict) -> None:
 def _live_names(layout: dict) -> set:
     """Every object name ``layout`` references: the ``objects`` map
     plus the string values of any dict-valued extra, so store-specific
-    object maps (the SCD2 ``buckets``) count without schema coupling."""
+    object maps (the SCD2 ``buckets`` and ``deltas``) count without
+    schema coupling."""
     return {
         n for v in layout.values() if isinstance(v, dict)
         for n in v.values() if isinstance(n, str)

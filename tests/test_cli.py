@@ -661,9 +661,9 @@ def test_cli_scd2_merge_into_and_recover(spark, capsys, tmp_path):
     # full-store count was an O(store) action on an O(affected) surface)
     assert 1 <= res["rows_touched"] <= want.count()
 
-    # round 14: recover = reclaim garbage — the merge retired the
-    # touched buckets' previous objects (reader grace); first call
-    # reclaims, second is the idempotent no-op
+    # round 14: recover = reclaim garbage — the merge's commit
+    # superseded the oldest pointer file beyond the kept two (reader
+    # grace); first call reclaims, second is the idempotent no-op
     rc, res = _run(capsys, ["scd2-recover", "--path", store])
     assert rc == 0 and res["recovered"] is True
     rc, res = _run(capsys, ["scd2-recover", "--path", store])

@@ -913,9 +913,10 @@ def test_scd2_lifecycle_over_http(base_url, spark, tmp_path):
     assert status == 200
     assert 1 <= res["touched"] < res["total"] and res["rows_touched"] > 0
 
-    # round 14: recover = reclaim garbage — the merge above retired
-    # the touched buckets' previous objects (reader grace), so the
-    # first call reclaims them and the second is the idempotent no-op
+    # round 14: recover = reclaim garbage — the merge above appended a
+    # delta object and retired nothing, but its commit superseded the
+    # oldest pointer file beyond the kept two (reader grace), so the
+    # first call reclaims it and the second is the idempotent no-op
     status, res = _post(f"{base_url}/scd2/recover", {"path": store})
     assert status == 200 and res["recovered"] is True
     status, res = _post(f"{base_url}/scd2/recover", {"path": store})

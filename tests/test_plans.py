@@ -1010,6 +1010,83 @@ def test_scd2_snapshot_prunes_buckets(spark, tmp_path):
     assert len(rows) == 1 and rows[0]["user_id"] == uid
 
 
+def test_scd2_snapshot_prunes_buckets_with_deltas(spark, tmp_path):
+    """The same path-level pruning once scd2_merge_into has appended a
+    delta object: a user_ids snapshot reads exactly the target
+    bucket's object plus the delta objects (whose rows it filters to
+    the requested users before re-collapsing), never another bucket's
+    files. A user new since the last fold, whose bucket has no object
+    yet, is answered from the delta alone."""
+    import os
+
+    import pyspark.sql.functions as F
+
+    from correlationapi_spark.io import load_tables
+    from correlationapi_spark.operators.analytics import (
+        scd2_merge,
+        scd2_merge_into,
+        scd2_snapshot_at,
+    )
+    from correlationapi_spark.storeio import StoreIO, pointer_require
+
+    ev = load_tables(spark, SF_SMOKE)["events"]
+    cut = F.lit("2024-01-25 00:00:00").cast("timestamp")
+    p = str(tmp_path / "snapstore")
+    scd2_merge(spark, ev.filter(F.col("ts") < cut), F.lit(False),
+               _store_path=p)
+    lay = pointer_require(StoreIO(p, spark), p)
+
+    def bucket_of(u):
+        return spark.range(1).select(
+            F.pmod(F.xxhash64(F.lit(u).cast("long")), F.lit(32)).alias("b")
+        ).head()["b"]
+
+    new_uid = next(
+        u for u in range(9_999_000, 9_999_999)
+        if str(bucket_of(u)) not in lay["buckets"]
+    )
+    planted = spark.createDataFrame(
+        [(new_uid, "planted", "2024-01-26 00:00:00", 900001)],
+        "user_id long, event_type string, ts string, event_id long",
+    ).select(
+        "user_id", "event_type",
+        F.col("ts").cast("timestamp").alias("ts"), "event_id",
+    )
+    batch = ev.filter(F.col("ts") >= cut).select(
+        "user_id", "event_type", "ts", "event_id"
+    ).unionByName(planted)
+    scd2_merge_into(spark, p, batch)
+    lay = pointer_require(StoreIO(p, spark), p)
+    assert len(lay["deltas"]) == 1
+    delta_obj = next(iter(lay["deltas"].values()))
+
+    def object_files(*objs):
+        # (object dir, parquet file) of every data file the objects hold
+        return {
+            (o, n) for o in objs for n in os.listdir(os.path.join(p, o))
+            if n.endswith(".parquet")
+        }
+
+    def read_files(df):
+        return {tuple(f.rsplit("/", 2)[-2:]) for f in df.inputFiles()}
+
+    uid = ev.select("user_id").head()["user_id"]
+    snap = scd2_snapshot_at(spark, p, "2024-01-30 00:00:00", user_ids=[uid])
+    target = lay["buckets"][str(bucket_of(uid))]
+    assert read_files(snap) == object_files(target, delta_obj)
+    rows = snap.collect()
+    assert len(rows) == 1 and rows[0]["user_id"] == uid
+
+    fresh = scd2_snapshot_at(
+        spark, p, "2024-01-30 00:00:00", user_ids=[new_uid]
+    )
+    assert read_files(fresh) == object_files(delta_obj)
+    rows = fresh.collect()
+    assert [(r["user_id"], r["state"]) for r in rows] == [
+        (new_uid, "planted")
+    ]
+
+
 def test_pq_stored_ivfpq_probe_prunes_cells(spark, tmp_path):
     """round 14: the stored IVF-PQ probe's code scan must prune to the
     probed cells at the parquet scan — the cell filter is a literal

@@ -1758,6 +1758,144 @@ def test_scd2_merge_into_equals_rebuild_property(spark, rows, cut,
     assert stats["touched"] == len(stats["buckets"]) <= n_buckets
 
 
+@pytest.mark.parametrize("n_buckets", [1, 2])
+def test_scd2_delta_appends_then_folds(spark, tmp_path, n_buckets):
+    """scd2_merge_into appends each batch as one delta object and folds
+    once the pointer names n_buckets deltas. Over successive
+    strictly-newer batches (the fold runs at least once): after every
+    merge the store reads as the full-history rebuild of the events so
+    far and rows_touched is the merged view's row count of the touched
+    buckets; an append retires nothing; a fold empties ``deltas`` and,
+    after scd2_recover, the store directory holds only live objects."""
+    import os
+
+    from correlationapi_spark.operators.analytics import (
+        _scd2_bucket,
+        _scd2_read,
+        scd2_intervals,
+        scd2_merge,
+        scd2_merge_into,
+        scd2_recover,
+    )
+    from correlationapi_spark.storeio import (
+        OBJECT_RE,
+        StoreIO,
+        _live_names,
+        pointer_require,
+    )
+
+    ev = load_tables(spark, SF_SMOKE)["events"].select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    cuts = [F.lit(c).cast("timestamp") for c in (
+        "2024-01-10 00:00:00", "2024-01-15 00:00:00",
+        "2024-01-20 00:00:00", "2024-01-25 00:00:00",
+    )]
+    p = str(tmp_path / "store")
+    scd2_merge(spark, ev.filter(F.col("ts") < cuts[0]), F.lit(False),
+               n_buckets=n_buckets, _store_path=p)
+    io = StoreIO(p, spark)
+    cols = ["user_id", "state", "valid_from", "valid_to", "is_current"]
+    folds = 0
+    for i, lo in enumerate(cuts):
+        hi = cuts[i + 1] if i + 1 < len(cuts) else None
+        batch = ev.filter(F.col("ts") >= lo)
+        if hi is not None:
+            batch = batch.filter(F.col("ts") < hi)
+        before = pointer_require(io, p)
+        fold = len(before.get("deltas", {})) >= n_buckets
+        _, stats = scd2_merge_into(spark, p, batch)
+        lay = pointer_require(io, p)
+        seen = ev if hi is None else ev.filter(F.col("ts") < hi)
+        want = scd2_intervals(seen.select(
+            "user_id", F.col("event_type").alias("state"),
+            F.col("ts").alias("valid_from"), "event_id",
+        )).select(*cols)
+        got = _scd2_read(spark, p, lay).select(*cols)
+        assert sorted(map(tuple, got.collect())) == \
+            sorted(map(tuple, want.collect()))
+        assert stats["rows_touched"] == want.filter(
+            _scd2_bucket(n_buckets).isin(stats["buckets"])
+        ).count()
+        if fold:
+            folds += 1
+            assert lay["deltas"] == {}
+            assert set(before["deltas"].values()) <= set(lay["retired"])
+            assert scd2_recover(p, spark=spark) is True
+            objects = {n for n in os.listdir(p) if OBJECT_RE.match(n)}
+            assert objects == _live_names(lay)
+        else:
+            assert lay["retired"] == []
+            assert lay["buckets"] == before["buckets"]
+            assert len(lay["deltas"]) == len(before.get("deltas", {})) + 1
+    assert folds >= 1
+
+
+def test_scd2_delta_append_crash_points(spark, tmp_path):
+    """The append path's two protocol points: a crash after the delta
+    object is written but before the pointer commit ("staged") leaves
+    the store reading as before, with an unreferenced delta-v* orphan
+    that the next mutation's preamble GC removes, and a re-run merges;
+    a crash right after the commit ("swapped") leaves the merge fully
+    visible."""
+    import os
+
+    from correlationapi_spark.operators.analytics import (
+        _scd2_lock,
+        scd2_intervals,
+        scd2_merge,
+        scd2_merge_into,
+    )
+    from correlationapi_spark.storeio import mutation
+
+    ev = load_tables(spark, SF_SMOKE)["events"].select(
+        "user_id", "event_type", "ts", "event_id"
+    )
+    cut = F.col("ts") < F.lit("2024-01-25 00:00:00").cast("timestamp")
+    delta = ev.filter(~cut & (F.col("user_id") % 7 == 0))
+    cols = ["user_id", "state", "valid_from", "valid_to", "is_current"]
+
+    def rebuild(df):
+        return sorted(map(tuple, scd2_intervals(df.select(
+            "user_id", F.col("event_type").alias("state"),
+            F.col("ts").alias("valid_from"), "event_id",
+        )).select(*cols).collect()))
+
+    base_want = rebuild(ev.filter(cut))
+    want = rebuild(ev.filter(cut).unionByName(delta))
+
+    class Boom(RuntimeError):
+        pass
+
+    def crash_at(label):
+        def hook(stage):
+            if stage == label:
+                raise Boom(stage)
+        return hook
+
+    def deltas_on_disk(p):
+        return sorted(n for n in os.listdir(p) if n.startswith("delta-v"))
+
+    p = str(tmp_path / "staged")
+    scd2_merge(spark, ev.filter(cut), F.lit(False), _store_path=p)
+    with pytest.raises(Boom):
+        scd2_merge_into(spark, p, delta, _crash=crash_at("staged"))
+    assert _scd2_store_rows(spark, p, cols) == base_want
+    assert len(deltas_on_disk(p)) == 1  # the unreferenced orphan
+    with mutation(spark, p, _scd2_lock(p)):
+        pass  # the preamble GC alone
+    assert deltas_on_disk(p) == []
+    merged, _ = scd2_merge_into(spark, p, delta)
+    assert sorted(map(tuple, merged.select(*cols).collect())) == want
+    assert _scd2_store_rows(spark, p, cols) == want
+
+    p2 = str(tmp_path / "swapped")
+    scd2_merge(spark, ev.filter(cut), F.lit(False), _store_path=p2)
+    with pytest.raises(Boom):
+        scd2_merge_into(spark, p2, delta, _crash=crash_at("swapped"))
+    assert _scd2_store_rows(spark, p2, cols) == want
+
+
 def test_scd2_persisted_modulus_and_key_cast(spark, tmp_path):
     """round 13 (r12 advice): the store's bucketing modulus is
     PERSISTED (_scd2_meta.json) and scd2_merge_into derives it from the

@@ -15,7 +15,13 @@ from all but a staged late batch, then measures:
    fresh — what a naive pipeline pays per day;
 3. equivalence: the merged store must row-equal the full rebuild
    (the same claim the oracled key pins at sf0.01, re-checked at this
-   grain).
+   grain);
+4. append vs fold: the staged batch split into three successive time
+   slices, merged through ``CorrelationAPI.scd2_merge`` into a
+   2-bucket store, so the first two merges append delta objects and
+   the third folds them into the buckets; records each merge's wall
+   time and the store's on-disk/live bytes right after it (before the
+   recover that reclaims what it retired).
 
 The staged batch is the final-timestamp slice of a sparse user cohort,
 so the touched-bucket count is bounded by the cohort's hash spread —
@@ -39,12 +45,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from correlationapi_spark.api import CorrelationAPI  # noqa: E402
 from correlationapi_spark.operators.analytics import (  # noqa: E402
     scd2_intervals,
     scd2_merge,
     scd2_merge_into,
+    scd2_recover,
 )
 from correlationapi_spark.session import get_spark  # noqa: E402
+from correlationapi_spark.storeio import (  # noqa: E402
+    StoreIO,
+    _live_names,
+    pointer_require,
+)
 
 N_USERS_MOD = 20_000
 STATES = 5
@@ -87,6 +100,18 @@ def synthetic_events(spark, n: int):
             ).alias("ts"),
         )
     )
+
+
+def store_bytes(spark, path: str) -> tuple[int, int]:
+    """(on-disk bytes, bytes of the objects the live pointer names)."""
+    live_names = _live_names(pointer_require(StoreIO(path, spark), path))
+    disk = live = 0
+    for root, _, files in os.walk(path):
+        size = sum(os.path.getsize(os.path.join(root, f)) for f in files)
+        disk += size
+        if os.path.relpath(root, path).split(os.sep)[0] in live_names:
+            live += size
+    return disk, live
 
 
 def main() -> None:
@@ -161,9 +186,44 @@ def main() -> None:
     full.write.mode("overwrite").parquet(rebuild_path)
     t_rebuild = time.time() - t0
 
+    # 4. append vs fold: three successive late slices (the last one
+    #    open-ended, so together they are the staged batch) into a
+    #    2-bucket store: append, append, fold
+    store4 = os.path.join(out_dir, "store4")
+    scd2_merge(spark, base, F.lit(False), n_buckets=2, _store_path=store4)
+    api = CorrelationAPI(spark)
+    cycles = []
+    for k in range(3):
+        lo = F.timestamp_seconds(
+            F.lit(1_700_000_000) + (max_seq - 3 + k) * 3600
+        )
+        batch = ev.filter(delta_pred & (F.col("ts") >= lo))
+        if k < 2:
+            batch = batch.filter(
+                F.col("ts") < F.timestamp_seconds(
+                    F.lit(1_700_000_000) + (max_seq - 2 + k) * 3600
+                )
+            )
+        api.register_dataset("scd2_bench_batch", batch)
+        t0 = time.time()
+        res = api.scd2_merge(
+            "scd2_bench_batch", "user_id", "event_type", "ts", "event_id",
+            store4,
+        )
+        sec = time.time() - t0
+        disk, live = store_bytes(spark, store4)
+        cycles.append({
+            "merge_sec": round(sec, 2),
+            "touched": res["touched"],
+            "deltas_after": len(
+                pointer_require(StoreIO(store4, spark), store4)["deltas"]
+            ),
+            "space_amplification": round(disk / live, 4),
+        })
+        scd2_recover(store4, spark)
+
     # 3. equivalence at this grain (row sets, not just counts)
     from correlationapi_spark.operators.analytics import _scd2_read
-    from correlationapi_spark.storeio import StoreIO, pointer_require
 
     stored = _scd2_read(
         spark, store, pointer_require(StoreIO(store, spark), store)
@@ -184,6 +244,15 @@ def main() -> None:
     diff2 = (
         stored2.exceptAll(rebuilt).count()
         + rebuilt.exceptAll(stored2).count()
+    )
+    stored4 = _scd2_read(
+        spark, store4, pointer_require(StoreIO(store4, spark), store4)
+    ).select(
+        "user_id", "state", "valid_from", "valid_to", "is_current"
+    )
+    diff4 = (
+        stored4.exceptAll(rebuilt).count()
+        + rebuilt.exceptAll(stored4).count()
     )
 
     print(
@@ -207,6 +276,8 @@ def main() -> None:
                 ),
                 "rows_diff_vs_rebuild": diff,
                 "merge_into_rows_diff_vs_rebuild": diff2,
+                "append_fold_cycles": cycles,
+                "append_fold_rows_diff_vs_rebuild": diff4,
             }
         )
     )

@@ -1,12 +1,15 @@
 #!/usr/bin/env python
-"""Capture the .explain("formatted") of the scd2 merge's staged write —
-the frame _scd2_apply hands to _scd2_stage_publish (the merge phase's
-single write job, which the bench headlines). Not a registry key, so
-tools/capture_plans.py cannot reach it.
+"""Capture the .explain("formatted") of the scd2 fold's staged write —
+the frame _scd2_apply hands to _scd2_stage_publish when it folds (its
+single write job). Not a registry key, so tools/capture_plans.py
+cannot reach it.
 
 Usage: python tools/scd2_plan_capture.py <out_file> [sf_dir]
-Builds a fresh store from the bench's base cohort, then captures the
-plan of the bench's declared %37 delta merge WITHOUT executing it.
+Runs the declared exhibit scd2_merge over the bench's events: the base
+build, then the fold of the declared %37 batch into its buckets. The
+captured plan is the fold's (the last staged write); a merge into an
+existing store only stages bucket writes when it folds, otherwise it
+appends one delta object.
 """
 
 from __future__ import annotations
@@ -34,13 +37,7 @@ def main() -> int:
     delta_pred = (
         F.col("ts") >= F.lit("2024-01-28 00:00:00").cast("timestamp")
     ) & (F.col("user_id") % 37 == 0)
-    delta = ev.filter(delta_pred).select(
-        "user_id", "event_type", "ts", "event_id"
-    )
     path = analytics._scd2_store_dir()
-    analytics.scd2_merge(
-        spark, ev.filter(~delta_pred), F.lit(False), _store_path=path
-    )
 
     real = analytics._scd2_stage_publish
     captured: list = []
@@ -57,12 +54,12 @@ def main() -> int:
 
     analytics._scd2_stage_publish = hook
     try:
-        analytics.scd2_merge_into(spark, path, delta)
+        analytics.scd2_merge(spark, ev, delta_pred, _store_path=path)
     finally:
         analytics._scd2_stage_publish = real
     with open(out_file, "w") as f:
-        f.write(captured[0])
-    print(f"wrote {out_file} ({len(captured[0])} bytes)")
+        f.write(captured[-1])
+    print(f"wrote {out_file} ({len(captured[-1])} bytes)")
     return 0
 
 
