@@ -2656,8 +2656,8 @@ class CorrelationAPI:
                 f"unknown method: {method!r} (exact|ivf|pq|ivfpq)"
             )
         if method in ("ivf", "ivfpq") and (n_cells < 1 or n_probe < 1):
-            # caught here as a user error (HTTP 400), not a Py4J KMeans
-            # stack trace at 500 (review r06)
+            # caught here as a user error (HTTP 400), not a stack trace
+            # at 500 (review r06)
             raise ValueError("n_cells and n_probe must be >= 1")
         if method in ("pq", "ivfpq"):
             # PQ scores CODES: probes must be corpus rows (their raw
@@ -2809,8 +2809,8 @@ class CorrelationAPI:
         if n_cells < 1:
             raise ValueError("n_cells must be >= 1")
         if not (0.0 < train_fraction <= 1.0):
-            # caught here as a user error (HTTP 400), not a Py4J
-            # KMeans/sample stack trace at 500
+            # caught here as a user error (HTTP 400), not a stack
+            # trace at 500
             raise ValueError("train_fraction must be in (0, 1]")
         state = ivf_dir_state(self.spark, path)
         if state == "other":

@@ -167,6 +167,131 @@ def _one_slice_df(spark: SparkSession, data: list, schema) -> DataFrame:
     )
 
 
+# Coarse-quantizer training sample bound: FAISS's
+# max_points_per_centroid, and the driver-collect byte ceiling.
+_IVF_TRAIN_PER_CELL = 256
+_IVF_TRAIN_BYTES = 64 << 20
+_IVF_TRAIN_ITERS = 5
+
+
+def _usable(df: DataFrame) -> DataFrame:
+    """``df`` with ``na`` = v/‖v‖, keeping only rows whose norm is
+    finite and positive — the guard ivf_index and ivf_assign share.
+    A zero-norm vector has no direction; a NaN element makes the norm
+    NaN (and NaN > 0 is TRUE in Spark's ordering, hence the isnan
+    test); an ±inf element makes it +inf, whose normalization is NaN at
+    that element. One such row would drag its centroid to NaN. The norm
+    is a column first: referencing the dot() aggregate inside the
+    per-element lambda would re-evaluate it per element (O(d²)/row)."""
+    return (
+        df.withColumn("_n", F.sqrt(dot(F.col("v"), F.col("v"))))
+        .filter(
+            (F.col("_n") > 0)
+            & ~F.isnan(F.col("_n"))
+            & (F.col("_n") < F.lit(float("inf")))
+        )
+        .withColumn("na", F.transform("v", lambda x: x / F.col("_n")))
+    )
+
+
+def _ivf_train_sample(
+    corpus: DataFrame, n_cells: int, seed: int, train_fraction: float
+):
+    """The coarse quantizer's training sample: at most
+    min(256·n_cells, ⌊64 MiB / (8·d)⌋) normalized vectors as an (n × d)
+    float64 array, collected in ONE job. A deterministic xxhash64 cut
+    keeps ``train_fraction`` of the ids (the _pq_train_books idiom,
+    salted with ``seed``), then the cap rows lowest in (hash, vec_id)
+    order are kept — a uniform sample when the cut leaves more than the
+    cap, where a vec_id prefix would favour the oldest ids — and
+    returned in vec_id order. The vectors ride the collect only when a
+    full-cap sample of their length fits the byte ceiling; otherwise
+    (d > 32768 / n_cells) the first job returns lengths only and a
+    second collects the byte-capped prefix."""
+    import math
+
+    import numpy as np
+
+    h = F.xxhash64(F.col("vec_id"), F.lit(int(seed)))
+    e = _usable(corpus.select("vec_id", "v"))
+    if train_fraction < 1.0:
+        m = 1 << 20
+        e = e.filter(
+            F.pmod(h, F.lit(m)) < F.lit(math.ceil(train_fraction * m))
+        )
+    cap = _IVF_TRAIN_PER_CELL * n_cells
+    keyed = e.select(
+        h.alias("_h"), "vec_id", F.size("na").alias("_d"), "na"
+    )
+    fits = F.col("_d") * F.lit(8 * cap) <= F.lit(_IVF_TRAIN_BYTES)
+    rows = (
+        keyed.withColumn("na", F.when(fits, F.col("na")))
+        .orderBy("_h", "vec_id").limit(cap).collect()
+    )
+    if any(r.na is None for r in rows):
+        d = max(int(r._d) for r in rows)
+        rows = keyed.orderBy("_h", "vec_id").limit(
+            max(1, _IVF_TRAIN_BYTES // (8 * d))
+        ).collect()
+    if not rows:
+        raise ValueError(
+            "ivf_index needs at least one vector with a finite, "
+            "non-zero norm"
+        )
+    if len({int(r._d) for r in rows}) != 1:
+        raise ValueError("ivf_index needs vectors of one dimension")
+    rows.sort(key=lambda r: r.vec_id)
+    return np.asarray([r.na for r in rows], dtype=np.float64)
+
+
+def _nearest_cell(X, C):
+    """Row-wise argmin of ‖x − c‖² over the centroid rows of C, via
+    |c|² − 2·x·c (the ivf_assign ranking), in row chunks so the
+    distance block stays ≤ 2²⁰ doubles. np.argmin keeps the first
+    minimum, so ties break at the lowest cell."""
+    import numpy as np
+
+    c2 = np.einsum("ij,ij->i", C, C)
+    step = max(1, (1 << 20) // len(C))
+    return np.concatenate([
+        np.argmin(c2[None, :] - 2.0 * (X[lo:lo + step] @ C.T), axis=1)
+        for lo in range(0, len(X), step)
+    ])
+
+
+def _ivf_train(X, n_cells: int, seed: int):
+    """Seeded k-means over the sample rows X (driver-side numpy):
+    k-means++ init drawn from ``np.random.default_rng(seed)``, then at
+    most _IVF_TRAIN_ITERS Lloyd iterations (stopping early once no
+    assignment changes); an empty cell keeps its centroid. A sample with
+    at most ``n_cells`` distinct vectors yields those vectors, in
+    first-occurrence order, as the centroids (fewer than n_cells
+    cells). Deterministic for a given sample and seed."""
+    import numpy as np
+
+    _, first = np.unique(X, axis=0, return_index=True)
+    if len(first) <= n_cells:
+        return X[np.sort(first)]
+    rng = np.random.default_rng(seed)
+    C = np.empty((n_cells, X.shape[1]))
+    C[0] = X[rng.integers(len(X))]
+    d2 = ((X - C[0]) ** 2).sum(axis=1)
+    for j in range(1, n_cells):
+        C[j] = X[rng.choice(len(X), p=d2 / d2.sum())]
+        d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1))
+    cells = None
+    for _ in range(_IVF_TRAIN_ITERS):
+        new = _nearest_cell(X, C)
+        if cells is not None and np.array_equal(new, cells):
+            break
+        cells = new
+        sums = np.zeros_like(C)
+        np.add.at(sums, cells, X)
+        n = np.bincount(cells, minlength=n_cells)
+        C[n > 0] = sums[n > 0] / n[n > 0][:, None]
+    return C
+
+
 def ivf_index(
     corpus: DataFrame,
     n_cells: int = 16,
@@ -175,72 +300,35 @@ def ivf_index(
 ) -> tuple[DataFrame, DataFrame]:
     """TRAIN + ASSIGN stages of the IVF engine: returns
     ``(assigned, cents)`` — the cell-stamped corpus
-    (vec_id, v, na, cell) and the k×d centroid table.
+    (vec_id, v, na, _vn2, cell) and the k×d centroid table.
 
-    ``train_fraction`` < 1 fits the coarse quantizer on a SAMPLE of the
-    corpus (the 100 TB posture: KMeans cost is per-iteration linear, and
-    centroid quality converges long before the full corpus is seen —
-    SCALING.md records the measured recall of a 10%-sample-trained index
-    at 100k vectors); the ASSIGN step always stamps every row.
+    TRAIN collects a bounded sample of normalized vectors in one job
+    (_ivf_train_sample: at most 256 per cell and 64 MiB;
+    ``train_fraction`` < 1 hash-cuts the corpus first) and runs seeded
+    k-means on the driver (_ivf_train). Centroid quality converges long
+    before the full corpus is seen — FAISS trains on at most 256
+    points per centroid, and SCALING.md records the measured recall of
+    a 10%-sample-trained index at 100k vectors — so training costs one
+    job at any corpus size. The same corpus, seed and fraction always
+    give the same centroids. ASSIGN is ivf_assign, which stamps every
+    row and is shared with ivf_append and ivf_recluster.
 
     At scale the assigned corpus is what you persist, written
     ``partitionBy("cell")`` so a probe reads only its n_probe cells via
     partition pruning (canaried in tests/test_plans.py)."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    # zero-norm vectors have no direction: normalizing them yields NaN
-    # arrays that would poison KMeans GLOBALLY (one NaN row drags its
-    # centroid to NaN, then every point's distance to that centroid is
-    # NaN) — drop them up front; the exact engine's cosine is NaN→null
-    # for such rows anyway, so they can never be meaningful neighbors.
-    # Materialize the norm as a COLUMN first: referencing the dot()
-    # aggregate inside the per-element lambda would re-evaluate the
-    # d-term sum for every element (O(d²)/row).
-    # NB the isnan guard (review r06 second pass): NaN > 0 is TRUE in
-    # Spark's ordering, so `_n > 0` alone let a NaN-element vector
-    # through — normalizing it yields the all-NaN array this comment
-    # block warns about, poisoning KMeans globally.
-    # NB2 the finiteness guard (round 12): an ±inf ELEMENT slips both
-    # checks (the norm is +inf: not NaN, > 0) and normalizing yields
-    # inf/inf = NaN at that element — the same global poisoning by
-    # another door. The numpy scale twin always checked
-    # math.isfinite(n2); the expression path now matches it.
-    e = corpus.withColumn("_n", F.sqrt(dot(F.col("v"), F.col("v")))).filter(
-        (F.col("_n") > 0)
-        & ~F.isnan(F.col("_n"))
-        & (F.col("_n") < F.lit(float("inf")))
-    )
-    env = e.withColumn(
-        "na", F.transform("v", lambda x: x / F.col("_n"))
-    ).withColumn("nv", array_to_vector("na"))
-    km = KMeans(
-        k=n_cells, seed=seed, maxIter=5,
-        featuresCol="nv", predictionCol="cell",
-    )
-    train = (
-        env if train_fraction >= 1.0
-        else env.sample(fraction=train_fraction, seed=seed)
-    )
-    model = km.fit(train)
-    # probes and the candidate join both consume the assignment — pin it
-    # (lazy ordering.materialize) so the normalize + transform subtree
-    # runs once at action time, not once per consumer
-    assigned = materialize(
-        model.transform(env).select(
-            "vec_id",
-            "v",
-            "na",
-            "cell",
-            dot(F.col("v"), F.col("v")).alias("_vn2"),
-        )
+    C = _ivf_train(
+        _ivf_train_sample(corpus, n_cells, seed, train_fraction),
+        n_cells, seed,
     )
     cents = _one_slice_df(
         corpus.sparkSession,
-        [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
-        "cell int, cv array<double>",
+        [(i, [float(x) for x in c]) for i, c in enumerate(C)],
+        _CENTROIDS_SCHEMA,
     )
-    return assigned, cents
+    # probes and the candidate join both consume the assignment — pin it
+    # (lazy ordering.materialize) so the normalize + assign subtree runs
+    # once at action time, not once per consumer
+    return materialize(ivf_assign(cents, corpus)), cents
 
 
 def ivf_probe(
@@ -275,10 +363,7 @@ def ivf_probe(
             F.transform(
                 F.col("_cs"),
                 lambda c: F.struct(
-                    (
-                        dot(c["cv"], c["cv"])
-                        - 2 * dot(F.col("pna"), c["cv"])
-                    ).alias("d2"),
+                    (c["c2"] - 2 * dot(F.col("pna"), c["cv"])).alias("d2"),
                     c["cell"].alias("cell"),
                 ),
             )
@@ -398,13 +483,37 @@ def ivf_read(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     test_ivf_delta_probe_prunes_both_scans). The layout pointer is
     resolved ONCE, so every frame comes from the same version even
     when a destructive mutation swaps mid-call."""
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
+    return _corpus(spark, path, objs), _centroids(spark, path, objs)
+
+
+# Every index object is opened with its known schema: an unschematized
+# read runs one schema-inference job per object per request. A pointer
+# naming a missing object still raises the reader's PATH_NOT_FOUND
+# AnalysisException (the routes' 404).
+_CENTROIDS_SCHEMA = "cell int, cv array<double>"
+_TOMBSTONES_SCHEMA = "vec_id long"
+
+
+def _corpus_schema(objs: dict) -> str:
+    """Row schema of the corpus and delta objects: ``pq_code`` exists
+    iff the layout has a PQ attachment; ``cell`` is the partition
+    column."""
+    pq = ", pq_code long" if "pqbooks" in objs else ""
+    return (
+        "vec_id long, v array<double>, na array<double>, _vn2 double"
+        f"{pq}, cell int"
+    )
+
+
+def _read(spark: SparkSession, path: str, name: str, schema: str) -> DataFrame:
     import os
 
-    objs = pointer_require(StoreIO(path, spark), path)["objects"]
-    return (
-        _corpus(spark, path, objs),
-        spark.read.parquet(os.path.join(path, objs["centroids"])),
-    )
+    return spark.read.schema(schema).parquet(os.path.join(path, name))
+
+
+def _centroids(spark: SparkSession, path: str, objs: dict) -> DataFrame:
+    return _read(spark, path, objs["centroids"], _CENTROIDS_SCHEMA)
 
 
 def _corpus(spark: SparkSession, path: str, objs: dict) -> DataFrame:
@@ -415,20 +524,14 @@ def _corpus(spark: SparkSession, path: str, objs: dict) -> DataFrame:
     hold disjoint ids (re-admitting an id compacts first). Spark
     refuses two partitioned roots in one read.parquet call, so the
     halves are two scans under unionByName; static and dynamic
-    partition filters reach both. The delta is read with the base's
-    schema, which it shares by construction, so opening it costs no
-    second schema-inference job. Every corpus reader goes through
-    here."""
-    import os
-
-    base = spark.read.parquet(os.path.join(path, objs["corpus"]))
+    partition filters reach both. Both are opened with
+    _corpus_schema(objs), so neither runs a schema-inference job.
+    Every corpus reader goes through here."""
+    schema = _corpus_schema(objs)
+    base = _read(spark, path, objs["corpus"], schema)
     if "delta" not in objs:
         return base
-    return base.unionByName(
-        spark.read.schema(base.schema).parquet(
-            os.path.join(path, objs["delta"])
-        )
-    )
+    return base.unionByName(_read(spark, path, objs["delta"], schema))
 
 
 def ivf_resolve(spark: SparkSession, path: str) -> dict:
@@ -757,7 +860,7 @@ def _idstate_write(
     )
 
 
-def _idstate_build(spark: SparkSession, path: str, objs: dict) -> None:
+def _idstate_build(spark: SparkSession, path: str, objs: dict) -> int:
     """Recompute the id Bloom from the id column of the given layout's
     corpus (base ∪ delta) into the given idstate object — the shared
     epilogue of every operation that leaves the corpus as the sole id
@@ -765,11 +868,12 @@ def _idstate_build(spark: SparkSession, path: str, objs: dict) -> None:
     sidecar). Object names come from the layout the caller is building
     or mutating; the in-place overwrite is safe because idstate is
     writer-private state (only lock-holding mutation paths ever read
-    it)."""
+    it). Returns the corpus row count it sized the Bloom with."""
     ids = _corpus(spark, path, objs).select("vec_id")
     n = ids.count()  # parquet metadata count — no data pages read
     m = _bloom_m(n)
     _idstate_write(spark, path, objs, m, n, _bloom_build(ids, m))
+    return n
 
 
 def _idstate_read(spark: SparkSession, path: str, objs: dict | None = None):
@@ -807,16 +911,12 @@ def _tombstones(
     resolving the live pointer; mutation paths pass the layout they
     already hold so every read in a critical section comes from ONE
     version."""
-    import os
-
     if objs is None:
         objs = pointer_require(StoreIO(path, spark), path)["objects"]
     t = objs.get("tombstones")
     if t is None:
         return None
-    return (
-        spark.read.parquet(os.path.join(path, t)).select("vec_id").distinct()
-    )
+    return _read(spark, path, t, _TOMBSTONES_SCHEMA).distinct()
 
 
 def _live(spark: SparkSession, path: str, objs: dict) -> DataFrame:
@@ -836,27 +936,26 @@ def ivf_live(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     grown past broadcast size is the signal to ivf_compact. The layout
     pointer is resolved ONCE for corpus + centroids + tombstones, so
     the frames always come from one consistent version."""
-    import os
-
-    io = StoreIO(path, spark)
-    objs = pointer_require(io, path)["objects"]
-    return (
-        _live(spark, path, objs),
-        spark.read.parquet(os.path.join(path, objs["centroids"])),
-    )
+    objs = pointer_require(StoreIO(path, spark), path)["objects"]
+    return _live(spark, path, objs), _centroids(spark, path, objs)
 
 
 def _cells_array(cents: DataFrame) -> DataFrame:
     """The k-row centroid table folded into ONE row carrying a
-    cell-ascending array<struct<cell,cv>> — the broadcastable state the
-    shuffle-free argmin/rank-cells expressions below iterate per row.
+    cell-ascending array<struct<cell,cv,c2>> — the broadcastable state
+    the shuffle-free argmin/rank-cells expressions below iterate per
+    row. ``c2`` = |cv|², computed once per centroid here instead of once
+    per (row, centroid) pair (the same dot, so the same double).
     array_sort on the struct orders by its first field (cell), so the
     fold is deterministic regardless of collect_list's task order; size
     is k·d floats, the same broadcast ceiling the old per-row
     nested-loop join already assumed."""
+    cv = F.col("cv")
     return cents.agg(
         F.array_sort(
-            F.collect_list(F.struct(F.col("cell"), F.col("cv")))
+            F.collect_list(
+                F.struct(F.col("cell"), cv, dot(cv, cv).alias("c2"))
+            )
         ).alias("_cs")
     )
 
@@ -868,7 +967,7 @@ def ivf_assign(cents: DataFrame, vectors: DataFrame) -> DataFrame:
     Ranking is ‖p − c‖² order via |c|² − 2·p·c on the unit sphere with
     the cell id as tie-break — the same primitive ivf_probe ranks cells
     with, whose algebra is oracle-checked by q_sim_assign. Zero-norm /
-    NaN vectors drop under exactly ivf_index's guard.
+    NaN vectors drop under _usable, the guard ivf_index trains under.
 
     Round 12: the argmin is a per-row ``array_min`` over the broadcast
     centroid ARRAY (one 1-row BroadcastNestedLoopJoin attaches it), not
@@ -880,25 +979,14 @@ def ivf_assign(cents: DataFrame, vectors: DataFrame) -> DataFrame:
     assignment is now a single narrow map stage. Each row's argmin is a
     pure function of its vector, so duplicate vec_ids each keep their
     row (the nearest_centroid_assign _rid lesson); ivf_append refuses
-    intra-delta duplicate ids explicitly."""
-    e = vectors.withColumn(
-        "_n", F.sqrt(dot(F.col("v"), F.col("v")))
-    ).filter(
-        # finite positive norm — the exact guard ivf_index applies
-        # (zero-norm: no direction; NaN-element: NaN norm; inf-element:
-        # inf norm whose normalization is NaN at that element)
-        (F.col("_n") > 0)
-        & ~F.isnan(F.col("_n"))
-        & (F.col("_n") < F.lit(float("inf")))
-    )
-    env = e.withColumn("na", F.transform("v", lambda x: x / F.col("_n")))
+    intra-delta duplicate ids explicitly. Output columns carry the
+    stored types of _corpus_schema."""
+    env = _usable(vectors)
     best = F.array_min(
         F.transform(
             F.col("_cs"),
             lambda c: F.struct(
-                (
-                    dot(c["cv"], c["cv"]) - 2 * dot(F.col("na"), c["cv"])
-                ).alias("d2"),
+                (c["c2"] - 2 * dot(F.col("na"), c["cv"])).alias("d2"),
                 c["cell"].alias("cell"),
             ),
         )
@@ -906,8 +994,9 @@ def ivf_assign(cents: DataFrame, vectors: DataFrame) -> DataFrame:
     return (
         env.crossJoin(F.broadcast(_cells_array(cents)))
         .select(
-            "vec_id",
-            "v",
+            # the stored types (_corpus_schema), whatever the caller's
+            F.col("vec_id").cast("long").alias("vec_id"),
+            F.col("v").cast("array<double>").alias("v"),
             "na",
             dot(F.col("v"), F.col("v")).alias("_vn2"),
             best["cell"].alias("cell"),
@@ -976,8 +1065,6 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
     The quality drift appends leave behind (centroids no longer
     centroids of their cells) is what ivf_imbalance gauges — recluster
     when the hottest cell outgrows the mean, not on a clock."""
-    import os
-
     with _ivf_mutation(spark, path) as (io, lay):
         objs = lay["objects"]
         # centroids read + assignment INSIDE the lock, after the
@@ -986,7 +1073,7 @@ def ivf_append(spark: SparkSession, path: str, new_vectors: DataFrame) -> None:
         # assignment, stamping the delta with OLD cell ids in the NEW
         # layout (probes rank cells by the new centroids, so those
         # rows silently stop answering).
-        cents = spark.read.parquet(os.path.join(path, objs["centroids"]))
+        cents = _centroids(spark, path, objs)
         # eager pin: the assignment feeds the collision check, the
         # possible re-admit rewrite, AND the write — one broadcast-k
         # pass total
@@ -1199,9 +1286,9 @@ def _ivf_compact_locked(
       write into the base, so the sentinel stays harmless.
 
     The idstate Bloom is rebuilt over the new base ∪ delta id column
-    either way (Blooms cannot unset the deleted ids). PQ books and
-    anchors carry by name: cells are unchanged and the rewritten rows
-    keep their pq_code column.
+    either way (Blooms cannot unset the deleted ids); its id count is
+    the ``n_vectors`` answer. PQ books and anchors carry by name: cells
+    are unchanged and the rewritten rows keep their pq_code column.
 
     Returns (new layout, stats) — stats carry ``base_rewritten``."""
     import os
@@ -1209,7 +1296,7 @@ def _ivf_compact_locked(
     objs = lay["objects"]
     tomb = _tombstones(spark, path, objs)
     delta = (
-        spark.read.parquet(os.path.join(path, objs["delta"]))
+        _read(spark, path, objs["delta"], _corpus_schema(objs))
         if "delta" in objs else None
     )
     n_tomb = n_in_delta = 0
@@ -1251,9 +1338,8 @@ def _ivf_compact_locked(
             new_objs["delta"] = name
         else:
             io.rmtree(ddir)  # no delta row survived: keep no delta
-    _idstate_build(spark, path, new_objs)
+    n = _idstate_build(spark, path, new_objs)
     new_lay = commit(io, path, lay, objects=new_objs)
-    n = _corpus(spark, path, new_objs).count()
     return new_lay, {
         "tombstones_cleared": n_tomb,
         "n_vectors": n,
@@ -1387,8 +1473,10 @@ def ivf_recluster(
     acted on it). No-op (``reclustered: False``) while the live
     max/avg cell ratio is ≤ ``threshold``; pass ``threshold=0`` to
     force. ``n_cells`` defaults to the current centroid count;
-    ``train_fraction`` < 1 fits KMeans on a sample (the 100 TB
-    posture — assignment still stamps every row).
+    ``train_fraction`` < 1 hash-cuts the training sample further (the
+    100 TB posture — assignment still stamps every row); training is
+    ivf_index's bounded driver-side k-means, so a recluster is
+    deterministic for a given live view and seed.
 
     Publish protocol (round 14 — r13 verdict item 1): the new corpus,
     centroids and idstate are trained FROM the live view (base ∪
@@ -1411,15 +1499,11 @@ def ivf_recluster(
     points ("staged", "swapped") for the crash-ordering tests.
 
     Honest gauge note: on genuinely skewed DATA the post-recluster
-    imbalance can stay high or rise — KMeans correctly gives a dense
+    imbalance can stay high or rise — k-means correctly gives a dense
     cluster its own large cell, and max/avg then measures the data,
     not quantizer drift. The quality recluster actually buys is
-    centroid PLACEMENT: probe recall at fixed n_probe improves IN
-    DISTRIBUTION (drifted-append fixture: 0.862 before, deterministic;
-    after ∈ 0.83–0.95 over repeated retrains, mean ≈ +0.05 — the
-    parallel KMeans merges partial sums in task-completion order, so
-    one retrain is one draw from the optimum distribution; pinned
-    wobble-honest in tests/test_rowsonly.py); returned
+    centroid PLACEMENT: probe recall at fixed n_probe (pinned in
+    tests/test_rowsonly.py on a drifted-append fixture); returned
     imbalance_before/after let the caller see both."""
     import os
 
@@ -1434,12 +1518,7 @@ def ivf_recluster(
         if b.n_vectors is None or b.n_vectors == 0 or not b.recluster:
             return {**stats, "reclustered": False}
         live = ivf_live(spark, path)[0].select("vec_id", "v")
-        k = (
-            n_cells
-            or spark.read.parquet(
-                os.path.join(path, objs["centroids"])
-            ).count()
-        )
+        k = n_cells or _centroids(spark, path, objs).count()
         assigned, cents = ivf_index(
             live, n_cells=int(k), seed=seed, train_fraction=train_fraction
         )
@@ -1969,8 +2048,9 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-expressed on DataFrames, the second sub-quadratic scale path next
     to the LSH twin:
 
-    1. TRAIN: seeded KMeans over the L2-normalized corpus picks k coarse
-       centroids (euclidean cells on the unit sphere order like cosine).
+    1. TRAIN: seeded k-means over a bounded sample of the L2-normalized
+       corpus picks k coarse centroids (euclidean cells on the unit
+       sphere order like cosine).
     2. ASSIGN: one map-only transform stamps each corpus vector with its
        cell id — the inverted file is just a column, and at scale the
        corpus would be written bucketed/partitioned BY that column.
@@ -1982,11 +2062,12 @@ def q_sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
        top-k, so every returned score is exact; only recall is
        approximate (a true neighbor in an unprobed cell is missed).
 
-    Scale: train on a sample at 100 TB (KMeans cost is per-iteration
-    linear), assignment is embarrassingly parallel, the probe side is a
-    tiny broadcast, and the candidate join shuffles only cell-matched
-    rows. n_cells/n_probe are the recall-vs-cost dials (√n cells,
-    n_probe ~ 5-10% of cells is the standard starting point). Round 6:
+    Scale: training reads a sample of at most 256 vectors per cell
+    (one job, driver-side Lloyd — see ivf_index), assignment is
+    embarrassingly parallel, the probe side is a tiny broadcast, and
+    the candidate join shuffles only cell-matched rows. n_cells/n_probe
+    are the recall-vs-cost dials (√n cells, n_probe ~ 5-10% of cells is
+    the standard starting point). Round 6:
     the engine lives in topk_neighbors_ivf (shared with the
     parameterized api.similar() surface); this key is its pinned
     fixture exhibit, and SCALING.md records its measured recall/cost
@@ -3174,8 +3255,6 @@ def pq_probe_stored(
     sub-0.1 neighbor gaps: pure-ADC recall@5 ≈ 0.27–0.38 raw OR
     residual): refine=5k lifts recall@5 to 0.81 (sf0.001) / 0.60
     (sf0.1), refine=10k to 0.91 / 0.76."""
-    import os
-
     io = StoreIO(path, spark)
     lay = pointer_require(io, path)
     objs = lay["objects"]
@@ -3187,11 +3266,6 @@ def pq_probe_stored(
     books = _pq_books_read(spark, path, objs)
     anchors = _pq_anchors_read(spark, path, objs)
     corpus = _live(spark, path, objs)
-    if "pq_code" not in corpus.columns:
-        raise ValueError(
-            f"index at {path!r} names pqbooks but its corpus carries "
-            "no pq_code column — the layout is from a newer writer"
-        )
     wanted = sorted({int(i) for i in probe_ids})
     probe_rows = (
         corpus.filter(F.col("vec_id").isin(wanted))
@@ -3214,9 +3288,7 @@ def pq_probe_stored(
     if n_probe is not None:
         cents = [
             (int(r.cell), [float(x) for x in r.cv])
-            for r in spark.read.parquet(
-                os.path.join(path, objs["centroids"])
-            ).collect()
+            for r in _centroids(spark, path, objs).collect()
         ]  # bounded by n_cells × d
     coded = corpus.select("cell", "vec_id", "pq_code")
     # candidate depth: the per-batch partial top-k inside the ADC scan

@@ -3134,8 +3134,10 @@ def _scd2_apply(
             _crash("swapped")
         return new_lay
 
-    if not fold and not affected:
-        new_lay, rows_touched = lay, 0  # an empty batch appends nothing
+    if not affected and earlier is None:
+        # a batch that touches no bucket, with no delta to fold, changes
+        # nothing: no stage write, no pointer commit
+        new_lay, rows_touched = lay, 0
     elif not fold:
         # the batch is small by the CDC contract: one file, sorted by
         # the key every reader filters and partitions on. A new object,

@@ -2746,6 +2746,9 @@ def test_recover_reports_gc_skipped_pointer_files(spark, tmp_path,
 
     base, delta = _scd2_events_split(spark)
     store = str(tmp_path / "scd2")
+    # an empty batch commits nothing, so each build leaves one pointer
+    # file: build, then rebuild
+    scd2_merge(spark, base, F.lit(False), _store_path=store)
     scd2_merge(spark, base, F.lit(False), _store_path=store)  # two
     api.register_dataset("delta", delta)
     api.scd2_merge("delta", "user_id", "event_type", "ts", "event_id",
@@ -2847,3 +2850,45 @@ def test_only_storeio_mutates_stores():
                     if pattern.search(line):
                         offenders.append(f"{os.path.relpath(path, pkg)}:{i}")
     assert not offenders, f"store protocol outside storeio.py: {offenders}"
+
+
+def _job_names(spark, fn) -> list:
+    """Status-store names of the Spark jobs ``fn`` runs on this thread."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job-name probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    status = sc._jsc.sc().statusStore()
+    return [
+        status.job(j).name()
+        for j in sc.statusTracker().getJobIdsForGroup(group)
+    ]
+
+
+def test_index_reads_run_no_schema_inference_job(spark, tmp_path):
+    """index_status and index_probe open the base corpus, the append
+    delta, the centroids and the tombstones with their known schemas,
+    so neither runs a ``parquet at …`` schema-inference job."""
+    api = CorrelationAPI(spark)
+    api.register_dataset(
+        "emb", os.path.join(SF_SMOKE, "embeddings.parquet")
+    )
+    idx = str(tmp_path / "idx")
+    api.index_build("emb", "vec_id", "embedding", idx, n_cells=4,
+                    where="vec_id >= 10")
+    api.index_append("emb", "vec_id", "embedding", idx,
+                     where="vec_id < 10")
+    api.index_delete(idx, [11])
+    for call in (
+        lambda: api.index_status(idx),
+        lambda: api.index_probe(idx, [1, 12], k=3, n_probe=2),
+    ):
+        names = _job_names(spark, call)
+        assert names, "the call ran no Spark job at all"
+        assert not [n for n in names if n.startswith("parquet at")], names

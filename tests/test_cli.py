@@ -612,10 +612,14 @@ def test_cli_scd2_merge_into_and_recover(spark, capsys, tmp_path):
     ev = load_tables(spark, SF_SMOKE)["events"]
     cut = F.lit("2024-01-25 00:00:00").cast("timestamp")
     store = str(tmp_path / "scd2_store")
-    scd2_merge(
-        spark, ev.filter(F.col("ts") < cut), F.lit(False),
-        _store_path=store,
-    )
+    # build, then rebuild: an empty batch commits nothing, so each
+    # build leaves one pointer file, and the recover below needs the
+    # merge's commit to supersede one beyond the kept two
+    for _ in range(2):
+        scd2_merge(
+            spark, ev.filter(F.col("ts") < cut), F.lit(False),
+            _store_path=store,
+        )
 
     delta_path = str(tmp_path / "delta.parquet")
     ev.filter(

@@ -4014,3 +4014,103 @@ def test_pq_attach_is_partitioning_invariant(spark, tmp_path):
     assert states[0][0] == states[1][0], "anchors differ by partitioning"
     assert states[0][1] == states[1][1], "books differ by partitioning"
     assert states[0][2] == states[1][2], "codes differ by partitioning"
+
+
+def _small_vectors(spark, rows):
+    return spark.createDataFrame(rows, "vec_id long, v array<double>")
+
+
+def test_ivf_index_is_deterministic(spark):
+    """The coarse quantizer trains on a deterministic hash-cut sample
+    with seeded driver-side k-means, so two builds of the same corpus
+    give bit-identical centroids and cells (the parallel KMeans this
+    replaced merged partial sums in task-completion order)."""
+    import os
+
+    from correlationapi_spark.llm.similarity import corpus_view, ivf_index
+
+    emb = spark.read.parquet(os.path.join(SF_SMOKE, "embeddings.parquet"))
+    corpus = corpus_view(emb, "vec_id", "embedding")
+
+    def build():
+        a, c = ivf_index(corpus, n_cells=8)
+        return (
+            sorted((r.cell, list(r.cv)) for r in c.collect()),
+            sorted((r.vec_id, r.cell) for r in a.collect()),
+        )
+
+    first, second = build(), build()
+    assert len(first[0]) == 8
+    assert first == second
+
+
+def test_ivf_index_trains_on_a_capped_sample(spark, monkeypatch):
+    """A corpus with more than 256·n_cells usable vectors trains on at
+    most 256·n_cells of them, and the assignment still stamps every
+    row; the 64 MiB byte ceiling caps the sample the same way when a
+    full-cap sample of the vectors' length would not fit it."""
+    import numpy as np
+
+    import correlationapi_spark.llm.similarity as sim
+
+    rng = np.random.RandomState(3)
+    n, d, n_cells = 1200, 4, 2
+    corpus = _small_vectors(
+        spark,
+        [(i, [float(x) for x in v]) for i, v in enumerate(rng.normal(size=(n, d)))],
+    )
+    seen = []
+    train = sim._ivf_train
+
+    def spy(X, n_cells, seed):
+        seen.append(X.shape)
+        return train(X, n_cells, seed)
+
+    monkeypatch.setattr(sim, "_ivf_train", spy)
+    assigned, cents = sim.ivf_index(corpus, n_cells=n_cells)
+    assert seen == [(256 * n_cells, d)]
+    assert cents.count() == n_cells
+    stamped = assigned.agg(F.count("*"), F.count("cell")).first()
+    assert tuple(stamped) == (n, n)
+
+    monkeypatch.setattr(sim, "_IVF_TRAIN_BYTES", 8 * d * 100)
+    sim.ivf_index(corpus, n_cells=n_cells)
+    assert seen[-1] == (100, d)
+
+
+def test_ivf_index_with_fewer_usable_vectors_than_cells(spark):
+    """Fewer distinct usable vectors than n_cells: the distinct
+    normalized vectors, in vec_id order, become the centroids — the
+    result the pyspark.ml KMeans trainer gave on this corpus (3 cells
+    for n_cells=8). Zero-norm and NaN rows are dropped; a corpus with
+    no usable vector is refused."""
+    from correlationapi_spark.llm.similarity import ivf_index
+
+    nan = float("nan")
+    corpus = _small_vectors(spark, [
+        (1, [1.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, [0.0, 0.0, 1.0]),
+        (4, [0.0, 0.0, 0.0]), (5, [nan, 1.0, 0.0]), (6, [0.0, 2.0, 0.0]),
+    ])
+    assigned, cents = ivf_index(corpus, n_cells=8)
+    assert sorted((r.cell, list(r.cv)) for r in cents.collect()) == [
+        (0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0]), (2, [0.0, 0.0, 1.0]),
+    ]
+    assert sorted((r.vec_id, r.cell) for r in assigned.collect()) == [
+        (1, 0), (2, 1), (3, 2), (6, 1),
+    ]
+    with pytest.raises(ValueError, match="finite, non-zero norm"):
+        ivf_index(corpus.filter("vec_id in (4, 5)"), n_cells=8)
+
+
+def test_index_objects_are_read_with_their_schema():
+    """Source guard: every read of an index object in similarity.py
+    passes its known schema — an unschematized parquet read runs a
+    schema-inference job on every request."""
+    import inspect
+    import re
+
+    import correlationapi_spark.llm.similarity as sim
+
+    src = inspect.getsource(sim)
+    reads = re.findall(r"\.read\.(\w+)\(", src)
+    assert reads and set(reads) == {"schema"}, reads
